@@ -1,6 +1,7 @@
 package graft
 package catalog
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2496,11 +2497,10 @@ private[graft] object AnnCatalog {
         // content INSTALLS by file copy from the staged artifacts; the
         // publish protocol (stage → rename → marker flip) runs live
         require(graft.util.GenStore.cycle(fs, root, gen = 0) { true } { p =>
-          def cp(src: String, sub: String) = graft.util.Fs.copyRecursively(
-            java.nio.file.Paths.get(src), java.nio.file.Paths.get(s"$p/$sub"))
-          cp(fullIdx, "index")
-          cp(s"$tmp/centroids", "centroids")
-          cp(s"$tmp/codebooks", "codebooks")
+          Seq(fullIdx -> "index", s"$tmp/centroids" -> "centroids",
+              s"$tmp/codebooks" -> "codebooks").foreach { case (src, sub) =>
+            graft.util.DeltaStore.copyInto(fs, new Path(src), new Path(p, sub))
+          }
         }, "generation 0 must publish")
         val maxShiftRef = // written on the stream thread, read after await
           new java.util.concurrent.atomic.AtomicReference[Double](0.0)
@@ -2647,8 +2647,8 @@ private[graft] object AnnCatalog {
       val root = scratch("q300_gens")
       val outDir = scratch("q300_out")
       require(graft.util.GenStore.cycle(fs, root, gen = 0) { true } { p =>
-        graft.util.Fs.copyRecursively(java.nio.file.Paths.get(part0Idx),
-          java.nio.file.Paths.get(s"$p/index"))
+        graft.util.DeltaStore.copyInto(fs, new Path(part0Idx),
+          new Path(p, "index"))
       }, "generation 0 must publish")
       // query stream: two single-file micro-batches with id-determined
       // membership (the oracle's switch point must be statable in SQL)
@@ -2679,9 +2679,8 @@ private[graft] object AnnCatalog {
             // the stream is still running — readers flip at the marker
             if (batchId == 0L)
               require(graft.util.GenStore.cycle(fs, root, gen = 1) { true } { p =>
-                graft.util.Fs.copyRecursively(
-                  java.nio.file.Paths.get(fullIdx),
-                  java.nio.file.Paths.get(s"$p/index"))
+                graft.util.DeltaStore.copyInto(fs, new Path(fullIdx),
+                  new Path(p, "index"))
               }, "mid-stream maintenance must publish generation 1")
         }
         .trigger(Trigger.AvailableNow()).start()
@@ -2745,21 +2744,10 @@ private[graft] object AnnCatalog {
       val live = scratch("q301_live")
       val root = scratch("q301_gens")
       val outDir = scratch("q301_out")
-      def publishCommitted(onlyBelow: Option[Long]): Unit = {
-        val committed = Similarity.indexStoreDeltas(s2, live)
-          .filter(d => onlyBelow.forall(d < _))
-        if (committed.nonEmpty)
-          graft.util.GenStore.cycle(fs, root, gen = committed.max) {
-            // fire iff the pointer lags the committed prefix
-            graft.util.GenStore.current(fs, root).forall(_ < committed.max)
-          } { p =>
-            Similarity.compactIndex(
-                committed.map(d => s2.read.parquet(s"$live/delta=$d")),
-                cap = 16L)
-              .select(col("n_id"), col("lcid"), col("codes"))
-              .write.mode("overwrite").parquet(s"$p/index")
-          }
-      }
+      // the shared incremental publish: previous generation + one
+      // latest-wins chunk of the newly committed deltas
+      def publishCommitted(onlyBelow: Option[Long]): Unit =
+        Similarity.indexStore(cap = 16L).publish(s2, live, root, onlyBelow)
       // the probe/LUT side is a pure function of (queries, frozen model) —
       // generation-INDEPENDENT — and every per-stage serve consumes it:
       // derive and pin it once (multi-ACTION reuse, the r16 pin rule)
@@ -2771,7 +2759,7 @@ private[graft] object AnnCatalog {
       def serveCommitted(stage: Long): Unit =
         graft.util.GenStore.currentPath(fs, root).foreach { gen =>
           Similarity.ivfPqResidualStoredTopKFromLuts(qluts,
-              Similarity.readIndexStore(s2, s"$gen/index"), k = 3)
+              Similarity.readIndexStore(s2, gen.toString), k = 3)
             .withColumn("stage", lit(stage))
             .write.mode("append").parquet(outDir)
         }

@@ -214,8 +214,8 @@ private[graft] object CatalogShared {
     * re-encoding it per arm per pass times the encode, not the
     * pointer/refresh protocol those gates test (the q252/q293 artifact
     * discipline). Gates install it into a generation dir by FILE COPY
-    * ([[graft.util.Fs.copyRecursively]]) — the publish protocol itself
-    * (stage → rename → marker flip) stays live per pass. */
+    * through Hadoop FS ([[graft.util.DeltaStore.copyInto]]) — the publish
+    * protocol itself (stage → rename → marker flip) stays live per pass. */
   def frozenFullIndexStaging(s: SparkSession, dir: String): String = {
     // the model staging runs BEFORE the closure: Staging.dir must never
     // nest inside another staging closure (computeIfAbsent on one map)

@@ -991,149 +991,75 @@ object Similarity {
           idCol, cidCol, vecCol, m, subDim), batchId)
       }
 
-  /** The replay-idempotent sink for [[ingestIndexStream]]: each batch's
-    * code rows land BATCH-ADDRESSED under `delta=<batchId>/` with
-    * OVERWRITE semantics. foreachBatch is at-least-once — with a real
-    * checkpoint, a crash between the store write and the offset commit
-    * replays the batch with the SAME id and content (file sources are
-    * deterministic), so the replay overwrites its own previous (possibly
-    * partial) attempt instead of double-appending index rows that would
-    * answer queries twice. Effectively-once store content without
-    * transactions — [[graft.io.Sinks.idempotentJdbcAppend]]'s discipline
-    * in parquet form (q290's kill-and-resume gate). The `delta=` spelling
-    * makes the batch id a partition column, so snapshot order is readable
-    * straight off the store for [[compactIndex]]'s latest-wins.
-    * @param beforeBatch ops hook invoked BEFORE the batch's delta write —
-    *        where a store-maintenance policy ([[maintainIndexStore]] with
-    *        `onlyBelow = Some(batchId)`) composes in: at this point every
-    *        delta below the current batch id is COMMITTED (its offsets
-    *        are in the checkpoint), so compacting them can never collide
-    *        with an at-least-once replay; the current batch's own delta —
-    *        the only replayable one — does not exist yet (or is a doomed
-    *        partial from a crashed attempt, about to be overwritten by
-    *        this very batch)
-    * @param afterBatch ops hook invoked AFTER the delta is durable but
-    *        BEFORE the offset commit — metrics, and where tests inject
-    *        crashes to exercise the replay path. Running a compaction
-    *        HERE would be unsafe: the just-written delta is uncommitted,
-    *        and folding it into a consolidated delta that a replay then
-    *        overwrites loses or double-counts its rows */
+  /** The vector index store as a [[graft.util.DeltaStore]]: the root's
+    * own `delta=` dirs are its ingest clock, and the merge is
+    * [[compactIndex]]'s latest-wins in delta order, written CLUSTERED by
+    * its (lcid, sub) cells — the shuffle keeps every ≤cap-row cell whole
+    * within one task's output, so no written row group mixes unbounded
+    * slices of a skewed coarse list (the q247/q256 layout discipline).
+    * `sub` itself is not persisted: the chunk keeps the uniform
+    * (n_id, lcid, codes) schema that ingest deltas write, and serving joins
+    * `lcid` alone either way. */
+  private[graft] def indexStore(cap: Long): graft.util.DeltaStore =
+    graft.util.DeltaStore("", (spark, root, deltas, tombstones, out) =>
+      compactIndex(deltas.map(d => spark.read.parquet(s"$root/delta=$d")),
+          cap, tombstones)
+        .repartition(col("lcid"), col("sub"))
+        .sortWithinPartitions(col("lcid"), col("sub"), col("n_id"))
+        .select(col("n_id"), col("lcid"), col("codes"))
+        .write.mode("overwrite")
+        .parquet(s"$out/delta=${deltas.max}"))
+
+  /** The replay-idempotent sink for [[ingestIndexStream]]
+    * ([[graft.util.DeltaStore.sink]]): each batch's code rows land under
+    * `delta=<batchId>/` with overwrite semantics — q290's kill-and-resume
+    * gate. The `delta=` spelling makes the batch id a partition column,
+    * so snapshot order is readable straight off the store for
+    * [[readIndexStore]]'s latest-wins. */
   def idempotentIndexSink(storeRoot: String,
       afterBatch: Long => Unit = _ => (),
       beforeBatch: Long => Unit = _ => ()): (DataFrame, Long) => Unit =
-    (idx, batchId) => {
-      beforeBatch(batchId)
-      idx.write.mode("overwrite").parquet(s"$storeRoot/delta=$batchId")
-      afterBatch(batchId)
-    }
+    graft.util.DeltaStore.sink(afterBatch, beforeBatch)((idx, batchId) =>
+      idx.write.mode("overwrite").parquet(s"$storeRoot/delta=$batchId"))
 
-  /** List a batch-addressed index store's delta ids, OLDEST FIRST — one
-    * filesystem metadata listing, no data read: maintenance policies key
-    * off the store's own layout ([[maintainIndexStore]]'s threshold),
-    * never an external counter that could drift from what's durable. */
+  /** A batch-addressed index store's delta ids, OLDEST FIRST — one
+    * filesystem metadata listing, no data read. */
   def indexStoreDeltas(spark: org.apache.spark.sql.SparkSession,
       storeRoot: String): Seq[Long] = {
     val root = new org.apache.hadoop.fs.Path(storeRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .collect { case n if n.startsWith("delta=") =>
-        n.stripPrefix("delta=").toLong }
-      .sorted
+    graft.util.DeltaStore.listDeltas(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
   }
 
-  /** The compaction TRIGGER POLICY for a live batch-addressed store —
-    * what q277's one-shot compaction leaves to the operator: fire
-    * [[compactIndex]] when the store's own layout says the delta count
-    * exceeded `maxDeltas` (one filesystem listing — the threshold reads
-    * the store, never an external counter that could drift from what's
-    * durable), consolidate into ONE delta carrying the highest covered
-    * batch id, and swap the store root on success. Designed to compose
-    * into the ingest's `afterBatch` seam (micro-batches are sequential,
-    * so maintenance never races a writer). Below the threshold this is a
-    * no-op and serving is untouched — the law q292 pins alongside the
-    * fired arm.
-    *
-    * The swap runs [[graft.util.StoreSwap]]'s crash-recoverable protocol
-    * (write-complete staging + marker, fixed-order renames; every cycle
-    * first repairs any interrupted predecessor), so a crash at ANY point
-    * leaves either the old store or the new one installable — never a
-    * missing or half-written root; a production object-store deployment
-    * would swap a manifest pointer at the same seam. The consolidated
-    * delta keeps the uniform (n_id, lcid, codes) store schema — `sub` is
-    * the WRITER's partitioning concern (q247/q256 gate that discipline);
-    * serving joins `lcid` alone either way.
-    *
+  /** The compaction TRIGGER POLICY for a live index store
+    * ([[graft.util.DeltaStore.maintain]] over [[indexStore]]): below
+    * `maxDeltas` deltas a no-op (q292's law), above it one consolidated
+    * delta at the highest covered batch id, swapped in crash-recoverably.
     * @param tombstones optional id frame erased AT compaction
-    *                   ([[compactIndex]]'s arg — one anti-join per cycle)
-    * @param onlyBelow when maintaining a store a LIVE ingest is still
-    *        writing (the `beforeBatch(b)` seam), pass `Some(b)`: only
-    *        deltas below the current batch id are compacted — they are
-    *        committed, so a replay can never rewrite one — and any delta
-    *        ≥ b (a doomed partial from a crashed attempt, about to be
-    *        overwritten by the in-flight batch) is dropped with the swap
-    *        rather than folded into a consolidated delta it would then
-    *        double-count against. At-rest maintenance passes None and
-    *        compacts everything.
-    * @param dropBelow RETENTION window: deltas whose ingest-batch id is
-    *        below this are AGED OUT — excluded from the consolidation and
-    *        removed with the swap — the time-keyed twin of id tombstones
-    *        (batch id is the store's ingest clock; a wall-clock window
-    *        maps onto it through whatever batch→time metadata the ingest
-    *        records). Aged deltas FORCE the cycle to fire even under the
-    *        count threshold: retention is a correctness policy (data that
-    *        must leave), not a layout optimization. Must leave at least
-    *        one delta in the window — a retention cut that would empty
-    *        the store is almost certainly a misconfigured window and
-    *        fails loudly.
+    * @param onlyBelow the committed cut at the `beforeBatch(b)` seam
+    * @param dropBelow the retention window on the batch clock; aged deltas
+    *        force the cycle, and a window that would empty the store fails
     * @return true iff the policy fired and the store was swapped */
   def maintainIndexStore(spark: org.apache.spark.sql.SparkSession,
       storeRoot: String, maxDeltas: Int, cap: Long,
       tombstones: DataFrame = null,
       onlyBelow: Option[Long] = None,
-      dropBelow: Option[Long] = None): Boolean = {
-    require(maxDeltas >= 1, s"maxDeltas must be >= 1, got $maxDeltas")
-    val fs = new org.apache.hadoop.fs.Path(storeRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var deltas: Seq[Long] = Seq.empty
-    graft.util.StoreMaintenance.cycle(fs, storeRoot) {
-      // evaluated post-recovery, off the repaired root's own layout
-      val all = indexStoreDeltas(spark, storeRoot)
-        .filter(d => onlyBelow.forall(d < _))
-      deltas = all.filter(d => dropBelow.forall(d >= _))
-      val aged = all.size - deltas.size
-      require(aged == 0 || deltas.nonEmpty,
-        s"retention window dropBelow=${dropBelow.get} would empty the " +
-          s"store at $storeRoot — refusing to age out every delta")
-      deltas.size > maxDeltas || aged > 0
-    } { staging =>
-      val snaps = deltas.map(d => spark.read.parquet(s"$storeRoot/delta=$d"))
-      // cap's physical effect here: the consolidated write is CLUSTERED by
-      // compactIndex's (lcid, sub) cells — the shuffle keeps every ≤cap-row
-      // cell whole within one task's output, so no written row group mixes
-      // unbounded slices of a skewed coarse list (the q247/q256 layout
-      // discipline). `sub` itself is not persisted: the store schema stays
-      // the uniform (n_id, lcid, codes) that fresh ingest deltas write, and
-      // the bound re-derives at the next cycle.
-      compactIndex(snaps, cap, tombstones)
-        .repartition(col("lcid"), col("sub"))
-        .sortWithinPartitions(col("lcid"), col("sub"), col("n_id"))
-        .select(col("n_id"), col("lcid"), col("codes"))
-        .write.mode("overwrite")
-        .parquet(s"$staging/delta=${deltas.max}")
-    }
-  }
+      dropBelow: Option[Long] = None): Boolean =
+    indexStore(cap).maintain(spark, storeRoot, maxDeltas, tombstones,
+      onlyBelow, dropBelow)
 
   /** Load a batch-addressed index store for SERVING: union of the deltas
     * with LATEST-WINS per vector id (a later delta may legitimately
     * re-encode an id — the upsert path), `delta` resolved and dropped.
     * Reading delta-by-delta through [[compactIndex]] is the compacted
-    * twin; this is the direct serve of an uncompacted store. */
+    * twin; this is the direct serve of an uncompacted store, and equally
+    * of a chunked generation (later chunks carry higher ids). */
   def readIndexStore(spark: org.apache.spark.sql.SparkSession,
       storeRoot: String): DataFrame = {
     val raw = spark.read.parquet(storeRoot)
-    if (!raw.columns.contains("delta"))
+    // ids are unique within one delta (compactIndex's snapshot contract):
+    // only a store of several deltas needs the latest-wins shuffle
+    if (indexStoreDeltas(spark, storeRoot).size <= 1)
       raw.select(col("n_id"), col("lcid"), col("codes"))
     else raw.groupBy(col("n_id"))
       .agg(max_by(struct(col("lcid"), col("codes")), col("delta")).as("__b"))
@@ -1173,10 +1099,13 @@ object Similarity {
     val tagged = snapshots.zipWithIndex.map { case (df, i) =>
       df.select(col("n_id"), col("lcid"), col("codes"), lit(i).as("__snap"))
     }.reduce(_ unionByName _)
-    val latest0 = tagged.groupBy(col("n_id"))
-      .agg(max_by(struct(col("lcid"), col("codes")), col("__snap")).as("__b"))
-      .select(col("n_id"), col("__b").getField("lcid").as("lcid"),
-        col("__b").getField("codes").as("codes"))
+    // ids are unique within one snapshot: a lone snapshot is its own
+    // latest-wins resolution (the common single-delta merge)
+    val latest0 = if (snapshots.size == 1) tagged.drop("__snap")
+      else tagged.groupBy(col("n_id"))
+        .agg(max_by(struct(col("lcid"), col("codes")), col("__snap")).as("__b"))
+        .select(col("n_id"), col("__b").getField("lcid").as("lcid"),
+          col("__b").getField("codes").as("codes"))
     // tombstones kill an id REGARDLESS of which snapshot wrote it last —
     // deletion applied after latest-wins, before the layout re-balance
     val latest = if (tombstones == null) latest0

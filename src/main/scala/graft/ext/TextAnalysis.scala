@@ -855,193 +855,74 @@ object TextAnalysis {
     * RESULT-IDENTICAL by the merge algebra (q284's gate); what compaction
     * buys is bounded file counts and O(1) metadata frames regardless of
     * how many micro-batches ever wrote. Writes to `outPath` (a fresh
-    * store dir) — swap-on-success is the caller's move, exactly like an
-    * index compaction cycle.
+    * store dir) — swap-on-success is the caller's move.
     *
     * `tombstones` (a frame of bare doc ids) are erased AT compaction —
     * [[removeDocsById]] folded into the consolidation rewrite, so one
-    * cycle pays deletion and consolidation together (the way the vector
-    * store already works, [[Similarity.compactIndex]]'s tombstones arg):
-    * the deleted side derives from the store's own rows and the
-    * stats/df subtraction happens in the same metadata re-reduction the
-    * rewrite was paying anyway. q295 gates the combined cycle on the
-    * surviving-corpus oracle.
-    * @param batchId when set, the consolidated delta lands
-    *        batch-addressed under `delta=<batchId>/` — REQUIRED when the
-    *        store stays live for further batch-addressed ingest (a bare
-    *        append would mix flat files into a partitioned layout)
-    * @param deltaFrom RETENTION cut: only deltas at/above this id are
-    *        folded into the consolidation ([[maintainHybridStore]]'s
-    *        `dropBelow`) — older deltas age out with the swap */
+    * cycle pays deletion and consolidation together (q295's gate).
+    * @param deltas the batch-addressed deltas to consolidate (the window
+    *        [[graft.util.DeltaStore]] computed); the result lands
+    *        batch-addressed under `delta=<max>/`. Empty consolidates the
+    *        whole store as a bare append — a one-shot write into a fresh
+    *        dir, not a live store */
   def compactHybridStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, outPath: String,
       docIdCol: String, textCol: String,
       embIdCol: String, vecCol: String,
       tombstones: DataFrame = null,
-      batchId: Option[Long] = None,
-      deltaBelow: Option[Long] = None,
-      deltaFrom: Option[Long] = None): Unit = {
+      deltas: Seq[Long] = Nil): Unit = {
     val hc0 = readHybridCorpus(spark, storePath, docIdCol, textCol,
-      embIdCol, vecCol, deltaBelow = deltaBelow, deltaFrom = deltaFrom)
+      embIdCol, vecCol, deltas = deltas)
     val hc = if (tombstones == null) hc0 else removeDocsById(hc0, tombstones)
     // readHybridCorpus already re-reduces stats/alldf; writing the result
     // back as one delta IS the consolidation
-    writeHybridCorpusDelta(hc, outPath, batchId)
+    writeHybridCorpusDelta(hc, outPath, deltas.maxOption)
   }
 
-  /** INCREMENTAL generation publish of a live postings store — the
-    * [[graft.util.GenStore]] read-committed cycle (q304's protocol) with
-    * per-cycle work proportional to the NEW deltas instead of the whole
-    * committed prefix. The previous generation is already the complete,
-    * immutable consolidation of every delta ≤ its id, and the append
-    * contract keeps per-delta doc ids DISJOINT — so the next generation is
-    * the previous generation's files VERBATIM (a byte-level copy: no
-    * decode, no shuffle, no re-reduction of postings already consolidated
-    * once) plus [[compactHybridStore]] over ONLY the deltas the pointer
-    * has not covered yet, appended as a second consolidation chunk.
-    * [[readHybridCorpus]] re-reduces the metadata frames at serve time
-    * (stats re-sum, per-term dfs re-add), so a generation holding k
-    * consolidation chunks serves RESULT-IDENTICALLY to one full rewrite —
-    * the same merge algebra that makes the store appendable at all
-    * (law-tested in TextAnalysisSpec; q304 gates the protocol end to end).
-    * Chunk count grows by one per publish, bounded by the publish count,
-    * not the micro-batch count; a production deployment schedules an
-    * occasional FULL rewrite (delete the generation root, or publish from
-    * a fresh cycle) as major compaction when the chunk count warrants it.
-    *
-    * The publish protocol itself is unchanged and fully live per cycle:
-    * recover → policy (fire iff the pointer lags the committed prefix) →
-    * stage → complete write → atomic marker flip.
-    *
+  /** The postings store as a [[graft.util.DeltaStore]]: the `stats` frame
+    * is its ingest clock (the writer lands exactly one batch-addressed
+    * stats dir per delta) and the merge is [[compactHybridStore]]'s
+    * additive re-reduction — chunks hold disjoint doc ids, so
+    * [[readHybridCorpus]] re-sums them at serve time. */
+  private[graft] def postingsStore(docIdCol: String, textCol: String,
+      embIdCol: String, vecCol: String): graft.util.DeltaStore =
+    graft.util.DeltaStore("stats", (spark, root, deltas, tombstones, out) =>
+      compactHybridStore(spark, root, out, docIdCol, textCol, embIdCol,
+        vecCol, tombstones, deltas))
+
+  /** INCREMENTAL generation publish of a live postings store
+    * ([[graft.util.DeltaStore.publish]] over [[postingsStore]]): the
+    * previous generation's files plus one consolidation chunk of the
+    * uncovered deltas (q304's protocol; law-tested against a full rewrite).
     * @param deltaBelow the committed cut while a live ingest is writing
-    *        (the `beforeBatch(b)` seam, [[maintainHybridStore]]'s
-    *        `onlyBelow`); None publishes everything (at-rest)
+    *        (the `beforeBatch(b)` seam); None publishes everything
     * @return true iff a new generation was published */
   def publishHybridGeneration(spark: org.apache.spark.sql.SparkSession,
       storePath: String, genRoot: String,
       docIdCol: String, textCol: String, embIdCol: String, vecCol: String,
-      deltaBelow: Option[Long] = None): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(genRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the stats frame is the store's ingest clock — one delta dir per
-    // micro-batch (the same listing the maintenance threshold reads)
-    val committed = Similarity
-      .indexStoreDeltas(spark, s"$storePath/stats")
-      .filter(d => deltaBelow.forall(d < _))
-    if (committed.isEmpty) false
-    else {
-      graft.util.GenStore.recover(fs, genRoot)
-      val prev = graft.util.GenStore.current(fs, genRoot)
-      graft.util.GenStore.cycle(fs, genRoot, gen = committed.max) {
-        // fire iff the pointer lags the committed prefix
-        prev.forall(_ < committed.max)
-      } { p =>
-        prev match {
-          case Some(g) =>
-            graft.util.Fs.copyRecursively(
-              java.nio.file.Paths.get(graft.util.GenStore
-                .generationPath(genRoot, g).toUri.getPath),
-              java.nio.file.Paths.get(p.toUri.getPath))
-            compactHybridStore(spark, storePath, p.toString,
-              docIdCol, textCol, embIdCol, vecCol,
-              deltaBelow = deltaBelow, deltaFrom = Some(g + 1))
-          case None =>
-            compactHybridStore(spark, storePath, p.toString,
-              docIdCol, textCol, embIdCol, vecCol,
-              deltaBelow = deltaBelow)
-        }
-      }
-    }
-  }
+      deltaBelow: Option[Long] = None): Boolean =
+    postingsStore(docIdCol, textCol, embIdCol, vecCol)
+      .publish(spark, storePath, genRoot, deltaBelow)
 
-  /** The compaction TRIGGER POLICY for a live postings store —
-    * [[Similarity.maintainIndexStore]]'s lexical twin: fire
-    * [[compactHybridStore]] when the store's own layout says the delta
-    * count exceeded `maxDeltas` (the writer lands exactly one
-    * batch-addressed stats dir — one stats row — per delta, so the
-    * threshold is one filesystem listing of the store's durable layout,
-    * the same read the vector twin uses; never an external counter that
-    * could drift from what's durable), consolidate
-    * into ONE delta carrying the highest covered batch id, and swap the
-    * store root on success via [[graft.util.StoreSwap]]'s
-    * crash-recoverable protocol (write-complete staging + marker,
-    * fixed-order renames; every cycle first repairs any interrupted
-    * predecessor). Composes into [[ingestPostingsStream]]'s
-    * `afterBatch` seam — micro-batches are sequential, so maintenance
-    * never races a writer. Below the threshold this is a no-op and
-    * serving is untouched — the law q293 pins alongside the fired arm.
+  /** The compaction TRIGGER POLICY for a live postings store
+    * ([[graft.util.DeltaStore.maintain]] over [[postingsStore]]): below
+    * `maxDeltas` deltas a no-op (q293's law), above it one consolidated
+    * delta at the highest covered batch id, swapped in crash-recoverably.
     * @param tombstones optional bare-id frame erased at compaction
-    * @param onlyBelow when maintaining a store a LIVE ingest is still
-    *        writing (the `beforeBatch(b)` seam), pass `Some(b)`: only
-    *        COMMITTED deltas (below the current batch id) are counted
-    *        and compacted — a replay can never rewrite one — and any
-    *        delta ≥ b (a doomed partial from a crashed attempt, about to
-    *        be overwritten by the in-flight batch) is dropped with the
-    *        swap rather than double-counted. At-rest maintenance passes
-    *        None and compacts everything.
-    * @param dropBelow RETENTION window keyed by the store's ingest clock
-    *        (the batch-addressed delta id) — [[Similarity
-    *        .maintainIndexStore]]'s arm on the lexical side: deltas below
-    *        it are EXCLUDED from the consolidation (their postings,
-    *        lengths, stats rows and df contributions all age out in the
-    *        same metadata re-reduction the rewrite was paying anyway) and
-    *        removed with the swap; aged deltas FORCE the cycle even under
-    *        the count threshold — retention is a correctness policy, not
-    *        a layout optimization. A window that would empty the store is
-    *        refused loudly.
+    * @param onlyBelow the committed cut at the `beforeBatch(b)` seam
+    * @param dropBelow the retention window on the batch clock: aged
+    *        deltas' postings, lengths, stats and dfs leave in the same
+    *        re-reduction; they force the cycle, and a window that would
+    *        empty the store fails
     * @return true iff the policy fired and the store was swapped */
   def maintainHybridStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, maxDeltas: Int,
       docIdCol: String, textCol: String, embIdCol: String, vecCol: String,
       tombstones: DataFrame = null,
       onlyBelow: Option[Long] = None,
-      dropBelow: Option[Long] = None): Boolean = {
-    require(maxDeltas >= 1, s"maxDeltas must be >= 1, got $maxDeltas")
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var maxId = Long.MinValue
-    graft.util.StoreMaintenance.cycle(fs, storePath) {
-      // the threshold reads the store's own DURABLE layout: the writer
-      // lands exactly one batch-addressed stats dir per delta (one stats
-      // row per delta — [[writeHybridCorpusDelta]]), so the delta count is
-      // ONE filesystem metadata listing, the same read the vector twin's
-      // policy uses ([[Similarity.maintainIndexStore]]) — deciding a no-op
-      // costs no Spark job and no data read. A not-yet-written store (the
-      // first beforeBatch fires before any delta exists) lists empty and
-      // trivially has nothing to compact.
-      val listed = Similarity.indexStoreDeltas(spark, s"$storePath/stats")
-      if (listed.isEmpty) {
-        // loud on the one shape the listing cannot count: a bare-append
-        // (flat) store has stats ROWS but no delta dirs — it was never
-        // maintainable (the consolidated delta needs a batch address), so
-        // a caller pointing the policy at one is a wiring bug, not a no-op
-        require(!fs.exists(
-            new org.apache.hadoop.fs.Path(s"$storePath/stats")) ||
-            fs.listStatus(new org.apache.hadoop.fs.Path(s"$storePath/stats"))
-              .forall(st => st.getPath.getName.startsWith("_") ||
-                st.getPath.getName.startsWith(".")),
-          s"maintainHybridStore needs a batch-addressed store " +
-            s"(delta=<id> layout), found a bare-append store at $storePath")
-        false
-      } else {
-        val all = listed.filter(d => onlyBelow.forall(d < _))
-        val kept = all.filter(d => dropBelow.forall(d >= _))
-        val aged = all.size - kept.size
-        require(aged == 0 || kept.nonEmpty,
-          s"retention window dropBelow=${dropBelow.get} would empty the " +
-            s"store at $storePath — refusing to age out every delta")
-        if (kept.size <= maxDeltas && aged == 0) false
-        else {
-          maxId = kept.max
-          true
-        }
-      }
-    } { staging =>
-      compactHybridStore(spark, storePath, staging.toString,
-        docIdCol, textCol, embIdCol, vecCol, tombstones, Some(maxId),
-        deltaBelow = onlyBelow, deltaFrom = dropBelow)
-    }
-  }
+      dropBelow: Option[Long] = None): Boolean =
+    postingsStore(docIdCol, textCol, embIdCol, vecCol)
+      .maintain(spark, storePath, maxDeltas, tombstones, onlyBelow, dropBelow)
 
   /** Persist one prepared-corpus DELTA into a postings STORE directory —
     * the durable form of [[mergeHybridCorpus]]'s append algebra: every
@@ -1097,16 +978,14 @@ object TextAnalysis {
     *        doc-count-sized distinct) — the loud form of the append
     *        contract; default off for hot serve startup.
     * @param deltaBelow restrict the read to batch-addressed deltas BELOW
-    *        this id — the maintenance-cycle read of only COMMITTED
-    *        deltas while a live ingest is still writing
-    *        ([[maintainHybridStore]]'s `onlyBelow`); partition pruning
-    *        makes it a directory-level cut, no data read from excluded
-    *        deltas. None reads the whole store.
-    * @param deltaFrom restrict the read to batch-addressed deltas AT OR
-    *        ABOVE this id — the RETENTION window's lower edge
-    *        ([[maintainHybridStore]]'s `dropBelow`): aged-out deltas are
-    *        a directory-level partition-pruned cut, exactly like
-    *        `deltaBelow`. None applies no lower cut.
+    *        this id — a read of only COMMITTED deltas while a live ingest
+    *        is still writing; partition pruning makes it a
+    *        directory-level cut, no data read from excluded deltas. None
+    *        reads the whole store.
+    * @param deltas restrict the read to exactly these batch-addressed
+    *        deltas — the window a [[graft.util.DeltaStore]] cycle
+    *        consolidates; a partition-pruned cut like `deltaBelow`. Empty
+    *        applies no cut.
     * @param allowLexicalOnly permit embIdCol = null on a store that DOES
     *        carry a vector side — the intentional postings-only serve;
     *        without it that shape is rejected as a likely wiring bug. */
@@ -1114,7 +993,7 @@ object TextAnalysis {
       docIdCol: String, textCol: String, embIdCol: String, vecCol: String,
       checkUnique: Boolean = false,
       deltaBelow: Option[Long] = None,
-      deltaFrom: Option[Long] = None,
+      deltas: Seq[Long] = Nil,
       allowLexicalOnly: Boolean = false): HybridCorpus = {
     // store-shape guard: emb presence is a property of the STORE (the
     // writer only appends `emb/` when the corpus had a vector side), so a
@@ -1144,14 +1023,14 @@ object TextAnalysis {
     // written as bare appends
     def frame0(sub: String): DataFrame = {
       val raw = spark.read.parquet(s"$path/$sub")
-      if (deltaBelow.isEmpty && deltaFrom.isEmpty) raw.drop("delta")
+      val cuts = deltaBelow.map(col("delta").cast("long") < _) ++
+        Option.when(deltas.nonEmpty)(col("delta").cast("long").isin(deltas: _*))
+      if (cuts.isEmpty) raw.drop("delta")
       else {
         require(raw.columns.contains("delta"),
-          s"deltaBelow/deltaFrom on a store without batch-addressed " +
+          s"deltaBelow/deltas on a store without batch-addressed " +
             s"deltas: $path/$sub")
-        val cut = (deltaBelow.map(col("delta").cast("long") < _) ++
-          deltaFrom.map(col("delta").cast("long") >= _)).reduce(_ && _)
-        raw.where(cut).drop("delta")
+        raw.where(cuts.reduce(_ && _)).drop("delta")
       }
     }
     // spark.read.parquet resolves each frame EAGERLY on the driver (file
@@ -1204,30 +1083,16 @@ object TextAnalysis {
     * are dropped so a staged outer-join stream cannot pollute a frame.
     *
     * Returns the un-started writer so the caller owns trigger, checkpoint
-    * and start.
-    * @param beforeBatch ops hook invoked BEFORE the batch's delta write —
-    *        where a store-maintenance policy ([[maintainHybridStore]]
-    *        with `onlyBelow = Some(batchId)`) composes in: at this point
-    *        every delta below the current batch id is COMMITTED, so
-    *        compacting them can never collide with an at-least-once
-    *        replay; the current batch's own delta — the only replayable
-    *        one — does not exist yet (or is a doomed partial about to be
-    *        overwritten by this very batch)
-    * @param afterBatch ops hook invoked with the batch id AFTER its delta
-    *        is durable but BEFORE the offset commit — metrics, and where
-    *        tests inject crashes to exercise the replay path. Running a
-    *        compaction HERE would be unsafe: the just-written delta is
-    *        uncommitted, and folding it into a consolidated delta that a
-    *        replay then overwrites double-counts its postings */
+    * and start; `beforeBatch`/`afterBatch` are
+    * [[graft.util.DeltaStore.sink]]'s hooks. */
   def ingestPostingsStream(docStream: DataFrame, docIdCol: String,
       textCol: String, embIdCol: String, vecCol: String, storePath: String,
       afterBatch: Long => Unit = _ => (),
       beforeBatch: Long => Unit = _ => ()):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        beforeBatch(batchId)
+      .foreachBatch(graft.util.DeltaStore.sink(afterBatch, beforeBatch) {
+          (batch, batchId) =>
         // Materialize the row-level token frame ONCE, then derive the
         // metadata frames (dl/stats/alldf) from the WRITTEN parquet rather
         // than re-running the batch-scan → tokenize → explode lineage for
@@ -1270,8 +1135,7 @@ object TextAnalysis {
            else Seq(() => batch.select(col(embIdCol), col(vecCol))
              .where(col(embIdCol).isNotNull)
              .write.mode("overwrite").parquet(s"$storePath/emb$sub"))))
-        afterBatch(batchId)
-      }
+      })
 
   /** [[bm25QueryTopK]] over a prepared (possibly pinned) corpus side.
     * @param excludeSelf drop candidates whose doc id equals the query id —

@@ -2,42 +2,10 @@ package graft.util
 
 import java.nio.file.{Files, Path}
 
-/** Small filesystem helpers shared by the mains and the q19 staging query. */
+/** Small local-filesystem helpers shared by the mains and the q19 staging
+  * query. Store content never goes through here: store copies run through
+  * Hadoop FileSystem ([[DeltaStore.copyInto]]). */
 object Fs {
-
-  /** Recursive copy of a directory tree (plain files + dirs — staged
-    * parquet artifacts; no symlink handling). Used to INSTALL a staged,
-    * per-JVM deterministic artifact into a store generation dir as a
-    * byte-identical copy instead of a recompute or a spark read→write
-    * pass. Existing files at the destination are overwritten.
-    *
-    * LOCAL paths only: callers hand java.nio paths derived from store
-    * roots, and a scheme-qualified (non-local) root would silently
-    * produce a bogus relative path — refuse it loudly instead of
-    * corrupting a generation (route a non-local install through
-    * org.apache.hadoop.fs.FileUtil.copy). Symlinked dirs are likewise
-    * refused rather than copied as empty dirs. */
-  def copyRecursively(src: Path, dst: Path): Unit = {
-    Seq(src, dst).foreach { p =>
-      require(!p.toString.contains("://"),
-        s"copyRecursively is local-FS only, got scheme-qualified path $p")
-      require(!Files.isSymbolicLink(p),
-        s"copyRecursively does not follow symlinks, got $p")
-    }
-    val walk = Files.walk(src)
-    try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala.foreach { p =>
-        val t = dst.resolve(src.relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(t)
-        else {
-          if (t.getParent != null) Files.createDirectories(t.getParent)
-          Files.copy(p, t,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
-      }
-    } finally walk.close()
-  }
 
   /** Recursive delete, deepest-first; the walk stream is closed (it holds a
     * directory fd until GC otherwise). No-op for a missing path. */

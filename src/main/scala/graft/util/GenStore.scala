@@ -147,7 +147,7 @@ object GenStore {
     repaired
   }
 
-  /** [[StoreMaintenance.cycle]]'s generation-layout twin: repair, evaluate
+  /** One publish cycle (what [[DeltaStore.publish]] runs): repair, evaluate
     * the policy, and — iff it fires — stage generation `gen`, run the
     * caller's complete write, and flip the pointer. Readers keep
     * resolving the previous generation until the single atomic marker

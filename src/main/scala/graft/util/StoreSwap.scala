@@ -3,8 +3,7 @@ package graft.util
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Crash-recoverable directory swap for store maintenance (the
-  * compaction cycles of [[graft.ext.Similarity.maintainIndexStore]] and
-  * [[graft.ext.TextAnalysis.maintainHybridStore]]): the consolidated
+  * compaction cycle of [[DeltaStore.maintain]]): the consolidated
   * store is WRITTEN COMPLETELY to a sibling staging dir before any
   * rename, then installed by a fixed-order protocol whose every
   * intermediate state is mechanically recoverable —

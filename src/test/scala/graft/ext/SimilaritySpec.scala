@@ -700,78 +700,6 @@ class SimilaritySpec extends SparkTestBase {
         .collect().toSet
   }
 
-  test("maintainIndexStore: no-op below threshold, consolidates+swaps above; readIndexStore latest-wins") {
-    val corpus = (1 to 60).map(i =>
-      (i.toLong, Array.tabulate(4)(j => ((i * 17 + j * 11) % 15 - 7).toFloat))).toDF("id", "v")
-    val cents = Seq(
-      (0L, Array(3.0f, 3.0f, 3.0f, 3.0f)),
-      (1L, Array(-3.0f, -3.0f, -3.0f, -3.0f))).toDF("cid", "v")
-    val cb = Similarity.pqCodebookByStride(
-      Similarity.residuals(corpus, cents, "id", "cid", "v"),
-      "id", "res", m = 2, subDim = 2, stride = 7)
-    val cb2 = Similarity.pqCodebookByStride(
-      Similarity.residuals(corpus, cents, "id", "cid", "v"),
-      "id", "res", m = 2, subDim = 2, stride = 11)
-    val root = java.nio.file.Files.createTempDirectory("graft_maint").toString
-    val sink = Similarity.idempotentIndexSink(root)
-    sink(Similarity.residualIndex(corpus, cents, cb,
-      "id", "cid", "v", m = 2, subDim = 2), 0L)
-    // delta 1 legitimately RE-ENCODES a subset under a different codebook
-    sink(Similarity.residualIndex(corpus.where(col("id") % 5 === 0),
-      cents, cb2, "id", "cid", "v", m = 2, subDim = 2), 1L)
-    val expected = Similarity.readIndexStore(spark, root).collect().toSet
-    // latest-wins: the re-encoded subset carries delta-1 codes
-    val snap1Codes = Similarity.residualIndex(corpus.where(col("id") % 5 === 0),
-        cents, cb2, "id", "cid", "v", m = 2, subDim = 2)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Any](2).toVector).toMap
-    expected.filter(r => snap1Codes.contains(r.getLong(0)))
-      .foreach(r => r.getSeq[Any](2).toVector shouldBe snap1Codes(r.getLong(0)))
-    // below threshold: no-op, layout untouched
-    Similarity.maintainIndexStore(spark, root, maxDeltas = 2, cap = 5L) shouldBe false
-    Similarity.indexStoreDeltas(spark, root) shouldBe Seq(0L, 1L)
-    // above threshold: fires, swaps to ONE delta at the max covered id,
-    // and the served content is unchanged
-    Similarity.maintainIndexStore(spark, root, maxDeltas = 1, cap = 5L) shouldBe true
-    Similarity.indexStoreDeltas(spark, root) shouldBe Seq(1L)
-    Similarity.readIndexStore(spark, root).collect().toSet shouldBe expected
-    // idempotent: immediately re-running is a no-op again
-    Similarity.maintainIndexStore(spark, root, maxDeltas = 1, cap = 5L) shouldBe false
-  }
-
-  test("maintainIndexStore retention: dropBelow ages deltas out, forces the cycle, refuses to empty") {
-    val corpus = (1 to 30).map(i =>
-      (i.toLong, Array.tabulate(4)(j => ((i * 17 + j * 11) % 15 - 7).toFloat))).toDF("id", "v")
-    val cents = Seq(
-      (0L, Array(3.0f, 3.0f, 3.0f, 3.0f)),
-      (1L, Array(-3.0f, -3.0f, -3.0f, -3.0f))).toDF("cid", "v")
-    val cb = Similarity.pqCodebookByStride(
-      Similarity.residuals(corpus, cents, "id", "cid", "v"),
-      "id", "res", m = 2, subDim = 2, stride = 7)
-    val root = java.nio.file.Files.createTempDirectory("graft_retain").toString
-    val sink = Similarity.idempotentIndexSink(root)
-    (0 until 3).foreach { b =>
-      sink(Similarity.residualIndex(corpus.where(col("id") % 3 === b),
-        cents, cb, "id", "cid", "v", m = 2, subDim = 2), b.toLong)
-    }
-    // an all-covering window under the count threshold: no cycle
-    Similarity.maintainIndexStore(spark, root, maxDeltas = 5, cap = 8L,
-      dropBelow = Some(0L)) shouldBe false
-    // an aged delta FORCES the cycle below the count threshold and the
-    // surviving store equals the in-window deltas exactly
-    val expected = Similarity.readIndexStore(spark, root)
-      .where(col("n_id") % 3 =!= 0).collect().toSet
-    Similarity.maintainIndexStore(spark, root, maxDeltas = 5, cap = 8L,
-      dropBelow = Some(1L)) shouldBe true
-    Similarity.indexStoreDeltas(spark, root) shouldBe Seq(2L)
-    Similarity.readIndexStore(spark, root).collect().toSet shouldBe expected
-    // a window that would age out EVERYTHING is refused loudly
-    an[IllegalArgumentException] should be thrownBy
-      Similarity.maintainIndexStore(spark, root, maxDeltas = 1, cap = 8L,
-        dropBelow = Some(99L))
-    // ... and the refusal left the store untouched
-    Similarity.readIndexStore(spark, root).collect().toSet shouldBe expected
-  }
-
   test("mmrSelectSdc: store-miss candidates drop silently by default, loudly with requireAllInStore") {
     val corpus = (1 to 60).map(i =>
       (i.toLong, Array.tabulate(4)(j => ((i * 17 + j * 11) % 15 - 7).toFloat))).toDF("id", "v")

@@ -504,85 +504,6 @@ class TextAnalysisSpec extends SparkTestBase {
     noop.stats.collect().toSeq shouldBe full.stats.collect().toSeq
   }
 
-  test("maintainHybridStore: no-op below threshold, consolidates+swaps above, tombstones erased at compaction") {
-    val docs = Seq((0L, "spark joins fast"), (1L, "slow scans spark"),
-      (2L, "fast fast joins"), (3L, "spark spark spark"))
-      .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_hmaint").toString
-    def delta(r: Long) = TextAnalysis.writeHybridCorpusDelta(
-      TextAnalysis.prepareHybridCorpus(docs.where(col("doc_id") % 2 === r),
-        "doc_id", "text", null, null, null),
-      root, Some(r))
-    delta(0L); delta(1L)
-    def read() = TextAnalysis.readHybridCorpus(spark, root,
-      "doc_id", "text", null, null)
-    val expectedDf = read().alldf.orderBy("t").collect().toSeq
-    // below threshold: no-op
-    TextAnalysis.maintainHybridStore(spark, root, maxDeltas = 2,
-      "doc_id", "text", null, null) shouldBe false
-    spark.read.parquet(s"$root/stats").count() shouldBe 2L
-    // above threshold: one consolidated delta, same reduced metadata
-    TextAnalysis.maintainHybridStore(spark, root, maxDeltas = 1,
-      "doc_id", "text", null, null) shouldBe true
-    spark.read.parquet(s"$root/stats").count() shouldBe 1L
-    read().alldf.orderBy("t").collect().toSeq shouldBe expectedDf
-    // tombstones at compaction: new docs arrive as a later delta, then one
-    // cycle pays erasure (docs 1 and 3) + consolidation together — the
-    // result must equal preparing the surviving corpus from scratch
-    val more = Seq((4L, "joins beat scans"), (5L, "spark scans"))
-      .toDF("doc_id", "text")
-    TextAnalysis.writeHybridCorpusDelta(
-      TextAnalysis.prepareHybridCorpus(more, "doc_id", "text", null, null, null),
-      root, Some(2L))
-    TextAnalysis.maintainHybridStore(spark, root, maxDeltas = 1,
-      "doc_id", "text", null, null,
-      tombstones = Seq(1L, 3L).toDF("doc_id")) shouldBe true
-    val survivors = TextAnalysis.prepareHybridCorpus(
-      docs.where(col("doc_id") % 2 === 0).unionByName(more),
-      "doc_id", "text", null, null, null)
-    read().alldf.orderBy("t").collect().toSeq shouldBe
-      survivors.alldf.orderBy("t").collect().toSeq
-    read().stats.collect().toSeq shouldBe survivors.stats.collect().toSeq
-    read().dl.orderBy("doc_id").collect().toSeq shouldBe
-      survivors.dl.orderBy("doc_id").collect().toSeq
-  }
-
-  test("maintainHybridStore retention: dropBelow ages deltas out, forces the cycle, refuses to empty") {
-    val docs = Seq((0L, "spark joins fast"), (1L, "slow scans spark"),
-      (2L, "fast fast joins"), (3L, "spark spark spark"))
-      .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_hretain").toString
-    (0L to 2L).foreach { b =>
-      TextAnalysis.writeHybridCorpusDelta(
-        TextAnalysis.prepareHybridCorpus(
-          docs.where(col("doc_id") % 3 === b), "doc_id", "text",
-          null, null, null),
-        root, Some(b))
-    }
-    def read() = TextAnalysis.readHybridCorpus(spark, root,
-      "doc_id", "text", null, null)
-    // an all-covering window under the count threshold: no cycle
-    TextAnalysis.maintainHybridStore(spark, root, maxDeltas = 5,
-      "doc_id", "text", null, null, dropBelow = Some(0L)) shouldBe false
-    // an aged delta forces the cycle below the count threshold, and the
-    // surviving store equals preparing the in-window corpus from scratch
-    TextAnalysis.maintainHybridStore(spark, root, maxDeltas = 5,
-      "doc_id", "text", null, null, dropBelow = Some(1L)) shouldBe true
-    spark.read.parquet(s"$root/stats").count() shouldBe 1L
-    val survivors = TextAnalysis.prepareHybridCorpus(
-      docs.where(col("doc_id") % 3 =!= 0), "doc_id", "text", null, null, null)
-    read().alldf.orderBy("t").collect().toSeq shouldBe
-      survivors.alldf.orderBy("t").collect().toSeq
-    read().stats.collect().toSeq shouldBe survivors.stats.collect().toSeq
-    read().dl.orderBy("doc_id").collect().toSeq shouldBe
-      survivors.dl.orderBy("doc_id").collect().toSeq
-    // a window that would age out EVERYTHING is refused, store untouched
-    an[IllegalArgumentException] should be thrownBy
-      TextAnalysis.maintainHybridStore(spark, root, maxDeltas = 1,
-        "doc_id", "text", null, null, dropBelow = Some(99L))
-    read().dl.count() shouldBe 2L
-  }
-
   test("ingestPostingsStream materialized delta write ≡ writeHybridCorpusDelta(prepareHybridCorpus) per frame") {
     // the ingest's per-batch write derives dl/stats/alldf from the WRITTEN
     // toks parquet (one tokenize pass per delta) — this law pins that the
@@ -639,64 +560,6 @@ class TextAnalysisSpec extends SparkTestBase {
     val b = TextAnalysis.readHybridCorpus(spark, reference,
       "doc_id", "text", "vec_id", "embedding")
     a.stats.collect().toSeq shouldBe b.stats.collect().toSeq
-  }
-
-  test("publishHybridGeneration: incremental publish ≡ one full consolidation, per frame and on the pointer") {
-    // three batch-addressed deltas with a vector side; generations publish
-    // incrementally (copy previous + consolidate only the new deltas) and
-    // the FINAL generation must serve identically to one full rewrite —
-    // the disjoint-id merge algebra the store's append contract guarantees
-    val docs = Seq((0L, "spark joins fast"), (1L, "slow scans spark"),
-      (2L, "fast fast joins"), (3L, "spark spark spark"),
-      (4L, "joins beat scans"), (5L, "spark scans"))
-      .toDF("doc_id", "text")
-    val emb = Seq((0L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)),
-      (4L, Array(0.5f, 0.5f))).toDF("vec_id", "embedding")
-    val live = java.nio.file.Files.createTempDirectory("graft_genlive").toString
-    (0L to 2L).foreach { b =>
-      TextAnalysis.writeHybridCorpusDelta(
-        TextAnalysis.prepareHybridCorpus(
-          docs.where(col("doc_id") % 3 === b), "doc_id", "text",
-          emb.where(col("vec_id") % 3 === b), "vec_id", "embedding"),
-        live, Some(b))
-    }
-    val genRoot = java.nio.file.Files.createTempDirectory("graft_genroot").toString
-    val fs = new org.apache.hadoop.fs.Path(genRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def publish(below: Option[Long]) = TextAnalysis.publishHybridGeneration(
-      spark, live, genRoot, "doc_id", "text", "vec_id", "embedding",
-      deltaBelow = below)
-    // nothing committed: no generation
-    publish(Some(0L)) shouldBe false
-    graft.util.GenStore.current(fs, genRoot) shouldBe None
-    // committed {0} → gen 0 (full path: no previous generation)
-    publish(Some(1L)) shouldBe true
-    graft.util.GenStore.current(fs, genRoot) shouldBe Some(0L)
-    // committed {0,1} → gen 1 (INCREMENTAL: copy gen 0 + delta 1 only)
-    publish(Some(2L)) shouldBe true
-    // re-publishing the same prefix must be a no-op (pointer not lagging)
-    publish(Some(2L)) shouldBe false
-    // everything committed → gen 2 (incremental again)
-    publish(None) shouldBe true
-    graft.util.GenStore.current(fs, genRoot) shouldBe Some(2L)
-    val genPath = graft.util.GenStore.currentPath(fs, genRoot).get.toString
-    // reference: ONE full consolidation of the whole live store
-    val ref = java.nio.file.Files.createTempDirectory("graft_genref").toString
-    TextAnalysis.compactHybridStore(spark, live, ref,
-      "doc_id", "text", "vec_id", "embedding")
-    val a = TextAnalysis.readHybridCorpus(spark, genPath,
-      "doc_id", "text", "vec_id", "embedding")
-    val b = TextAnalysis.readHybridCorpus(spark, ref,
-      "doc_id", "text", "vec_id", "embedding")
-    a.toks.orderBy("doc_id", "t").collect().toSeq shouldBe
-      b.toks.orderBy("doc_id", "t").collect().toSeq
-    a.dl.orderBy("doc_id").collect().toSeq shouldBe
-      b.dl.orderBy("doc_id").collect().toSeq
-    a.emb.orderBy("vec_id").collect().toSeq shouldBe
-      b.emb.orderBy("vec_id").collect().toSeq
-    a.stats.collect().toSeq shouldBe b.stats.collect().toSeq
-    a.alldf.orderBy("t").collect().toSeq shouldBe
-      b.alldf.orderBy("t").collect().toSeq
   }
 
   test("readHybridCorpus: store-shape guard fails loud when embIdCol disagrees with the emb/ dir") {
