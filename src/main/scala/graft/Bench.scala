@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.util.Profile
 
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and prints
   * one JSON line. Each query is fully materialized through the `noop` sink
@@ -8,25 +9,15 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // record-only serving SLOs during the timed passes: the serving
-      // gates' in-body assert (Observability.gateServeSlo) is disabled at
-      // sloMs=0 and the recorded per-batch medians are graded against the
-      // gates' intrinsic budgets AFTER the run, where a budget blown by a
-      // VM-throttle window is a retry-eligible verdict instead of a thrown
-      // query permanently branding the pass "failed" (the r14 q275 flake).
-      // SPARK_GRAFT_SERVE_SLO_MS dials a non-zero in-body budget back in.
-      .config("spark.graft.serve.sloMs",
-        sys.env.getOrElse("SPARK_GRAFT_SERVE_SLO_MS", "0"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // record-only serving SLOs during the timed passes: the serving
+    // gates' in-body assert (Observability.gateServeSlo) is disabled at
+    // sloMs=0 and the recorded per-batch medians are graded against the
+    // gates' intrinsic budgets AFTER the run, where a budget blown by a
+    // VM-throttle window is a retry-eligible verdict instead of a thrown
+    // query permanently branding the pass "failed" (the r14 q275 flake).
+    // SPARK_GRAFT_SERVE_SLO_MS dials a non-zero in-body budget back in.
+    val spark = graft.util.Sessions.build(Seq("spark.graft.serve.sloMs" ->
+      sys.env.getOrElse("SPARK_GRAFT_SERVE_SLO_MS", "0")))
     // Untimed warmup: first-touch costs (Hadoop FS init, parquet footer
     // readers, whole-stage codegen + Janino, shuffle machinery, broadcast
     // infra) land here instead of inside the first timed query.
@@ -110,14 +101,21 @@ object Bench {
     // pass instead of reading them as independent regressions
     val passBounds = scala.collection.mutable.ArrayBuffer[(Double, Double)]()
     def nowSec: Double = System.currentTimeMillis() / 1000.0
+    // every timed run is profiled under its own tag; the profiles are read
+    // once, after the last run, into PROFILE_LOCAL.json
+    val runTags = scala.collection.mutable.Map[String, Vector[String]]()
+      .withDefaultValue(Vector.empty)
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+      val tag = s"$name#${runTags(name).size + 1}"
+      runTags(name) = runTags(name) :+ tag
       val t0 = System.nanoTime()
-      val ok =
+      val ok = Profile.tagged(spark, tag) {
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: $e")
           false
         }
+      }
       // release layout-pinning persists outside the timed span (unpersist
       // is non-blocking and cheap; the persist+count is inside, as before)
       val t = (System.nanoTime() - t0) / 1e9
@@ -314,29 +312,15 @@ object Bench {
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LOCAL.json"), json + "\n")
     catch { case _: java.io.IOException => () }
-    // SPARK_GRAFT_DRIFT_PROBE=q01,q101,...: after the full catalog session,
-    // re-time the listed subset 3× in THIS (now long-lived) JVM and write
-    // DRIFT_LOCAL.json — the end-of-session arm of the drift experiment
-    // (compare against a fresh-JVM SPARK_GRAFT_BENCH_ONLY run of the same
-    // subset to separate JVM-session creep from sandbox noise)
-    sys.env.get("SPARK_GRAFT_DRIFT_PROBE").foreach { subset =>
-      val prefixes = subset.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      val probe = catalog.filter { case (n, _) => prefixes.exists(n.startsWith) }
-      val ds = scala.collection.mutable.Map[String, Vector[Double]]()
-        .withDefaultValue(Vector.empty)
-      for (_ <- 1 to 3) {
-        for ((name, fn) <- probe) ds(name) = ds(name) :+ runOne(name, fn)._1
-        System.gc()
-      }
-      val dq = probe.map { case (n, _) =>
-        "\"" + n + "\":[" + ds(n).mkString(",") + "]" }.mkString("{", ",", "}")
-      val dTotalBest = probe.map { case (n, _) => ds(n).min }.sum
-      val dj = s"""{"metric":"drift_end_of_session","total_best":$dTotalBest,"samples":$dq,"sf":"$sfDir"}"""
-      System.err.println(dj)
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("DRIFT_LOCAL.json"), dj + "\n")
-      catch { case _: java.io.IOException => () }
-    }
+    // one entry per timed query: the profile of each of its runs, in order
+    val profiles = Profile.report(spark, runTags.values.flatten.toSeq)
+    val profileJson = catalog.collect { case (name, _) if runTags(name).nonEmpty =>
+      "\"" + name + "\":" + runTags(name).flatMap(profiles.get).map(_.json)
+        .mkString("[", ",", "]") }.mkString("{", ",\n", "}")
+    try java.nio.file.Files.writeString(
+      java.nio.file.Paths.get("PROFILE_LOCAL.json"),
+      s"""{"sf":"$sfDir","slots":${graft.util.Sessions.slots},"queries":$profileJson}""" + "\n")
+    catch { case _: java.io.IOException => () }
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke: run the heaviest extension operators on a corpus ~20× the
@@ -23,13 +22,7 @@ object Stress {
     val sections = args.drop(1).headOption.map(_.split(",").map(_.trim).toSet)
     def want(s: String): Boolean = sections.forall(_.contains(s))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Sessions.build(logLevel = "ERROR")
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val n = docs.count()
@@ -576,8 +569,8 @@ object Stress {
       // spike detector (spikeStreamTws, per-entry point lookups).
       import org.apache.spark.sql.DataFrame
       import org.apache.spark.sql.streaming.Trigger
+      // the child keeps the builder's shuffle-partition count (one per slot)
       val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "32")
       s2.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val probeN = 100_000L

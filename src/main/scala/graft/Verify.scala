@@ -16,32 +16,20 @@ object Verify {
           SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
         case None => SparkEntry.queries
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_PIN_MODE=checkpoint: run the whole sweep under the
     // production pin mode (util/Caches.pin) — reliable checkpoints on a
     // temp dir standing in for the cluster FS. Set at BUILDER time so it
     // lands in the SparkContext's SparkConf, which catalog gates' isolated
     // child sessions re-merge at creation.
     val pinMode = sys.env.get("SPARK_GRAFT_PIN_MODE")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries nanosecond timestamps — read as raw long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the correctness sweep runs on a deliberately SMALL session (4
-      // threads, often right after 280 other queries) where wall-clock
-      // serving budgets are meaningless — give the serving gates' SLO
-      // asserts generous headroom HERE; the 32-thread bench leaves the
-      // conf unset, so the gates' real budgets are enforced there, where
-      // the latency story is actually measured
-      .config("spark.graft.serve.sloMs",
-        sys.env.getOrElse("SPARK_GRAFT_SERVE_SLO_MS", "30000"))
-    val spark = pinMode.fold(builder)(m =>
-      builder.config("spark.graft.pin.mode", m)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the correctness sweep runs on a deliberately SMALL session (4
+    // threads, often right after 280 other queries) where wall-clock
+    // serving budgets are meaningless — give the serving gates' SLO
+    // asserts generous headroom HERE; the bench records the latencies and
+    // grades them against the gates' real budgets
+    val spark = graft.util.Sessions.build(
+      Seq("spark.graft.serve.sloMs" -> sys.env.getOrElse("SPARK_GRAFT_SERVE_SLO_MS", "30000")) ++
+        pinMode.map("spark.graft.pin.mode" -> _))
     pinMode.foreach { m =>
       if (m == "checkpoint" && spark.sparkContext.getCheckpointDir.isEmpty)
         spark.sparkContext.setCheckpointDir(

@@ -43,7 +43,7 @@ private[graft] object CatalogShared {
   /** Fixture-table reader with a per-JVM SCHEMA memo: the first read of
     * each (immutable) fixture file infers the schema from its footers
     * under [[T]]'s conf pins; every later read supplies it, skipping the
-    * per-call footer/schema-inference pass. Measured (TailProbe, this VM):
+    * per-call footer/schema-inference pass. Measured (OPTIMIZATION_r17.md):
     * inference is ~60–70 ms of EVERY `spark.read.parquet` call — about
     * half the wall of a sub-second catalog query — ×2–4 fixture reads per
     * query ×304 queries per bench pass. This is METADATA memoization, not
@@ -157,22 +157,18 @@ private[graft] object CatalogShared {
         (bytes / (64L << 20)).toInt)): Integer
     }).intValue()
 
-  /** The gate-session conf pins, A/B-switchable: SPARK_GRAFT_GATE_SESSION=off
-    * keeps the isolated child session (temp-view/conf isolation is load-
-    * bearing) but drops the partition/AQE-off pins, so a full-catalog
-    * bench run per arm differs in EXACTLY those two settings — the r16
-    * verdict's unsettled claim. Default: pins on (current behavior), with
-    * the partition count from [[gatePartitions]]. */
+  /** The gate-session conf pins: the partition count from
+    * [[gatePartitions]] and AQE off. A full-catalog bench A/B with and
+    * without them kept them (OPTIMIZATION_r17.md, "Gate-session full-bench
+    * A/B — KEEP, with derived partitions"). */
   private def gateSessionPins(s: SparkSession, dir: String): Seq[(String, String)] =
-    if (sys.env.get("SPARK_GRAFT_GATE_SESSION").contains("off")) Seq.empty
-    else Seq(
+    Seq(
       "spark.sql.shuffle.partitions" -> gatePartitions(s, dir).toString,
       "spark.sql.adaptive.enabled" -> "false")
 
   /** Bare gate session (the pins of [[hybridGateSession]] without its
     * query frame) for the lifecycle gates that build their own frames
-    * (q301–q304) — one definition so the A/B switch and the derived
-    * partition count cover the whole family. */
+    * (q301–q304) — one definition so the pins cover the whole family. */
   def gateSession(s: SparkSession, dir: String): SparkSession =
     isolated(s, gateSessionPins(s, dir): _*)
 

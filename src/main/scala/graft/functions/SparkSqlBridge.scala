@@ -21,3 +21,11 @@ object GraftColumnBridge {
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 }
+
+/** The same kind of bridge for `SparkListenerSQLExecutionEnd.qe`, the
+  * `private[sql]` field Spark's own QueryExecutionListeners are fed from:
+  * the execution the event ends (null on events replayed from a log). */
+object GraftExecutionBridge {
+  def queryExecution(e: execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[execution.QueryExecution] = Option(e.qe)
+}

@@ -7,20 +7,11 @@ import org.scalatest.matchers.should.Matchers
 /** One shared local SparkSession for the whole forked test JVM — session
   * startup is ~5 s, so per-suite sessions would dominate test wall time. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse_").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = graft.util.Sessions.build(Seq(
+      "spark.app.name" -> "graft-tests",
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft_warehouse_").toString),
+    slots = 4, logLevel = "ERROR")
 }
 
 abstract class SparkTestBase extends AnyFunSuite with Matchers {
