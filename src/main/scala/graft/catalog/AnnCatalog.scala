@@ -1417,11 +1417,15 @@ private[graft] object AnnCatalog {
     // q231, dedup buckets q188, count-min q211): centroids + residual
     // codebooks + full-corpus index are built once and PERSISTED (q237's
     // artifact discipline), then a STREAM of query vectors is answered
-    // micro-batch by micro-batch through Similarity.serveIndexStream —
-    // ivfPqResidualStoredTopK VERBATIM per batch against the loaded,
-    // cache-pinned index (stateless by construction: a query is answered
-    // completely in its arrival batch, so the union over ANY micro-batch
-    // split equals the one-shot serve — law-tested in SimilaritySpec).
+    // micro-batch by micro-batch through Similarity.serveIndexStream:
+    // the frozen model (centroids + codebooks) is derived and pinned ONCE
+    // when the writer is built, and each batch only builds its probe LUTs
+    // against it, broadcasts them against the loaded, cache-pinned index
+    // and runs the bounded top-k — the same answers as the one-shot
+    // ivfPqResidualStoredTopK (stateless by construction: a query is
+    // answered completely in its arrival batch, so the union over ANY
+    // micro-batch split equals the one-shot serve — law-tested in
+    // SimilaritySpec). releaseAll after the query frees both pins.
     // maxFilesPerTrigger=1 forces 4 REAL micro-batches, so the gate
     // replays the split law against q212's oracle VERBATIM, not a
     // degenerate 1-batch pass. VERIFICATION-HARNESS BOUNDARY (q19/q238

@@ -527,9 +527,11 @@ object Similarity {
       .select(col("__pid"), col("sc.sub").as("sub"), col("sc.s_vec").as("s_vec"))
 
   /** Renumber an injected codebook's cids to the contiguous 0..ksub−1 the
-    * ADC lookup tables index by (per sub, ordered by the original cid) —
-    * so ANY deterministic codebook works, not just pre-contiguous ones.
-    * The codebook is SMALL by contract; the per-sub window is cheap. */
+    * codes carry (per sub, ordered by the original cid) — so ANY
+    * deterministic codebook works, not just pre-contiguous ones. The
+    * encoders use it; the query side gets the same numbering from the cid
+    * order of [[pqModel]]'s codeword arrays. The codebook is SMALL by
+    * contract; the per-sub window is cheap. */
   private def pqNormalizeCodebook(codebooks: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("sub")).orderBy(col("cid"))
     codebooks
@@ -675,6 +677,85 @@ object Similarity {
     (codes.select(col(idCol).as("n_id"), col("lcid"), col("codes")), err)
   }
 
+  /** The frozen PQ model as ONE row, the input of every query-side LUT and
+    * probe:
+    *  - `__cb` array<array<array<double>>>: per subspace 0..m−1 in order,
+    *    its codewords sorted by cid, so a codeword's array position is the
+    *    contiguous 0..ksub−1 id [[pqNormalizeCodebook]] gives the encoders
+    *    (no renumbering window on the query side);
+    *  - `__cents` array<struct<lcid, l_vec array<double>>>, only when
+    *    `centroids` is given: every coarse centroid, in lcid order.
+    * One global aggregate over the union of both sources — one exchange of
+    * model-sized partials. Small by the PQ contract: callers broadcast it,
+    * and a serve derives it once and pins it ([[serveIndexStream]]).
+    * @param centroids (cidCol, vecCol), or null for plain PQ */
+  private[graft] def pqModel(codebooks: DataFrame, m: Int,
+      centroids: DataFrame = null, cidCol: String = null,
+      vecCol: String = null): DataFrame = {
+    val words = codebooks.select(col("sub").cast("int").as("sub"), col("cid"),
+      col("c_vec").cast("array<double>").as("v"))
+    val (rows, key) =
+      if (centroids == null) (words, Seq("sub", "cid", "v"))
+      else (words.unionByName(centroids.select(lit(-1).as("sub"),
+          col(cidCol).as("lcid"), col(vecCol).cast("array<double>").as("v")),
+          allowMissingColumns = true), Seq("sub", "cid", "lcid", "v"))
+    val all = rows.agg(array_sort(collect_list(struct(key.map(col): _*))).as("__all"))
+    def ofSub(j: Int) = filter(col("__all"), x => x.getField("sub") === j)
+    val cb = array((0 until m).map(j =>
+      transform(ofSub(j), x => x.getField("v"))): _*).as("__cb")
+    if (centroids == null) all.select(cb)
+    else all.select(cb, transform(ofSub(-1), x => struct(
+      x.getField("lcid").as("lcid"), x.getField("v").as("l_vec"))).as("__cents"))
+  }
+
+  /** ADC lookup table of `v` (array<double>) against a model's `__cb`:
+    * lut[j][c] = [[l2DistSq]] of v's subspace-j slice and codeword c — the
+    * one LUT expression every PQ query path scores with, on the same double
+    * slices the encoders take ([[pqSlice]]). */
+  private def adcLut(v: Column, cb: Column, subDim: Int): Column =
+    transform(cb, (words, j) => transform(words, c =>
+      l2DistSq(slice(v, j * subDim + 1, lit(subDim)), c)))
+
+  /** The `nprobe` coarse lists nearest to `v` (array<double>) among a
+    * model's `__cents`, ranked by (l2DistSq, lcid) ascending as
+    * array<struct<ld, lcid, l_vec>>. */
+  private def nearestLists(v: Column, cents: Column, nprobe: Int): Column =
+    slice(array_sort(transform(cents, c => struct(
+      l2DistSq(v, c.getField("l_vec")).as("ld"), c.getField("lcid").as("lcid"),
+      c.getField("l_vec").as("l_vec")))), 1, nprobe)
+
+  /** The query-side builder of the IVF-PQ paths: per query its `nprobe`
+    * probed lists, each with its ADC LUT — of the residual q − c(list) when
+    * `residual`, else of q itself (one LUT per query, shared by its probes).
+    * Array expressions over the broadcast one-row [[pqModel]] (with
+    * centroids): no window, no shuffle, and the codebook array is never
+    * copied into a per-probe row — each probe's LUT is built before the
+    * explode.
+    * @return (q_id, lcid, lut) */
+  private[graft] def probeLuts(queries: DataFrame, model: DataFrame,
+      qIdCol: String, vecCol: String, subDim: Int, nprobe: Int,
+      residual: Boolean): DataFrame = {
+    val qVec = col(vecCol).cast("array<double>")
+    val probes = nearestLists(qVec, col("__cents"), nprobe)
+    val q = queries.crossJoin(broadcast(model))
+    if (residual)
+      q.select(col(qIdCol).as("q_id"), explode(transform(probes, p => struct(
+          p.getField("lcid").as("lcid"),
+          adcLut(zip_with(qVec, p.getField("l_vec"), (a, b) => a - b),
+            col("__cb"), subDim).as("lut")))).as("p"))
+        .select(col("q_id"), col("p.lcid").as("lcid"), col("p.lut").as("lut"))
+    else
+      q.select(col(qIdCol).as("q_id"), adcLut(qVec, col("__cb"), subDim).as("lut"),
+          transform(probes, p => p.getField("lcid")).as("lcids"))
+        .select(col("q_id"), explode(col("lcids")).as("lcid"), col("lut"))
+  }
+
+  private def requireIvfPqArgs(m: Int, subDim: Int, nprobe: Int): Unit = {
+    require(m > 0, s"m must be positive, got $m")
+    require(subDim > 0, s"subDim must be positive, got $subDim")
+    require(nprobe > 0, s"nprobe must be positive, got $nprobe")
+  }
+
   /** PQ/ADC ANN top-k (Jégou et al., TPAMI'11 asymmetric distance): the
     * corpus is PQ-encoded once; each query precomputes an m×ksub lookup
     * table of partial squared distances to every sub-centroid, and a
@@ -695,27 +776,6 @@ object Similarity {
     *
     * @return (q_id, rank, n_id, adist) — rank ascending by approximate
     *         squared distance, ties to the lowest n_id */
-  /** Per-query ADC lookup table: lut[sub+1][cid+1] = ‖q_sub − c_vec‖² —
-    * built by two tiny sorted-collect pivots over the (small)
-    * query×codebook product. The SINGLE source both [[pqTopK]] and
-    * [[ivfPqTopK]] score with, so LUT tie-breaking / cid-normalization
-    * semantics can never drift between the two gated paths.
-    * @return (q_id, lut array<array<double>> ordered by sub, then cid) */
-  private def pqLut(queries: DataFrame, codebooks: DataFrame,
-      qIdCol: String, vecCol: String, m: Int, subDim: Int): DataFrame = {
-    val cb = broadcast(pqNormalizeCodebook(codebooks))
-    pqSliced(queries, qIdCol, vecCol, m, subDim)
-      .join(cb, Seq("sub"))
-      .select(col("__pid").as("q_id"), col("sub"), col("cid"),
-        l2DistSq(col("s_vec"), col("c_vec")).as("pd"))
-      .groupBy(col("q_id"), col("sub"))
-      .agg(transform(array_sort(collect_list(struct(col("cid"), col("pd")))),
-        x => x.getField("pd")).as("lrow"))
-      .groupBy(col("q_id"))
-      .agg(transform(array_sort(collect_list(struct(col("sub"), col("lrow")))),
-        x => x.getField("lrow")).as("lut"))
-  }
-
   def pqTopK(queries: DataFrame, corpus: DataFrame, codebooks: DataFrame,
       qIdCol: String, idCol: String, vecCol: String, k: Int,
       m: Int, subDim: Int): DataFrame = {
@@ -723,7 +783,10 @@ object Similarity {
     require(subDim > 0, s"subDim must be positive, got $subDim")
     val codes = pqEncode(corpus, codebooks, idCol, vecCol, m, subDim)
       .select(col(idCol).as("n_id"), col("codes"))
-    val lut = pqLut(queries, codebooks, qIdCol, vecCol, m, subDim)
+    val lut = queries
+      .select(col(qIdCol).as("q_id"), col(vecCol).cast("array<double>").as("q_vec"))
+      .crossJoin(broadcast(pqModel(codebooks, m)))
+      .select(col("q_id"), adcLut(col("q_vec"), col("__cb"), subDim).as("lut"))
     // native codegen'd ADC LUT sum — THE hot loop of a PQ index scan
     // (bit-identical to the interpreted zip_with+aggregate fold; the
     // identity is law-tested in SimilaritySpec)
@@ -764,11 +827,13 @@ object Similarity {
   def ivfPqTopK(
       queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, qIdCol: String, idCol: String, cidCol: String,
-      vecCol: String, k: Int, m: Int, subDim: Int, nprobe: Int = 2): DataFrame =
+      vecCol: String, k: Int, m: Int, subDim: Int, nprobe: Int = 2): DataFrame = {
+    requireIvfPqArgs(m, subDim, nprobe)
     ivfPqTopKWithCodes(queries, corpus, centroids,
       pqEncode(corpus, codebooks, idCol, vecCol, m, subDim)
         .select(col(idCol).as("n_id"), col("codes")),
       codebooks, qIdCol, idCol, cidCol, vecCol, k, m, subDim, nprobe)
+  }
 
   /** [[ivfPqTopK]] over an externally-built code table (n_id, codes) —
     * for callers that already hold the corpus encode (e.g. shared with
@@ -779,6 +844,7 @@ object Similarity {
       codes: DataFrame, codebooks: DataFrame, qIdCol: String, idCol: String,
       cidCol: String, vecCol: String, k: Int, m: Int, subDim: Int,
       nprobe: Int = 2): DataFrame = {
+    requireIvfPqArgs(m, subDim, nprobe)
     val cent = broadcast(centroids
       .select(col(cidCol).as("lcid"), col(vecCol).cast("array<double>").as("l_vec")))
     // coarse assignment: argmin-L2 list per corpus vector (ties -> lowest
@@ -790,19 +856,11 @@ object Similarity {
       .groupBy(col("n_id"))
       .agg(min(col("dc")).getField("c").as("lcid"))
     val indexed = lists.join(codes, Seq("n_id"))
-    // nprobe nearest lists per query (the query set is small by contract;
-    // the window is per-query over |centroids| rows)
-    val probeW = Window.partitionBy(col("q_id")).orderBy(col("ld"), col("lcid"))
-    val probes = queries.select(col(qIdCol).as("q_id"), col(vecCol).as("q_vec"))
-      .crossJoin(cent)
-      .withColumn("ld", l2DistSq(col("q_vec"), col("l_vec")))
-      .withColumn("__rn", row_number().over(probeW))
-      .where(col("__rn") <= nprobe)
-      .select(col("q_id"), col("lcid"))
-    // per-query ADC LUTs (the same pqLut pqTopK scores with), attached to
-    // each probe row
-    val lut = pqLut(queries, codebooks, qIdCol, vecCol, m, subDim)
-    val scored = broadcast(probes.join(lut, Seq("q_id")))
+    // nprobe nearest lists per query, each carrying the query's ADC LUT
+    val probes = probeLuts(queries,
+      pqModel(codebooks, m, centroids, cidCol, vecCol),
+      qIdCol, vecCol, subDim, nprobe, residual = false)
+    val scored = broadcast(probes)
       .join(indexed, Seq("lcid"))
       .where(col("n_id") =!= col("q_id"))
       .select(col("q_id"), col("n_id"),
@@ -839,10 +897,12 @@ object Similarity {
   def ivfPqResidualTopK(
       queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, qIdCol: String, idCol: String, cidCol: String,
-      vecCol: String, k: Int, m: Int, subDim: Int, nprobe: Int = 2): DataFrame =
+      vecCol: String, k: Int, m: Int, subDim: Int, nprobe: Int = 2): DataFrame = {
+    requireIvfPqArgs(m, subDim, nprobe)
     ivfPqResidualStoredTopK(queries,
       residualIndex(corpus, centroids, codebooks, idCol, cidCol, vecCol, m, subDim),
       centroids, codebooks, qIdCol, cidCol, vecCol, k, m, subDim, nprobe)
+  }
 
   /** The residual-IVFADC INDEX build, split out so it can be PERSISTED as
     * the deployment artifact (coarse list + residual PQ codes per vector —
@@ -865,44 +925,38 @@ object Similarity {
     * reloaded-from-store) index — the serving path of the persisted
     * artifact: per-(query, probe) residual LUTs joined to the index on the
     * probed list, ADC-scored, top-k ranked. `index` is (n_id, lcid, codes)
-    * as produced by [[residualIndex]]. */
+    * as produced by [[residualIndex]]. One-shot: the frozen model
+    * (centroids, codebooks) is derived inside this plan and nothing is
+    * pinned, so it is safe on a stream thread (q296's `foreachBatch`); a
+    * caller serving many query sets against one model uses
+    * [[serveIndexStream]], which derives the model once. */
   def ivfPqResidualStoredTopK(
       queries: DataFrame, index: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, qIdCol: String, cidCol: String,
-      vecCol: String, k: Int, m: Int, subDim: Int, nprobe: Int = 2): DataFrame =
+      vecCol: String, k: Int, m: Int, subDim: Int, nprobe: Int = 2): DataFrame = {
+    requireIvfPqArgs(m, subDim, nprobe)
     ivfPqResidualStoredTopKFromLuts(
       queryResidualLuts(queries, centroids, codebooks, qIdCol, cidCol,
         vecCol, m, subDim, nprobe),
       index, k)
+  }
 
   /** The QUERY-side state of [[ivfPqResidualStoredTopK]] — nprobe probed
     * lists per query with their per-(query, probe) residual ADC LUTs:
-    * (q_id, lcid, lut). A pure function of (queries, frozen model, nprobe)
-    * and NOT of the index, so a gate that serves the SAME queries against
-    * several store generations (q301's per-stage serves) derives it once,
-    * pins it (multi-ACTION reuse — the r16 pin rule), and pays the
-    * probe/LUT computation once instead of per serve. */
+    * (q_id, lcid, lut), built by [[probeLuts]] over the one-row
+    * [[pqModel]]. A pure function of (queries, frozen model, nprobe) and
+    * NOT of the index: the model, not only the index, is constant across
+    * serves. A gate that serves the SAME queries against several store
+    * generations (q301's per-stage serves) derives it once, pins it
+    * (multi-ACTION reuse — the r16 pin rule), and pays the probe/LUT
+    * computation once instead of per serve. */
   def queryResidualLuts(
       queries: DataFrame, centroids: DataFrame, codebooks: DataFrame,
       qIdCol: String, cidCol: String, vecCol: String,
       m: Int, subDim: Int, nprobe: Int): DataFrame = {
-    val cent = broadcast(centroids
-      .select(col(cidCol).as("lcid"), col(vecCol).cast("array<double>").as("l_vec")))
-    // nprobe nearest lists per query, carrying the list centroid so the
-    // query residual per probe is a zip_with away (no re-join)
-    val probeW = Window.partitionBy(col("q_id")).orderBy(col("ld"), col("lcid"))
-    val probes = queries
-      .select(col(qIdCol).as("q_id"), col(vecCol).cast("array<double>").as("q_vec"))
-      .crossJoin(cent)
-      .withColumn("ld", l2DistSq(col("q_vec"), col("l_vec")))
-      .withColumn("__rn", row_number().over(probeW))
-      .where(col("__rn") <= nprobe)
-      .select(struct(col("q_id"), col("lcid")).as("__qp"),
-        zip_with(col("q_vec"), col("l_vec"), (a, b) => a - b).as("q_res"))
-    // per-(query, probe) LUT — the same pqLut both gated ADC paths use
-    pqLut(probes, codebooks, "__qp", "q_res", m, subDim)
-      .select(col("q_id").getField("q_id").as("q_id"),
-        col("q_id").getField("lcid").as("lcid"), col("lut"))
+    requireIvfPqArgs(m, subDim, nprobe)
+    probeLuts(queries, pqModel(codebooks, m, centroids, cidCol, vecCol),
+      qIdCol, vecCol, subDim, nprobe, residual = true)
   }
 
   /** The INDEX-side scan of [[ivfPqResidualStoredTopK]] over prepared
@@ -923,22 +977,29 @@ object Similarity {
   /** STREAMING serving of a persisted residual-IVFADC index — the query
     * side of the [[residualIndex]] artifact as a long-running service: a
     * STREAM of query vectors is answered micro-batch by micro-batch
-    * against the STATIC (loaded, ideally cached) index, each batch through
-    * [[ivfPqResidualStoredTopK]] verbatim — same probes, same
-    * per-(query, probe) residual LUTs, same ADC scoring, same bounded
-    * top-k. `foreachBatch` is the right seam (not a streaming plan): the
-    * serve involves per-query windows and LUT aggregations that append
-    * mode cannot express, and — unlike an aggregation — it NEEDS no
-    * cross-batch state: a query is answered completely in the micro-batch
-    * it arrives in, so the serving is STATELESS by construction and the
-    * union of per-batch answers equals the one-shot batch serve for ANY
-    * micro-batch split of the query set (law-tested in SimilaritySpec).
+    * against the STATIC (loaded, ideally cached) index — the same probes,
+    * per-(query, probe) residual LUTs, ADC scoring and bounded top-k as
+    * [[ivfPqResidualStoredTopK]]. `foreachBatch` is the right seam (not a
+    * streaming plan): the serve's broadcast joins and bounded top-k
+    * aggregation are not expressible in append mode, and — unlike an
+    * aggregation — it NEEDS no cross-batch state: a query is answered
+    * completely in the micro-batch it arrives in, so the serving is
+    * STATELESS by construction and the union of per-batch answers equals
+    * the one-shot batch serve for ANY micro-batch split of the query set
+    * (law-tested in SimilaritySpec).
     *
-    * Scale shape per micro-batch: |batch|·nprobe probe rows + their LUTs
-    * broadcast against the list-keyed index (only probed lists pay), a
-    * bounded top-k reduction of O(|batch|·k) rows out. The index frame is
-    * the per-batch constant — persist it once at service start, or the
-    * every-trigger re-scan is the bill.
+    * Per-batch constants: the frozen MODEL and the index. The one-row
+    * [[pqModel]] (centroids and codebooks) is derived ONCE, here, when the
+    * writer is built, and pinned through [[graft.util.Caches.pin]]: it lives
+    * like the index pin a gate holds, and [[graft.util.Caches.releaseAll]]
+    * releases it, so call this on the thread that owns the query's pins
+    * and release after the stream ends. A micro-batch then broadcasts the
+    * model row, builds its |batch|·nprobe probe LUTs as array expressions
+    * ([[probeLuts]]: no window, no shuffle), broadcasts them against the
+    * list-keyed index (only probed lists pay) and exchanges O(|batch|·k)
+    * top-k rows — the centroid and codebook sources are never re-read.
+    * Persist the index once at service start, or the every-trigger
+    * re-scan is the bill.
     *
     * Returns the un-started writer so the caller owns trigger, checkpoint
     * and start — `sink` receives each batch's (answers, batchId). */
@@ -947,13 +1008,18 @@ object Similarity {
       codebooks: DataFrame, qIdCol: String, cidCol: String, vecCol: String,
       k: Int, m: Int, subDim: Int, nprobe: Int = 2)(
       sink: (DataFrame, Long) => Unit):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    requireIvfPqArgs(m, subDim, nprobe)
+    val model = graft.util.Caches.pin(
+      pqModel(codebooks, m, centroids, cidCol, vecCol))
     queryStream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
-        sink(ivfPqResidualStoredTopK(batch, index, centroids, codebooks,
-          qIdCol, cidCol, vecCol, k, m, subDim, nprobe), batchId)
+        sink(ivfPqResidualStoredTopKFromLuts(
+          probeLuts(batch, model, qIdCol, vecCol, subDim, nprobe, residual = true),
+          index, k), batchId)
       }
+  }
 
   /** STREAMING INGEST of the residual-IVFADC store — the WRITE path of the
     * persisted artifact as a long-running service, closing the loop

@@ -588,4 +588,89 @@ class PlanSpec extends SparkTestBase {
     latest.collect().foreach(r =>
       r.getSeq[Long](2) shouldBe Seq(9L, 9L)) // delta 1 wins for every id
   }
+
+  /** Every operator of an executed plan, through AQE stages; a cached
+    * relation is one leaf (its plan ran when it was pinned). */
+  private def operators(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = p +: (p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      operators(a.executedPlan)
+    case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => operators(s.plan)
+    case _ => p.children.flatMap(operators)
+  })
+
+  /** A tiny residual IVF-PQ model and index: (queries, centroids, codebooks, index). */
+  private def ivfPqFixture() = {
+    val corpus = (1 to 60).map(i =>
+      (i.toLong, Array.tabulate(4)(j => ((i * 17 + j * 11) % 15 - 7).toFloat))).toDF("id", "v")
+    val cents = Seq(
+      (0L, Array(3.0f, 3.0f, 3.0f, 3.0f)),
+      (1L, Array(-3.0f, -3.0f, -3.0f, -3.0f))).toDF("cid", "v")
+    val cb = graft.ext.Similarity.pqCodebookByStride(
+      graft.ext.Similarity.residuals(corpus, cents, "id", "cid", "v"),
+      "id", "res", m = 2, subDim = 2, stride = 7).localCheckpoint(true)
+    val index = graft.ext.Similarity.residualIndex(corpus, cents, cb,
+      "id", "cid", "v", m = 2, subDim = 2).localCheckpoint(true)
+    (corpus.where(col("id") <= 6), cents, cb, index)
+  }
+
+  test("queryResidualLuts builds probes and LUTs without a window or a keyed exchange") {
+    val (qs, cents, cb, _) = ivfPqFixture()
+    val p = plan(graft.ext.Similarity.queryResidualLuts(qs, cents, cb,
+      "id", "cid", "v", m = 2, subDim = 2, nprobe = 2))
+    (p should not).include("Window")
+    (p should not).include("Exchange hashpartitioning")
+  }
+
+  test("IVF-PQ serve: the model is read once at writer build; a micro-batch " +
+      "runs one shuffle exchange (the top-k) and at most 4 jobs") {
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.util.Profile
+    val (qs, cents0, cb0, index) = ivfPqFixture()
+    val tmp = java.nio.file.Files.createTempDirectory("graft_serve_plan").toString
+    cents0.write.parquet(s"$tmp/centroids")
+    cb0.write.parquet(s"$tmp/codebooks")
+    qs.repartition(3).write.parquet(s"$tmp/queries")
+    val cents = spark.read.parquet(s"$tmp/centroids")
+    val cb = spark.read.parquet(s"$tmp/codebooks")
+    val expected = graft.ext.Similarity.ivfPqResidualStoredTopK(qs, index, cents, cb,
+      "id", "cid", "v", k = 3, m = 2, subDim = 2, nprobe = 2).collect().toSet
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
+    val stream = spark.readStream.schema("id LONG, v ARRAY<FLOAT>")
+      .option("maxFilesPerTrigger", 1).parquet(s"$tmp/queries")
+    try {
+      val writer = Profile.tagged(spark, "serve-build") {
+        graft.ext.Similarity.serveIndexStream(stream, index, cents, cb,
+            "id", "cid", "v", k = 3, m = 2, subDim = 2, nprobe = 2) { (ans, _) =>
+          ans.collect().foreach(got.add)
+          plans.add(ans.queryExecution.executedPlan)
+        }
+      }
+      // the model sources are gone: a batch that re-read them would fail
+      val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      Seq("centroids", "codebooks").foreach(d =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/$d"), true))
+      Profile.tagged(spark, "serve-batches") {
+        writer.trigger(Trigger.AvailableNow()).start().awaitTermination()
+      }
+      val counters = Profile.report(spark, Seq("serve-build", "serve-batches"))
+      import scala.jdk.CollectionConverters._
+      got.asScala.toSet shouldBe expected
+      plans.size shouldBe 3
+      counters("serve-build").jobs should be >= 1L
+      counters("serve-batches").jobs should be <= 4L * plans.size
+      plans.asScala.foreach { p =>
+        val ops = operators(p)
+        ops.count(_.isInstanceOf[
+          org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]) shouldBe 1
+        val scanned = ops.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.relation.location.rootPaths.map(_.toString)
+        }.flatten
+        scanned.filter(s => s.contains("centroids") || s.contains("codebooks")) shouldBe empty
+      }
+    } finally graft.util.Caches.releaseAll()
+  }
 }

@@ -4,10 +4,14 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
-class SimilaritySpec extends SparkTestBase {
+class SimilaritySpec extends SparkTestBase with org.scalatest.BeforeAndAfterEach {
   import spark.implicits._
 
   private val eps = 1e-12
+
+  // serveIndexStream pins its model through Caches: free it after each test
+  override def afterEach(): Unit =
+    try graft.util.Caches.releaseAll() finally super.afterEach()
 
   test("native cosine matches hand-computed values") {
     val df = Seq(
@@ -622,6 +626,85 @@ class SimilaritySpec extends SparkTestBase {
     nBatches.get() should be >= 2 // a real split, not a 1-batch pass
     got.toSet shouldBe expected
     got.size shouldBe expected.size // no duplicate answers across batches
+  }
+
+  test("probeLuts: probes and LUTs equal a plain-Scala reference bit for bit") {
+    // centroids 7 and 3 are equidistant from query 1 (d = 1): the lcid
+    // tie-break must probe 3 first; codebook cids are non-contiguous and
+    // listed out of order; m = 2
+    val qs = Seq(
+      (1L, Array(0.0f, 0.0f, 1.0f, 2.0f)),
+      (2L, Array(2.5f, -1.0f, 0.5f, 3.0f)),
+      (3L, Array(-2.0f, 1.5f, -0.5f, 0.25f))).toDF("id", "v")
+    val cents = Seq(
+      (7L, Array(1.0f, 0.0f, 1.0f, 2.0f)),
+      (5L, Array(4.0f, 4.0f, 4.0f, 4.0f)),
+      (3L, Array(-1.0f, 0.0f, 1.0f, 2.0f))).toDF("cid", "v")
+    val cb = Seq(
+      (1, 100L, Array(1.5, 1.5)), (0, 40L, Array(0.5, 0.5)),
+      (0, 3L, Array(-1.0, 0.25)), (1, 9L, Array(0.0, 1.0)),
+      (0, 17L, Array(2.0, -0.5)), (1, 2L, Array(-0.75, 0.0))).toDF("sub", "cid", "c_vec")
+    val (m, subDim) = (2, 2)
+    // the reference: strict left-to-right (x − y)² folds over collected rows
+    def d2(a: Seq[Double], b: Seq[Double]): Double =
+      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => val d = x - y; acc + d * d }
+    val centRows = cents.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble))
+    val words = cb.collect().groupBy(_.getInt(0)).map { case (j, rs) =>
+      j -> rs.sortBy(_.getLong(1)).map(_.getSeq[Double](2)).toSeq }
+    def lut(v: Seq[Double]): Seq[Seq[Double]] = (0 until m).map(j =>
+      words(j).map(w => d2(v.slice(j * subDim, (j + 1) * subDim), w)))
+    def bits(l: collection.Seq[collection.Seq[Double]]) =
+      l.map(_.map(java.lang.Double.doubleToRawLongBits).toVector).toVector
+    val queries = qs.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble))
+    val model = Similarity.pqModel(cb, m, cents, "cid", "v")
+    for (nprobe <- 1 to 3; residual <- Seq(true, false)) {
+      val expected = queries.flatMap { case (q, v) =>
+        centRows.sortBy { case (c, cv) => (d2(v, cv), c) }(
+          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)).take(nprobe).map { case (c, cv) =>
+          (q, c) -> bits(lut(if (residual) v.zip(cv).map { case (x, y) => x - y } else v))
+        }
+      }.toMap
+      val got = Similarity.probeLuts(qs, model, "id", "v", subDim, nprobe, residual)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+          bits(r.getSeq[collection.Seq[Double]](2))).toMap
+      withClue(s"nprobe=$nprobe residual=$residual: ") { got shouldBe expected }
+    }
+    // the tie: query 1's single probe is lcid 3, not 7
+    Similarity.queryResidualLuts(qs.where(col("id") === 1), cents, cb,
+      "id", "cid", "v", m, subDim, nprobe = 1).select("lcid").as[Long].collect() shouldBe Array(3L)
+  }
+
+  test("IVF-PQ paths fail loudly on a non-positive nprobe, m or subDim") {
+    // nprobe = 0 used to return an empty answer without an error
+    val corpus = (1 to 20).map(i =>
+      (i.toLong, Array.tabulate(4)(j => ((i * 17 + j * 11) % 15 - 7).toFloat))).toDF("id", "v")
+    val qs = corpus.where(col("id") <= 2)
+    val cents = Seq((0L, Array(3.0f, 3.0f, 3.0f, 3.0f)),
+      (1L, Array(-3.0f, -3.0f, -3.0f, -3.0f))).toDF("cid", "v")
+    val cb = Similarity.pqCodebookByStride(corpus, "id", "v", m = 2, subDim = 2, stride = 5)
+    val index = Similarity.residualIndex(corpus, cents, cb, "id", "cid", "v", m = 2, subDim = 2)
+    val codes = Similarity.pqEncode(corpus, cb, "id", "v", 2, 2)
+      .select(col("id").as("n_id"), col("codes"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_serve_args")
+    qs.write.mode("overwrite").parquet(s"$tmp/queries")
+    val stream = spark.readStream.schema("id LONG, v ARRAY<FLOAT>").parquet(s"$tmp/queries")
+    val calls: Seq[(String, (Int, Int, Int) => Any)] = Seq(
+      "ivfPqTopK" -> ((m, sd, np) => Similarity.ivfPqTopK(qs, corpus, cents, cb,
+        "id", "id", "cid", "v", 3, m, sd, np)),
+      "ivfPqTopKWithCodes" -> ((m, sd, np) => Similarity.ivfPqTopKWithCodes(qs, corpus,
+        cents, codes, cb, "id", "id", "cid", "v", 3, m, sd, np)),
+      "ivfPqResidualTopK" -> ((m, sd, np) => Similarity.ivfPqResidualTopK(qs, corpus,
+        cents, cb, "id", "id", "cid", "v", 3, m, sd, np)),
+      "ivfPqResidualStoredTopK" -> ((m, sd, np) => Similarity.ivfPqResidualStoredTopK(qs,
+        index, cents, cb, "id", "cid", "v", 3, m, sd, np)),
+      "queryResidualLuts" -> ((m, sd, np) => Similarity.queryResidualLuts(qs, cents, cb,
+        "id", "cid", "v", m, sd, np)),
+      "serveIndexStream" -> ((m, sd, np) => Similarity.serveIndexStream(stream, index,
+        cents, cb, "id", "cid", "v", 3, m, sd, np)((_, _) => ())))
+    for ((name, call) <- calls; (m, sd, np) <- Seq((2, 2, 0), (2, 2, -1), (0, 2, 2), (2, 0, 2)))
+      withClue(s"$name(m=$m, subDim=$sd, nprobe=$np): ") {
+        an[IllegalArgumentException] should be thrownBy call(m, sd, np)
+      }
   }
 
   test("deleteFromIndex / compactIndex tombstones: serving survivors ≡ index built without them") {
