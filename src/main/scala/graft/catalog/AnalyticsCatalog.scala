@@ -219,33 +219,7 @@ private[graft] object AnalyticsCatalog {
           "click" -> (col("event_type") === "click"),
           "purchase" -> (col("event_type") === "purchase")))
         .orderBy(col("user_id"))
-    }, Some("""
-      WITH e AS (SELECT user_id, epoch_us(ts) AS tus, event_id, event_type
-                 FROM events),
-      s1 AS (
-        SELECT *,
-          min(CASE WHEN event_type = 'view' THEN tus END) OVER
-            (PARTITION BY user_id ORDER BY tus, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mv,
-          min(CASE WHEN event_type = 'view' THEN tus END) OVER
-            (PARTITION BY user_id) AS t_view
-        FROM e),
-      s2 AS (
-        SELECT *,
-          min(CASE WHEN event_type = 'click' AND tus > mv THEN tus END) OVER
-            (PARTITION BY user_id) AS t_click
-        FROM s1),
-      s3 AS (
-        SELECT *,
-          min(CASE WHEN event_type = 'purchase' AND tus > t_click THEN tus END) OVER
-            (PARTITION BY user_id) AS t_purchase
-        FROM s2)
-      SELECT DISTINCT user_id, t_view, t_click, t_purchase,
-        CAST(CASE WHEN t_purchase IS NOT NULL THEN 3
-                  WHEN t_click IS NOT NULL THEN 2
-                  WHEN t_view IS NOT NULL THEN 1
-                  ELSE 0 END AS BIGINT) AS funnel_step
-      FROM s3 ORDER BY user_id""")),
+    }, Some(funnelOracle)),
 
 
     // Cohort retention triangle (q89's sibling): users cohorted by first

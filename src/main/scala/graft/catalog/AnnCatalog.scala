@@ -128,7 +128,7 @@ private[graft] object AnnCatalog {
     ("q40_vector_norms", (s, dir) => {
       val emb = T(s, dir, "embeddings")
       // norm once per output column (unit_first divides by the norm
-      // directly — l2Normalize would re-fold the norm per array element)
+      // directly instead of re-folding it per array element)
       emb.select(
         col("vec_id"),
         Similarity.l2Norm(col("embedding")).as("l2_norm"),
@@ -1181,19 +1181,7 @@ private[graft] object AnnCatalog {
         .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
       ext.Similarity.lloydInt(emb, "vec_id", "embedding", inits, iters = 3)
         .orderBy(col("vec_id"))
-    }, Some(s"""
-      WITH ${lloydOracleCtes(3, 64)},
-      fin AS (
-        SELECT vec_id, cid, d FROM (
-          SELECT v.vec_id, c.cid,
-            list_sum(list_transform(range(1, len(v.y) + 1),
-              j -> (v.y[j] - c.cy[j]) * (v.y[j] - c.cy[j]))) AS d,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              list_sum(list_transform(range(1, len(v.y) + 1),
-                j -> (v.y[j] - c.cy[j]) * (v.y[j] - c.cy[j]))), c.cid) AS rn
-          FROM v CROSS JOIN c3 c) WHERE rn = 1)
-      SELECT vec_id, cid, CAST(d AS BIGINT) AS dist
-      FROM fin ORDER BY vec_id""")),
+    }, Some(kmeansIntOracle)),
 
 
     // q229's assignment computed ON THE STREAM — the inference shape:
@@ -1213,34 +1201,13 @@ private[graft] object AnnCatalog {
         emb.select(col("vec_id"), col("embedding"))
           .repartition(8).write.mode("overwrite").parquet(s"$p/stream")
       }
-      val qname = "graft_stream_kmeans"
-      val (schema, rows) =
-        try {
-          val stream = s.readStream
-            .schema("vec_id LONG, embedding ARRAY<FLOAT>").parquet(s"$tmp/stream")
-          val q = ext.Similarity.assignToCentroids(
-              stream, "vec_id", "embedding", model)
-            .writeStream.outputMode("append").format("memory").queryName(qname)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          val res = s.table(qname)
-          (res.schema, res.collect())
-        } finally s.catalog.dropTempView(qname)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      val stream = s.readStream
+        .schema("vec_id LONG, embedding ARRAY<FLOAT>").parquet(s"$tmp/stream")
+      memorySinkRows(s,
+          ext.Similarity.assignToCentroids(stream, "vec_id", "embedding", model),
+          "graft_stream_kmeans", "append")
         .orderBy(col("vec_id"))
-    }, Some(s"""
-      WITH ${lloydOracleCtes(3, 64)},
-      fin AS (
-        SELECT vec_id, cid, d FROM (
-          SELECT v.vec_id, c.cid,
-            list_sum(list_transform(range(1, len(v.y) + 1),
-              j -> (v.y[j] - c.cy[j]) * (v.y[j] - c.cy[j]))) AS d,
-            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              list_sum(list_transform(range(1, len(v.y) + 1),
-                j -> (v.y[j] - c.cy[j]) * (v.y[j] - c.cy[j]))), c.cid) AS rn
-          FROM v CROSS JOIN c3 c) WHERE rn = 1)
-      SELECT vec_id, cid, CAST(d AS BIGINT) AS dist
-      FROM fin ORDER BY vec_id""")),
+    }, Some(kmeansIntOracle)),
 
 
     // The residual-IVFADC index as a STORED deployment artifact (q197's
@@ -1449,28 +1416,17 @@ private[graft] object AnnCatalog {
         emb.where(col("vec_id") < 8).select(col("vec_id"), col("embedding"))
           .repartition(4).write.mode("overwrite").parquet(s"$p/queries")
       }
-      val cent = readFixture(s, s"$tmp/centroids")
-      val cb = readFixture(s, s"$tmp/codebooks")
       // pin BEFORE serving: every micro-batch re-consumes the index
       val stored = graft.util.Caches.pin(readFixture(s, s"$tmp/index"))
-      val outDir = scratch("q252_serve")
-      val stream = s.readStream
-        .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", 1).parquet(s"$tmp/queries")
-      val q = Similarity.serveIndexStream(stream, stored, cent, cb,
-          "vec_id", "cid", "embedding", k = 3, m = 4, subDim = 16,
-          nprobe = 2) { (answers, _) =>
-          answers.write.mode("append").parquet(outDir)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
       // the reference's operating point is a 1 s trigger: every
       // steady-state batch must beat it or the serve falls behind its
       // own arrival rate (cold batch excluded — plan/codegen/broadcast
       // are per-query costs). spark.graft.serve.sloMs dials the budget.
-      graft.streaming.Observability.gateServeSlo(
-        "q252_stream_ann_serve", q, budgetMs = 1000, s)
-      s.read.parquet(outDir).orderBy(col("q_id"), col("rank"))
+      serveGate(s, s, "q252_stream_ann_serve", budgetMs = 1000,
+          s"$tmp/queries", "vec_id LONG, embedding ARRAY<FLOAT>")(
+        Similarity.serveIndexBatch(stored, readFixture(s, s"$tmp/centroids"),
+          readFixture(s, s"$tmp/codebooks"), "vec_id", "cid", "embedding",
+          k = 3, m = 4, subDim = 16, nprobe = 2))
     }, Some(ivfAdcFullOracle)),
 
 
@@ -1530,23 +1486,14 @@ private[graft] object AnnCatalog {
         emb.where(col("vec_id") % 2 =!= 0).select(col("vec_id"), col("embedding"))
           .repartition(8).write.mode("overwrite").parquet(s"$p/stream")
       }
-      val qname = "graft_stream_drift"
       // 4 shuffle partitions: one state-store commit per partition per
       // micro-batch; 64 dims do not need 32 stores (q170/q211 discipline)
       val s2 = isolated(s, "spark.sql.shuffle.partitions" -> "4")
-      val (schema, rows) = {
-        val stream = s2.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-          .option("maxFilesPerTrigger", 2).parquet(s"$tmp/stream")
-        val q = ext.LinAlg.perDimQuantStats(stream, "embedding", scale = 1000)
-          .writeStream.outputMode("complete").format("memory").queryName(qname)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val res = s2.table(qname)
-        val out = (res.schema, res.collect())
-        s2.catalog.dropTempView(qname)
-        out
-      }
-      val deltaStats = s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      val stream = s2.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
+        .option("maxFilesPerTrigger", 2).parquet(s"$tmp/stream")
+      val deltaStats = memorySinkRows(s,
+        ext.LinAlg.perDimQuantStats(stream, "embedding", scale = 1000),
+        "graft_stream_drift", "complete")
       val baseStats = ext.LinAlg.perDimQuantStats(
         emb.where(col("vec_id") % 2 === 0), "embedding", scale = 1000)
       ext.LinAlg.driftFromStats(baseStats, deltaStats).orderBy(col("dim"))
@@ -1878,26 +1825,16 @@ private[graft] object AnnCatalog {
           .select(col("vec_id"), col("embedding"))
           .repartition(8).write.mode("overwrite").parquet(s"$p/stream")
       }
-      val qname = "graft_stream_cov"
       // 4 shuffle partitions: ONE triangle buffer of state needs no more
       // state-store commits per micro-batch (q211 discipline)
       val s2 = isolated(s, "spark.sql.shuffle.partitions" -> "4")
-      val (schema, rows) = {
-        val stream = s2.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-          .option("maxFilesPerTrigger", 2).parquet(s"$tmp/stream")
-        val codes = stream.select(lit(0L).as("k"),
+      val codes = s2.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
+        .option("maxFilesPerTrigger", 2).parquet(s"$tmp/stream")
+        .select(lit(0L).as("k"),
           ext.Quantize.int8Codes(col("embedding"),
             ext.Quantize.int8Scale(col("embedding"))).as("codes"))
-        val q = ext.LinAlg.covarianceUpperTriangle(codes, "k", "codes", 64)
-          .writeStream.outputMode("complete").format("memory").queryName(qname)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val res = s2.table(qname)
-        val out = (res.schema, res.collect())
-        s2.catalog.dropTempView(qname)
-        out
-      }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      memorySinkRows(s, ext.LinAlg.covarianceUpperTriangle(codes, "k", "codes", 64),
+          "graft_stream_cov", "complete")
         .select(col("i"), col("j"), col("g"), col("si"), col("sj"),
           col("n"), col("cov_num"), col("cov"))
         .orderBy(col("i"), col("j"))

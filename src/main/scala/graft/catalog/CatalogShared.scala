@@ -1,11 +1,11 @@
 package graft
 package catalog
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.core.Event
 import graft.core.parse.GameLogParser
@@ -126,14 +126,6 @@ private[graft] object CatalogShared {
         .repartition(3).write.mode("overwrite").parquet(s"$p/vectors")
     }
 
-  /** The store-lifecycle gates' serve session + their shared
-    * (q_id, text, embedding) query frame: 4 pinned shuffle partitions and
-    * AQE off — the q270/q296 serve-session discipline (in-gate frames are
-    * |batch|-bounded deltas or store-sized postings/model frames, so
-    * 32-task stages pay launch overhead, not parallelism, and AQE's
-    * per-stage re-planning was measured at ~30-35% of per-batch wall on
-    * these shapes). Every frame a gate builds must live on the returned
-    * session — one plan never mixes sessions. */
   /** Scale-adaptive gate-session shuffle-partition count, DERIVED from the
     * gate corpus's on-disk size (bytes / 64 MB per partition, floor 4, cap
     * the session's core count) instead of a constant tuned to sf0.1's
@@ -157,24 +149,28 @@ private[graft] object CatalogShared {
         (bytes / (64L << 20)).toInt)): Integer
     }).intValue()
 
-  /** The gate-session conf pins: the partition count from
-    * [[gatePartitions]] and AQE off. A full-catalog bench A/B with and
-    * without them kept them (OPTIMIZATION_r17.md, "Gate-session full-bench
-    * A/B — KEEP, with derived partitions"). */
-  private def gateSessionPins(s: SparkSession, dir: String): Seq[(String, String)] =
-    Seq(
+  /** The gate session: an isolated child with the partition count from
+    * [[gatePartitions]] and AQE off, for the serving and lifecycle gates
+    * (q270/q275/q296, q276–q304) — one definition so the pins cover the
+    * whole family. A full-catalog bench A/B with and without the pins kept
+    * them (OPTIMIZATION_r17.md, "Gate-session full-bench A/B — KEEP, with
+    * derived partitions"). */
+  def gateSession(s: SparkSession, dir: String): SparkSession =
+    isolated(s,
       "spark.sql.shuffle.partitions" -> gatePartitions(s, dir).toString,
       "spark.sql.adaptive.enabled" -> "false")
 
-  /** Bare gate session (the pins of [[hybridGateSession]] without its
-    * query frame) for the lifecycle gates that build their own frames
-    * (q301–q304) — one definition so the pins cover the whole family. */
-  def gateSession(s: SparkSession, dir: String): SparkSession =
-    isolated(s, gateSessionPins(s, dir): _*)
-
+  /** The store-lifecycle gates' serve session + their shared
+    * (q_id, text, embedding) query frame: 4 pinned shuffle partitions and
+    * AQE off — the q270/q296 serve-session discipline (in-gate frames are
+    * |batch|-bounded deltas or store-sized postings/model frames, so
+    * 32-task stages pay launch overhead, not parallelism, and AQE's
+    * per-stage re-planning was measured at ~30-35% of per-batch wall on
+    * these shapes). Every frame a gate builds must live on the returned
+    * session — one plan never mixes sessions. */
   def hybridGateSession(s: SparkSession, dir: String):
       (SparkSession, DataFrame) = {
-    val s2 = isolated(s, gateSessionPins(s, dir): _*)
+    val s2 = gateSession(s, dir)
     val docs2 = graft.util.EventTime.tsToLongNanos(
       readFixture(s2, s"$dir/documents.parquet"))
     val emb2 = graft.util.EventTime.tsToLongNanos(
@@ -193,7 +189,7 @@ private[graft] object CatalogShared {
   def ivfGateSession(s: SparkSession, dir: String):
       (SparkSession, DataFrame, DataFrame, DataFrame) = {
     val tmp = ivfIngestStaging(s, dir)
-    val s2 = isolated(s, gateSessionPins(s, dir): _*)
+    val s2 = gateSession(s, dir)
     // the staged model artifacts are written once per JVM and immutable
     // after — the fixture schema-memo contract holds for them
     (s2,
@@ -310,6 +306,109 @@ private[graft] object CatalogShared {
       case _: org.apache.spark.sql.streaming.StreamingQueryException => ()
     }
     mk().awaitTermination()
+  }
+
+  // The staged inputs the streaming twin gates share below: one definition
+  // per Staging label, for [[ivfIngestStaging]]'s execution-order reason.
+
+  /** [[gameEvents]] over `events` as ONE parquet file (one AvailableNow
+    * micro-batch), the q19/q199 stream; returns (dir, schema). */
+  def gameEventsStaging(s: SparkSession, dir: String): (String, StructType) = {
+    val game = gameEvents(T(s, dir, "events"))
+    (graft.util.Staging.dir("q19_events", dir) { p =>
+      game.coalesce(1).write.mode("overwrite").parquet(p)
+    }, game.schema)
+  }
+
+  /** (doc_id, text) over 8 files, the tokenizer streams' input
+    * (q226/q238/q264). */
+  def docsStreamStaging(s: SparkSession, dir: String): String =
+    graft.util.Staging.dir("q226_docs", dir) { p =>
+      T(s, dir, "documents").select(col("doc_id"), col("text"))
+        .repartition(8).write.mode("overwrite").parquet(s"$p/stream")
+    } + "/stream"
+
+  /** Non-null documents salted with an out-of-corpus word (" q9z<id % 5>")
+    * so the WordPiece fallback path fires, over 8 files (q267/q279/q281). */
+  def saltedDocsStaging(s: SparkSession, dir: String): String =
+    graft.util.Staging.dir("q267_salted_docs", dir) { p =>
+      T(s, dir, "documents").where(col("text").isNotNull)
+        .select(col("doc_id"),
+          concat(col("text"), lit(" q9z"),
+            (col("doc_id") % 5).cast("string")).as("text"))
+        .repartition(8).write.mode("overwrite").parquet(s"$p/stream")
+    } + "/stream"
+
+  /** The hybrid serving gates' query set — docs 0..5 with their text and
+    * embedding, read with [[HybridQuerySchema]] — over 3 files
+    * (q270/q275/q296). */
+  val HybridQuerySchema = "q_id LONG, text STRING, embedding ARRAY<FLOAT>"
+  def hybridQueriesStaging(s: SparkSession, dir: String): String =
+    graft.util.Staging.dir("q270_hybrid_queries", dir) { p =>
+      T(s, dir, "documents").where(col("doc_id") < 6)
+        .select(col("doc_id").as("q_id"), col("text"))
+        .join(T(s, dir, "embeddings")
+          .select(col("vec_id").as("q_id"), col("embedding")), Seq("q_id"))
+        .repartition(3).write.mode("overwrite").parquet(s"$p/queries")
+    } + "/queries"
+
+  /** The memory-sink harness of the streaming twin gates
+    * (VERIFICATION-HARNESS BOUNDARY — the only way to hand a streaming
+    * result to the batch oracle compare; production writes through the
+    * distributed sinks): runs `stream` AvailableNow into a memory sink
+    * named `qname`, applies `post` to the sink table on the stream's own
+    * session, collects, drops the sink's temp view whether or not that
+    * succeeded, and rebuilds the rows as a local frame on `s`. */
+  def memorySinkRows(s: SparkSession, stream: Dataset[_], qname: String,
+      outputMode: String, post: DataFrame => DataFrame = identity): DataFrame = {
+    val s2 = stream.sparkSession
+    val (schema, rows) =
+      try {
+        stream.writeStream.outputMode(outputMode).format("memory").queryName(qname)
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        val res = post(s2.table(qname))
+        (res.schema, res.collect())
+      } finally s2.catalog.dropTempView(qname)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** The serving-gate harness (q252/q270/q275/q296): streams the staged
+    * query dir one file per micro-batch on the serve session `s2`, appends
+    * each batch's `serve` answers to a scratch parquet dir, records the
+    * per-batch SLO under `name` at `budgetMs` through
+    * [[graft.streaming.Observability.gateServeSlo]], and reads the answers
+    * back on `s` ordered by (q_id, rank). */
+  def serveGate(s: SparkSession, s2: SparkSession, name: String,
+      budgetMs: Long, queries: String, schema: String)(
+      serve: DataFrame => DataFrame): DataFrame = {
+    val outDir = scratch(name)
+    val q = s2.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(queries)
+      .writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>
+        serve(batch).write.mode("append").parquet(outDir)
+      }
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    graft.streaming.Observability.gateServeSlo(name, q, budgetMs, s2)
+    s.read.parquet(outDir).orderBy(col("q_id"), col("rank"))
+  }
+
+  /** The hybrid serving gates' corpus (q270/q275): documents and
+    * embeddings prepared on the serve session `s2`, every frame pinned
+    * once so each micro-batch serves from the cache instead of re-reducing
+    * the corpus (the measured 3×-per-batch cost of the unpinned form). */
+  def pinnedHybridCorpus(s2: SparkSession, dir: String): TextAnalysis.HybridCorpus = {
+    val hc = TextAnalysis.prepareHybridCorpus(
+      graft.util.EventTime.tsToLongNanos(readFixture(s2, s"$dir/documents.parquet"))
+        .select(col("doc_id"), col("text")), "doc_id", "text",
+      graft.util.EventTime.tsToLongNanos(readFixture(s2, s"$dir/embeddings.parquet"))
+        .select(col("vec_id"), col("embedding")), "vec_id", "embedding")
+    hc.copy(
+      emb = graft.util.Caches.pin(hc.emb),
+      toks = graft.util.Caches.pin(hc.toks),
+      dl = graft.util.Caches.pin(hc.dl),
+      stats = graft.util.Caches.pin(hc.stats),
+      alldf = graft.util.Caches.pin(hc.alldf))
   }
 
   /** Per-JVM memo of the 8-merge tokenizer MODEL per sfDir — the Staging
@@ -781,6 +880,297 @@ private[graft] object CatalogShared {
       FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, n_id) AS rn
             FROM fused)
       WHERE rn <= 5 ORDER BY q_id, rank"""
+
+  /** The per-player running-stats replay (the reference's kill/death/assist/
+    * damage fold over [[gameEvents]]) shared VERBATIM by q19
+    * (`mapGroupsWithState` stream), q199 (`transformWithState` stream) and
+    * q20 (the batch twin). */
+  val playerStatsOracle: String = """
+      WITH ev AS (
+        SELECT ('S' || CAST(user_id AS VARCHAR)) AS sid,
+               CASE WHEN event_type = 'purchase' THEN ('P' || CAST(user_id AS VARCHAR)) ELSE '' END AS pname,
+               CASE event_type WHEN 'purchase' THEN 'kill' WHEN 'error' THEN 'death'
+                    WHEN 'signup' THEN 'assist' ELSE 'damage' END AS et,
+               event_id AS sec, event_id % 97 AS amt, 1 + user_id % 19 AS rnd
+        FROM events),
+      agg AS (
+        SELECT sid,
+          COALESCE(MAX(CASE WHEN pname <> '' THEN pname END), '') AS pn,
+          GREATEST(MAX(sec), 0) AS sec,
+          COUNT(*) FILTER (WHERE et = 'kill') AS kills,
+          COUNT(*) FILTER (WHERE et = 'death') AS deaths,
+          COUNT(*) FILTER (WHERE et = 'assist') AS assists,
+          CAST(COALESCE(SUM(amt) FILTER (WHERE et = 'damage'), 0) AS BIGINT) AS damage,
+          GREATEST(MAX(rnd), 0) AS rnd
+        FROM ev GROUP BY sid)
+      SELECT pn AS "playerName", sid AS "steamId", sec AS "second",
+             kills, deaths, assists, damage,
+             CASE WHEN deaths = 0 THEN CAST(kills AS DOUBLE)
+                  ELSE CAST(kills AS DOUBLE) / deaths END AS "kdRatio",
+             CAST(damage AS DOUBLE) / rnd AS "damagePerRound"
+      FROM agg ORDER BY "steamId""""
+
+  /** The exact 3-gram Jaccard pair replay shared VERBATIM by q25 (all-pairs)
+    * and q161 (prefix-filtered candidates: the filter must drop no pair). */
+  val ngramJaccardOracle: String = """
+      WITH docs AS (
+        SELECT doc_id, lang,
+          list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3
+            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
+                 i -> concat_ws(' ', string_split(text, ' ')[i],
+                                     string_split(text, ' ')[i + 1],
+                                     string_split(text, ' ')[i + 2]))
+            ELSE [text] END) AS sh
+        FROM documents),
+      pairs AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+          len(list_intersect(a.sh, b.sh)) AS inter,
+          len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS uni
+        FROM docs a JOIN docs b ON a.lang = b.lang AND a.doc_id < b.doc_id)
+      SELECT id_a, id_b, CAST(inter AS DOUBLE) / uni AS jaccard
+      FROM pairs WHERE CAST(inter AS DOUBLE) / uni >= 0.12
+      ORDER BY id_a, id_b"""
+
+  /** The near-duplicate cluster replay shared VERBATIM by q41 (iterative
+    * connected components) and q153 (star components). */
+  val dedupClustersOracle: String = """
+      WITH RECURSIVE docs AS (
+        SELECT doc_id,
+          CASE WHEN len(string_split(text, ' ')) >= 3
+            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
+                 i -> concat_ws(' ', string_split(text, ' ')[i],
+                                     string_split(text, ' ')[i + 1],
+                                     string_split(text, ' ')[i + 2]))
+            ELSE [text] END AS sh
+        FROM documents),
+      hashed AS (
+        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
+        FROM docs),
+      mh AS (
+        SELECT doc_id, p,
+          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
+        FROM hashed CROSS JOIN range(16) t(p)),
+      sigs AS (
+        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
+        FROM mh GROUP BY doc_id, p // 4),
+      pairs AS (
+        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
+      edges AS (
+        SELECT id_a AS src, id_b AS dst FROM pairs
+        UNION SELECT id_b, id_a FROM pairs),
+      reach AS (
+        SELECT src AS id, src AS label FROM edges
+        UNION
+        SELECT e.src, r.label FROM edges e JOIN reach r ON e.dst = r.id)
+      SELECT id AS doc_id, min(label) AS cluster_id,
+             (id = min(label)) AS is_keeper
+      FROM reach GROUP BY id ORDER BY doc_id"""
+
+  /** The increment-vs-corpus near-duplicate replay shared VERBATIM by q47
+    * (batch) and q188 (the streamed increment against the stored buckets). */
+  val incrementalDedupOracle: String = """
+      WITH docs AS (
+        SELECT doc_id,
+          CASE WHEN len(string_split(text, ' ')) >= 3
+            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
+                 i -> concat_ws(' ', string_split(text, ' ')[i],
+                                     string_split(text, ' ')[i + 1],
+                                     string_split(text, ' ')[i + 2]))
+            ELSE [text] END AS sh
+        FROM documents),
+      hashed AS (
+        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
+        FROM docs),
+      mh AS (
+        SELECT doc_id, p,
+          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
+        FROM hashed CROSS JOIN range(16) t(p)),
+      sigs AS (
+        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
+        FROM mh GROUP BY doc_id, p // 4)
+      SELECT DISTINCT n.doc_id AS new_id, c.doc_id AS corpus_id
+      FROM sigs n JOIN sigs c ON n.band = c.band AND n.sig = c.sig
+      WHERE n.doc_id > 350 AND c.doc_id <= 350
+      ORDER BY new_id, corpus_id"""
+
+  /** The benchmark-decontamination replay shared VERBATIM by q51 (exact
+    * n-gram join) and q193 (the Bloom-filter prefilter must drop no hit). */
+  val decontaminateOracle: String = """
+      WITH cg AS (
+        SELECT DISTINCT doc_id, gram FROM (
+          SELECT doc_id, unnest(CASE WHEN len(string_split(text, ' ')) >= 3
+            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
+                 i -> concat_ws(' ', string_split(text, ' ')[i],
+                                     string_split(text, ' ')[i + 1],
+                                     string_split(text, ' ')[i + 2]))
+            ELSE [text] END) AS gram
+          FROM documents WHERE doc_id % 17 <> 0)),
+      eg AS (
+        SELECT DISTINCT gram FROM (
+          SELECT unnest(CASE WHEN len(string_split(text, ' ')) >= 3
+            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
+                 i -> concat_ws(' ', string_split(text, ' ')[i],
+                                     string_split(text, ' ')[i + 1],
+                                     string_split(text, ' ')[i + 2]))
+            ELSE [text] END) AS gram
+          FROM documents WHERE doc_id % 17 = 0)),
+      hits AS (
+        SELECT doc_id, count(*) AS n_shared FROM cg JOIN eg USING (gram) GROUP BY 1)
+      SELECT d.doc_id,
+             coalesce(h.n_shared, 0) AS n_shared,
+             coalesce(h.n_shared, 0) > 0 AS contaminated
+      FROM documents d LEFT JOIN hits h USING (doc_id)
+      WHERE d.doc_id % 17 <> 0
+      ORDER BY d.doc_id"""
+
+  /** The earliest-valid 3-step funnel replay shared VERBATIM by q89 (batch
+    * windows) and q204 (the `transformWithState` stream). */
+  val funnelOracle: String = """
+      WITH e AS (SELECT user_id, epoch_us(ts) AS tus, event_id, event_type
+                 FROM events),
+      s1 AS (
+        SELECT *,
+          min(CASE WHEN event_type = 'view' THEN tus END) OVER
+            (PARTITION BY user_id ORDER BY tus, event_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mv,
+          min(CASE WHEN event_type = 'view' THEN tus END) OVER
+            (PARTITION BY user_id) AS t_view
+        FROM e),
+      s2 AS (
+        SELECT *,
+          min(CASE WHEN event_type = 'click' AND tus > mv THEN tus END) OVER
+            (PARTITION BY user_id) AS t_click
+        FROM s1),
+      s3 AS (
+        SELECT *,
+          min(CASE WHEN event_type = 'purchase' AND tus > t_click THEN tus END) OVER
+            (PARTITION BY user_id) AS t_purchase
+        FROM s2)
+      SELECT DISTINCT user_id, t_view, t_click, t_purchase,
+        CAST(CASE WHEN t_purchase IS NOT NULL THEN 3
+                  WHEN t_click IS NOT NULL THEN 2
+                  WHEN t_view IS NOT NULL THEN 1
+                  ELSE 0 END AS BIGINT) AS funnel_step
+      FROM s3 ORDER BY user_id"""
+
+  /** The count-min sketch replay (exact top-40 probes and their estimates)
+    * shared VERBATIM by q206 (batch) and q211 (the complete-mode stream). */
+  val countMinOracle: String = """
+      WITH cnts AS (
+        SELECT token, count(*)::BIGINT AS cnt,
+               ('0x' || substr(md5(token), 1, 12))::BIGINT % 2147483647 AS hp
+        FROM (SELECT unnest(string_split(text, ' ')) AS token
+              FROM documents WHERE text IS NOT NULL)
+        WHERE token <> '' GROUP BY token),
+      hashes(j, a, b) AS (
+        VALUES (0, 1103515245, 12345), (1, 1299709, 7919),
+               (2, 15485863, 104729), (3, 32452843, 1299721)),
+      cms AS (
+        SELECT j, ((a * hp + b) % 2147483647) % 2048 AS bucket,
+               sum(cnt)::BIGINT AS c
+        FROM cnts CROSS JOIN hashes GROUP BY 1, 2),
+      probes AS (
+        SELECT token, cnt, hp FROM cnts ORDER BY cnt DESC, token LIMIT 40)
+      SELECT p.token, p.cnt,
+             min(coalesce(c.c, 0))::BIGINT AS est,
+             min(coalesce(c.c, 0)) >= p.cnt AS ge_ok
+      FROM probes p CROSS JOIN hashes h
+      LEFT JOIN cms c ON c.j = h.j
+        AND c.bucket = ((h.a * p.hp + h.b) % 2147483647) % 2048
+      GROUP BY p.token, p.cnt
+      ORDER BY p.cnt DESC, p.token"""
+
+  /** The per-doc 8-merge BPE tokenization replay shared VERBATIM by q224
+    * (batch), q226 (the rowwise stream) and q232 (the stored merge table). */
+  val bpeTokenizeOracle: String = s"""
+      WITH ${bpeOracleCtes(8)},
+      tok AS (
+        SELECT word, (length(sym) - length(replace(sym, '|', ''))) // 2 AS n_syms
+        FROM w8),
+      dw AS (
+        SELECT doc_id, unnest(string_split(text, ' ')) AS word
+        FROM documents WHERE text IS NOT NULL)
+      SELECT doc_id, count(*)::BIGINT AS n_words,
+        CAST(sum(t.n_syms) AS BIGINT) AS n_tokens
+      FROM dw JOIN tok t USING (word) WHERE word <> ''
+      GROUP BY doc_id ORDER BY doc_id"""
+
+  /** The curation attrition-funnel replay (language, Gopher quality, exact
+    * dedup verdicts) shared VERBATIM by q227 (batch) and q228 (stream). */
+  val curationFunnelOracle: String = """
+      WITH t AS (
+        SELECT doc_id, text, string_split(text, ' ') AS ws
+        FROM documents WHERE text IS NOT NULL),
+      sc AS (
+        SELECT doc_id,
+          CAST(len(ws) AS BIGINT) AS n_words,
+          CAST(len(text) - (len(ws) - 1) AS DOUBLE) / len(ws) AS avg_word_len,
+          CAST(len(list_filter(ws, w ->
+            list_contains(['the','a','of','and','to','in'], w))) AS DOUBLE)
+            / len(ws) AS stopword_ratio,
+          CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS DOUBLE)
+            / len(ws) AS alpha_ratio
+        FROM t),
+      sh AS (
+        SELECT doc_id, unnest(CASE WHEN len(ws) >= 3
+          THEN list_transform(generate_series(1, len(ws) - 2),
+               i -> concat_ws(' ', ws[i], ws[i + 1], ws[i + 2]))
+          ELSE [text] END) AS g
+        FROM t),
+      gp AS (SELECT doc_id, g, count(*) AS c FROM sh GROUP BY 1, 2),
+      rep AS (
+        SELECT doc_id,
+          (CAST(sum(c) AS BIGINT) - count(*))::DOUBLE / CAST(sum(c) AS BIGINT) AS dup_frac
+        FROM gp GROUP BY doc_id),
+      q AS (
+        SELECT sc.doc_id,
+          (sc.n_words >= 50 AND sc.n_words <= 100000)
+            AND (sc.avg_word_len >= 3.0 AND sc.avg_word_len <= 10.0)
+            AND sc.stopword_ratio >= 0.06 AND sc.alpha_ratio >= 0.8
+            AND rep.dup_frac <= 0.2 AS v_quality
+        FROM sc JOIN rep USING (doc_id)),
+      k AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
+      v AS (
+        SELECT d.doc_id,
+          COALESCE(d.lang = 'en', false) AS v_lang,
+          COALESCE(q.v_quality, false) AS v_quality,
+          (k.doc_id IS NOT NULL) AS v_dedup,
+          d.n_chars
+        FROM documents d LEFT JOIN q USING (doc_id) LEFT JOIN k USING (doc_id))
+      SELECT v_lang, v_quality, v_dedup,
+        count(*)::BIGINT AS n_docs,
+        CAST(sum(n_chars) AS BIGINT) AS mass,
+        CASE WHEN NOT v_lang THEN 0 WHEN NOT v_quality THEN 1
+             WHEN NOT v_dedup THEN 2 ELSE 3 END AS funnel_depth
+      FROM v GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""
+
+  /** The integer-Lloyd assignment replay (3 rounds, 64 dims) shared VERBATIM
+    * by q229 (batch training) and q231 (stream inference). */
+  val kmeansIntOracle: String = s"""
+      WITH ${lloydOracleCtes(3, 64)},
+      fin AS (
+        SELECT vec_id, cid, d FROM (
+          SELECT v.vec_id, c.cid,
+            list_sum(list_transform(range(1, len(v.y) + 1),
+              j -> (v.y[j] - c.cy[j]) * (v.y[j] - c.cy[j]))) AS d,
+            row_number() OVER (PARTITION BY v.vec_id ORDER BY
+              list_sum(list_transform(range(1, len(v.y) + 1),
+                j -> (v.y[j] - c.cy[j]) * (v.y[j] - c.cy[j]))), c.cid) AS rn
+          FROM v CROSS JOIN c3 c) WHERE rn = 1)
+      SELECT vec_id, cid, CAST(d AS BIGINT) AS dist
+      FROM fin ORDER BY vec_id"""
+
+  /** The per-doc BPE token-id replay shared VERBATIM by q234 (batch) and
+    * q238 (the rowwise stream). */
+  val bpeTokenIdsOracle: String = s"""
+      WITH ${bpeOracleCtes(8)},
+      ${bpeTokenIdCtes}
+      SELECT doc_id,
+        CAST(row_number() OVER (PARTITION BY doc_id ORDER BY wpos, tpos) - 1 AS INT) AS pos,
+        v.token_id
+      FROM dt JOIN vocab v USING (token)
+      ORDER BY doc_id, pos"""
 
   /** The full RAG-pipeline replay — hybrid RRF fusion, the state-carrying
     * MMR recursion over the fused candidates, the 192-token budget fill —

@@ -101,24 +101,7 @@ private[graft] object DedupCatalog {
           Seq("lang"), 0.12)
         .select(col("id_a"), col("id_b"), col("jaccard"))
         .orderBy(col("id_a"), col("id_b"))
-    }, Some("""
-      WITH docs AS (
-        SELECT doc_id, lang,
-          list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END) AS sh
-        FROM documents),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          len(list_intersect(a.sh, b.sh)) AS inter,
-          len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS uni
-        FROM docs a JOIN docs b ON a.lang = b.lang AND a.doc_id < b.doc_id)
-      SELECT id_a, id_b, CAST(inter AS DOUBLE) / uni AS jaccard
-      FROM pairs WHERE CAST(inter AS DOUBLE) / uni >= 0.12
-      ORDER BY id_a, id_b""")),
+    }, Some(ngramJaccardOracle)),
 
 
     ("q26_cosine_dup_pairs", (s, dir) => {
@@ -168,39 +151,7 @@ private[graft] object DedupCatalog {
           col("id").as("doc_id"), col("cluster_id"),
           (col("id") === col("cluster_id")).as("is_keeper"))
         .orderBy(col("doc_id"))
-    }, Some("""
-      WITH RECURSIVE docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, src AS label FROM edges
-        UNION
-        SELECT e.src, r.label FROM edges e JOIN reach r ON e.dst = r.id)
-      SELECT id AS doc_id, min(label) AS cluster_id,
-             (id = min(label)) AS is_keeper
-      FROM reach GROUP BY id ORDER BY doc_id""")),
+    }, Some(dedupClustersOracle)),
 
 
     // End-to-end corpus dedup: LSH pairs → components → keep the LONGEST
@@ -262,30 +213,7 @@ private[graft] object DedupCatalog {
       val fresh = Dedup.minhashBuckets(docs.where(col("doc_id") > 350), "doc_id", "text")
       Dedup.minhashIncrementPairs(fresh, corpus, "doc_id")
         .orderBy(col("new_id"), col("corpus_id"))
-    }, Some("""
-      WITH docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4)
-      SELECT DISTINCT n.doc_id AS new_id, c.doc_id AS corpus_id
-      FROM sigs n JOIN sigs c ON n.band = c.band AND n.sig = c.sig
-      WHERE n.doc_id > 350 AND c.doc_id <= 350
-      ORDER BY new_id, corpus_id""")),
+    }, Some(incrementalDedupOracle)),
 
 
     // Test-set decontamination: per corpus doc, how many of its distinct
@@ -298,33 +226,7 @@ private[graft] object DedupCatalog {
         docs.where(col("doc_id") % 17 === 0),
         "doc_id", "text")
         .orderBy(col("doc_id"))
-    }, Some("""
-      WITH cg AS (
-        SELECT DISTINCT doc_id, gram FROM (
-          SELECT doc_id, unnest(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END) AS gram
-          FROM documents WHERE doc_id % 17 <> 0)),
-      eg AS (
-        SELECT DISTINCT gram FROM (
-          SELECT unnest(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END) AS gram
-          FROM documents WHERE doc_id % 17 = 0)),
-      hits AS (
-        SELECT doc_id, count(*) AS n_shared FROM cg JOIN eg USING (gram) GROUP BY 1)
-      SELECT d.doc_id,
-             coalesce(h.n_shared, 0) AS n_shared,
-             coalesce(h.n_shared, 0) > 0 AS contaminated
-      FROM documents d LEFT JOIN hits h USING (doc_id)
-      WHERE d.doc_id % 17 <> 0
-      ORDER BY d.doc_id""")),
+    }, Some(decontaminateOracle)),
 
 
     // Fuzzy (edit-distance) matching: near-identical customer names within
@@ -466,39 +368,7 @@ private[graft] object DedupCatalog {
         .select(col("doc_id"), col("cluster_id"),
           (col("doc_id") === col("cluster_id")).as("is_keeper"))
         .orderBy(col("doc_id"))
-    }, Some("""
-      WITH RECURSIVE docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, src AS label FROM edges
-        UNION
-        SELECT e.src, r.label FROM edges e JOIN reach r ON e.dst = r.id)
-      SELECT id AS doc_id, min(label) AS cluster_id,
-             (id = min(label)) AS is_keeper
-      FROM reach GROUP BY id ORDER BY doc_id""")),
+    }, Some(dedupClustersOracle)),
 
 
     // Prefix-fingerprint dedup — the boilerplate/mirror-page heuristic:
@@ -707,24 +577,7 @@ private[graft] object DedupCatalog {
           Seq("lang"), 0.12)
         .select(col("id_a"), col("id_b"), col("jaccard"))
         .orderBy(col("id_a"), col("id_b"))
-    }, Some("""
-      WITH docs AS (
-        SELECT doc_id, lang,
-          list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END) AS sh
-        FROM documents),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          len(list_intersect(a.sh, b.sh)) AS inter,
-          len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS uni
-        FROM docs a JOIN docs b ON a.lang = b.lang AND a.doc_id < b.doc_id)
-      SELECT id_a, id_b, CAST(inter AS DOUBLE) / uni AS jaccard
-      FROM pairs WHERE CAST(inter AS DOUBLE) / uni >= 0.12
-      ORDER BY id_a, id_b""")),
+    }, Some(ngramJaccardOracle)),
 
 
     // Per-source near-dup governance report: which sources generate the
@@ -887,25 +740,15 @@ private[graft] object DedupCatalog {
       val tmp = graft.util.Staging.dir("q170_docs", dir) { p =>
         staged.repartition(16).write.mode("overwrite").parquet(p)
       }
-      val qname = "graft_stream_dedup"
       // 4 shuffle partitions: each stateful op commits one state store
       // per partition per micro-batch; at 5k docs the commit overhead
       // dominates the actual aggregation, so fewer instances is faster.
       // Pinned in an isolated child session — parent never mutated.
       val s2 = isolated(s, "spark.sql.shuffle.partitions" -> "4")
-      val (schema, rows) = {
-          val stream = s2.readStream.schema(staged.schema).parquet(tmp)
-          val q = Dedup.minhashStream(stream, "doc_id", "text", "ts",
-              delayThreshold = "1 second", windowDuration = "10 seconds")
-            .writeStream.outputMode("append").format("memory").queryName(qname)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          val res = s2.table(qname)
-          val r = (res.schema, res.collect())
-          s2.catalog.dropTempView(qname)
-          r
-        }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      memorySinkRows(s, Dedup.minhashStream(
+          s2.readStream.schema(staged.schema).parquet(tmp), "doc_id", "text", "ts",
+          delayThreshold = "1 second", windowDuration = "10 seconds"),
+        "graft_stream_dedup", "append")
         .orderBy(col("doc_id"))
     }, Some("""
       WITH docs AS (
@@ -1341,49 +1184,16 @@ private[graft] object DedupCatalog {
       // foot-gun in a query body)
       val s2 = isolated(s, "spark.sql.shuffle.partitions" -> "4")
       val store = readFixture(s2, s"$tmp/store")
-      val qname = "graft_stream_incr"
-      val (schema, rows) = {
-        val stream = s2.readStream
-          .schema("doc_id LONG, text STRING").parquet(s"$tmp/stream")
-        val q = Dedup.streamBuckets(stream, "doc_id", "text")
+      val stream = s2.readStream
+        .schema("doc_id LONG, text STRING").parquet(s"$tmp/stream")
+      memorySinkRows(s, Dedup.streamBuckets(stream, "doc_id", "text")
           .join(store, Seq("band", "sig"))
           .where(col("doc_id") =!= col("corpus_id"))
-          .select(col("doc_id").as("new_id"), col("corpus_id"))
-          .writeStream.outputMode("append").format("memory").queryName(qname)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val res = s2.table(qname)
-        val out = (res.schema, res.collect())
-        s2.catalog.dropTempView(qname)
-        out
-      }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+          .select(col("doc_id").as("new_id"), col("corpus_id")),
+        "graft_stream_incr", "append")
         .distinct()
         .orderBy(col("new_id"), col("corpus_id"))
-    }, Some("""
-      WITH docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4)
-      SELECT DISTINCT n.doc_id AS new_id, c.doc_id AS corpus_id
-      FROM sigs n JOIN sigs c ON n.band = c.band AND n.sig = c.sig
-      WHERE n.doc_id > 350 AND c.doc_id <= 350
-      ORDER BY new_id, corpus_id""")),
+    }, Some(incrementalDedupOracle)),
 
 
     // Bloom-pruned decontamination: q51's EXACT semantics for eval suites
@@ -1400,33 +1210,7 @@ private[graft] object DedupCatalog {
         docs.where(col("doc_id") % 17 === 0),
         "doc_id", "text", expectedGrams = 500000L, fpp = 0.03)
         .orderBy(col("doc_id"))
-    }, Some("""
-      WITH cg AS (
-        SELECT DISTINCT doc_id, gram FROM (
-          SELECT doc_id, unnest(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END) AS gram
-          FROM documents WHERE doc_id % 17 <> 0)),
-      eg AS (
-        SELECT DISTINCT gram FROM (
-          SELECT unnest(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END) AS gram
-          FROM documents WHERE doc_id % 17 = 0)),
-      hits AS (
-        SELECT doc_id, count(*) AS n_shared FROM cg JOIN eg USING (gram) GROUP BY 1)
-      SELECT d.doc_id,
-             coalesce(h.n_shared, 0) AS n_shared,
-             coalesce(h.n_shared, 0) > 0 AS contaminated
-      FROM documents d LEFT JOIN hits h USING (doc_id)
-      WHERE d.doc_id % 17 <> 0
-      ORDER BY d.doc_id""")),
+    }, Some(decontaminateOracle)),
 
 
     // The flagship composition — corpus to TRAINING SHARDS as one gated

@@ -28,6 +28,23 @@ import CatalogShared._
   */
 private[graft] object ReferenceCatalog {
 
+  /** q19/q199's read of the stateful stream's update-mode output: each
+    * key's last cumulative-complete row — robust even if the source were
+    * split into several micro-batches. The CUMULATIVE counter total is the
+    * monotone selector; `second` is batch-scoped (a later batch's complete
+    * row can carry a SMALLER second), so the oracle's global max per key
+    * is taken across every emitted row. */
+  private def lastStatsRows(out: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("steamId"))
+      .orderBy(
+        (col("kills") + col("deaths") + col("assists") + col("damage")).desc,
+        col("second").desc)
+    out.withColumn("rn", row_number().over(w))
+      .withColumn("second",
+        max(col("second")).over(Window.partitionBy(col("steamId"))))
+      .where(col("rn") === 1).drop("rn")
+  }
+
   val entries: Seq[(String, Q, Option[String])] = Seq(
 
 
@@ -407,81 +424,22 @@ private[graft] object ReferenceCatalog {
 
     ("q19_stream_stats", (s, dir) => {
       import s.implicits._
-      val game = gameEvents(T(s, dir, "events"))
-      // VERIFICATION-HARNESS BOUNDARY: this entry materializes the streaming
-      // result on the driver (memory sink + collect + createDataFrame) —
-      // the only way to hand a STREAMING result to the batch oracle compare.
-      // It would not survive 100×; the PRODUCTION path is
-      // `statefulPlayerStats → Sinks.historizedSink`, which is fully
+      // VERIFICATION-HARNESS BOUNDARY (memorySinkRows): the PRODUCTION path
+      // is `statefulPlayerStats → Sinks.historizedSink`, which is fully
       // distributed (foreachBatch append, no driver materialization) and is
-      // what `SourcesSinksSpec`/`RecoverySpec` exercise.
-      // The file-stream source needs a DIRECTORY: stage the derived events as
-      // one parquet file (1 file ⇒ 1 AvailableNow micro-batch) — once per
-      // JVM via Staging (harness setup, not operator work) — then tear the
-      // memory-sink view down once the result is materialized.
-      val tmp = graft.util.Staging.dir("q19_events", dir) { p =>
-        game.coalesce(1).write.mode("overwrite").parquet(p)
-      }
-      val qname = "graft_stream_stats"
+      // what `SourcesSinksSpec`/`RecoverySpec` exercise. The file-stream
+      // source needs a DIRECTORY: the derived events are staged as one
+      // parquet file (1 file ⇒ 1 AvailableNow micro-batch) once per JVM.
+      val (tmp, schema) = gameEventsStaging(s, dir)
       // State-store count == shuffle partitions at query start; 8 stores is
       // plenty for this key space and far less per-store setup than 32.
       // The pin lives in an isolated child session — parent never mutated.
       val s2 = isolated(s, "spark.sql.shuffle.partitions" -> "8")
-      val (schema, rows) = {
-          val stream = s2.readStream.schema(game.schema).parquet(tmp).as[Event]
-          val q = PlayerStatsEngine.statefulPlayerStats(stream)
-            .writeStream.outputMode("update").format("memory").queryName(qname)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          val out = s2.table(qname)
-          // keep each key's last emitted (cumulative-complete) row — robust
-          // even if the source were split into several micro-batches: the
-          // CUMULATIVE counter total is the monotone selector (`second` is
-          // batch-scoped and can shrink in a later batch)
-          val w = Window.partitionBy(col("steamId"))
-            .orderBy(
-              (col("kills") + col("deaths") + col("assists") + col("damage")).desc,
-              col("second").desc)
-          val res = out
-            .withColumn("rn", row_number().over(w))
-            // `second` itself is batch-scoped: the cumulative-complete row of
-            // a later batch can carry a SMALLER second than an earlier
-            // batch's. The oracle's second is the global max per key — take
-            // it across every emitted row so a multi-batch split still
-            // matches.
-            .withColumn("second",
-              max(col("second")).over(Window.partitionBy(col("steamId"))))
-            .where(col("rn") === 1).drop("rn")
-          val r = (res.schema, res.collect())
-          s2.catalog.dropTempView(qname) // the memory sink's backing view
-          r
-        }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      memorySinkRows(s, PlayerStatsEngine.statefulPlayerStats(
+          s2.readStream.schema(schema).parquet(tmp).as[Event]),
+        "graft_stream_stats", "update", post = lastStatsRows)
         .orderBy(col("steamId"))
-    }, Some("""
-      WITH ev AS (
-        SELECT ('S' || CAST(user_id AS VARCHAR)) AS sid,
-               CASE WHEN event_type = 'purchase' THEN ('P' || CAST(user_id AS VARCHAR)) ELSE '' END AS pname,
-               CASE event_type WHEN 'purchase' THEN 'kill' WHEN 'error' THEN 'death'
-                    WHEN 'signup' THEN 'assist' ELSE 'damage' END AS et,
-               event_id AS sec, event_id % 97 AS amt, 1 + user_id % 19 AS rnd
-        FROM events),
-      agg AS (
-        SELECT sid,
-          COALESCE(MAX(CASE WHEN pname <> '' THEN pname END), '') AS pn,
-          GREATEST(MAX(sec), 0) AS sec,
-          COUNT(*) FILTER (WHERE et = 'kill') AS kills,
-          COUNT(*) FILTER (WHERE et = 'death') AS deaths,
-          COUNT(*) FILTER (WHERE et = 'assist') AS assists,
-          CAST(COALESCE(SUM(amt) FILTER (WHERE et = 'damage'), 0) AS BIGINT) AS damage,
-          GREATEST(MAX(rnd), 0) AS rnd
-        FROM ev GROUP BY sid)
-      SELECT pn AS "playerName", sid AS "steamId", sec AS "second",
-             kills, deaths, assists, damage,
-             CASE WHEN deaths = 0 THEN CAST(kills AS DOUBLE)
-                  ELSE CAST(kills AS DOUBLE) / deaths END AS "kdRatio",
-             CAST(damage AS DOUBLE) / rnd AS "damagePerRound"
-      FROM agg ORDER BY "steamId"""")),
+    }, Some(playerStatsOracle)),
 
 
     // q19's gate on Spark 4's transformWithState — the modern
@@ -492,96 +450,22 @@ private[graft] object ReferenceCatalog {
     // the default HDFS-backed store) and restored after.
     ("q199_tws_stream_stats", (s, dir) => {
       import s.implicits._
-      val game = gameEvents(T(s, dir, "events"))
-      // VERIFICATION-HARNESS BOUNDARY (q19's convention): memory sink +
-      // collect hand the streaming result to the batch oracle; production
-      // writes through the distributed sinks.
-      // same staged content as q19 (same derive + coalesce(1)) — share it
-      val tmp = graft.util.Staging.dir("q19_events", dir) { p =>
-        game.coalesce(1).write.mode("overwrite").parquet(p)
-      }
-      val qname = "graft_tws_stats"
+      val (tmp, schema) = gameEventsStaging(s, dir)
       val s2 = isolated(s,
         "spark.sql.shuffle.partitions" -> "8",
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val (schema, rows) = {
-          val stream = s2.readStream.schema(game.schema).parquet(tmp).as[Event]
-          val q = PlayerStatsEngine.statefulPlayerStatsTws(stream)
-            .writeStream.outputMode("update").format("memory").queryName(qname)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          val out = s2.table(qname)
-          // last cumulative-complete row per key (q19's multi-batch-robust
-          // selector): the counter total is the monotone signal
-          val w = Window.partitionBy(col("steamId"))
-            .orderBy(
-              (col("kills") + col("deaths") + col("assists") + col("damage")).desc,
-              col("second").desc)
-          val res = out
-            .withColumn("rn", row_number().over(w))
-            .withColumn("second",
-              max(col("second")).over(Window.partitionBy(col("steamId"))))
-            .where(col("rn") === 1).drop("rn")
-          val r = (res.schema, res.collect())
-          s2.catalog.dropTempView(qname)
-          r
-        }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      memorySinkRows(s, PlayerStatsEngine.statefulPlayerStatsTws(
+          s2.readStream.schema(schema).parquet(tmp).as[Event]),
+        "graft_tws_stats", "update", post = lastStatsRows)
         .orderBy(col("steamId"))
-    }, Some("""
-      WITH ev AS (
-        SELECT ('S' || CAST(user_id AS VARCHAR)) AS sid,
-               CASE WHEN event_type = 'purchase' THEN ('P' || CAST(user_id AS VARCHAR)) ELSE '' END AS pname,
-               CASE event_type WHEN 'purchase' THEN 'kill' WHEN 'error' THEN 'death'
-                    WHEN 'signup' THEN 'assist' ELSE 'damage' END AS et,
-               event_id AS sec, event_id % 97 AS amt, 1 + user_id % 19 AS rnd
-        FROM events),
-      agg AS (
-        SELECT sid,
-          COALESCE(MAX(CASE WHEN pname <> '' THEN pname END), '') AS pn,
-          GREATEST(MAX(sec), 0) AS sec,
-          COUNT(*) FILTER (WHERE et = 'kill') AS kills,
-          COUNT(*) FILTER (WHERE et = 'death') AS deaths,
-          COUNT(*) FILTER (WHERE et = 'assist') AS assists,
-          CAST(COALESCE(SUM(amt) FILTER (WHERE et = 'damage'), 0) AS BIGINT) AS damage,
-          GREATEST(MAX(rnd), 0) AS rnd
-        FROM ev GROUP BY sid)
-      SELECT pn AS "playerName", sid AS "steamId", sec AS "second",
-             kills, deaths, assists, damage,
-             CASE WHEN deaths = 0 THEN CAST(kills AS DOUBLE)
-                  ELSE CAST(kills AS DOUBLE) / deaths END AS "kdRatio",
-             CAST(damage AS DOUBLE) / rnd AS "damagePerRound"
-      FROM agg ORDER BY "steamId"""")),
+    }, Some(playerStatsOracle)),
 
 
     ("q20_batch_stats_twin", (s, dir) => {
       PlayerStatsEngine.batchPlayerStats(gameEvents(T(s, dir, "events")))
         .orderBy(col("steamId"))
-    }, Some("""
-      WITH ev AS (
-        SELECT ('S' || CAST(user_id AS VARCHAR)) AS sid,
-               CASE WHEN event_type = 'purchase' THEN ('P' || CAST(user_id AS VARCHAR)) ELSE '' END AS pname,
-               CASE event_type WHEN 'purchase' THEN 'kill' WHEN 'error' THEN 'death'
-                    WHEN 'signup' THEN 'assist' ELSE 'damage' END AS et,
-               event_id AS sec, event_id % 97 AS amt, 1 + user_id % 19 AS rnd
-        FROM events),
-      agg AS (
-        SELECT sid,
-          COALESCE(MAX(CASE WHEN pname <> '' THEN pname END), '') AS pn,
-          GREATEST(MAX(sec), 0) AS sec,
-          COUNT(*) FILTER (WHERE et = 'kill') AS kills,
-          COUNT(*) FILTER (WHERE et = 'death') AS deaths,
-          COUNT(*) FILTER (WHERE et = 'assist') AS assists,
-          CAST(COALESCE(SUM(amt) FILTER (WHERE et = 'damage'), 0) AS BIGINT) AS damage,
-          GREATEST(MAX(rnd), 0) AS rnd
-        FROM ev GROUP BY sid)
-      SELECT pn AS "playerName", sid AS "steamId", sec AS "second",
-             kills, deaths, assists, damage,
-             CASE WHEN deaths = 0 THEN CAST(kills AS DOUBLE)
-                  ELSE CAST(kills AS DOUBLE) / deaths END AS "kdRatio",
-             CAST(damage AS DOUBLE) / rnd AS "damagePerRound"
-      FROM agg ORDER BY "steamId"""")),
+    }, Some(playerStatsOracle)),
 
 
     // ================================================================

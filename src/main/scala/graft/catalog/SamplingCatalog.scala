@@ -404,30 +404,7 @@ private[graft] object SamplingCatalog {
         .select(col("token"), col("cnt"), col("est"),
           (col("est") >= col("cnt")).as("ge_ok"))
         .orderBy(col("cnt").desc, col("token"))
-    }, Some("""
-      WITH cnts AS (
-        SELECT token, count(*)::BIGINT AS cnt,
-               ('0x' || substr(md5(token), 1, 12))::BIGINT % 2147483647 AS hp
-        FROM (SELECT unnest(string_split(text, ' ')) AS token
-              FROM documents WHERE text IS NOT NULL)
-        WHERE token <> '' GROUP BY token),
-      hashes(j, a, b) AS (
-        VALUES (0, 1103515245, 12345), (1, 1299709, 7919),
-               (2, 15485863, 104729), (3, 32452843, 1299721)),
-      cms AS (
-        SELECT j, ((a * hp + b) % 2147483647) % 2048 AS bucket,
-               sum(cnt)::BIGINT AS c
-        FROM cnts CROSS JOIN hashes GROUP BY 1, 2),
-      probes AS (
-        SELECT token, cnt, hp FROM cnts ORDER BY cnt DESC, token LIMIT 40)
-      SELECT p.token, p.cnt,
-             min(coalesce(c.c, 0))::BIGINT AS est,
-             min(coalesce(c.c, 0)) >= p.cnt AS ge_ok
-      FROM probes p CROSS JOIN hashes h
-      LEFT JOIN cms c ON c.j = h.j
-        AND c.bucket = ((h.a * p.hp + h.b) % 2147483647) % 2048
-      GROUP BY p.token, p.cnt
-      ORDER BY p.cnt DESC, p.token""")),
+    }, Some(countMinOracle)),
 
 
     // Systematic PPS sampling (Sampling.ppsSystematicSample): docs laid on
@@ -488,23 +465,13 @@ private[graft] object SamplingCatalog {
       val tmp = graft.util.Staging.dir("q211_tokens", dir) { p =>
         toks.repartition(8).write.mode("overwrite").parquet(p)
       }
-      val qname = "graft_stream_cms"
       // 4 shuffle partitions: one state-store commit per partition per
       // micro-batch; 8192 cells do not need 32 stores (q170 discipline)
       val s2 = isolated(s, "spark.sql.shuffle.partitions" -> "4")
-      val (schema, rows) = {
-          val stream = s2.readStream.schema(toks.schema)
-            .option("maxFilesPerTrigger", 2).parquet(tmp)
-          val q = ext.Profiling.countMin(stream, "token", 4, 2048)
-            .writeStream.outputMode("complete").format("memory").queryName(qname)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          val res = s2.table(qname)
-          val r = (res.schema, res.collect())
-          s2.catalog.dropTempView(qname)
-          r
-        }
-      val cms = s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      val stream = s2.readStream.schema(toks.schema)
+        .option("maxFilesPerTrigger", 2).parquet(tmp)
+      val cms = memorySinkRows(s, ext.Profiling.countMin(stream, "token", 4, 2048),
+        "graft_stream_cms", "complete")
       // two branches of the final action consume `probes` — eager pin so
       // the token aggregation runs once (the withExactDupCollapse
       // discipline: concurrent branches of an uncached persist race)
@@ -516,30 +483,7 @@ private[graft] object SamplingCatalog {
         .select(col("token"), col("cnt"), col("est"),
           (col("est") >= col("cnt")).as("ge_ok"))
         .orderBy(col("cnt").desc, col("token"))
-    }, Some("""
-      WITH cnts AS (
-        SELECT token, count(*)::BIGINT AS cnt,
-               ('0x' || substr(md5(token), 1, 12))::BIGINT % 2147483647 AS hp
-        FROM (SELECT unnest(string_split(text, ' ')) AS token
-              FROM documents WHERE text IS NOT NULL)
-        WHERE token <> '' GROUP BY token),
-      hashes(j, a, b) AS (
-        VALUES (0, 1103515245, 12345), (1, 1299709, 7919),
-               (2, 15485863, 104729), (3, 32452843, 1299721)),
-      cms AS (
-        SELECT j, ((a * hp + b) % 2147483647) % 2048 AS bucket,
-               sum(cnt)::BIGINT AS c
-        FROM cnts CROSS JOIN hashes GROUP BY 1, 2),
-      probes AS (
-        SELECT token, cnt, hp FROM cnts ORDER BY cnt DESC, token LIMIT 40)
-      SELECT p.token, p.cnt,
-             min(coalesce(c.c, 0))::BIGINT AS est,
-             min(coalesce(c.c, 0)) >= p.cnt AS ge_ok
-      FROM probes p CROSS JOIN hashes h
-      LEFT JOIN cms c ON c.j = h.j
-        AND c.bucket = ((h.a * p.hp + h.b) % 2147483647) % 2048
-      GROUP BY p.token, p.cnt
-      ORDER BY p.cnt DESC, p.token""")),
+    }, Some(countMinOracle)),
 
 
     // DSIR importance scoring + top-k resampling (Xie et al. 2023): the

@@ -131,27 +131,17 @@ private[graft] object StreamingCatalog {
             col("ts").as("p_ts"))
           .coalesce(1).write.mode("overwrite").parquet(s"$p/purch")
       }
-      val qname = "graft_stream_join"
       val s2 = isolated(s, "spark.sql.shuffle.partitions" -> "4")
-      val (schema, rows) = {
-          val c = s2.readStream
-            .schema("c_id LONG, c_user LONG, c_ts TIMESTAMP")
-            .parquet(s"$tmp/clicks").withWatermark("c_ts", "1 second")
-          val p = s2.readStream
-            .schema("p_id LONG, p_user LONG, p_ts TIMESTAMP")
-            .parquet(s"$tmp/purch").withWatermark("p_ts", "1 second")
-          val q = p.join(c, expr(
-              """p_user = c_user AND
-                 c_ts >= p_ts - interval 6 hours AND c_ts <= p_ts"""))
-            .writeStream.outputMode("append").format("memory").queryName(qname)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          val res = s2.table(qname)
-          val r = (res.schema, res.collect())
-          s2.catalog.dropTempView(qname)
-          r
-        }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      val c = s2.readStream
+        .schema("c_id LONG, c_user LONG, c_ts TIMESTAMP")
+        .parquet(s"$tmp/clicks").withWatermark("c_ts", "1 second")
+      val p = s2.readStream
+        .schema("p_id LONG, p_user LONG, p_ts TIMESTAMP")
+        .parquet(s"$tmp/purch").withWatermark("p_ts", "1 second")
+      memorySinkRows(s, p.join(c, expr(
+          """p_user = c_user AND
+             c_ts >= p_ts - interval 6 hours AND c_ts <= p_ts""")),
+        "graft_stream_join", "append")
         .groupBy(col("p_id"), col("p_user"))
         .agg(count(lit(1)).as("n_clicks"),
           min(col("c_id")).as("first_click"), max(col("c_id")).as("last_click"))
@@ -192,64 +182,26 @@ private[graft] object StreamingCatalog {
       val tmp = graft.util.Staging.dir("q204_funnel_events", dir) { p =>
         ev.coalesce(1).write.mode("overwrite").parquet(p)
       }
-      val qname = "graft_tws_funnel"
       val s2 = isolated(s,
         "spark.sql.shuffle.partitions" -> "8",
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val (schema, rows) = {
-          val stream = s2.readStream.schema(ev.schema).parquet(tmp)
-            .as[Funnel.FunnelEvent]
-          val q = Funnel.funnelStreamTws(stream, 3)
-            .writeStream.outputMode("update").format("memory").queryName(qname)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          val out = s2.table(qname)
-          // funnelStep is the monotone selector (filled slots form a
-          // prefix, so a key's deepest emitted row carries its final
-          // times) — robust under any micro-batch split of the source
-          val w = Window.partitionBy(col("key")).orderBy(col("funnelStep").desc)
-          val res = out
-            .withColumn("rn", row_number().over(w))
-            .where(col("rn") === 1)
-            .select(col("key").as("user_id"),
-              element_at(col("times"), 1).as("t_view"),
-              element_at(col("times"), 2).as("t_click"),
-              element_at(col("times"), 3).as("t_purchase"),
-              col("funnelStep").as("funnel_step"))
-          val r = (res.schema, res.collect())
-          s2.catalog.dropTempView(qname)
-          r
-        }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      // funnelStep is the monotone selector (filled slots form a prefix,
+      // so a key's deepest emitted row carries its final times) — robust
+      // under any micro-batch split of the source
+      val w = Window.partitionBy(col("key")).orderBy(col("funnelStep").desc)
+      memorySinkRows(s, Funnel.funnelStreamTws(
+          s2.readStream.schema(ev.schema).parquet(tmp).as[Funnel.FunnelEvent], 3),
+        "graft_tws_funnel", "update", post = _
+          .withColumn("rn", row_number().over(w))
+          .where(col("rn") === 1)
+          .select(col("key").as("user_id"),
+            element_at(col("times"), 1).as("t_view"),
+            element_at(col("times"), 2).as("t_click"),
+            element_at(col("times"), 3).as("t_purchase"),
+            col("funnelStep").as("funnel_step")))
         .orderBy(col("user_id"))
-    }, Some("""
-      WITH e AS (SELECT user_id, epoch_us(ts) AS tus, event_id, event_type
-                 FROM events),
-      s1 AS (
-        SELECT *,
-          min(CASE WHEN event_type = 'view' THEN tus END) OVER
-            (PARTITION BY user_id ORDER BY tus, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mv,
-          min(CASE WHEN event_type = 'view' THEN tus END) OVER
-            (PARTITION BY user_id) AS t_view
-        FROM e),
-      s2 AS (
-        SELECT *,
-          min(CASE WHEN event_type = 'click' AND tus > mv THEN tus END) OVER
-            (PARTITION BY user_id) AS t_click
-        FROM s1),
-      s3 AS (
-        SELECT *,
-          min(CASE WHEN event_type = 'purchase' AND tus > t_click THEN tus END) OVER
-            (PARTITION BY user_id) AS t_purchase
-        FROM s2)
-      SELECT DISTINCT user_id, t_view, t_click, t_purchase,
-        CAST(CASE WHEN t_purchase IS NOT NULL THEN 3
-                  WHEN t_click IS NOT NULL THEN 2
-                  WHEN t_view IS NOT NULL THEN 1
-                  ELSE 0 END AS BIGINT) AS funnel_step
-      FROM s3 ORDER BY user_id""")),
+    }, Some(funnelOracle)),
 
 
     // Streaming sessionization, oracle-gated end-to-end (the q19/q170
@@ -281,22 +233,12 @@ private[graft] object StreamingCatalog {
             timestamp_micros(lit(32503680000000000L)).as("ts"))
           .coalesce(1).write.mode("append").parquet(p)
       }
-      val qname = "graft_stream_sessions"
       val s2 = isolated(s, "spark.sql.shuffle.partitions" -> "4")
-      val (schema, rows) = {
-          val stream = s2.readStream.schema(staged.schema).parquet(tmp)
-            .withWatermark("ts", "1 second")
-          val q = Sessionize
-            .sessionWindows(stream, Seq("user_id"), "ts", "30 minutes")
-            .writeStream.outputMode("append").format("memory").queryName(qname)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          val res = s2.table(qname)
-          val r = (res.schema, res.collect())
-          s2.catalog.dropTempView(qname)
-          r
-        }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      val stream = s2.readStream.schema(staged.schema).parquet(tmp)
+        .withWatermark("ts", "1 second")
+      memorySinkRows(s,
+          Sessionize.sessionWindows(stream, Seq("user_id"), "ts", "30 minutes"),
+          "graft_stream_sessions", "append")
         .orderBy(col("user_id"), col("start_time"))
     }, Some("""
       WITH e AS (SELECT user_id, epoch_us(ts) AS tus FROM events),

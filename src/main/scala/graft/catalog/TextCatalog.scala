@@ -854,52 +854,7 @@ private[graft] object TextCatalog {
       ext.Profiling.attritionReport(verdicts,
           Seq("v_lang", "v_quality", "v_dedup"), Some("n_chars"))
         .orderBy(col("v_lang"), col("v_quality"), col("v_dedup"))
-    }, Some("""
-      WITH t AS (
-        SELECT doc_id, text, string_split(text, ' ') AS ws
-        FROM documents WHERE text IS NOT NULL),
-      sc AS (
-        SELECT doc_id,
-          CAST(len(ws) AS BIGINT) AS n_words,
-          CAST(len(text) - (len(ws) - 1) AS DOUBLE) / len(ws) AS avg_word_len,
-          CAST(len(list_filter(ws, w ->
-            list_contains(['the','a','of','and','to','in'], w))) AS DOUBLE)
-            / len(ws) AS stopword_ratio,
-          CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS DOUBLE)
-            / len(ws) AS alpha_ratio
-        FROM t),
-      sh AS (
-        SELECT doc_id, unnest(CASE WHEN len(ws) >= 3
-          THEN list_transform(generate_series(1, len(ws) - 2),
-               i -> concat_ws(' ', ws[i], ws[i + 1], ws[i + 2]))
-          ELSE [text] END) AS g
-        FROM t),
-      gp AS (SELECT doc_id, g, count(*) AS c FROM sh GROUP BY 1, 2),
-      rep AS (
-        SELECT doc_id,
-          (CAST(sum(c) AS BIGINT) - count(*))::DOUBLE / CAST(sum(c) AS BIGINT) AS dup_frac
-        FROM gp GROUP BY doc_id),
-      q AS (
-        SELECT sc.doc_id,
-          (sc.n_words >= 50 AND sc.n_words <= 100000)
-            AND (sc.avg_word_len >= 3.0 AND sc.avg_word_len <= 10.0)
-            AND sc.stopword_ratio >= 0.06 AND sc.alpha_ratio >= 0.8
-            AND rep.dup_frac <= 0.2 AS v_quality
-        FROM sc JOIN rep USING (doc_id)),
-      k AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-      v AS (
-        SELECT d.doc_id,
-          COALESCE(d.lang = 'en', false) AS v_lang,
-          COALESCE(q.v_quality, false) AS v_quality,
-          (k.doc_id IS NOT NULL) AS v_dedup,
-          d.n_chars
-        FROM documents d LEFT JOIN q USING (doc_id) LEFT JOIN k USING (doc_id))
-      SELECT v_lang, v_quality, v_dedup,
-        count(*)::BIGINT AS n_docs,
-        CAST(sum(n_chars) AS BIGINT) AS mass,
-        CASE WHEN NOT v_lang THEN 0 WHEN NOT v_quality THEN 1
-             WHEN NOT v_dedup THEN 2 ELSE 3 END AS funnel_depth
-      FROM v GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""")),
+    }, Some(curationFunnelOracle)),
 
 
     // q227's attrition report computed ON THE STREAM: quality verdicts are
@@ -919,73 +874,19 @@ private[graft] object TextCatalog {
           .write.mode("overwrite").parquet(s"$p/store")
       }
       val store = readFixture(s, s"$tmp/store")
-      val qname = "graft_stream_funnel"
-      val (schema, rows) =
-        try {
-          val stream = s.readStream
-            .schema("doc_id LONG, text STRING, lang STRING, n_chars LONG")
-            .parquet(s"$tmp/stream")
-          val verdicts = TextAnalysis.gopherRulesRowwise(stream, "text")
-            .select(col("doc_id"),
-              coalesce(col("lang") === "en", lit(false)).as("v_lang"),
-              col("keep").as("v_quality"), col("n_chars"))
-            .join(store, Seq("doc_id"), "left")
-          val q = ext.Profiling.attritionReport(verdicts,
-              Seq("v_lang", "v_quality", "v_dedup"), Some("n_chars"))
-            .writeStream.outputMode("complete").format("memory").queryName(qname)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          val res = s.table(qname)
-          (res.schema, res.collect())
-        } finally s.catalog.dropTempView(qname)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      val stream = s.readStream
+        .schema("doc_id LONG, text STRING, lang STRING, n_chars LONG")
+        .parquet(s"$tmp/stream")
+      val verdicts = TextAnalysis.gopherRulesRowwise(stream, "text")
+        .select(col("doc_id"),
+          coalesce(col("lang") === "en", lit(false)).as("v_lang"),
+          col("keep").as("v_quality"), col("n_chars"))
+        .join(store, Seq("doc_id"), "left")
+      memorySinkRows(s, ext.Profiling.attritionReport(verdicts,
+          Seq("v_lang", "v_quality", "v_dedup"), Some("n_chars")),
+        "graft_stream_funnel", "complete")
         .orderBy(col("v_lang"), col("v_quality"), col("v_dedup"))
-    }, Some("""
-      WITH t AS (
-        SELECT doc_id, text, string_split(text, ' ') AS ws
-        FROM documents WHERE text IS NOT NULL),
-      sc AS (
-        SELECT doc_id,
-          CAST(len(ws) AS BIGINT) AS n_words,
-          CAST(len(text) - (len(ws) - 1) AS DOUBLE) / len(ws) AS avg_word_len,
-          CAST(len(list_filter(ws, w ->
-            list_contains(['the','a','of','and','to','in'], w))) AS DOUBLE)
-            / len(ws) AS stopword_ratio,
-          CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS DOUBLE)
-            / len(ws) AS alpha_ratio
-        FROM t),
-      sh AS (
-        SELECT doc_id, unnest(CASE WHEN len(ws) >= 3
-          THEN list_transform(generate_series(1, len(ws) - 2),
-               i -> concat_ws(' ', ws[i], ws[i + 1], ws[i + 2]))
-          ELSE [text] END) AS g
-        FROM t),
-      gp AS (SELECT doc_id, g, count(*) AS c FROM sh GROUP BY 1, 2),
-      rep AS (
-        SELECT doc_id,
-          (CAST(sum(c) AS BIGINT) - count(*))::DOUBLE / CAST(sum(c) AS BIGINT) AS dup_frac
-        FROM gp GROUP BY doc_id),
-      q AS (
-        SELECT sc.doc_id,
-          (sc.n_words >= 50 AND sc.n_words <= 100000)
-            AND (sc.avg_word_len >= 3.0 AND sc.avg_word_len <= 10.0)
-            AND sc.stopword_ratio >= 0.06 AND sc.alpha_ratio >= 0.8
-            AND rep.dup_frac <= 0.2 AS v_quality
-        FROM sc JOIN rep USING (doc_id)),
-      k AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-      v AS (
-        SELECT d.doc_id,
-          COALESCE(d.lang = 'en', false) AS v_lang,
-          COALESCE(q.v_quality, false) AS v_quality,
-          (k.doc_id IS NOT NULL) AS v_dedup,
-          d.n_chars
-        FROM documents d LEFT JOIN q USING (doc_id) LEFT JOIN k USING (doc_id))
-      SELECT v_lang, v_quality, v_dedup,
-        count(*)::BIGINT AS n_docs,
-        CAST(sum(n_chars) AS BIGINT) AS mass,
-        CASE WHEN NOT v_lang THEN 0 WHEN NOT v_quality THEN 1
-             WHEN NOT v_dedup THEN 2 ELSE 3 END AS funnel_depth
-      FROM v GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""")),
+    }, Some(curationFunnelOracle)),
 
 
     // Vocabulary coverage curve — the tokenizer budget-planning audit:
@@ -1124,53 +1025,14 @@ private[graft] object TextCatalog {
     // per-batch answers equals the one-shot batch serve for any split;
     // gated on q268's oracle VERBATIM.
     ("q270_stream_hybrid_serve", (s, dir) => {
-      val docs = T(s, dir, "documents")
-      val emb = T(s, dir, "embeddings")
-      val tmp = graft.util.Staging.dir("q270_hybrid_queries", dir) { p =>
-        docs.where(col("doc_id") < 6)
-          .select(col("doc_id").as("q_id"), col("text"))
-          .join(emb.select(col("vec_id").as("q_id"), col("embedding")), Seq("q_id"))
-          .repartition(3).write.mode("overwrite").parquet(s"$p/queries")
-      }
-      // serve on an isolated 4-partition session: the per-batch plans are
-      // many small stages over pinned, batch-sized-or-postings-sized
-      // frames — 32-task stages would pay task-launch overhead, not
-      // parallelism (the q211/q267 shuffle-partition discipline)
-      // AQE off for the serve session: adaptive re-planning materializes
-      // and re-optimizes every tiny per-batch stage — measured ~30-35%
-      // of the per-batch wall time here, buying nothing (partitions are
-      // already pinned at 4 and the corpus sides are cached constants)
-      val s2 = isolated(s, "spark.sql.shuffle.partitions" -> "4",
-        "spark.sql.adaptive.enabled" -> "false")
-      // the corpus POSTINGS (token rows, doc lengths, stats, document
-      // frequencies) and the vector side are prepared and pinned ONCE —
-      // every micro-batch serves from the cache instead of re-reducing
-      // the corpus (the measured 3×-per-batch cost of the naive form)
-      val docs2 = graft.util.EventTime.tsToLongNanos(
-        readFixture(s2, s"$dir/documents.parquet"))
-      val emb2 = graft.util.EventTime.tsToLongNanos(
-        readFixture(s2, s"$dir/embeddings.parquet"))
-      val hc0 = TextAnalysis.prepareHybridCorpus(
-        docs2.select(col("doc_id"), col("text")), "doc_id", "text",
-        emb2.select(col("vec_id"), col("embedding")), "vec_id", "embedding")
-      val hc = hc0.copy(
-        emb = graft.util.Caches.pin(hc0.emb),
-        toks = graft.util.Caches.pin(hc0.toks),
-        dl = graft.util.Caches.pin(hc0.dl),
-        stats = graft.util.Caches.pin(hc0.stats),
-        alldf = graft.util.Caches.pin(hc0.alldf))
-      val outDir = scratch("q270_serve")
-      val stream = s2.readStream
-        .schema("q_id LONG, text STRING, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", 1).parquet(s"$tmp/queries")
-      val q = stream.writeStream.foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            TextAnalysis.hybridRrfTopKPrepared(hc, batch,
-                kArm = 10, kOut = 5, nTerms = 4)
-              .write.mode("append").parquet(outDir)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      // serve on the gate session (pinned partitions, AQE off): the
+      // per-batch plans are many small stages over pinned,
+      // batch-sized-or-postings-sized frames — 32-task stages would pay
+      // task-launch overhead, not parallelism, and adaptive re-planning of
+      // every tiny per-batch stage was measured at ~30-35% of the
+      // per-batch wall time here
+      val s2 = gateSession(s, dir)
+      val hc = pinnedHybridCorpus(s2, dir)
       // per-batch latency SLO on the pinned-postings path (the q252
       // convention). Default budget = 3 s: the measured sandbox steady
       // state is ~1.2 s/batch (AQE off) — the per-batch plan is ~a dozen small
@@ -1180,9 +1042,11 @@ private[graft] object TextCatalog {
       // 1 s trigger and the assert becomes the real gate. The regression
       // value is identical either way: a plan that loses its pin or adds
       // a corpus rescan blows any budget loudly.
-      graft.streaming.Observability.gateServeSlo(
-        "q270_stream_hybrid_serve", q, budgetMs = 3000, s2)
-      s.read.parquet(outDir).orderBy(col("q_id"), col("rank"))
+      serveGate(s, s2, "q270_stream_hybrid_serve", budgetMs = 3000,
+          hybridQueriesStaging(s, dir), HybridQuerySchema) { batch =>
+        TextAnalysis.hybridRrfTopKPrepared(hc, batch,
+          kArm = 10, kOut = 5, nTerms = 4)
+      }
     }, Some(hybridRrfOracle)),
 
     // Incremental postings maintenance: the hybrid serve's corpus side
@@ -1215,64 +1079,32 @@ private[graft] object TextCatalog {
     // index, drift, covariance, and now the full RAG loop all have live
     // twins.
     ("q275_stream_rag_serve", (s, dir) => {
-      val tmp = graft.util.Staging.dir("q270_hybrid_queries", dir) { p =>
-        val docsQ = T(s, dir, "documents")
-        val embQ = T(s, dir, "embeddings")
-        docsQ.where(col("doc_id") < 6)
-          .select(col("doc_id").as("q_id"), col("text"))
-          .join(embQ.select(col("vec_id").as("q_id"), col("embedding")), Seq("q_id"))
-          .repartition(3).write.mode("overwrite").parquet(s"$p/queries")
-      }
-      // AQE off for the serve session: adaptive re-planning materializes
-      // and re-optimizes every tiny per-batch stage — measured ~30-35%
-      // of the per-batch wall time here, buying nothing (partitions are
-      // already pinned at 4 and the corpus sides are cached constants)
-      val s2 = isolated(s, "spark.sql.shuffle.partitions" -> "4",
-        "spark.sql.adaptive.enabled" -> "false")
-      val docs2 = graft.util.EventTime.tsToLongNanos(
-        readFixture(s2, s"$dir/documents.parquet"))
-      val emb2 = graft.util.EventTime.tsToLongNanos(
-        readFixture(s2, s"$dir/embeddings.parquet"))
-      val hc0 = TextAnalysis.prepareHybridCorpus(
-        docs2.select(col("doc_id"), col("text")), "doc_id", "text",
-        emb2.select(col("vec_id"), col("embedding")), "vec_id", "embedding")
-      val hc = hc0.copy(
-        emb = graft.util.Caches.pin(hc0.emb),
-        toks = graft.util.Caches.pin(hc0.toks),
-        dl = graft.util.Caches.pin(hc0.dl),
-        stats = graft.util.Caches.pin(hc0.stats),
-        alldf = graft.util.Caches.pin(hc0.alldf))
-      val lens = graft.util.Caches.pin(docs2.where(col("text").isNotNull)
+      // the q270 gate session and pinned corpus
+      val s2 = gateSession(s, dir)
+      val hc = pinnedHybridCorpus(s2, dir)
+      val lens = graft.util.Caches.pin(graft.util.EventTime.tsToLongNanos(
+          readFixture(s2, s"$dir/documents.parquet"))
+        .where(col("text").isNotNull)
         .select(col("doc_id"),
           size(filter(TextAnalysis.words(col("text")), w => w =!= ""))
             .cast("long").as("n_tokens")))
-      val outDir = scratch("q275_serve")
-      val stream = s2.readStream
-        .schema("q_id LONG, text STRING, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", 1).parquet(s"$tmp/queries")
-      val q = stream.writeStream.foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val fused = TextAnalysis.hybridRrfTopKPrepared(hc, batch,
-                kArm = 10, kOut = 20, nTerms = 4)
-              .select(col("q_id"), col("n_id"), col("rrf").as("rel"))
-            val sel = Similarity.mmrSelect(fused, hc.emb, "vec_id", "embedding", 5)
-            lens.join(broadcast(sel), col("doc_id") === col("n_id"))
-              .withColumn("cum_tokens", sum(col("n_tokens")).over(
-                Window.partitionBy(col("q_id")).orderBy(col("rank"))))
-              .where(col("cum_tokens") <= 192L)
-              .select(col("q_id"), col("rank"), col("doc_id"),
-                col("n_tokens"), col("cum_tokens"), col("score"))
-              .write.mode("append").parquet(outDir)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
       // per-batch latency SLO on the pinned full-RAG path: recall → MMR →
       // budget fill per batch (three chained plans — measured ~1.5 s
       // steady with AQE off, stage-launch bound; see q270's note).
       // Default budget 4 s here; production pins sloMs at its trigger.
-      graft.streaming.Observability.gateServeSlo(
-        "q275_stream_rag_serve", q, budgetMs = 4000, s2)
-      s.read.parquet(outDir).orderBy(col("q_id"), col("rank"))
+      serveGate(s, s2, "q275_stream_rag_serve", budgetMs = 4000,
+          hybridQueriesStaging(s, dir), HybridQuerySchema) { batch =>
+        val fused = TextAnalysis.hybridRrfTopKPrepared(hc, batch,
+            kArm = 10, kOut = 20, nTerms = 4)
+          .select(col("q_id"), col("n_id"), col("rrf").as("rel"))
+        val sel = Similarity.mmrSelect(fused, hc.emb, "vec_id", "embedding", 5)
+        lens.join(broadcast(sel), col("doc_id") === col("n_id"))
+          .withColumn("cum_tokens", sum(col("n_tokens")).over(
+            Window.partitionBy(col("q_id")).orderBy(col("rank"))))
+          .where(col("cum_tokens") <= 192L)
+          .select(col("q_id"), col("rank"), col("doc_id"),
+            col("n_tokens"), col("cum_tokens"), col("score"))
+      }
     }, Some(ragPipelineOracle)),
 
     // STREAMING POSTINGS INGEST — the WRITE path of the hybrid serve run
@@ -1692,17 +1524,8 @@ private[graft] object TextCatalog {
     // SLO-recorded like q270 (q268's exact-cosine corpus scan exists in
     // NO arm of this plan).
     ("q296_stream_two_store_serve", (s, dir) => {
-      val tmp = graft.util.Staging.dir("q270_hybrid_queries", dir) { p =>
-        val docsQ = T(s, dir, "documents")
-        val embQ = T(s, dir, "embeddings")
-        docsQ.where(col("doc_id") < 6)
-          .select(col("doc_id").as("q_id"), col("text"))
-          .join(embQ.select(col("vec_id").as("q_id"), col("embedding")), Seq("q_id"))
-          .repartition(3).write.mode("overwrite").parquet(s"$p/queries")
-      }
-      // isolated 4-partition AQE-off serve session (the q270 discipline)
-      val s2 = isolated(s, "spark.sql.shuffle.partitions" -> "4",
-        "spark.sql.adaptive.enabled" -> "false")
+      // the q270 gate session
+      val s2 = gateSession(s, dir)
       val docs2 = graft.util.EventTime.tsToLongNanos(
         readFixture(s2, s"$dir/documents.parquet"))
       // postings store, prepared LEXICAL-ONLY (the vector arm never
@@ -1718,8 +1541,9 @@ private[graft] object TextCatalog {
       // code store: frozen model (stride-5 residual codebook, q287's
       // setting) + full-corpus index — persisted artifacts, staged once
       // per JVM (the q252 discipline: a serve gate times SERVING, the
-      // store build is the offline job), loaded and pinned — every
-      // micro-batch re-consumes them
+      // store build is the offline job); the index is pinned and the model
+      // derived and pinned once by serveIndexBatch — every micro-batch
+      // re-consumes both
       val codeTmp = graft.util.Staging.dir("q296_code_store", dir) { p =>
         val embC = T(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
@@ -1734,34 +1558,21 @@ private[graft] object TextCatalog {
             "vec_id", "cid", "embedding", m = 4, subDim = 16)
           .write.mode("overwrite").parquet(s"$p/index")
       }
-      val cent = readFixture(s2, s"$codeTmp/centroids")
-      val cb = graft.util.Caches.pin(readFixture(s2, s"$codeTmp/codebooks"))
-      val index = graft.util.Caches.pin(readFixture(s2, s"$codeTmp/index"))
-      val outDir = scratch("q296_serve")
-      val stream = s2.readStream
-        .schema("q_id LONG, text STRING, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", 1).parquet(s"$tmp/queries")
-      val q = stream.writeStream.foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val lex = TextAnalysis.bm25QueryTopKPrepared(hc,
-                TextAnalysis.distinctiveQueryTerms(hc, batch, nTerms = 4),
-                k = 10)
-              .select(col("q_id"), col("n_id"), col("rank").as("rank_l"))
-            val vec = Similarity.ivfPqResidualStoredTopK(
-                batch.select(col("q_id"), col("embedding")), index, cent, cb,
-                "q_id", "cid", "embedding",
-                k = 10, m = 4, subDim = 16, nprobe = 4)
-              .select(col("q_id"), col("n_id"), col("rank").as("rank_v"))
-            TextAnalysis.rrfFuse(vec, lex, kOut = 5)
-              .write.mode("append").parquet(outDir)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val vecServe = Similarity.serveIndexBatch(
+        graft.util.Caches.pin(readFixture(s2, s"$codeTmp/index")),
+        readFixture(s2, s"$codeTmp/centroids"), readFixture(s2, s"$codeTmp/codebooks"),
+        "q_id", "cid", "embedding", k = 10, m = 4, subDim = 16, nprobe = 4)
       // both arms are pinned-store lookups — same operating point as the
       // hybrid serve (see q270's budget note)
-      graft.streaming.Observability.gateServeSlo(
-        "q296_stream_two_store_serve", q, budgetMs = 3000, s2)
-      s.read.parquet(outDir).orderBy(col("q_id"), col("rank"))
+      serveGate(s, s2, "q296_stream_two_store_serve", budgetMs = 3000,
+          hybridQueriesStaging(s, dir), HybridQuerySchema) { batch =>
+        val lex = TextAnalysis.bm25QueryTopKPrepared(hc,
+            TextAnalysis.distinctiveQueryTerms(hc, batch, nTerms = 4), k = 10)
+          .select(col("q_id"), col("n_id"), col("rank").as("rank_l"))
+        val vec = vecServe(batch.select(col("q_id"), col("embedding")))
+          .select(col("q_id"), col("n_id"), col("rank").as("rank_v"))
+        TextAnalysis.rrfFuse(vec, lex, kOut = 5)
+      }
     }, Some(hybridRrfOracleFor("TRUE", "text", vrankCtes = s"""
       cur AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
       subs AS (SELECT unnest(range(0, 4)) AS sub),

@@ -314,18 +314,7 @@ private[graft] object TokenizerCatalog {
       ext.Bpe.applyMerges(T(s, dir, "documents"), "doc_id", "text",
           merges8(s, dir))
         .orderBy(col("doc_id"))
-    }, Some(s"""
-      WITH ${bpeOracleCtes(8)},
-      tok AS (
-        SELECT word, (length(sym) - length(replace(sym, '|', ''))) // 2 AS n_syms
-        FROM w8),
-      dw AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS word
-        FROM documents WHERE text IS NOT NULL)
-      SELECT doc_id, count(*)::BIGINT AS n_words,
-        CAST(sum(t.n_syms) AS BIGINT) AS n_tokens
-      FROM dw JOIN tok t USING (word) WHERE word <> ''
-      GROUP BY doc_id ORDER BY doc_id""")),
+    }, Some(bpeTokenizeOracle)),
 
 
     // Tokenizer fertility audit — tokens-per-word by language, the
@@ -367,38 +356,13 @@ private[graft] object TokenizerCatalog {
     // q224's oracle VERBATIM: the stream must reproduce the batch
     // tokenization exactly.
     ("q226_bpe_stream", (s, dir) => {
-      val docs = T(s, dir, "documents")
       val merges = merges8(s, dir)
-      val tmp = graft.util.Staging.dir("q226_docs", dir) { p =>
-        docs.select(col("doc_id"), col("text"))
-          .repartition(8).write.mode("overwrite").parquet(s"$p/stream")
-      }
-      val qname = "graft_bpe_stream"
-      val (schema, rows) =
-        try {
-          val stream = s.readStream
-            .schema("doc_id LONG, text STRING").parquet(s"$tmp/stream")
-          val q = ext.Bpe.tokenizeRowwise(stream, "doc_id", "text", merges)
-            .writeStream.outputMode("append").format("memory").queryName(qname)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          val res = s.table(qname)
-          (res.schema, res.collect())
-        } finally s.catalog.dropTempView(qname)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      val tmp = docsStreamStaging(s, dir)
+      val stream = s.readStream.schema("doc_id LONG, text STRING").parquet(tmp)
+      memorySinkRows(s, ext.Bpe.tokenizeRowwise(stream, "doc_id", "text", merges),
+          "graft_bpe_stream", "append")
         .orderBy(col("doc_id"))
-    }, Some(s"""
-      WITH ${bpeOracleCtes(8)},
-      tok AS (
-        SELECT word, (length(sym) - length(replace(sym, '|', ''))) // 2 AS n_syms
-        FROM w8),
-      dw AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS word
-        FROM documents WHERE text IS NOT NULL)
-      SELECT doc_id, count(*)::BIGINT AS n_words,
-        CAST(sum(t.n_syms) AS BIGINT) AS n_tokens
-      FROM dw JOIN tok t USING (word) WHERE word <> ''
-      GROUP BY doc_id ORDER BY doc_id""")),
+    }, Some(bpeTokenizeOracle)),
 
 
     // The tokenizer-artifact round trip (q176's stored-index discipline,
@@ -419,18 +383,7 @@ private[graft] object TokenizerCatalog {
         .toSeq
       ext.Bpe.applyMerges(docs, "doc_id", "text", merges)
         .orderBy(col("doc_id"))
-    }, Some(s"""
-      WITH ${bpeOracleCtes(8)},
-      tok AS (
-        SELECT word, (length(sym) - length(replace(sym, '|', ''))) // 2 AS n_syms
-        FROM w8),
-      dw AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS word
-        FROM documents WHERE text IS NOT NULL)
-      SELECT doc_id, count(*)::BIGINT AS n_words,
-        CAST(sum(t.n_syms) AS BIGINT) AS n_tokens
-      FROM dw JOIN tok t USING (word) WHERE word <> ''
-      GROUP BY doc_id ORDER BY doc_id""")),
+    }, Some(bpeTokenizeOracle)),
 
 
     // The tokenization ITSELF, as strings — one row per (distinct word,
@@ -470,14 +423,7 @@ private[graft] object TokenizerCatalog {
         .select(col("doc_id"),
           posexplode(col("token_ids")).as(Seq("pos", "token_id")))
         .orderBy(col("doc_id"), col("pos"))
-    }, Some(s"""
-      WITH ${bpeOracleCtes(8)},
-      ${bpeTokenIdCtes}
-      SELECT doc_id,
-        CAST(row_number() OVER (PARTITION BY doc_id ORDER BY wpos, tpos) - 1 AS INT) AS pos,
-        v.token_id
-      FROM dt JOIN vocab v USING (token)
-      ORDER BY doc_id, pos""")),
+    }, Some(bpeTokenIdsOracle)),
 
 
     // The END-TO-END token pipeline: docs → learned merges → vocabulary →
@@ -539,20 +485,16 @@ private[graft] object TokenizerCatalog {
     // (q19/q170 convention): memory sink + collect; the batch-side
     // posexplode just reshapes the collected arrays for the gate.
     ("q238_stream_token_ids", (s, dir) => {
-      val docs = T(s, dir, "documents")
       val merges = merges8(s, dir)
       val vocab = vocab8Map(s, dir)
-      val tmp = graft.util.Staging.dir("q226_docs", dir) { p =>
-        docs.select(col("doc_id"), col("text"))
-          .repartition(8).write.mode("overwrite").parquet(s"$p/stream")
-      }
+      val tmp = docsStreamStaging(s, dir)
       // parquet sink instead of the memory sink (q281's rationale): the
       // per-doc token-id arrays are the whole tokenized corpus — the
       // memory sink hauled them to the driver only to re-serialize them
       // into a LocalRelation
       val outDir = scratch("q238_ids")
       val stream = s.readStream
-        .schema("doc_id LONG, text STRING").parquet(s"$tmp/stream")
+        .schema("doc_id LONG, text STRING").parquet(tmp)
       val q = ext.Bpe.tokenIdsRowwise(stream, "doc_id", "text", merges, vocab)
         .writeStream.outputMode("append").format("parquet")
         .option("path", outDir)
@@ -563,14 +505,7 @@ private[graft] object TokenizerCatalog {
         .select(col("doc_id"),
           posexplode(col("token_ids")).as(Seq("pos", "token_id")))
         .orderBy(col("doc_id"), col("pos"))
-    }, Some(s"""
-      WITH ${bpeOracleCtes(8)},
-      ${bpeTokenIdCtes}
-      SELECT doc_id,
-        CAST(row_number() OVER (PARTITION BY doc_id ORDER BY wpos, tpos) - 1 AS INT) AS pos,
-        v.token_id
-      FROM dt JOIN vocab v USING (token)
-      ORDER BY doc_id, pos""")),
+    }, Some(bpeTokenIdsOracle)),
 
 
     // Detokenization ROUND TRIP — the proof that the id arrays are
@@ -1118,18 +1053,14 @@ private[graft] object TokenizerCatalog {
     // the batch segmentation for ANY micro-batch split; the oracle
     // re-derives the vocabulary and per-doc positions from scratch.
     ("q264_stream_wordpiece", (s, dir) => {
-      val docs = T(s, dir, "documents")
       val (initSet, contSet) = wpModel(s, dir)
-      val tmp = graft.util.Staging.dir("q226_docs", dir) { p =>
-        docs.select(col("doc_id"), col("text"))
-          .repartition(8).write.mode("overwrite").parquet(s"$p/stream")
-      }
+      val tmp = docsStreamStaging(s, dir)
       // parquet sink instead of the memory sink (q281's rationale): the
       // tokenize emits PIECE-level rows, and the memory sink hauled them
       // all to the driver only to re-serialize them into a LocalRelation
       val outDir = scratch("q264_pieces")
       val stream = s.readStream
-        .schema("doc_id LONG, text STRING").parquet(s"$tmp/stream")
+        .schema("doc_id LONG, text STRING").parquet(tmp)
       val q = ext.Wordpiece.tokenizeRowwise(stream, "doc_id", "text",
           initSet, contSet, maxLen = 4)
         .writeStream.outputMode("append").format("parquet")
@@ -1192,35 +1123,18 @@ private[graft] object TokenizerCatalog {
     // replays the salt, the greedy loop WITH the UNK terminal (a NULL
     // best-match in the recursion), and the weighted bucket aggregation.
     ("q267_stream_tokenizer_oov", (s, dir) => {
-      val docs = T(s, dir, "documents")
       val (initSet, contSet) = wpModel(s, dir)
-      val tmp = graft.util.Staging.dir("q267_salted_docs", dir) { p =>
-        docs.where(col("text").isNotNull)
-          .select(col("doc_id"),
-            concat(col("text"), lit(" q9z"),
-              (col("doc_id") % 5).cast("string")).as("text"))
-          .repartition(8).write.mode("overwrite").parquet(s"$p/stream")
-      }
-      val qname = "graft_stream_wp_oov"
+      val tmp = saltedDocsStaging(s, dir)
       // 4 shuffle partitions: 4 bucket rows of state need no more commits
       val s2 = isolated(s, "spark.sql.shuffle.partitions" -> "4")
-      val (schema, rows) = {
-        val stream = s2.readStream.schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 2).parquet(s"$tmp/stream")
-        val q = ext.Wordpiece.tokenizeRowwise(stream, "doc_id", "text",
+      val stream = s2.readStream.schema("doc_id LONG, text STRING")
+        .option("maxFilesPerTrigger", 2).parquet(tmp)
+      memorySinkRows(s, ext.Wordpiece.tokenizeRowwise(stream, "doc_id", "text",
             initSet, contSet, maxLen = 4)
           .groupBy((col("doc_id") % 4).as("bucket"))
           .agg(count(lit(1)).as("n_pieces"),
-            count(when(col("piece") === ext.Wordpiece.Unk, 1)).as("n_unk"))
-          .writeStream.outputMode("complete").format("memory").queryName(qname)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val res = s2.table(qname)
-        val out = (res.schema, res.collect())
-        s2.catalog.dropTempView(qname)
-        out
-      }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+            count(when(col("piece") === ext.Wordpiece.Unk, 1)).as("n_unk")),
+          "graft_stream_wp_oov", "complete")
         .select(col("bucket"), col("n_pieces"), col("n_unk"),
           (col("n_unk").cast("double") / col("n_pieces")).as("unk_rate"))
         .orderBy(col("bucket"))
@@ -1277,15 +1191,8 @@ private[graft] object TokenizerCatalog {
     // statement (the q265 two-tagged-recursions shape under q267's
     // UNK-terminal loop).
     ("q279_wordpiece_oov_retrain", (s, dir) => {
-      val docs = T(s, dir, "documents")
       val (initOld, contOld) = wpModel(s, dir)
-      val tmp = graft.util.Staging.dir("q267_salted_docs", dir) { p =>
-        docs.where(col("text").isNotNull)
-          .select(col("doc_id"),
-            concat(col("text"), lit(" q9z"),
-              (col("doc_id") % 5).cast("string")).as("text"))
-          .repartition(8).write.mode("overwrite").parquet(s"$p/stream")
-      }
+      val tmp = saltedDocsStaging(s, dir)
       val s2 = isolated(s, "spark.sql.shuffle.partitions" -> "4")
       // The gauge is a foreachBatch: per-batch exact (pieces, UNK) counts
       // summed on the driver — count is additive over disjoint micro-
@@ -1301,7 +1208,7 @@ private[graft] object TokenizerCatalog {
         val np = new java.util.concurrent.atomic.AtomicLong(0L)
         val nu = new java.util.concurrent.atomic.AtomicLong(0L)
         val q = s2.readStream.schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 2).parquet(s"$tmp/stream")
+          .option("maxFilesPerTrigger", 2).parquet(tmp)
           .writeStream.foreachBatch {
             (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
               accumTo.foreach(d => b.write.mode("append").parquet(d))
@@ -1417,15 +1324,8 @@ private[graft] object TokenizerCatalog {
     // greedy loop (NULL best-match → take one char, keep going) as a
     // recursion.
     ("q281_stream_wordpiece_fallback", (s, dir) => {
-      val docs = T(s, dir, "documents")
       val (initSet, contSet) = wpModel(s, dir)
-      val tmp = graft.util.Staging.dir("q267_salted_docs", dir) { p =>
-        docs.where(col("text").isNotNull)
-          .select(col("doc_id"),
-            concat(col("text"), lit(" q9z"),
-              (col("doc_id") % 5).cast("string")).as("text"))
-          .repartition(8).write.mode("overwrite").parquet(s"$p/stream")
-      }
+      val tmp = saltedDocsStaging(s, dir)
       // parquet sink instead of the memory sink: the tokenize emits
       // PIECE-level rows (hundreds of thousands at sf0.1), and the memory
       // sink hauled them all to the driver only for createDataFrame to
@@ -1434,7 +1334,7 @@ private[graft] object TokenizerCatalog {
       // rows, identical downstream aggregation)
       val outDir = scratch("q281_pieces")
       val stream = s.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 2).parquet(s"$tmp/stream")
+        .option("maxFilesPerTrigger", 2).parquet(tmp)
       val q = ext.Wordpiece.tokenizeRowwise(stream, "doc_id", "text",
           initSet, contSet, maxLen = 4, charFallback = true)
         .writeStream.outputMode("append").format("parquet")

@@ -42,11 +42,12 @@ import graft.core.{Event, PlayerState, PlayerStatsRow}
   */
 object PlayerStatsEngine {
 
-  private def foldBatch(
-      steamId: String,
-      events: Iterator[Event],
-      state: GroupState[PlayerState]): PlayerStatsRow = {
-    var s = state.getOption.getOrElse(PlayerState.empty)
+  /** One micro-batch of a key's events folded onto its running state:
+    * returns the new state and the key's output row. Pure — each stateful
+    * API reads and writes its own state handle around it. */
+  private def foldBatch(steamId: String, prev: PlayerState,
+      events: Iterator[Event]): (PlayerState, PlayerStatsRow) = {
+    var s = prev
     var batchSecond = 0L
     var batchRound = 0L
     events.foreach { e =>
@@ -54,8 +55,7 @@ object PlayerStatsEngine {
       if (e.second > batchSecond) batchSecond = e.second
       if (e.round > batchRound) batchRound = e.round
     }
-    state.update(s)
-    PlayerStatsRow(
+    (s, PlayerStatsRow(
       playerName = s.lastName,
       steamId = steamId,
       second = batchSecond,
@@ -64,7 +64,7 @@ object PlayerStatsEngine {
       assists = s.assists,
       damage = s.damage,
       kdRatio = PlayerStatsRow.kd(s.kills, s.deaths),
-      damagePerRound = PlayerStatsRow.dpr(s.damage, batchRound))
+      damagePerRound = PlayerStatsRow.dpr(s.damage, batchRound)))
   }
 
   /** NoTimeout form — the reference's exact shape (one row per key per
@@ -72,8 +72,11 @@ object PlayerStatsEngine {
   def update(
       steamId: String,
       events: Iterator[Event],
-      state: GroupState[PlayerState]): PlayerStatsRow =
-    foldBatch(steamId, events, state)
+      state: GroupState[PlayerState]): PlayerStatsRow = {
+    val (s, row) = foldBatch(steamId, state.getOption.getOrElse(PlayerState.empty), events)
+    state.update(s)
+    row
+  }
 
   /** Timeout-aware form: a fired timeout removes the key's state and emits
     * nothing; otherwise fold as usual and re-arm the timer. */
@@ -85,7 +88,7 @@ object PlayerStatsEngine {
       state.remove()
       Iterator.empty
     } else {
-      val row = foldBatch(steamId, events, state)
+      val row = update(steamId, events, state)
       if (timeout == GroupStateTimeout.EventTimeTimeout)
         state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + timeoutMs)
       else
@@ -179,25 +182,10 @@ object PlayerStatsEngine {
     override def handleInputRows(
         steamId: String, events: Iterator[Event],
         timers: TimerValues): Iterator[PlayerStatsRow] = {
-      var s = if (state.exists()) state.get() else PlayerState.empty
-      var batchSecond = 0L
-      var batchRound = 0L
-      events.foreach { e =>
-        s = s.fold(e)
-        if (e.second > batchSecond) batchSecond = e.second
-        if (e.round > batchRound) batchRound = e.round
-      }
+      val (s, row) = foldBatch(steamId,
+        if (state.exists()) state.get() else PlayerState.empty, events)
       state.update(s)
-      Iterator.single(PlayerStatsRow(
-        playerName = s.lastName,
-        steamId = steamId,
-        second = batchSecond,
-        kills = s.kills,
-        deaths = s.deaths,
-        assists = s.assists,
-        damage = s.damage,
-        kdRatio = PlayerStatsRow.kd(s.kills, s.deaths),
-        damagePerRound = PlayerStatsRow.dpr(s.damage, batchRound)))
+      Iterator.single(row)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,16 +31,6 @@ object Similarity {
   /** L2 norm via the native [[graft.functions.DotProduct]] expression. */
   def l2Norm(v: Column): Column =
     sqrt(graft.functions.VectorFunctions.dotProduct(v, v))
-
-  /** Unit-normalize a vector (a zero vector divides to NaNs, mirroring
-    * `cosine`'s 0/0 behavior). COST NOTE: the lambda re-evaluates the O(d)
-    * norm per element (O(d²) per row, interpreted) — on hot paths project
-    * the norm as its own column once and divide by that instead; this form
-    * exists for one-shot convenience. */
-  def l2Normalize(v: Column): Column = {
-    val n = l2Norm(v)
-    transform(v.cast("array<double>"), x => x / n)
-  }
 
   /** The same cosine as a composition of built-in higher-order functions —
     * kept as the pure-builtin reference implementation (tests assert the
@@ -927,9 +917,8 @@ object Similarity {
     * probed list, ADC-scored, top-k ranked. `index` is (n_id, lcid, codes)
     * as produced by [[residualIndex]]. One-shot: the frozen model
     * (centroids, codebooks) is derived inside this plan and nothing is
-    * pinned, so it is safe on a stream thread (q296's `foreachBatch`); a
-    * caller serving many query sets against one model uses
-    * [[serveIndexStream]], which derives the model once. */
+    * pinned; a caller serving many query sets against one model uses
+    * [[serveIndexBatch]], which derives the model once. */
   def ivfPqResidualStoredTopK(
       queries: DataFrame, index: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, qIdCol: String, cidCol: String,
@@ -986,20 +975,7 @@ object Similarity {
     * completely in the micro-batch it arrives in, so the serving is
     * STATELESS by construction and the union of per-batch answers equals
     * the one-shot batch serve for ANY micro-batch split of the query set
-    * (law-tested in SimilaritySpec).
-    *
-    * Per-batch constants: the frozen MODEL and the index. The one-row
-    * [[pqModel]] (centroids and codebooks) is derived ONCE, here, when the
-    * writer is built, and pinned through [[graft.util.Caches.pin]]: it lives
-    * like the index pin a gate holds, and [[graft.util.Caches.releaseAll]]
-    * releases it, so call this on the thread that owns the query's pins
-    * and release after the stream ends. A micro-batch then broadcasts the
-    * model row, builds its |batch|·nprobe probe LUTs as array expressions
-    * ([[probeLuts]]: no window, no shuffle), broadcasts them against the
-    * list-keyed index (only probed lists pay) and exchanges O(|batch|·k)
-    * top-k rows — the centroid and codebook sources are never re-read.
-    * Persist the index once at service start, or the every-trigger
-    * re-scan is the bill.
+    * (law-tested in SimilaritySpec). Each batch runs [[serveIndexBatch]].
     *
     * Returns the un-started writer so the caller owns trigger, checkpoint
     * and start — `sink` receives each batch's (answers, batchId). */
@@ -1009,16 +985,35 @@ object Similarity {
       k: Int, m: Int, subDim: Int, nprobe: Int = 2)(
       sink: (DataFrame, Long) => Unit):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val serve = serveIndexBatch(index, centroids, codebooks, qIdCol, cidCol,
+      vecCol, k, m, subDim, nprobe)
+    queryStream.writeStream
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) => sink(serve(batch), batchId) }
+  }
+
+  /** [[serveIndexStream]]'s per-batch function, for a caller that owns its
+    * own `foreachBatch`. Per-batch constants: the frozen MODEL and the
+    * index. The one-row [[pqModel]] (centroids and codebooks) is derived
+    * ONCE, here, when the function is built, and pinned through
+    * [[graft.util.Caches.pin]]: it lives like the index pin a gate holds,
+    * and [[graft.util.Caches.releaseAll]] releases it, so build this on the
+    * thread that owns the query's pins and release after the stream ends.
+    * A micro-batch then broadcasts the model row, builds its
+    * |batch|·nprobe probe LUTs as array expressions ([[probeLuts]]: no
+    * window, no shuffle), broadcasts them against the list-keyed index
+    * (only probed lists pay) and exchanges O(|batch|·k) top-k rows — the
+    * centroid and codebook sources are never re-read. Persist the index
+    * once at service start, or the every-trigger re-scan is the bill.
+    * @return batch of (qIdCol, vecCol) => (q_id, rank, n_id, adist) */
+  def serveIndexBatch(index: DataFrame, centroids: DataFrame,
+      codebooks: DataFrame, qIdCol: String, cidCol: String, vecCol: String,
+      k: Int, m: Int, subDim: Int, nprobe: Int = 2): DataFrame => DataFrame = {
     requireIvfPqArgs(m, subDim, nprobe)
     val model = graft.util.Caches.pin(
       pqModel(codebooks, m, centroids, cidCol, vecCol))
-    queryStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        sink(ivfPqResidualStoredTopKFromLuts(
-          probeLuts(batch, model, qIdCol, vecCol, subDim, nprobe, residual = true),
-          index, k), batchId)
-      }
+    batch => ivfPqResidualStoredTopKFromLuts(
+      probeLuts(batch, model, qIdCol, vecCol, subDim, nprobe, residual = true),
+      index, k)
   }
 
   /** STREAMING INGEST of the residual-IVFADC store — the WRITE path of the

@@ -107,9 +107,6 @@ object Observability {
   private val sloBudget =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()
 
-  def recordBatchDurations(name: String, durationsMs: Seq[Long]): Unit =
-    sloRecord.put(name, durationsMs)
-
   def batchDurationRecord: Map[String, Seq[Long]] = {
     import scala.jdk.CollectionConverters._
     sloRecord.asScala.toMap

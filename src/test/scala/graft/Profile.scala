@@ -17,7 +17,9 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       sys.error("SPARK_GRAFT_SF_DIR names the fixture dir"))
-    val spark = graft.util.Sessions.build()
+    // record-only serving SLO (as in graft.Bench): a busy host must not
+    // fail a serving gate mid-run and cut its job counts short
+    val spark = graft.util.Sessions.build(Seq("spark.graft.serve.sloMs" -> "0"))
     args.zipWithIndex.foreach { case (spec, i) =>
       val explain = spec.startsWith("explain:")
       val (dir, name) = spec.stripPrefix("explain:").split(":") match {
