@@ -17,12 +17,20 @@ object Sinks {
     * snapshot rows (keyed by game `second`) — reference semantics
     * (update mode + append-style sink, SURVEY.md §7.4.6). `write` receives the
     * batch DataFrame and performs the distributed append (JDBC/parquet/Delta —
-    * injected so tests can capture batches). */
+    * injected so tests can capture batches).
+    *
+    * Unless the stream's session already names a checkpoint file manager,
+    * this sets `spark.sql.streaming.checkpointFileManagerClass` on it to
+    * [[graft.util.LocalFsCheckpointFileManager]], so a checkpoint on a local
+    * disk forks no `readlink` per file, also on a session graft did not
+    * build. The setting stays on the session; it changes nothing for
+    * checkpoints on other schemes. */
   def historizedSink[T](
       stats: Dataset[T],
       trigger: Trigger = Trigger.ProcessingTime("1 second"),
       checkpoint: Option[String] = None)(
       write: (DataFrame, Long) => Unit): DataStreamWriter[T] = {
+    graft.util.LocalFsCheckpointFileManager.installIfUnset(stats.sparkSession)
     val w = stats.writeStream
       .outputMode("update")
       .trigger(trigger)
@@ -43,10 +51,13 @@ object Sinks {
     * (possibly partial) attempt before appending. Restart-safe without
     * distributed transactions; pair with a checkpointed query so batch ids
     * are stable across restarts. The delete is a no-op (absent table /
-    * nothing matching) on the first attempt. */
+    * nothing matching) on the first attempt. The first call creates the
+    * table and a best-effort index on `"batch_id"`, so the replay delete
+    * stays an index seek while the history grows without bound. */
   def idempotentJdbcAppend(
       df: DataFrame, batchId: Long,
       url: String, table: String, props: java.util.Properties): Unit = {
+    val tagged = df.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
     val conn = java.sql.DriverManager.getConnection(url, props)
     try {
       // existence check via metadata instead of a swallow-all catch around
@@ -80,10 +91,19 @@ object Sinks {
       if (exists) {
         val ps = conn.prepareStatement(s"""DELETE FROM $table WHERE "batch_id" = ?""")
         try { ps.setLong(1, batchId); ps.executeUpdate() } finally ps.close()
+      } else {
+        // create with Spark's DDL mapping, then the best-effort index (in
+        // the table's schema when the name is qualified); "already exists"
+        // or a refused DDL leaves the sink correct, only slower
+        tagged.limit(0).write.mode("append").jdbc(url, table, props)
+        val idx = table.replaceAll("[^A-Za-z0-9_.]", "_") + "_graft_batch_idx"
+        val st = conn.createStatement()
+        try st.executeUpdate(s"""CREATE INDEX $idx ON $table ("batch_id")""")
+        catch { case _: java.sql.SQLException => () }
+        finally st.close()
       }
     } finally conn.close()
-    df.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-      .write.mode("append").jdbc(url, table, props)
+    tagged.write.mode("append").jdbc(url, table, props)
   }
 
   /** Distributed keyed JDBC upsert (merge): each partition deletes its keys'

@@ -10,7 +10,10 @@ import org.apache.spark.sql.SparkSession
   *   - session time zone UTC (the catalog's epoch arithmetic assumes it);
   *   - no UI;
   *   - `nanosAsLong`, so int64-nanos `events.parquet` fixtures read as long;
-  *   - AQE on.
+  *   - AQE on;
+  *   - streaming checkpoints through [[LocalFsCheckpointFileManager]]: on a
+  *     local disk no checkpoint file forks `readlink`, other schemes keep
+  *     Spark's default manager.
   * Library code never builds a session: it runs on the caller's. */
 object Sessions {
 
@@ -27,7 +30,8 @@ object Sessions {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.sql.adaptive.enabled" -> "true")
+      "spark.sql.adaptive.enabled" -> "true",
+      LocalFsCheckpointFileManager.Key -> classOf[LocalFsCheckpointFileManager].getName)
     val spark = (common ++ confs).foldLeft(
       SparkSession.builder().master(s"local[$slots]")) { case (b, (k, v)) =>
       b.config(k, v) }.getOrCreate()

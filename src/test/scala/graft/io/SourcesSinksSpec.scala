@@ -164,6 +164,40 @@ class SourcesSinksSpec extends SparkTestBase {
     }
   }
 
+  test("idempotentJdbcAppend indexes batch_id once, and a replay deletes only its own rows") {
+    val dbDir = Files.createTempDirectory("graft_derby6_")
+    System.setProperty("derby.system.home", dbDir.toString)
+    val url = s"jdbc:derby:$dbDir/graftdb6;create=true"
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    def batch(k: Long) = Seq(("S1", k), ("S2", k)).toDF("steamId", "kills")
+    def indexedColumns(): Seq[String] = {
+      val conn = java.sql.DriverManager.getConnection(url, props)
+      try {
+        val rs = conn.getMetaData.getIndexInfo(null, null, "STATS_IDX", false, false)
+        try Iterator.continually(rs).takeWhile(_.next())
+          .filter(r => Option(r.getString("INDEX_NAME")).exists(_.endsWith("_GRAFT_BATCH_IDX")))
+          .map(_.getString("COLUMN_NAME")).toList
+        finally rs.close()
+      } finally conn.close()
+    }
+    try {
+      Sinks.idempotentJdbcAppend(batch(10L), 0L, url, "stats_idx", props)
+      indexedColumns() shouldBe Seq("batch_id")
+      Sinks.idempotentJdbcAppend(batch(11L), 1L, url, "stats_idx", props)
+      Sinks.idempotentJdbcAppend(batch(12L), 0L, url, "stats_idx", props) // replay of batch 0
+      indexedColumns() shouldBe Seq("batch_id")
+      spark.read.jdbc(url, "stats_idx", props).collect()
+        .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("kills"))).sorted.toSeq shouldBe
+        Seq((0L, 12L), (0L, 12L), (1L, 11L), (1L, 11L))
+    } finally {
+      try java.sql.DriverManager.getConnection(s"jdbc:derby:$dbDir/graftdb6;shutdown=true")
+      catch { case _: java.sql.SQLException => () }
+      Files.walk(dbDir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
+    }
+  }
+
   test("jdbcUpsert merges by key: updates replace, new keys insert, replays are idempotent") {
     val dbDir = Files.createTempDirectory("graft_derby3_")
     System.setProperty("derby.system.home", dbDir.toString)

@@ -61,6 +61,45 @@ class RecoverySpec extends SparkTestBase {
     }
   }
 
+  test("a checkpoint written under Spark's default manager resumes under graft's") {
+    // the restart an existing deployment makes when it upgrades: run 1 on
+    // the FileContext-based default, run 2 on LocalFsCheckpointFileManager
+    // over the same offsets, commits and state files
+    val key = graft.util.LocalFsCheckpointFileManager.Key
+    val prev = spark.conf.getOption(key)
+    val src = Files.createTempDirectory("graft_usrc_")
+    val ckpt = Files.createTempDirectory("graft_uckpt_")
+    val out = Files.createTempDirectory("graft_uout_")
+    val schema = Seq.empty[Event].toDF().schema
+    def runOnce(): Unit = {
+      val stream = spark.readStream.schema(schema).parquet(src.toString).as[Event]
+      graft.io.Sinks.historizedSink(
+        PlayerStatsEngine.statefulPlayerStats(stream),
+        trigger = Trigger.AvailableNow(),
+        checkpoint = Some(ckpt.toString)) {
+        (df, _) => graft.io.Sinks.parquetAppend(df, out.toString)
+      }.start().awaitTermination()
+    }
+    try {
+      spark.conf.set(key, classOf[
+        org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager].getName)
+      Seq(
+        Event("Ada", "S1", "kill", 1, 0, 1),
+        Event("Ada", "S1", "kill", 2, 0, 1)).toDS()
+        .coalesce(1).write.mode("append").parquet(src.toString)
+      runOnce()
+      spark.conf.set(key, classOf[graft.util.LocalFsCheckpointFileManager].getName)
+      Seq(Event("Ada", "S1", "kill", 3, 0, 2)).toDS()
+        .coalesce(1).write.mode("append").parquet(src.toString)
+      runOnce()
+      spark.read.parquet(out.toString).as[PlayerStatsRow]
+        .collect().map(_.kills).sorted.toSeq shouldBe Seq(2L, 3L)
+    } finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      rmrf(src); rmrf(ckpt); rmrf(out)
+    }
+  }
+
   test("checkpoint recovery also holds under the RocksDB state store provider") {
     // the 100 TB configuration: HDFSBackedStateStore holds every key
     // on-heap, RocksDB spills state to local disk — the restart must carry

@@ -15,6 +15,7 @@ class SessionsSpec extends SparkTestBase {
     conf.get("spark.sql.session.timeZone") shouldBe "UTC"
     conf.get("spark.sql.legacy.parquet.nanosAsLong") shouldBe "true"
     conf.get("spark.sql.adaptive.enabled") shouldBe "true"
+    conf.get(LocalFsCheckpointFileManager.Key) shouldBe classOf[LocalFsCheckpointFileManager].getName
     spark.sparkContext.appName shouldBe "graft-tests"
   }
 
