@@ -22,8 +22,8 @@ object Sinks {
     * Unless the stream's session already names a checkpoint file manager,
     * this sets `spark.sql.streaming.checkpointFileManagerClass` on it to
     * [[graft.util.LocalFsCheckpointFileManager]], so a checkpoint on a local
-    * disk forks no `readlink` per file, also on a session graft did not
-    * build. The setting stays on the session; it changes nothing for
+    * disk forks no process per file (no `readlink`, no `chmod`), also on a
+    * session graft did not build. The setting stays on the session; it changes nothing for
     * checkpoints on other schemes. */
   def historizedSink[T](
       stats: Dataset[T],
@@ -52,12 +52,32 @@ object Sinks {
     * distributed transactions; pair with a checkpointed query so batch ids
     * are stable across restarts. The delete is a no-op (absent table /
     * nothing matching) on the first attempt. The first call creates the
-    * table and a best-effort index on `"batch_id"`, so the replay delete
-    * stays an index seek while the history grows without bound. */
+    * table with Spark's JDBC DDL mapping (`createTableColumnTypes` and
+    * `createTableOptions` apply there) and a best-effort index on
+    * `"batch_id"`, so the replay delete stays an index seek while the
+    * history grows without bound.
+    *
+    * The rows go in through one prepared `INSERT` per partition, with the
+    * frame's columns as case-exact quoted identifiers (the names Spark's
+    * DDL created) and `batch_id` bound as a parameter: one connection and
+    * one transaction per partition, batches of 1000 rows. A Spark JDBC
+    * write per micro-batch would re-plan the write, re-query the table and
+    * its schema, and, with the batch id inlined as a literal, compile fresh
+    * code every batch. A frame column named `batch_id` is replaced by the
+    * tag. Spark JDBC write options the insert does not implement
+    * (`batchsize`, `isolationLevel`, `numPartitions`, `truncate`,
+    * `sessionInitStatement`, `queryTimeout`) fail the call with an
+    * `IllegalArgumentException` before anything is deleted. */
   def idempotentJdbcAppend(
       df: DataFrame, batchId: Long,
       url: String, table: String, props: java.util.Properties): Unit = {
-    val tagged = df.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
+    props.stringPropertyNames.forEach { k =>
+      require(!UnsupportedAppendOptions.exists(_.equalsIgnoreCase(k)),
+        s"idempotentJdbcAppend does not implement the Spark JDBC write option '$k'")
+    }
+    val data = df.drop("batch_id")
+    val cols = data.columns.toSeq
+    val sqlTypes = data.schema.fields.map(f => jdbcTypeOf(f.dataType))
     val conn = java.sql.DriverManager.getConnection(url, props)
     try {
       // existence check via metadata instead of a swallow-all catch around
@@ -95,7 +115,8 @@ object Sinks {
         // create with Spark's DDL mapping, then the best-effort index (in
         // the table's schema when the name is qualified); "already exists"
         // or a refused DDL leaves the sink correct, only slower
-        tagged.limit(0).write.mode("append").jdbc(url, table, props)
+        data.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
+          .limit(0).write.mode("append").jdbc(url, table, props)
         val idx = table.replaceAll("[^A-Za-z0-9_.]", "_") + "_graft_batch_idx"
         val st = conn.createStatement()
         try st.executeUpdate(s"""CREATE INDEX $idx ON $table ("batch_id")""")
@@ -103,8 +124,49 @@ object Sinks {
         finally st.close()
       }
     } finally conn.close()
-    tagged.write.mode("append").jdbc(url, table, props)
+    writePartitions(data, url, props, Seq(insertSql(table, cols :+ "batch_id")), 1000) {
+      case (Seq(ins), row) =>
+        cols.indices.foreach(ci => setParam(ins, ci + 1, row.get(ci), sqlTypes(ci)))
+        ins.setLong(cols.length + 1, batchId)
+        ins.addBatch()
+    }
   }
+
+  /** Spark JDBC write options [[idempotentJdbcAppend]]'s insert does not
+    * implement. */
+  private val UnsupportedAppendOptions = Seq(
+    "batchsize", "isolationLevel", "numPartitions", "truncate",
+    "sessionInitStatement", "queryTimeout")
+
+  private def quote(s: String): String = "\"" + s + "\""
+
+  /** `INSERT INTO table ("c1", ...) VALUES (?, ...)`. */
+  private def insertSql(table: String, cols: Seq[String]): String =
+    s"INSERT INTO $table (${cols.map(quote).mkString(", ")}) " +
+      s"VALUES (${cols.map(_ => "?").mkString(", ")})"
+
+  /** Dialect-native single-statement upsert, where the target has one —
+    * the reference's production sink is Postgres (JPA saveAll), and
+    * Postgres' `INSERT … ON CONFLICT DO UPDATE` halves the round trips of
+    * the portable DELETE+INSERT pair while staying replay-idempotent.
+    * Returns None for dialects without a safe single-statement form
+    * ([[jdbcUpsert]] then uses DELETE+INSERT, which any JDBC target —
+    * including the test suite's embedded Derby — supports). ON CONFLICT
+    * requires the unique key index [[jdbcUpsert]] already creates. The
+    * generated text is pinned in `SourcesSinksSpec`; it cannot be executed
+    * in this sandbox (no Postgres server), exactly like the Kafka option
+    * surface. */
+  private[io] def dialectUpsertSql(
+      url: String, table: String, cols: Seq[String],
+      keys: Seq[String]): Option[String] =
+    if (url.startsWith("jdbc:postgresql:")) {
+      val nonKeys = cols.filterNot(keys.contains)
+      val action =
+        if (nonKeys.isEmpty) "DO NOTHING" // keys-only rows: replay is a no-op
+        else "DO UPDATE SET " +
+          nonKeys.map(c => s"${quote(c)} = EXCLUDED.${quote(c)}").mkString(", ")
+      Some(s"${insertSql(table, cols)} ON CONFLICT (${keys.map(quote).mkString(", ")}) $action")
+    } else None
 
   /** Distributed keyed JDBC upsert (merge): each partition deletes its keys'
     * previous rows and inserts the new versions — one connection per
@@ -130,32 +192,6 @@ object Sinks {
     * instead of silent corruption. As with any non-transactional
     * foreachPartition sink, disable speculation for strict exactly-once
     * row counts on databases where the index DDL is refused. */
-  /** Dialect-native single-statement upsert, where the target has one —
-    * the reference's production sink is Postgres (JPA saveAll), and
-    * Postgres' `INSERT … ON CONFLICT DO UPDATE` halves the round trips of
-    * the portable DELETE+INSERT pair while staying replay-idempotent.
-    * Returns None for dialects without a safe single-statement form
-    * ([[jdbcUpsert]] then uses DELETE+INSERT, which any JDBC target —
-    * including the test suite's embedded Derby — supports). ON CONFLICT
-    * requires the unique key index [[jdbcUpsert]] already creates. The
-    * generated text is pinned in `SourcesSinksSpec`; it cannot be executed
-    * in this sandbox (no Postgres server), exactly like the Kafka option
-    * surface. */
-  private[io] def dialectUpsertSql(
-      url: String, table: String, cols: Seq[String],
-      keys: Seq[String]): Option[String] =
-    if (url.startsWith("jdbc:postgresql:")) {
-      def q(s: String) = "\"" + s + "\""
-      val nonKeys = cols.filterNot(keys.contains)
-      val action =
-        if (nonKeys.isEmpty) "DO NOTHING" // keys-only rows: replay is a no-op
-        else "DO UPDATE SET " +
-          nonKeys.map(c => s"${q(c)} = EXCLUDED.${q(c)}").mkString(", ")
-      Some(s"INSERT INTO $table (${cols.map(q).mkString(", ")}) " +
-        s"VALUES (${cols.map(_ => "?").mkString(", ")}) " +
-        s"ON CONFLICT (${keys.map(q).mkString(", ")}) $action")
-    } else None
-
   def jdbcUpsert(
       df: DataFrame, url: String, table: String, keys: Seq[String],
       props: java.util.Properties, batchSize: Int = 1000): Unit = {
@@ -167,7 +203,6 @@ object Sinks {
     // create-if-absent with Spark's own DDL mapping (quoted identifiers),
     // before any executor opens a connection
     df.limit(0).write.mode("append").jdbc(url, table, props)
-    def q(s: String) = "\"" + s + "\""
     // best-effort unique key index (see scaladoc); idempotent via the
     // swallow — a second run fails with "already exists", which is fine
     locally {
@@ -176,18 +211,48 @@ object Sinks {
       try {
         val st = conn.createStatement()
         try st.executeUpdate(
-          s"CREATE UNIQUE INDEX $idxName ON $table (${keys.map(q).mkString(", ")})")
+          s"CREATE UNIQUE INDEX $idxName ON $table (${keys.map(quote).mkString(", ")})")
         catch { case _: java.sql.SQLException => () } // exists / unsupported
         finally st.close()
       } finally conn.close()
     }
-    val deleteSql = s"DELETE FROM $table WHERE " +
-      keys.map(k => s"${q(k)} = ?").mkString(" AND ")
-    val insertSql = s"INSERT INTO $table (${cols.map(q).mkString(", ")}) " +
-      s"VALUES (${cols.map(_ => "?").mkString(", ")})"
-    val upsertSql = dialectUpsertSql(url, table, cols, keys)
+    // native single-statement upsert where the dialect has one; portable
+    // DELETE+INSERT pair otherwise — same transaction and batching
+    // discipline either way
+    val sqls = dialectUpsertSql(url, table, cols, keys).map(Seq(_)).getOrElse(Seq(
+      s"DELETE FROM $table WHERE " + keys.map(k => s"${quote(k)} = ?").mkString(" AND "),
+      insertSql(table, cols)))
     val keyIdx = keys.map(cols.indexOf).toArray
     val sqlTypes = df.schema.fields.map(f => jdbcTypeOf(f.dataType))
+    writePartitions(df, url, props, sqls, batchSize) { (stmts, row) =>
+      keyIdx.foreach { ci =>
+        require(!row.isNullAt(ci),
+          s"jdbcUpsert key column ${cols(ci)} is NULL — NULL keys can never " +
+            "be replaced (SQL equality) and would break replay idempotence")
+      }
+      // the portable pair's DELETE binds the keys; the INSERT (or the
+      // dialect's upsert) binds every column
+      if (stmts.size == 2) {
+        keyIdx.zipWithIndex.foreach { case (ci, pi) =>
+          setParam(stmts.head, pi + 1, row.get(ci), sqlTypes(ci))
+        }
+        stmts.head.addBatch()
+      }
+      cols.indices.foreach(ci => setParam(stmts.last, ci + 1, row.get(ci), sqlTypes(ci)))
+      stmts.last.addBatch()
+    }
+  }
+
+  /** The partition writer of both JDBC sinks: per non-empty partition one
+    * connection with autocommit off, the `sqls` prepared once, `bind` adding
+    * each row to their batches, an `executeBatch` of every statement each
+    * `batchSize` rows and at the end, then one commit. A failure rolls back
+    * (a rollback failure rides along as suppressed) and rethrows the root
+    * cause; every statement is closed either way. */
+  private def writePartitions(
+      df: DataFrame, url: String, props: java.util.Properties,
+      sqls: Seq[String], batchSize: Int)(
+      bind: (Seq[java.sql.PreparedStatement], org.apache.spark.sql.Row) => Unit): Unit = {
     val driver = Option(props.getProperty("driver"))
     df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       if (rows.hasNext) {
@@ -195,38 +260,11 @@ object Sinks {
         val conn = java.sql.DriverManager.getConnection(url, props)
         try {
           conn.setAutoCommit(false)
-          // native single-statement upsert where the dialect has one;
-          // portable DELETE+INSERT pair otherwise — same transaction and
-          // batching discipline either way
-          val stmts = upsertSql match {
-            case Some(up) => Seq(conn.prepareStatement(up))
-            case None =>
-              Seq(conn.prepareStatement(deleteSql), conn.prepareStatement(insertSql))
-          }
+          val stmts = sqls.map(conn.prepareStatement)
           try {
             var pending = 0
             rows.foreach { row =>
-              keyIdx.foreach { ci =>
-                require(!row.isNullAt(ci),
-                  s"jdbcUpsert key column ${cols(ci)} is NULL — NULL keys can never " +
-                    "be replaced (SQL equality) and would break replay idempotence")
-              }
-              stmts match {
-                case Seq(up) =>
-                  cols.indices.foreach { ci =>
-                    setParam(up, ci + 1, row.get(ci), sqlTypes(ci))
-                  }
-                  up.addBatch()
-                case Seq(del, ins) =>
-                  keyIdx.zipWithIndex.foreach { case (ci, pi) =>
-                    setParam(del, pi + 1, row.get(ci), sqlTypes(ci))
-                  }
-                  del.addBatch()
-                  cols.indices.foreach { ci =>
-                    setParam(ins, ci + 1, row.get(ci), sqlTypes(ci))
-                  }
-                  ins.addBatch()
-              }
+              bind(stmts, row)
               pending += 1
               if (pending >= batchSize) {
                 stmts.foreach(_.executeBatch()); pending = 0
@@ -281,7 +319,7 @@ object Sinks {
       case BinaryType     => java.sql.Types.BINARY
       case _: DecimalType => java.sql.Types.DECIMAL
       case other => throw new IllegalArgumentException(
-        s"jdbcUpsert has no JDBC mapping for $other — serialize it first")
+        s"the JDBC sinks have no JDBC mapping for $other — serialize it first")
     }
   }
 

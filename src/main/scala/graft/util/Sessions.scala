@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   *   - `nanosAsLong`, so int64-nanos `events.parquet` fixtures read as long;
   *   - AQE on;
   *   - streaming checkpoints through [[LocalFsCheckpointFileManager]]: on a
-  *     local disk no checkpoint file forks `readlink`, other schemes keep
-  *     Spark's default manager.
+  *     local disk no checkpoint file forks a process (`readlink`, `chmod`),
+  *     other schemes keep Spark's default manager.
   * Library code never builds a session: it runs on the caller's. */
 object Sessions {
 

@@ -198,6 +198,85 @@ class SourcesSinksSpec extends SparkTestBase {
     }
   }
 
+  test("idempotentJdbcAppend compiles no code after the first checkpointed micro-batch") {
+    // Spark caches generated classes by their source text; a batch id
+    // inlined as a literal makes every batch's text new. CodegenMetrics
+    // counts every Janino compilation in the JVM. Batch 1 is the first to
+    // read existing state, so it still compiles the state decoder once;
+    // from then on a batch compiles nothing.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = Files.createTempDirectory("graft_derby7_")
+    val src = Files.createDirectories(root.resolve("src"))
+    System.setProperty("derby.system.home", root.toString)
+    val url = s"jdbc:derby:$root/graftdb7;create=true"
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    props.setProperty("createTableColumnTypes", "playerName VARCHAR(64), steamId VARCHAR(64)")
+    val compiled = scala.collection.mutable.ArrayBuffer[Long]()
+    try {
+      (1 to 3).foreach { i =>
+        Seq(Event("Ada", "S1", "kill", i, 0, i), Event("Bo", "S2", "death", i, 0, i)).toDS()
+          .coalesce(1).write.mode("append").parquet(src.toString)
+      }
+      val stream = spark.readStream.schema(Seq.empty[Event].toDF().schema)
+        .option("maxFilesPerTrigger", "1").parquet(src.toString).as[Event]
+      Sinks.historizedSink(PlayerStatsEngine.statefulPlayerStats(stream), Trigger.AvailableNow(),
+          Some(root.resolve("ckpt").toString)) { (df, batchId) =>
+        Sinks.idempotentJdbcAppend(df, batchId, url, "stats_codegen", props)
+        compiled += CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      }.start().awaitTermination()
+      compiled should have size 3
+      compiled(2) shouldBe compiled(1)
+      spark.read.jdbc(url, "stats_codegen", props).collect()
+        .map(r => (r.getAs[Long]("batch_id"), r.getAs[String]("steamId"), r.getAs[Long]("kills")))
+        .sorted.toSeq shouldBe Seq((0L, "S1", 1L), (0L, "S2", 0L), (1L, "S1", 2L),
+          (1L, "S2", 0L), (2L, "S1", 3L), (2L, "S2", 0L))
+    } finally {
+      try java.sql.DriverManager.getConnection(s"jdbc:derby:$root/graftdb7;shutdown=true")
+      catch { case _: java.sql.SQLException => () }
+      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
+    }
+  }
+
+  test("idempotentJdbcAppend refuses the write options it does not implement, before deleting") {
+    val dbDir = Files.createTempDirectory("graft_derby8_")
+    System.setProperty("derby.system.home", dbDir.toString)
+    val url = s"jdbc:derby:$dbDir/graftdb8;create=true"
+    def props(extra: (String, String)*): java.util.Properties = {
+      val p = new java.util.Properties()
+      p.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+      p.setProperty("createTableColumnTypes", "steamId VARCHAR(16)")
+      extra.foreach { case (k, v) => p.setProperty(k, v) }
+      p
+    }
+    val batch = Seq(("S1", 1L), ("S2", 2L)).toDF("steamId", "kills")
+    try {
+      Sinks.idempotentJdbcAppend(batch, 0L, url, "stats_opts", props())
+      // the first-batch create honoured createTableColumnTypes
+      val conn = java.sql.DriverManager.getConnection(url, props())
+      try {
+        val rs = conn.getMetaData.getColumns(null, null, "STATS_OPTS", "steamId")
+        try { rs.next() shouldBe true; rs.getString("TYPE_NAME") shouldBe "VARCHAR" }
+        finally rs.close()
+      } finally conn.close()
+      Seq("batchsize", "isolationLevel", "numPartitions", "truncate",
+          "sessionInitStatement", "QUERYTIMEOUT").foreach { k =>
+        val e = intercept[IllegalArgumentException] {
+          Sinks.idempotentJdbcAppend(batch, 0L, url, "stats_opts", props(k -> "1"))
+        }
+        e.getMessage should include(s"'$k'")
+      }
+      // no refused replay of batch 0 reached its DELETE
+      spark.read.jdbc(url, "stats_opts", props()).count() shouldBe 2L
+    } finally {
+      try java.sql.DriverManager.getConnection(s"jdbc:derby:$dbDir/graftdb8;shutdown=true")
+      catch { case _: java.sql.SQLException => () }
+      Files.walk(dbDir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
+    }
+  }
+
   test("jdbcUpsert merges by key: updates replace, new keys insert, replays are idempotent") {
     val dbDir = Files.createTempDirectory("graft_derby3_")
     System.setProperty("derby.system.home", dbDir.toString)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.sql.execution.streaming.checkpointing.{FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -61,10 +62,10 @@ class RecoverySpec extends SparkTestBase {
     }
   }
 
-  test("a checkpoint written under Spark's default manager resumes under graft's") {
-    // the restart an existing deployment makes when it upgrades: run 1 on
-    // the FileContext-based default, run 2 on LocalFsCheckpointFileManager
-    // over the same offsets, commits and state files
+  /** Run 1 on the checkpoint manager `before`, run 2 on
+    * LocalFsCheckpointFileManager over the same offsets, commits and state
+    * files: the restart an existing deployment makes when it upgrades. */
+  private def resumesUnderGraft(before: Class[_]): Unit = {
     val key = graft.util.LocalFsCheckpointFileManager.Key
     val prev = spark.conf.getOption(key)
     val src = Files.createTempDirectory("graft_usrc_")
@@ -81,8 +82,7 @@ class RecoverySpec extends SparkTestBase {
       }.start().awaitTermination()
     }
     try {
-      spark.conf.set(key, classOf[
-        org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager].getName)
+      spark.conf.set(key, before.getName)
       Seq(
         Event("Ada", "S1", "kill", 1, 0, 1),
         Event("Ada", "S1", "kill", 2, 0, 1)).toDS()
@@ -98,6 +98,15 @@ class RecoverySpec extends SparkTestBase {
       prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
       rmrf(src); rmrf(ckpt); rmrf(out)
     }
+  }
+
+  test("a checkpoint written under Spark's default manager resumes under graft's") {
+    resumesUnderGraft(classOf[FileContextBasedCheckpointFileManager])
+  }
+
+  test("a checkpoint written by Spark's FileSystem-based manager resumes under graft's") {
+    // graft's own manager before its file system set modes without forking
+    resumesUnderGraft(classOf[FileSystemBasedCheckpointFileManager])
   }
 
   test("checkpoint recovery also holds under the RocksDB state store provider") {
