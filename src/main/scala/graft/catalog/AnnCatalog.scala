@@ -1238,10 +1238,7 @@ private[graft] object AnnCatalog {
       val stored = readFixture(s, s"$tmp/index")
       val incr = Similarity.residualIndex(emb.where(col("vec_id") % 7 === 0),
         cent, cb, "vec_id", "cid", "embedding", m = 4, subDim = 16)
-      Similarity.ivfPqResidualStoredTopK(emb.where(col("vec_id") < 8),
-        stored.unionByName(incr), cent, cb, "vec_id", "cid", "embedding",
-        k = 3, m = 4, subDim = 16, nprobe = 2)
-        .orderBy(col("q_id"), col("rank"))
+      ivfAdcGateServe(emb, stored.unionByName(incr), cent, cb)
     }, Some(ivfAdcFullOracle)),
 
 
@@ -1462,10 +1459,7 @@ private[graft] object AnnCatalog {
       val compacted = Similarity.compactIndex(
         Seq(readFixture(s, s"$tmp/snap0"), readFixture(s, s"$tmp/snap1")),
         cap = 16L)
-      Similarity.ivfPqResidualStoredTopK(emb.where(col("vec_id") < 8),
-        compacted.drop("sub"), cent, cb, "vec_id", "cid", "embedding",
-        k = 3, m = 4, subDim = 16, nprobe = 2)
-        .orderBy(col("q_id"), col("rank"))
+      ivfAdcGateServe(emb, compacted.drop("sub"), cent, cb)
     }, Some(ivfAdcFullOracle)),
 
 
@@ -1890,9 +1884,7 @@ private[graft] object AnnCatalog {
       val cent = readFixture(s, s"$tmp/centroids")
       val cb = readFixture(s, s"$tmp/codebooks")
       val storeDir = scratch("q276_store")
-      val stream = s.readStream
-        .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", 1).parquet(s"$tmp/vectors")
+      val stream = stagedVectorStream(s, tmp)
       // batch-addressed idempotent sink (delta=<batchId>/, overwrite) —
       // the replay-safe write path; q290 exercises the actual crash+replay
       val q = Similarity.ingestIndexStream(stream, cent, cb,
@@ -1900,11 +1892,7 @@ private[graft] object AnnCatalog {
           Similarity.idempotentIndexSink(storeDir))
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      Similarity.ivfPqResidualStoredTopK(emb.where(col("vec_id") < 8),
-        Similarity.readIndexStore(s, storeDir), cent, cb,
-        "vec_id", "cid", "embedding",
-        k = 3, m = 4, subDim = 16, nprobe = 2)
-        .orderBy(col("q_id"), col("rank"))
+      ivfAdcGateServe(emb, Similarity.readIndexStore(s, storeDir), cent, cb)
     }, Some(ivfAdcFullOracle)),
 
 
@@ -1923,9 +1911,7 @@ private[graft] object AnnCatalog {
       val (s2, emb2, cent, cb) = ivfGateSession(s, dir)
       val snapRoot = scratch("q277_snaps")
       val seen = scala.collection.mutable.SortedSet[Long]()
-      val stream = s2.readStream
-        .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", 1).parquet(s"$tmp/vectors")
+      val stream = stagedVectorStream(s2, tmp)
       val q = Similarity.ingestIndexStream(stream, cent, cb,
           "vec_id", "cid", "embedding", m = 4, subDim = 16) { (idx, batchId) =>
           idx.write.mode("overwrite").parquet(s"$snapRoot/snap_$batchId")
@@ -1935,10 +1921,7 @@ private[graft] object AnnCatalog {
       q.awaitTermination()
       val snaps = seen.toSeq.map(b => s2.read.parquet(s"$snapRoot/snap_$b"))
       val compacted = Similarity.compactIndex(snaps, cap = 16L)
-      Similarity.ivfPqResidualStoredTopK(emb2.where(col("vec_id") < 8),
-        compacted.drop("sub"), cent, cb, "vec_id", "cid", "embedding",
-        k = 3, m = 4, subDim = 16, nprobe = 2)
-        .orderBy(col("q_id"), col("rank"))
+      ivfAdcGateServe(emb2, compacted.drop("sub"), cent, cb)
     }, Some(ivfAdcFullOracle)),
 
 
@@ -1966,10 +1949,7 @@ private[graft] object AnnCatalog {
         .select(col("vec_id"))
       val compacted = Similarity.compactIndex(Seq(idx), cap = 16L,
         tombstones = tombstones)
-      Similarity.ivfPqResidualStoredTopK(emb.where(col("vec_id") < 8),
-        compacted.drop("sub"), cent, cb, "vec_id", "cid", "embedding",
-        k = 3, m = 4, subDim = 16, nprobe = 2)
-        .orderBy(col("q_id"), col("rank"))
+      ivfAdcGateServe(emb, compacted.drop("sub"), cent, cb)
     }, Some(ivfAdcOracleFor("a.n_id % 5 <> 0"))),
 
 
@@ -2167,9 +2147,7 @@ private[graft] object AnnCatalog {
       val storeDir = scratch("q290_store")
       val ckpt = scratch("q290_ckpt")
       val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def run() = Similarity.ingestIndexStream(
-          s2.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/vectors"),
+      def run() = Similarity.ingestIndexStream(stagedVectorStream(s2, tmp),
           cent, cb, "vec_id", "cid", "embedding", m = 4, subDim = 16)(
           Similarity.idempotentIndexSink(storeDir, afterBatch = b =>
             if (b == 1L && !crashed.getAndSet(true))
@@ -2185,11 +2163,7 @@ private[graft] object AnnCatalog {
       require(raw.count() == raw.select(col("n_id")).distinct().count(),
         "replayed batch double-appended index rows — the store sink is " +
           "not replay-idempotent")
-      Similarity.ivfPqResidualStoredTopK(emb2.where(col("vec_id") < 8),
-        Similarity.readIndexStore(s2, storeDir), cent, cb,
-        "vec_id", "cid", "embedding",
-        k = 3, m = 4, subDim = 16, nprobe = 2)
-        .orderBy(col("q_id"), col("rank"))
+      ivfAdcGateServe(emb2, Similarity.readIndexStore(s2, storeDir), cent, cb)
     }, Some(ivfAdcFullOracle)),
 
 
@@ -2217,9 +2191,7 @@ private[graft] object AnnCatalog {
       val (s2, emb2, cent, cb) = ivfGateSession(s, dir)
       def ingest(storeDir: String, maxDeltas: Int): Int = {
         val fired = new java.util.concurrent.atomic.AtomicInteger(0)
-        val q = Similarity.ingestIndexStream(
-            s2.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-              .option("maxFilesPerTrigger", 1).parquet(s"$tmp/vectors"),
+        val q = Similarity.ingestIndexStream(stagedVectorStream(s2, tmp),
             cent, cb, "vec_id", "cid", "embedding", m = 4, subDim = 16)(
             Similarity.idempotentIndexSink(storeDir, beforeBatch = b =>
               if (Similarity.maintainIndexStore(s2, storeDir, maxDeltas,
@@ -2257,11 +2229,8 @@ private[graft] object AnnCatalog {
         "at-rest maintenance must leave ONE consolidated delta")
       require(Similarity.indexStoreDeltas(s2, controlDir) == Seq(0L, 1L, 2L),
         "below-threshold policy must keep every delta")
-      def serve(d: String) = Similarity.ivfPqResidualStoredTopK(
-          emb2.where(col("vec_id") < 8), Similarity.readIndexStore(s2, d),
-          cent, cb, "vec_id", "cid", "embedding",
-          k = 3, m = 4, subDim = 16, nprobe = 2)
-        .orderBy(col("q_id"), col("rank"))
+      def serve(d: String) = ivfAdcGateServe(emb2,
+        Similarity.readIndexStore(s2, d), cent, cb)
       // the no-op law: compacted and untouched stores answer identically.
       // The law already materializes the policy store's answers — return
       // them as a local frame instead of running the same serve a third
@@ -2317,10 +2286,7 @@ private[graft] object AnnCatalog {
           cap = 16L),
         "two deltas over threshold 1 must fire compaction")
       val compacted = Similarity.readIndexStore(s, storeDir)
-      Similarity.ivfPqResidualStoredTopK(emb.where(col("vec_id") < 8),
-          compacted, cent, cb, "vec_id", "cid", "embedding",
-          k = 3, m = 4, subDim = 16, nprobe = 2)
-        .orderBy(col("q_id"), col("rank"))
+      ivfAdcGateServe(emb, compacted, cent, cb)
     }, Some(ivfAdcUpsertOracle("vec_id % 9 = 8",
       "list_transform(vec, x -> -x)"))),
 
@@ -2347,9 +2313,7 @@ private[graft] object AnnCatalog {
       val ckpt = scratch("q297_ckpt")
       val fired = new java.util.concurrent.atomic.AtomicInteger(0)
       val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def run() = Similarity.ingestIndexStream(
-          s2.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/vectors"),
+      def run() = Similarity.ingestIndexStream(stagedVectorStream(s2, tmp),
           cent, cb, "vec_id", "cid", "embedding", m = 4, subDim = 16)(
           Similarity.idempotentIndexSink(storeDir,
             beforeBatch = b =>
@@ -2370,11 +2334,7 @@ private[graft] object AnnCatalog {
       val raw = s2.read.parquet(storeDir)
       require(raw.count() == raw.select(col("n_id")).distinct().count(),
         "replay over a compacted store lost or duplicated index rows")
-      Similarity.ivfPqResidualStoredTopK(emb2.where(col("vec_id") < 8),
-        Similarity.readIndexStore(s2, storeDir), cent, cb,
-        "vec_id", "cid", "embedding",
-        k = 3, m = 4, subDim = 16, nprobe = 2)
-        .orderBy(col("q_id"), col("rank"))
+      ivfAdcGateServe(emb2, Similarity.readIndexStore(s2, storeDir), cent, cb)
     }, Some(ivfAdcFullOracle)),
 
 
@@ -2502,11 +2462,8 @@ private[graft] object AnnCatalog {
       }
       def serve(root: String) = {
         val gen = graft.util.GenStore.currentPath(fs, root).get.toString
-        Similarity.ivfPqResidualStoredTopK(emb.where(col("vec_id") < 8),
-          Similarity.readIndexStore(s, s"$gen/index"),
-          s.read.parquet(s"$gen/centroids"), s.read.parquet(s"$gen/codebooks"),
-          "vec_id", "cid", "embedding", k = 3, m = 4, subDim = 16, nprobe = 2)
-          .orderBy(col("q_id"), col("rank"))
+        ivfAdcGateServe(emb, Similarity.readIndexStore(s, s"$gen/index"),
+          s.read.parquet(s"$gen/centroids"), s.read.parquet(s"$gen/codebooks"))
       }
       // CONTROL LAW: identity re-observations gauge exactly zero, no
       // refit, and the generation keeps serving pre-upsert answers. The
@@ -2530,12 +2487,8 @@ private[graft] object AnnCatalog {
       // the pre-upsert answers come off the SAME staged artifact the
       // generations installed (parquet round trip of long/float columns
       // is exact — content-identical to the inline encode it replaces)
-      val preUpsert = Similarity.ivfPqResidualStoredTopK(
-        emb.where(col("vec_id") < 8),
-        Similarity.readIndexStore(s, fullIdx),
-        cent0, cb0, "vec_id", "cid", "embedding",
-        k = 3, m = 4, subDim = 16, nprobe = 2)
-        .orderBy(col("q_id"), col("rank"))
+      val preUpsert = ivfAdcGateServe(emb,
+        Similarity.readIndexStore(s, fullIdx), cent0, cb0)
       require(serve(ctrlRoot).collect().toSeq == preUpsert.collect().toSeq,
         "an unfired refresh must leave served answers untouched")
       // DRIFT arm: the gauge crosses, the refresh fires, generation 1 is
@@ -2608,11 +2561,9 @@ private[graft] object AnnCatalog {
             // serve entirely within the resolved generation
             val gen = graft.util.GenStore.current(fs, root).get
             gensRead.add((batchId, gen))
-            Similarity.ivfPqResidualStoredTopK(qbatch.toDF(),
-                Similarity.readIndexStore(s,
-                  s"${graft.util.GenStore.generationPath(root, gen)}/index"),
-                cent, cb, "vec_id", "cid", "embedding",
-                k = 3, m = 4, subDim = 16, nprobe = 2)
+            ivfAdcServe(qbatch.toDF(), Similarity.readIndexStore(s,
+                s"${graft.util.GenStore.generationPath(root, gen)}/index"),
+                cent, cb)
               .withColumn("gen", lit(gen))
               .write.mode("append").parquet(outDir)
             // the maintenance daemon, firing between serve batches: the
@@ -2793,10 +2744,7 @@ private[graft] object AnnCatalog {
         q.awaitTermination()
       }
       def serve(storeDir: String) =
-        Similarity.ivfPqResidualStoredTopK(emb2.where(col("vec_id") < 8),
-          Similarity.readIndexStore(s2, storeDir), cent, cb,
-          "vec_id", "cid", "embedding", k = 3, m = 4, subDim = 16, nprobe = 2)
-          .orderBy(col("q_id"), col("rank"))
+        ivfAdcGateServe(emb2, Similarity.readIndexStore(s2, storeDir), cent, cb)
       val storeDir = scratch("q302_store")
       ingest(storeDir)
       (0 until 3).foreach { b =>

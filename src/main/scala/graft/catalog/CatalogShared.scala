@@ -126,6 +126,27 @@ private[graft] object CatalogShared {
         .repartition(3).write.mode("overwrite").parquet(s"$p/vectors")
     }
 
+  /** [[ivfIngestStaging]]'s staged corpus as a stream of one file per
+    * trigger — the ingest source of q276/q277/q290/q292/q297. */
+  def stagedVectorStream(s: SparkSession, tmp: String): DataFrame =
+    s.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
+      .option("maxFilesPerTrigger", 1).parquet(s"$tmp/vectors")
+
+  /** The q212 serve under a frozen (centroids, codebooks) model: each
+    * query's top 3 by residual ADC over `index` at m = 4 × subDim = 16,
+    * nprobe = 2 — the serve every IVF-store gate answers with. */
+  def ivfAdcServe(queries: DataFrame, index: DataFrame, cent: DataFrame,
+      cb: DataFrame): DataFrame =
+    Similarity.ivfPqResidualStoredTopK(queries, index, cent, cb,
+      "vec_id", "cid", "embedding", k = 3, m = 4, subDim = 16, nprobe = 2)
+
+  /** [[ivfAdcServe]] of the gate queries (`vec_id < 8` of `emb`) in
+    * (q_id, rank) order — what [[ivfAdcFullOracle]] and its twins replay. */
+  def ivfAdcGateServe(emb: DataFrame, index: DataFrame, cent: DataFrame,
+      cb: DataFrame): DataFrame =
+    ivfAdcServe(emb.where(col("vec_id") < 8), index, cent, cb)
+      .orderBy(col("q_id"), col("rank"))
+
   /** Scale-adaptive gate-session shuffle-partition count, DERIVED from the
     * gate corpus's on-disk size (bytes / 64 MB per partition, floor 4, cap
     * the session's core count) instead of a constant tuned to sf0.1's

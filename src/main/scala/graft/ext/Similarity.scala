@@ -159,6 +159,7 @@ object Similarity {
     * long ids; non-integral id types take the (type-agnostic, but
     * full-shuffle-and-sort) window fallback. */
   private def rankTopK(scored: DataFrame, keys: Seq[String], k: Int): DataFrame = {
+    require(k > 0, s"k must be positive, got $k")
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val integralId = scored.schema("n_id").dataType match {
       case LongType | IntegerType | ShortType | ByteType => true
@@ -507,14 +508,15 @@ object Similarity {
   private def pqSlice(vec: Column, sub: Int, subDim: Int): Column =
     slice(vec.cast("array<double>"), sub * subDim + 1, subDim)
 
-  /** One `(sub, slice)` row per subspace — the narrow explode both the
-    * encoder and the LUT builder feed from. */
+  /** One `(sub, s_vec)` row per subspace, `carry` columns riding along —
+    * the narrow explode the encoders and the stride codebook feed from. */
   private def pqSliced(df: DataFrame, idCol: String, vecCol: String,
-      m: Int, subDim: Int): DataFrame =
-    df.select(col(idCol).as("__pid"),
+      m: Int, subDim: Int, carry: Seq[Column] = Nil): DataFrame =
+    df.select((col(idCol).as("__pid") +: carry) :+
         explode(array((0 until m).map(j =>
-          struct(lit(j).as("sub"), pqSlice(col(vecCol), j, subDim).as("s_vec"))): _*)).as("sc"))
-      .select(col("__pid"), col("sc.sub").as("sub"), col("sc.s_vec").as("s_vec"))
+          struct(lit(j).as("sub"), pqSlice(col(vecCol), j, subDim).as("s_vec"))): _*)).as("sc"): _*)
+      .select((col("__pid") +: carry) ++
+        Seq(col("sc.sub").as("sub"), col("sc.s_vec").as("s_vec")): _*)
 
   /** Renumber an injected codebook's cids to the contiguous 0..ksub−1 the
     * codes carry (per sub, ordered by the original cid) — so ANY
@@ -561,83 +563,58 @@ object Similarity {
     * joined against the BROADCAST codebook; the argmin is a min_by hash
     * aggregate with map-side partials (never a window over scores), and the
     * code-array pivot shuffles only (id, sub, cid) triples — the vectors
-    * themselves never shuffle.
+    * themselves never shuffle. The codes view of [[pqEncodeAndError]].
     *
     * @param codebooks (sub, cid, c_vec) — SMALL (broadcast); arbitrary cids
     * @return (idCol, codes array<long> ordered by sub, values 0..ksub−1)
     */
   def pqEncode(corpus: DataFrame, codebooks: DataFrame,
       idCol: String, vecCol: String, m: Int, subDim: Int): DataFrame =
-    pqEncodeCarry(corpus, codebooks, idCol, vecCol, m, subDim, Nil)
+    pqEncodeAndError(corpus, codebooks, idCol, vecCol, m, subDim)._1
 
-  /** [[pqEncode]] with pass-through columns: `carryCols` ride the encode
-    * unchanged (they must be CONSTANT per id — e.g. the IVF list id in the
-    * residual index build, where carrying the column through one plan
-    * beats re-deriving the assignment in a second corpus pass). Including
-    * them in the grouping keys is free: the keys are id-functional, so the
-    * hash aggregation's cardinality is unchanged. */
-  private def pqEncodeCarry(corpus: DataFrame, codebooks: DataFrame,
-      idCol: String, vecCol: String, m: Int, subDim: Int,
-      carryCols: Seq[String]): DataFrame = {
-    val cb = broadcast(pqNormalizeCodebook(codebooks))
-    val carry = carryCols.map(col)
-    corpus.select((col(idCol).as("__pid") +: carry) :+
-        explode(array((0 until m).map(j =>
-          struct(lit(j).as("sub"), pqSlice(col(vecCol), j, subDim).as("s_vec"))): _*)).as("sc"): _*)
-      .select((col("__pid") +: carry) ++
-        Seq(col("sc.sub").as("sub"), col("sc.s_vec").as("s_vec")): _*)
-      .join(cb, Seq("sub"))
-      .select((col("__pid") +: carry) ++ Seq(col("sub"), col("cid"),
-        l2DistSq(col("s_vec"), col("c_vec")).as("d2")): _*)
-      .groupBy((col("__pid") +: carry) :+ col("sub"): _*)
-      .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cid"))
-      .groupBy(col("__pid") +: carry: _*)
-      .agg(transform(array_sort(collect_list(struct(col("sub"), col("cid")))),
-        s => s.getField("cid")).as("codes"))
-      .select((col("__pid").as(idCol) +: carry) :+ col("codes"): _*)
+  private def requirePqArgs(m: Int, subDim: Int): Unit = {
+    require(m > 0, s"m must be positive, got $m")
+    require(subDim > 0, s"subDim must be positive, got $subDim")
   }
 
-  /** [[pqEncode]] AND [[pqQuantizationError]] from ONE shared
-    * per-(id, sub) aggregation DEFINITION: one groupBy takes the argmin
-    * CODE and the min DISTANCE together, and the two results branch off
-    * it. NOTE the measured limits of the sharing (r17, full-bench A/B):
-    * Catalyst column-prunes each lazy consumer's COPY of the subtree down
-    * to just its own aggregate function (min_by-only vs min-only), the
-    * canonicalized exchanges then differ, and AQE runtime stage reuse
-    * cannot dedupe them — so WITHOUT a pin the distance frame
-    * (|corpus|·m·ksub rows) still computes once per consumer, exactly as
-    * the two standalone functions would. PINNING the aggregate was tried
-    * and measured SLOWER at sf0.1 (q213 5.34 → 6.71 s, back-to-back full
-    * benches with a 1.7 % tailwind): at this SF the recompute is ~50 M
-    * fused flops while the pin pays two eager jobs + a cache round trip —
-    * the r16 "pins inside one action" finding extends even to subtrees
-    * stage reuse cannot share, whenever the shared work is cheap. At a
-    * corpus scale where the distance frame dominates, pin the returned
-    * frames' common parent at the CALL SITE (Caches.pin) — the law tests
-    * hold either way. Both outputs are bit-identical to the standalone
-    * functions: same normalized codebook, same slicing, same min/argmin
-    * over the same groups.
-    * @param carryCols as [[pqEncodeCarry]] (constant per id; ride the
-    *        codes frame — the error frame never needs them)
+  /** [[pqEncode]] AND [[pqQuantizationError]] from the ONE per-(id, sub)
+    * encoder aggregation: one groupBy takes the argmin CODE and the min
+    * DISTANCE together, and the two results branch off it. Every encoder is
+    * a view of this aggregation — [[pqEncode]], [[pqQuantizationError]],
+    * [[residualIndex]] and [[residualIndexAndError]] — and a view that
+    * reads one output plans exactly as a standalone encoder would: Catalyst
+    * column-prunes each lazy consumer's COPY of the subtree down to just its
+    * own aggregate function (min_by-only vs min-only). NOTE the measured
+    * limits of the sharing (r17, full-bench A/B): the canonicalized
+    * exchanges of the two pruned copies then differ, and AQE runtime stage
+    * reuse cannot dedupe them — so WITHOUT a pin the distance frame
+    * (|corpus|·m·ksub rows) computes once per consumer. PINNING the
+    * aggregate was tried and measured SLOWER at sf0.1 (q213 5.34 → 6.71 s,
+    * back-to-back full benches with a 1.7 % tailwind): at this SF the
+    * recompute is ~50 M fused flops while the pin pays two eager jobs + a
+    * cache round trip — the r16 "pins inside one action" finding extends
+    * even to subtrees stage reuse cannot share, whenever the shared work is
+    * cheap. At a corpus scale where the distance frame dominates, pin the
+    * returned frames' common parent at the CALL SITE (Caches.pin).
+    * @param carryCols pass-through columns that ride the codes frame
+    *        unchanged; they must be CONSTANT per id (e.g. the IVF list id
+    *        of the residual index build, carried through one plan instead
+    *        of re-deriving the assignment in a second corpus pass), so
+    *        grouping on them leaves the aggregation's cardinality unchanged
     * @return (codes as [[pqEncode]] (+ carry), one-row error frame as
     *         [[pqQuantizationError]]) */
   def pqEncodeAndError(corpus: DataFrame, codebooks: DataFrame,
       idCol: String, vecCol: String, m: Int, subDim: Int,
       carryCols: Seq[String] = Nil): (DataFrame, DataFrame) = {
-    val cb = broadcast(pqNormalizeCodebook(codebooks))
+    requirePqArgs(m, subDim)
     val carry = carryCols.map(col)
-    val perSub = (
-      corpus.select((col(idCol).as("__pid") +: carry) :+
-        explode(array((0 until m).map(j =>
-          struct(lit(j).as("sub"), pqSlice(col(vecCol), j, subDim).as("s_vec"))): _*)).as("sc"): _*)
-      .select((col("__pid") +: carry) ++
-        Seq(col("sc.sub").as("sub"), col("sc.s_vec").as("s_vec")): _*)
-      .join(cb, Seq("sub"))
+    val perSub = pqSliced(corpus, idCol, vecCol, m, subDim, carry)
+      .join(broadcast(pqNormalizeCodebook(codebooks)), Seq("sub"))
       .select((col("__pid") +: carry) ++ Seq(col("sub"), col("cid"),
         l2DistSq(col("s_vec"), col("c_vec")).as("d2")): _*)
       .groupBy((col("__pid") +: carry) :+ col("sub"): _*)
       .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cid"),
-        min(col("d2")).as("__mind2")))
+        min(col("d2")).as("__mind2"))
     val codes = perSub
       .groupBy(col("__pid") +: carry: _*)
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("cid")))),
@@ -655,7 +632,7 @@ object Similarity {
   }
 
   /** [[residualIndex]] AND its [[pqQuantizationError]] audit from the one
-    * shared aggregation of [[pqEncodeAndError]] — the residual-arm twin
+    * encoder aggregation of [[pqEncodeAndError]] — the residual-arm twin
     * for audits that report both (q213).
     * @return ((n_id, lcid, codes), one-row error frame) */
   def residualIndexAndError(corpus: DataFrame, centroids: DataFrame,
@@ -741,9 +718,48 @@ object Similarity {
   }
 
   private def requireIvfPqArgs(m: Int, subDim: Int, nprobe: Int): Unit = {
-    require(m > 0, s"m must be positive, got $m")
-    require(subDim > 0, s"subDim must be positive, got $subDim")
+    requirePqArgs(m, subDim)
     require(nprobe > 0, s"nprobe must be positive, got $nprobe")
+  }
+
+  /** The coarse centroids as the BROADCAST (lcid, l_vec array<double>)
+    * frame the corpus side assigns against. */
+  private def coarseCentroids(centroids: DataFrame, cidCol: String,
+      vecCol: String): DataFrame =
+    broadcast(centroids
+      .select(col(cidCol).as("lcid"), col(vecCol).cast("array<double>").as("l_vec")))
+
+  /** Coarse assignment: per `id` of `vecs`, the argmin-L2 list of its
+    * vector `v` against [[coarseCentroids]] (ties to the lowest lcid) — a
+    * min hash aggregate with map-side partials, never a score window. `v`
+    * rides along (constant per id); a consumer that drops it has it pruned.
+    * @return (id, lcid, v) */
+  private def coarseAssign(vecs: DataFrame, id: String, v: String,
+      cents: DataFrame): DataFrame =
+    vecs.crossJoin(cents)
+      .select(col(id), col(v),
+        struct(l2DistSq(col(v), col("l_vec")).as("d"), col("lcid").as("c")).as("dc"))
+      .groupBy(col(id))
+      .agg(min(col("dc")).getField("c").as("lcid"), first(col(v)).as(v))
+
+  /** The ADC scan every PQ query path ends in: `cands` pairs each query's
+    * LUT with a candidate's codes (q_id, n_id, codes, lut); self-matches
+    * drop, the native codegen'd ADC LUT sum scores — THE hot loop of a PQ
+    * index scan (bit-identical to the interpreted zip_with+aggregate fold;
+    * the identity is law-tested in SimilaritySpec) — and the bounded
+    * [[rankTopK]] reduction keeps each query's k nearest.
+    * @return (q_id, rank, n_id, adist) — rank ascending by approximate
+    *         squared distance, ties to the lowest n_id */
+  private def adcTopK(cands: DataFrame, k: Int): DataFrame = {
+    val scored = cands
+      .where(col("n_id") =!= col("q_id"))
+      .select(col("q_id"), col("n_id"),
+        graft.functions.VectorFunctions.adcDistance(
+          col("codes"), col("lut")).as("adist"))
+    // rankTopK ranks sim DESC; negate so ascending distance wins (exact:
+    // IEEE negation is lossless, and −0.0 re-negates to 0.0)
+    rankTopK(scored.withColumn("sim", -col("adist")), Seq("q_id"), k)
+      .select(col("q_id"), col("rank"), col("n_id"), (-col("sim")).as("adist"))
   }
 
   /** PQ/ADC ANN top-k (Jégou et al., TPAMI'11 asymmetric distance): the
@@ -769,26 +785,13 @@ object Similarity {
   def pqTopK(queries: DataFrame, corpus: DataFrame, codebooks: DataFrame,
       qIdCol: String, idCol: String, vecCol: String, k: Int,
       m: Int, subDim: Int): DataFrame = {
-    require(m > 0, s"m must be positive, got $m")
-    require(subDim > 0, s"subDim must be positive, got $subDim")
     val codes = pqEncode(corpus, codebooks, idCol, vecCol, m, subDim)
       .select(col(idCol).as("n_id"), col("codes"))
     val lut = queries
       .select(col(qIdCol).as("q_id"), col(vecCol).cast("array<double>").as("q_vec"))
       .crossJoin(broadcast(pqModel(codebooks, m)))
       .select(col("q_id"), adcLut(col("q_vec"), col("__cb"), subDim).as("lut"))
-    // native codegen'd ADC LUT sum — THE hot loop of a PQ index scan
-    // (bit-identical to the interpreted zip_with+aggregate fold; the
-    // identity is law-tested in SimilaritySpec)
-    val scored = codes.crossJoin(broadcast(lut))
-      .where(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        graft.functions.VectorFunctions.adcDistance(
-          col("codes"), col("lut")).as("adist"))
-    // rankTopK ranks sim DESC; negate so ascending distance wins (exact:
-    // IEEE negation is lossless, and −0.0 re-negates to 0.0)
-    rankTopK(scored.withColumn("sim", -col("adist")), Seq("q_id"), k)
-      .select(col("q_id"), col("rank"), col("n_id"), (-col("sim")).as("adist"))
+    adcTopK(codes.crossJoin(broadcast(lut)), k)
   }
 
   /** IVF-PQ ANN (the composition [[pqTopK]]'s scan-everything shape is
@@ -817,13 +820,11 @@ object Similarity {
   def ivfPqTopK(
       queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, qIdCol: String, idCol: String, cidCol: String,
-      vecCol: String, k: Int, m: Int, subDim: Int, nprobe: Int = 2): DataFrame = {
-    requireIvfPqArgs(m, subDim, nprobe)
+      vecCol: String, k: Int, m: Int, subDim: Int, nprobe: Int = 2): DataFrame =
     ivfPqTopKWithCodes(queries, corpus, centroids,
       pqEncode(corpus, codebooks, idCol, vecCol, m, subDim)
         .select(col(idCol).as("n_id"), col("codes")),
       codebooks, qIdCol, idCol, cidCol, vecCol, k, m, subDim, nprobe)
-  }
 
   /** [[ivfPqTopK]] over an externally-built code table (n_id, codes) —
     * for callers that already hold the corpus encode (e.g. shared with
@@ -835,29 +836,14 @@ object Similarity {
       cidCol: String, vecCol: String, k: Int, m: Int, subDim: Int,
       nprobe: Int = 2): DataFrame = {
     requireIvfPqArgs(m, subDim, nprobe)
-    val cent = broadcast(centroids
-      .select(col(cidCol).as("lcid"), col(vecCol).cast("array<double>").as("l_vec")))
-    // coarse assignment: argmin-L2 list per corpus vector (ties -> lowest
-    // cid), min_by hash agg with map-side partials — never a score window
-    val lists = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-      .crossJoin(cent)
-      .select(col("n_id"),
-        struct(l2DistSq(col("n_vec"), col("l_vec")).as("d"), col("lcid").as("c")).as("dc"))
-      .groupBy(col("n_id"))
-      .agg(min(col("dc")).getField("c").as("lcid"))
-    val indexed = lists.join(codes, Seq("n_id"))
+    val lists = coarseAssign(
+      corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec")),
+      "n_id", "n_vec", coarseCentroids(centroids, cidCol, vecCol))
     // nprobe nearest lists per query, each carrying the query's ADC LUT
-    val probes = probeLuts(queries,
-      pqModel(codebooks, m, centroids, cidCol, vecCol),
-      qIdCol, vecCol, subDim, nprobe, residual = false)
-    val scored = broadcast(probes)
-      .join(indexed, Seq("lcid"))
-      .where(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        graft.functions.VectorFunctions.adcDistance(
-          col("codes"), col("lut")).as("adist"))
-    rankTopK(scored.withColumn("sim", -col("adist")), Seq("q_id"), k)
-      .select(col("q_id"), col("rank"), col("n_id"), (-col("sim")).as("adist"))
+    ivfPqResidualStoredTopKFromLuts(
+      probeLuts(queries, pqModel(codebooks, m, centroids, cidCol, vecCol),
+        qIdCol, vecCol, subDim, nprobe, residual = false),
+      lists.join(codes, Seq("n_id")), k)
   }
 
   /** Residual IVF-PQ ANN — the full Jégou et al. IVFADC: PQ codes quantize
@@ -874,7 +860,7 @@ object Similarity {
     *
     * Scale shape: ONE corpus pass — coarse argmin against BROADCAST
     * centroids, residual subtraction, and PQ encode in a single linear
-    * plan ([[pqEncodeCarry]] carries the list id through the encode, so
+    * plan ([[pqEncodeAndError]] carries the list id through the encode, so
     * the assignment is never re-derived); the index rows are (id, list,
     * codes) — m+2 small ints, vectors never shuffle. Everything else is
     * the [[ivfPqTopK]] plan with the per-probe LUT join on `lcid`.
@@ -887,12 +873,10 @@ object Similarity {
   def ivfPqResidualTopK(
       queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, qIdCol: String, idCol: String, cidCol: String,
-      vecCol: String, k: Int, m: Int, subDim: Int, nprobe: Int = 2): DataFrame = {
-    requireIvfPqArgs(m, subDim, nprobe)
+      vecCol: String, k: Int, m: Int, subDim: Int, nprobe: Int = 2): DataFrame =
     ivfPqResidualStoredTopK(queries,
       residualIndex(corpus, centroids, codebooks, idCol, cidCol, vecCol, m, subDim),
       centroids, codebooks, qIdCol, cidCol, vecCol, k, m, subDim, nprobe)
-  }
 
   /** The residual-IVFADC INDEX build, split out so it can be PERSISTED as
     * the deployment artifact (coarse list + residual PQ codes per vector —
@@ -904,12 +888,9 @@ object Similarity {
     * @return (n_id, lcid, codes) */
   def residualIndex(corpus: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, idCol: String, cidCol: String, vecCol: String,
-      m: Int, subDim: Int): DataFrame = {
-    val res = residuals(corpus, centroids, idCol, cidCol, vecCol)
-    pqEncodeCarry(res, codebooks, idCol, "res", m, subDim,
-        carryCols = Seq("lcid"))
-      .select(col(idCol).as("n_id"), col("lcid"), col("codes"))
-  }
+      m: Int, subDim: Int): DataFrame =
+    residualIndexAndError(corpus, centroids, codebooks, idCol, cidCol, vecCol,
+      m, subDim)._1
 
   /** [[ivfPqResidualTopK]]'s QUERY stage over an already-built (possibly
     * reloaded-from-store) index — the serving path of the persisted
@@ -922,13 +903,11 @@ object Similarity {
   def ivfPqResidualStoredTopK(
       queries: DataFrame, index: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, qIdCol: String, cidCol: String,
-      vecCol: String, k: Int, m: Int, subDim: Int, nprobe: Int = 2): DataFrame = {
-    requireIvfPqArgs(m, subDim, nprobe)
+      vecCol: String, k: Int, m: Int, subDim: Int, nprobe: Int = 2): DataFrame =
     ivfPqResidualStoredTopKFromLuts(
       queryResidualLuts(queries, centroids, codebooks, qIdCol, cidCol,
         vecCol, m, subDim, nprobe),
       index, k)
-  }
 
   /** The QUERY-side state of [[ivfPqResidualStoredTopK]] — nprobe probed
     * lists per query with their per-(query, probe) residual ADC LUTs:
@@ -952,16 +931,8 @@ object Similarity {
     * (possibly pinned) query LUTs: probed-list join, ADC scoring, bounded
     * top-k. */
   def ivfPqResidualStoredTopKFromLuts(
-      luts: DataFrame, index: DataFrame, k: Int): DataFrame = {
-    val scored = broadcast(luts)
-      .join(index, Seq("lcid"))
-      .where(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        graft.functions.VectorFunctions.adcDistance(
-          col("codes"), col("lut")).as("adist"))
-    rankTopK(scored.withColumn("sim", -col("adist")), Seq("q_id"), k)
-      .select(col("q_id"), col("rank"), col("n_id"), (-col("sim")).as("adist"))
-  }
+      luts: DataFrame, index: DataFrame, k: Int): DataFrame =
+    adcTopK(broadcast(luts).join(index, Seq("lcid")), k)
 
   /** STREAMING serving of a persisted residual-IVFADC index — the query
     * side of the [[residualIndex]] artifact as a long-running service: a
@@ -1349,15 +1320,9 @@ object Similarity {
     * @return (idCol, lcid, res) */
   def residuals(corpus: DataFrame, centroids: DataFrame,
       idCol: String, cidCol: String, vecCol: String): DataFrame = {
-    val cent = broadcast(centroids
-      .select(col(cidCol).as("lcid"), col(vecCol).cast("array<double>").as("l_vec")))
-    corpus
-      .select(col(idCol).as("__rid"), col(vecCol).cast("array<double>").as("__v"))
-      .crossJoin(cent)
-      .select(col("__rid"), col("__v"),
-        struct(l2DistSq(col("__v"), col("l_vec")).as("d"), col("lcid").as("c")).as("dc"))
-      .groupBy(col("__rid"))
-      .agg(min(col("dc")).getField("c").as("lcid"), first(col("__v")).as("__v"))
+    val cent = coarseCentroids(centroids, cidCol, vecCol)
+    coarseAssign(corpus.select(col(idCol).as("__rid"),
+        col(vecCol).cast("array<double>").as("__v")), "__rid", "__v", cent)
       .join(cent, Seq("lcid"))
       .select(col("__rid").as(idCol), col("lcid"),
         zip_with(col("__v"), col("l_vec"), (a, b) => a - b).as("res"))
@@ -1370,25 +1335,11 @@ object Similarity {
     * floored to integer NANO-units before summing, so the corpus total is
     * an exact BIGINT sum (order-independent — a raw double sum would round
     * differently under Spark's partition order vs any replay) and the MSE
-    * is a single final division.
+    * is a single final division. The error view of [[pqEncodeAndError]].
     * @return one row (n_vectors, err_nano_total, quant_mse) */
   def pqQuantizationError(corpus: DataFrame, codebooks: DataFrame,
-      idCol: String, vecCol: String, m: Int, subDim: Int): DataFrame = {
-    val cb = broadcast(pqNormalizeCodebook(codebooks))
-    pqSliced(corpus, idCol, vecCol, m, subDim)
-      .join(cb, Seq("sub"))
-      .select(col("__pid"), col("sub"),
-        l2DistSq(col("s_vec"), col("c_vec")).as("d2"))
-      .groupBy(col("__pid"), col("sub"))
-      .agg(min(col("d2")).as("mind2"))
-      .select(col("__pid"),
-        floor(col("mind2") * lit(1e9)).cast("long").as("e"))
-      .agg(countDistinct(col("__pid")).as("n_vectors"),
-        sum(col("e")).as("err_nano_total"))
-      .select(col("n_vectors"), col("err_nano_total"),
-        (col("err_nano_total").cast("double") / lit(1e9) /
-          col("n_vectors").cast("double")).as("quant_mse"))
-  }
+      idCol: String, vecCol: String, m: Int, subDim: Int): DataFrame =
+    pqEncodeAndError(corpus, codebooks, idCol, vecCol, m, subDim)._2
 
   /** Embedding-cosine near-duplicate pairs within buckets (dedup use-case):
     * distinct (id_a < id_b) pairs with cosine ≥ threshold, joined bucket-wise

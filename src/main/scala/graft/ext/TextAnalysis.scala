@@ -640,26 +640,15 @@ object TextAnalysis {
       terms: Seq[String], topK: Int): DataFrame = {
     require(terms.nonEmpty, "bm25TopK needs at least one query term")
     require(topK > 0, s"topK must be positive, got $topK")
-    val toks = df.where(col(textCol).isNotNull)
-      .select(col(idCol), explode(words(col(textCol))).as("__t"))
-      .where(col("__t") =!= "")
+    val toks = tokens(df.where(col(textCol).isNotNull), idCol, textCol, "__t")
     val dl = toks.groupBy(col(idCol)).agg(count(lit(1)).as("__dl"))
     val stats = dl.agg(count(lit(1)).as("__n"), sum(col("__dl")).as("__tot"))
     val tf = toks.where(col("__t").isin(terms: _*))
       .groupBy(col(idCol), col("__t")).agg(count(lit(1)).as("__tf"))
     val dfreq = tf.groupBy(col("__t")).agg(count(lit(1)).as("__df"))
-    val scored = tf.join(broadcast(dfreq), Seq("__t"))
+    val scored = bm25Scores(tf.join(broadcast(dfreq), Seq("__t"))
       .join(dl, Seq(idCol))
-      .crossJoin(broadcast(stats))
-      .withColumn("__idf", expr("__n div __df"))
-      .withColumn("__ts",
-        col("__idf").cast("double") * (col("__tf").cast("double") * lit(2.25)) /
-          (col("__tf").cast("double") + lit(1.25) * (lit(0.25) + lit(0.75) *
-            (col("__dl").cast("double") /
-              (col("__tot").cast("double") / col("__n").cast("double"))))))
-      .groupBy(col(idCol))
-      .agg(aggregate(sort_array(collect_list(struct(col("__t"), col("__ts")))),
-        lit(0.0), (a, x) => a + x.getField("__ts")).as("score"))
+      .crossJoin(broadcast(stats)), Seq(idCol), "__t")
     val top = scored.orderBy(col("score").desc, col(idCol)).limit(topK)
     // the unpartitioned window is intentional and BOUNDED: it ranks only
     // the limit(topK) survivors (k rows on one partition), never the
@@ -669,6 +658,34 @@ object TextAnalysis {
           .orderBy(col("score").desc, col(idCol))))
       .select(col(idCol), col("rank"), col("score"))
   }
+
+  /** One (idCol, `term`) row per non-empty space-separated token of
+    * `textCol` — the corpus and query tokenization of the BM25 and hybrid
+    * paths. */
+  private def tokens(df: DataFrame, idCol: String, textCol: String,
+      term: String = "t"): DataFrame =
+    df.select(col(idCol), explode(words(col(textCol))).as(term))
+      .where(col(term) =!= "")
+
+  /** The BM25 score per `keys` group of (term, tf, df, dl, corpus stats)
+    * rows: each term scores idf·tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
+    * with the BIGINT idf `N div df`, k1 = 1.25 and b = 0.75, and the
+    * group's term scores fold left in SORTED `term` order — the exactness
+    * discipline of [[bm25TopK]]. Input columns: `term`, `__tf`, `__df`,
+    * `__dl`, `__n`, `__tot`.
+    * @return (keys…, score) */
+  private def bm25Scores(joined: DataFrame, keys: Seq[String],
+      term: String): DataFrame =
+    joined
+      .withColumn("__idf", expr("__n div __df"))
+      .withColumn("__ts",
+        col("__idf").cast("double") * (col("__tf").cast("double") * lit(2.25)) /
+          (col("__tf").cast("double") + lit(1.25) * (lit(0.25) + lit(0.75) *
+            (col("__dl").cast("double") /
+              (col("__tot").cast("double") / col("__n").cast("double"))))))
+      .groupBy(keys.map(col): _*)
+      .agg(aggregate(sort_array(collect_list(struct(col(term), col("__ts")))),
+        lit(0.0), (a, x) => a + x.getField("__ts")).as("score"))
 
   /** PER-QUERY BM25 — [[bm25TopK]]'s scoring with a (q_id, term) query
     * table instead of one global term set: the lexical arm of hybrid
@@ -704,9 +721,7 @@ object TextAnalysis {
 
   def prepareHybridCorpus(docs: DataFrame, docIdCol: String, textCol: String,
       emb: DataFrame, embIdCol: String, vecCol: String): HybridCorpus = {
-    val toks = docs.where(col(textCol).isNotNull)
-      .select(col(docIdCol), explode(words(col(textCol))).as("t"))
-      .where(col("t") =!= "")
+    val toks = tokens(docs.where(col(textCol).isNotNull), docIdCol, textCol)
     val (dl, stats, alldf) = postingsMeta(toks, docIdCol)
     HybridCorpus(docs, docIdCol, textCol, emb, embIdCol, vecCol,
       toks, dl, stats, alldf)
@@ -1111,10 +1126,9 @@ object TextAnalysis {
         // frames always read their own attempt's rows.
         val spark = batch.sparkSession
         val sub = s"/delta=$batchId"
-        val toks = batch.select(col(docIdCol), col(textCol))
-          .where(col(docIdCol).isNotNull && col(textCol).isNotNull)
-          .select(col(docIdCol), explode(words(col(textCol))).as("t"))
-          .where(col("t") =!= "")
+        val toks = tokens(batch.select(col(docIdCol), col(textCol))
+            .where(col(docIdCol).isNotNull && col(textCol).isNotNull),
+          docIdCol, textCol)
         // overlap the independent actions (guide §2.6): the vector side
         // never touches the token lineage, so it writes concurrently with
         // the toks→metadata chain; the three metadata writes over the
@@ -1156,21 +1170,11 @@ object TextAnalysis {
       .select(col("t"), col("df").as("__df"))
     val tf = hc.toks.join(broadcast(terms), Seq("t"))
       .groupBy(col(idCol), col("t")).agg(count(lit(1)).as("__tf"))
-    val scored0 = tf.join(broadcast(qt), Seq("t"))
-    val scored = (if (excludeSelf) scored0.where(col(idCol) =!= col("q_id"))
-                  else scored0)
-      .join(broadcast(dfreq), Seq("t"))
+    val cands0 = tf.join(broadcast(qt), Seq("t"))
+    val cands = if (excludeSelf) cands0.where(col(idCol) =!= col("q_id")) else cands0
+    val scored = bm25Scores(cands.join(broadcast(dfreq), Seq("t"))
       .join(hc.dl, Seq(idCol))
-      .crossJoin(broadcast(hc.stats))
-      .withColumn("__idf", expr("__n div __df"))
-      .withColumn("__ts",
-        col("__idf").cast("double") * (col("__tf").cast("double") * lit(2.25)) /
-          (col("__tf").cast("double") + lit(1.25) * (lit(0.25) + lit(0.75) *
-            (col("__dl").cast("double") /
-              (col("__tot").cast("double") / col("__n").cast("double"))))))
-      .groupBy(col("q_id"), col(idCol))
-      .agg(aggregate(sort_array(collect_list(struct(col("t"), col("__ts")))),
-        lit(0.0), (a, x) => a + x.getField("__ts")).as("score"))
+      .crossJoin(broadcast(hc.stats)), Seq("q_id", idCol), "t")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("score").desc, col(idCol))
     scored.withColumn("rank", row_number().over(w))
@@ -1254,9 +1258,7 @@ object TextAnalysis {
     * half of [[distinctiveQueryTerms]], split out so multi-serve gates can
     * tokenize the query docs once and reuse the frame across serves. */
   def queryTermFreqs(queries: DataFrame, textCol: String): DataFrame =
-    queries.where(col(textCol).isNotNull)
-      .select(col("q_id"), explode(words(col(textCol))).as("t"))
-      .where(col("t") =!= "")
+    tokens(queries.where(col(textCol).isNotNull), "q_id", textCol)
       .groupBy(col("q_id"), col("t")).agg(count(lit(1)).as("qtf"))
 
   /** Each query's `nTerms` most distinctive tokens by exact

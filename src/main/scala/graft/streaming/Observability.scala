@@ -1,6 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener.{
   QueryIdleEvent, QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
@@ -25,10 +31,38 @@ object Observability {
   def observeBatch(df: DataFrame, name: String, metrics: Seq[Column])(
       action: DataFrame => Unit): Map[String, Any] = {
     require(metrics.nonEmpty, "observeBatch needs at least one metric column")
-    val obs = Observation(name)
-    val observed = df.observe(obs, metrics.head, metrics.tail: _*)
-    action(observed)
-    obs.get
+    observed(df, name, metrics)(action)
+  }
+
+  /** Runs `action` over `df` with `metrics` observed under `name`, then
+    * waits for the metrics row of the execution that ran the observed
+    * plan. The row is read by a listener of this call's own, not through
+    * an `Observation`: that registers the session's `ObservationManager`,
+    * whose listener stays for the session's life and rethrows every later
+    * query's optimizer failure on the listener bus, logged as an
+    * `ExecutionListenerBus` ERROR. This listener ignores failures and is
+    * gone when the call returns. */
+  private def observed(df: DataFrame, name: String, metrics: Seq[Column])(
+      action: DataFrame => Unit): Map[String, Any] = {
+    val obs = df.observe(name, metrics.head, metrics.tail: _*)
+    val id = obs.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+      .queryExecution.logical.asInstanceOf[CollectMetrics].dataframeId
+    val row = Promise[Row]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.exists {
+            case c: CollectMetrics => c.name == name && c.dataframeId == id
+            case _ => false })
+          qe.observedMetrics.get(name).foreach(row.trySuccess)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val listeners = df.sparkSession.listenerManager
+    listeners.register(listener)
+    try {
+      action(obs)
+      val r = Await.result(row.future, Duration.Inf)
+      r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+    } finally listeners.unregister(listener)
   }
 
   /** Data-quality circuit breaker for `foreachBatch` sinks: the micro-batch
@@ -45,10 +79,7 @@ object Observability {
       write: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
     require(metrics.nonEmpty, "guardedForeachBatch needs at least one metric column")
     (df: DataFrame, batchId: Long) => {
-      val obs = Observation(s"graft_guard_$batchId")
-      val observed = df.observe(obs, metrics.head, metrics.tail: _*)
-      write(observed, batchId)
-      val m = obs.get
+      val m = observed(df, s"graft_guard_$batchId", metrics)(write(_, batchId))
       if (!invariant(m))
         throw new IllegalStateException(
           s"graft batch guard: invariant violated at batch $batchId: $m")

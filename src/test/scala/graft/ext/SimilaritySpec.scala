@@ -141,6 +141,9 @@ class SimilaritySpec extends SparkTestBase with org.scalatest.BeforeAndAfterEach
     val out = Similarity.bruteForceTopK(df.where(col("id") === "a"), df, "id", "id", "v", 2)
       .orderBy("rank").collect().map(r => r.getString(r.fieldIndex("n_id")))
     out.toSeq shouldBe Seq("b", "c")
+    // k = 0 used to return no rows here (and throw on long ids)
+    an[IllegalArgumentException] should be thrownBy
+      Similarity.bruteForceTopK(df.where(col("id") === "a"), df, "id", "id", "v", 0)
   }
 
   test("native cosine accepts mixed nullability (literal array vs column)") {
@@ -704,6 +707,20 @@ class SimilaritySpec extends SparkTestBase with org.scalatest.BeforeAndAfterEach
     for ((name, call) <- calls; (m, sd, np) <- Seq((2, 2, 0), (2, 2, -1), (0, 2, 2), (2, 0, 2)))
       withClue(s"$name(m=$m, subDim=$sd, nprobe=$np): ") {
         an[IllegalArgumentException] should be thrownBy call(m, sd, np)
+      }
+    // the encoders and plain PQ take no nprobe. subDim = 0 used to encode
+    // every vector as all-zero codes with a 0.0 error; m = 0 died with an
+    // unrelated analysis error
+    val pqCalls: Seq[(String, (Int, Int) => Any)] = Seq(
+      "pqEncode" -> ((m, sd) => Similarity.pqEncode(corpus, cb, "id", "v", m, sd)),
+      "pqQuantizationError" -> ((m, sd) =>
+        Similarity.pqQuantizationError(corpus, cb, "id", "v", m, sd)),
+      "residualIndex" -> ((m, sd) =>
+        Similarity.residualIndex(corpus, cents, cb, "id", "cid", "v", m, sd)),
+      "pqTopK" -> ((m, sd) => Similarity.pqTopK(qs, corpus, cb, "id", "id", "v", 3, m, sd)))
+    for ((name, call) <- pqCalls; (m, sd) <- Seq((0, 2), (2, 0), (-1, 2), (2, -1)))
+      withClue(s"$name(m=$m, subDim=$sd): ") {
+        an[IllegalArgumentException] should be thrownBy call(m, sd)
       }
   }
 

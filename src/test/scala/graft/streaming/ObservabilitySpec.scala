@@ -23,6 +23,50 @@ class ObservabilitySpec extends SparkTestBase {
     m("n_negative") shouldBe 1L
   }
 
+  test("observeBatch leaves no listener that logs a later query's optimizer failure") {
+    // a listener that rethrows a failed plan's error is logged by Spark's
+    // ExecutionListenerBus as an ERROR with a stack trace
+    val busErrors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-bus-errors", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        if (e.getLevel == org.apache.logging.log4j.Level.ERROR)
+          busErrors.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val busLog = org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.sql.util.ExecutionListenerBus")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    // registered after observeBatch's run, so its onFailure runs after any
+    // listener the run left behind: the failure has been delivered to all
+    val delivered = new java.util.concurrent.CountDownLatch(1)
+    val probe = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = ()
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        delivered.countDown()
+    }
+    Observability.observeBatch(Seq(1L, 2L).toDF("v"), "gate",
+      Seq(count(lit(1)).as("n")))(_.count()) shouldBe Map("n" -> 2L)
+    busLog.addAppender(appender)
+    spark.listenerManager.register(probe)
+    try {
+      // constant folding evaluates the out-of-bounds element_at, so the
+      // query fails while it is optimized
+      intercept[Exception] {
+        spark.range(1).select(element_at(array(lit(1)), 5).as("x")).collect()
+      }
+      delivered.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      busErrors.toArray.toSeq shouldBe empty
+    } finally {
+      spark.listenerManager.unregister(probe)
+      busLog.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
   test("guardedForeachBatch halts the query when a batch violates the invariant") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Long]
