@@ -1611,13 +1611,11 @@ private[graft] object AnalyticsCatalog {
               sqrt(col("vi").cast("double") * col("vj").cast("double")))
             .as("corr"))
         .orderBy(col("label"), col("i"), col("j"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT label, embedding::DOUBLE[] AS vec FROM embeddings),
       s AS (SELECT label, vec,
-              coalesce(list_max(list_transform(vec, x -> abs(x))), 0) / 127.0 AS scale FROM v),
-      q AS (SELECT label, CASE WHEN scale = 0
-              THEN list_transform(vec, x -> CAST(0 AS BIGINT))
-              ELSE list_transform(vec, x -> CAST(round(x / scale) AS BIGINT)) END AS codes FROM s),
+              $int8ScaleSql AS scale FROM v),
+      q AS (SELECT label, $int8CodesSql AS codes FROM s),
       e AS (SELECT label, i.i AS i, j.j AS j, codes[i.i] * codes[j.j] AS p
             FROM q CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
             CROSS JOIN (SELECT unnest(range(1, 65)) AS j) j WHERE i.i <= j.j),

@@ -40,14 +40,12 @@ private[graft] object AnnCatalog {
       Similarity.bruteForceTopK(
         emb.where(col("vec_id") < 10), emb, "vec_id", "vec_id", "embedding", 3)
         .orderBy(col("q_id"), col("rank"))
-    }, Some("""
+    }, Some(s"""
       WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 10),
       c AS (SELECT vec_id AS n_id, embedding::DOUBLE[] AS nv FROM embeddings),
       scored AS (
         SELECT q_id, n_id,
-          list_sum(list_transform(range(1, least(len(qv), len(nv)) + 1), i -> qv[i] * nv[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * qv[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(nv) + 1), i -> nv[i] * nv[i])))) AS sim
+          ${cosineSql("qv", "nv")} AS sim
         FROM q CROSS JOIN c WHERE n_id <> q_id),
       ranked AS (
         SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rank
@@ -67,7 +65,7 @@ private[graft] object AnnCatalog {
       Similarity.bucketedTopK(
         emb.where(col("vec_id") < 10), emb, "vec_id", "vec_id", "embedding", 3)
         .orderBy(col("q_id"), col("rank"))
-    }, Some("""
+    }, Some(s"""
       WITH b AS (
         SELECT vec_id, embedding::DOUBLE[] AS v,
           CAST(list_sum(list_transform(range(0, 8), i ->
@@ -75,9 +73,7 @@ private[graft] object AnnCatalog {
         FROM embeddings),
       scored AS (
         SELECT q.vec_id AS q_id, q.bucket AS bucket, c.vec_id AS n_id,
-          list_sum(list_transform(range(1, least(len(q.v), len(c.v)) + 1), i -> q.v[i] * c.v[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * q.v[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(c.v) + 1), i -> c.v[i] * c.v[i])))) AS sim
+          ${cosineSql("q.v", "c.v")} AS sim
         FROM b q JOIN b c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
         WHERE q.vec_id < 10),
       ranked AS (
@@ -95,14 +91,12 @@ private[graft] object AnnCatalog {
         emb.where(col("vec_id") < 5), emb, centroids,
         "vec_id", "vec_id", "cid", "embedding", k = 3, nprobe = 2)
         .orderBy(col("q_id"), col("rank"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
       cent AS (SELECT vec_id AS cid, vec AS c_vec FROM v WHERE vec_id % 100 = 0),
       cosd AS (
         SELECT a.vec_id AS n_id, a.vec AS n_vec, c.cid,
-          list_sum(list_transform(range(1, least(len(a.vec), len(c.c_vec)) + 1), i -> a.vec[i] * c.c_vec[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(a.vec) + 1), i -> a.vec[i] * a.vec[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(c.c_vec) + 1), i -> c.c_vec[i] * c.c_vec[i])))) AS c_sim
+          ${cosineSql("a.vec", "c.c_vec")} AS c_sim
         FROM v a CROSS JOIN cent c),
       lists AS (
         SELECT n_id, n_vec, cid FROM (
@@ -114,9 +108,7 @@ private[graft] object AnnCatalog {
           FROM cosd WHERE n_id < 5) WHERE rn <= 2),
       scored AS (
         SELECT p.q_id, l.n_id,
-          list_sum(list_transform(range(1, least(len(p.q_vec), len(l.n_vec)) + 1), i -> p.q_vec[i] * l.n_vec[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(p.q_vec) + 1), i -> p.q_vec[i] * p.q_vec[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(l.n_vec) + 1), i -> l.n_vec[i] * l.n_vec[i])))) AS sim
+          ${cosineSql("p.q_vec", "l.n_vec")} AS sim
         FROM probes p JOIN lists l ON l.cid = p.cid AND l.n_id <> p.q_id),
       ranked AS (
         SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS INT) AS rank
@@ -165,18 +157,16 @@ private[graft] object AnnCatalog {
           ext.Quantize.reconError(col("embedding"), col("deq")).as("max_err"),
           Similarity.cosine(col("embedding"), col("deq")).as("recon_cos"))
         .orderBy(col("vec_id"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (
         SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
       s AS (
         SELECT vec_id, vec,
-          coalesce(list_max(list_transform(vec, x -> abs(x))), 0) / 127.0 AS scale
+          $int8ScaleSql AS scale
         FROM v),
       q AS (
         SELECT vec_id, vec, scale,
-          CASE WHEN scale = 0
-            THEN list_transform(vec, x -> CAST(0 AS BIGINT))
-            ELSE list_transform(vec, x -> CAST(round(x / scale) AS BIGINT)) END AS codes
+          $int8CodesSql AS codes
         FROM s),
       d AS (
         SELECT vec_id, vec, scale, codes,
@@ -212,17 +202,9 @@ private[graft] object AnnCatalog {
           (col("code_sum").cast("double") / col("n").cast("double"))
             .as("centroid"))
         .orderBy(col("label"), col("pos"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT label, embedding::DOUBLE[] AS vec FROM embeddings),
-      s AS (
-        SELECT label, vec,
-          coalesce(list_max(list_transform(vec, x -> abs(x))), 0) / 127.0 AS scale
-        FROM v),
-      q AS (
-        SELECT label, CASE WHEN scale = 0
-          THEN list_transform(vec, x -> CAST(0 AS BIGINT))
-          ELSE list_transform(vec, x -> CAST(round(x / scale) AS BIGINT)) END AS codes
-        FROM s),
+      ${int8CodeCtes("label, ")},
       e AS (
         SELECT label, i, codes[i] AS c
         FROM q CROSS JOIN (SELECT unnest(range(1, 65)) AS i) r)
@@ -249,17 +231,9 @@ private[graft] object AnnCatalog {
       ext.LinAlg.gramUpperTriangle(codes, "label", "codes", 64)
         .select(col("k").as("label"), col("i"), col("j"), col("g"), col("n"))
         .orderBy(col("label"), col("i"), col("j"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT label, embedding::DOUBLE[] AS vec FROM embeddings),
-      s AS (
-        SELECT label, vec,
-          coalesce(list_max(list_transform(vec, x -> abs(x))), 0) / 127.0 AS scale
-        FROM v),
-      q AS (
-        SELECT label, CASE WHEN scale = 0
-          THEN list_transform(vec, x -> CAST(0 AS BIGINT))
-          ELSE list_transform(vec, x -> CAST(round(x / scale) AS BIGINT)) END AS codes
-        FROM s),
+      ${int8CodeCtes("label, ")},
       e AS (
         SELECT label, i.i AS i, j.j AS j, codes[i.i] * codes[j.j] AS p
         FROM q
@@ -287,17 +261,9 @@ private[graft] object AnnCatalog {
         .select(col("k").as("label"), col("i"), col("j"), col("g"),
           col("si"), col("sj"), col("n"), col("cov_num"), col("cov"))
         .orderBy(col("label"), col("i"), col("j"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT label, embedding::DOUBLE[] AS vec FROM embeddings),
-      s AS (
-        SELECT label, vec,
-          coalesce(list_max(list_transform(vec, x -> abs(x))), 0) / 127.0 AS scale
-        FROM v),
-      q AS (
-        SELECT label, CASE WHEN scale = 0
-          THEN list_transform(vec, x -> CAST(0 AS BIGINT))
-          ELSE list_transform(vec, x -> CAST(round(x / scale) AS BIGINT)) END AS codes
-        FROM s),
+      ${int8CodeCtes("label, ")},
       e AS (
         SELECT label, i.i AS i, j.j AS j, codes[i.i] * codes[j.j] AS p
         FROM q
@@ -349,17 +315,9 @@ private[graft] object AnnCatalog {
           sqrt(expr("aggregate(zip_with(ca, cb, (x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, v) -> acc + v)"))
             .as("dist"))
         .orderBy(col("label_a"), col("label_b"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT label, embedding::DOUBLE[] AS vec FROM embeddings),
-      s AS (
-        SELECT label, vec,
-          coalesce(list_max(list_transform(vec, x -> abs(x))), 0) / 127.0 AS scale
-        FROM v),
-      q AS (
-        SELECT label, CASE WHEN scale = 0
-          THEN list_transform(vec, x -> CAST(0 AS BIGINT))
-          ELSE list_transform(vec, x -> CAST(round(x / scale) AS BIGINT)) END AS codes
-        FROM s),
+      ${int8CodeCtes("label, ")},
       e AS (
         SELECT label, i, codes[i] AS c
         FROM q CROSS JOIN (SELECT unnest(range(1, 65)) AS i) r),
@@ -415,13 +373,11 @@ private[graft] object AnnCatalog {
           lit(3).as("k"),
           (col("n_hit").cast("double") / lit(3)).as("recall"))
         .orderBy(col("method"), col("q_id"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
       scored AS (
         SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-          list_sum(list_transform(range(1, least(len(q.vec), len(c.vec)) + 1), i -> q.vec[i] * c.vec[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(q.vec) + 1), i -> q.vec[i] * q.vec[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(c.vec) + 1), i -> c.vec[i] * c.vec[i])))) AS sim
+          ${cosineSql("q.vec", "c.vec")} AS sim
         FROM v q CROSS JOIN v c WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id),
       bf AS (
         SELECT q_id, n_id FROM (
@@ -434,9 +390,7 @@ private[graft] object AnnCatalog {
         FROM embeddings),
       ascored AS (
         SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-          list_sum(list_transform(range(1, least(len(q.v), len(c.v)) + 1), i -> q.v[i] * c.v[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * q.v[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(c.v) + 1), i -> c.v[i] * c.v[i])))) AS sim
+          ${cosineSql("q.v", "c.v")} AS sim
         FROM b q JOIN b c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
         WHERE q.vec_id < 10),
       ann AS (
@@ -446,9 +400,7 @@ private[graft] object AnnCatalog {
       cent AS (SELECT vec_id AS cid, vec AS c_vec FROM v WHERE vec_id % 100 = 0),
       cosd AS (
         SELECT a.vec_id AS n_id, a.vec AS n_vec, c.cid,
-          list_sum(list_transform(range(1, least(len(a.vec), len(c.c_vec)) + 1), i -> a.vec[i] * c.c_vec[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(a.vec) + 1), i -> a.vec[i] * a.vec[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(c.c_vec) + 1), i -> c.c_vec[i] * c.c_vec[i])))) AS c_sim
+          ${cosineSql("a.vec", "c.c_vec")} AS c_sim
         FROM v a CROSS JOIN cent c),
       lists AS (
         SELECT n_id, n_vec, cid FROM (
@@ -460,9 +412,7 @@ private[graft] object AnnCatalog {
           FROM cosd WHERE n_id < 10) WHERE rn <= 2),
       iscored AS (
         SELECT p.q_id, l.n_id,
-          list_sum(list_transform(range(1, least(len(p.q_vec), len(l.n_vec)) + 1), i -> p.q_vec[i] * l.n_vec[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(p.q_vec) + 1), i -> p.q_vec[i] * p.q_vec[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(l.n_vec) + 1), i -> l.n_vec[i] * l.n_vec[i])))) AS sim
+          ${cosineSql("p.q_vec", "l.n_vec")} AS sim
         FROM probes p JOIN lists l ON l.cid = p.cid AND l.n_id <> p.q_id),
       ivf AS (
         SELECT q_id, n_id FROM (
@@ -496,9 +446,7 @@ private[graft] object AnnCatalog {
         FROM mpp p JOIN mpb b ON b.tbl = p.tbl AND b.bucket = p.bucket AND b.vec_id <> p.q_id),
       mpscored AS (
         SELECT c.q_id, c.n_id,
-          list_sum(list_transform(range(1, least(len(q.vec), len(n.vec)) + 1), i -> q.vec[i] * n.vec[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(q.vec) + 1), i -> q.vec[i] * q.vec[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(n.vec) + 1), i -> n.vec[i] * n.vec[i])))) AS sim
+          ${cosineSql("q.vec", "n.vec")} AS sim
         FROM mpcand c JOIN v q ON q.vec_id = c.q_id JOIN v n ON n.vec_id = c.n_id),
       mp AS (
         SELECT q_id, n_id FROM (
@@ -530,7 +478,7 @@ private[graft] object AnnCatalog {
         emb.where(col("vec_id") < 10), emb, "vec_id", "vec_id", "embedding",
         k = 3, tables = 8, bits = 7, flips = 3)
         .orderBy(col("q_id"), col("rank"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
       mpb AS (
         SELECT tbl, vec_id, CAST(list_sum(list_transform(range(0, 7), bb ->
@@ -560,9 +508,7 @@ private[graft] object AnnCatalog {
         FROM mpp p JOIN mpb b ON b.tbl = p.tbl AND b.bucket = p.bucket AND b.vec_id <> p.q_id),
       mpscored AS (
         SELECT c.q_id, c.n_id,
-          list_sum(list_transform(range(1, least(len(q.v), len(n.v)) + 1), i -> q.v[i] * n.v[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * q.v[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * n.v[i])))) AS sim
+          ${cosineSql("q.v", "n.v")} AS sim
         FROM mpcand c JOIN v q ON q.vec_id = c.q_id JOIN v n ON n.vec_id = c.n_id)
       SELECT q_id, rank, n_id, sim FROM (
         SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rank
@@ -585,31 +531,9 @@ private[graft] object AnnCatalog {
         emb.where(col("vec_id") < 8), emb, cb,
         "vec_id", "vec_id", "embedding", k = 3, m = 4, subDim = 16)
         .orderBy(col("q_id"), col("rank"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-      subs AS (SELECT unnest(range(0, 4)) AS sub),
-      cb AS (
-        SELECT sub,
-          CAST(row_number() OVER (PARTITION BY sub ORDER BY vec_id) - 1 AS BIGINT) AS cid,
-          vec[sub*16 + 1 : sub*16 + 16] AS c_vec
-        FROM v CROSS JOIN subs WHERE vec_id % 50 = 0),
-      cd AS (
-        SELECT c.vec_id AS n_id, b.sub, b.cid,
-          list_sum(list_transform(range(1, 17), i ->
-            (c.vec[b.sub*16 + i] - b.c_vec[i]) * (c.vec[b.sub*16 + i] - b.c_vec[i]))) AS d2
-        FROM v c CROSS JOIN cb b),
-      codes AS (
-        SELECT n_id, list(cid ORDER BY sub) AS codes FROM (
-          SELECT n_id, sub, cid,
-            row_number() OVER (PARTITION BY n_id, sub ORDER BY d2, cid) AS rn
-          FROM cd) WHERE rn = 1 GROUP BY n_id),
-      ld AS (
-        SELECT q.vec_id AS q_id, b.sub, b.cid,
-          list_sum(list_transform(range(1, 17), i ->
-            (q.vec[b.sub*16 + i] - b.c_vec[i]) * (q.vec[b.sub*16 + i] - b.c_vec[i]))) AS pd
-        FROM v q CROSS JOIN cb b WHERE q.vec_id < 8),
-      lut1 AS (SELECT q_id, sub, list(pd ORDER BY cid) AS lrow FROM ld GROUP BY q_id, sub),
-      lut AS (SELECT q_id, list(lrow ORDER BY sub) AS lut FROM lut1 GROUP BY q_id),
+      ${pqCodesLutCtes},
       scored AS (
         SELECT l.q_id, c.n_id,
           list_sum(list_transform(range(0, 4), j -> l.lut[j+1][c.codes[j+1] + 1])) AS adist
@@ -640,40 +564,17 @@ private[graft] object AnnCatalog {
         .select(lit("pq").as("method"), col("bq").as("q_id"), col("n_hit"),
           lit(3).as("k"), (col("n_hit").cast("double") / lit(3)).as("recall"))
         .orderBy(col("q_id"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
       bscored AS (
         SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-          list_sum(list_transform(range(1, least(len(q.vec), len(c.vec)) + 1), i ->
-            (q.vec[i] - c.vec[i]) * (q.vec[i] - c.vec[i]))) AS d2
+          ${l2SqSql("q.vec", "c.vec")} AS d2
         FROM v q CROSS JOIN v c WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id),
       bf AS (
         SELECT q_id, n_id FROM (
           SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY d2, n_id) AS rank
           FROM bscored) t WHERE rank <= 3),
-      subs AS (SELECT unnest(range(0, 4)) AS sub),
-      cb AS (
-        SELECT sub,
-          CAST(row_number() OVER (PARTITION BY sub ORDER BY vec_id) - 1 AS BIGINT) AS cid,
-          vec[sub*16 + 1 : sub*16 + 16] AS c_vec
-        FROM v CROSS JOIN subs WHERE vec_id % 50 = 0),
-      cd AS (
-        SELECT c.vec_id AS n_id, b.sub, b.cid,
-          list_sum(list_transform(range(1, 17), i ->
-            (c.vec[b.sub*16 + i] - b.c_vec[i]) * (c.vec[b.sub*16 + i] - b.c_vec[i]))) AS d2
-        FROM v c CROSS JOIN cb b),
-      codes AS (
-        SELECT n_id, list(cid ORDER BY sub) AS codes FROM (
-          SELECT n_id, sub, cid,
-            row_number() OVER (PARTITION BY n_id, sub ORDER BY d2, cid) AS rn
-          FROM cd) WHERE rn = 1 GROUP BY n_id),
-      ld AS (
-        SELECT q.vec_id AS q_id, b.sub, b.cid,
-          list_sum(list_transform(range(1, 17), i ->
-            (q.vec[b.sub*16 + i] - b.c_vec[i]) * (q.vec[b.sub*16 + i] - b.c_vec[i]))) AS pd
-        FROM v q CROSS JOIN cb b WHERE q.vec_id < 8),
-      lut1 AS (SELECT q_id, sub, list(pd ORDER BY cid) AS lrow FROM ld GROUP BY q_id, sub),
-      lut AS (SELECT q_id, list(lrow ORDER BY sub) AS lut FROM lut1 GROUP BY q_id),
+      ${pqCodesLutCtes},
       ascored AS (
         SELECT l.q_id, c.n_id,
           list_sum(list_transform(range(0, 4), j -> l.lut[j+1][c.codes[j+1] + 1])) AS adist
@@ -702,13 +603,12 @@ private[graft] object AnnCatalog {
         "vec_id", "vec_id", "cid", "embedding",
         k = 3, m = 4, subDim = 16, nprobe = 2)
         .orderBy(col("q_id"), col("rank"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
       cent AS (SELECT vec_id AS lcid, vec AS l_vec FROM v WHERE vec_id % 100 = 0),
       ldist AS (
         SELECT a.vec_id AS n_id, c.lcid,
-          list_sum(list_transform(range(1, least(len(a.vec), len(c.l_vec)) + 1), i ->
-            (a.vec[i] - c.l_vec[i]) * (a.vec[i] - c.l_vec[i]))) AS d
+          ${l2SqSql("a.vec", "c.l_vec")} AS d
         FROM v a CROSS JOIN cent c),
       lists AS (
         SELECT n_id, lcid FROM (
@@ -718,29 +618,7 @@ private[graft] object AnnCatalog {
         SELECT n_id AS q_id, lcid FROM (
           SELECT *, row_number() OVER (PARTITION BY n_id ORDER BY d, lcid) AS rn
           FROM ldist WHERE n_id < 8) WHERE rn <= 2),
-      subs AS (SELECT unnest(range(0, 4)) AS sub),
-      cb AS (
-        SELECT sub,
-          CAST(row_number() OVER (PARTITION BY sub ORDER BY vec_id) - 1 AS BIGINT) AS cid,
-          vec[sub*16 + 1 : sub*16 + 16] AS c_vec
-        FROM v CROSS JOIN subs WHERE vec_id % 50 = 0),
-      cd AS (
-        SELECT c.vec_id AS n_id, b.sub, b.cid,
-          list_sum(list_transform(range(1, 17), i ->
-            (c.vec[b.sub*16 + i] - b.c_vec[i]) * (c.vec[b.sub*16 + i] - b.c_vec[i]))) AS d2
-        FROM v c CROSS JOIN cb b),
-      codes AS (
-        SELECT n_id, list(cid ORDER BY sub) AS codes FROM (
-          SELECT n_id, sub, cid,
-            row_number() OVER (PARTITION BY n_id, sub ORDER BY d2, cid) AS rn
-          FROM cd) WHERE rn = 1 GROUP BY n_id),
-      ld AS (
-        SELECT q.vec_id AS q_id, b.sub, b.cid,
-          list_sum(list_transform(range(1, 17), i ->
-            (q.vec[b.sub*16 + i] - b.c_vec[i]) * (q.vec[b.sub*16 + i] - b.c_vec[i]))) AS pd
-        FROM v q CROSS JOIN cb b WHERE q.vec_id < 8),
-      lut1 AS (SELECT q_id, sub, list(pd ORDER BY cid) AS lrow FROM ld GROUP BY q_id, sub),
-      lut AS (SELECT q_id, list(lrow ORDER BY sub) AS lut FROM lut1 GROUP BY q_id),
+      ${pqCodesLutCtes},
       scored AS (
         SELECT l.q_id, x.n_id,
           list_sum(list_transform(range(0, 4), j -> l.lut[j+1][x.codes[j+1] + 1])) AS adist
@@ -769,7 +647,7 @@ private[graft] object AnnCatalog {
         emb.where(col("vec_id") < 8), emb, "vec_id", "vec_id", "embedding",
         k = 3, m = 32, dim = 64, outDims = 16)
         .orderBy(col("q_id"), col("rank"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
       signs AS (
         SELECT r, list(CASE WHEN ('0x' || substr(md5(j::VARCHAR || ':' || r::VARCHAR), 1, 12))::BIGINT % 2 = 1
@@ -792,9 +670,7 @@ private[graft] object AnnCatalog {
           FROM coarse) WHERE rn <= 32),
       exact AS (
         SELECT x.q_id, x.n_id,
-          list_sum(list_transform(range(1, least(len(q.vec), len(n.vec)) + 1), i -> q.vec[i] * n.vec[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(q.vec) + 1), i -> q.vec[i] * q.vec[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(n.vec) + 1), i -> n.vec[i] * n.vec[i])))) AS sim
+          ${cosineSql("q.vec", "n.vec")} AS sim
         FROM cands x JOIN v q ON q.vec_id = x.q_id JOIN v n ON n.vec_id = x.n_id),
       ranked AS (
         SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS INT) AS rank
@@ -814,16 +690,14 @@ private[graft] object AnnCatalog {
         emb.where(col("vec_id") < 8), emb, "vec_id", "vec_id", "embedding",
         "label", k = 3)
         .orderBy(col("q_id"), col("rank"))
-    }, Some("""
+    }, Some(s"""
       WITH q AS (SELECT vec_id AS q_id, label AS q_label, embedding::DOUBLE[] AS qv
                  FROM embeddings WHERE vec_id < 8),
       c AS (SELECT vec_id AS n_id, label AS n_label, embedding::DOUBLE[] AS nv
             FROM embeddings),
       scored AS (
         SELECT q_id, q_label, n_id, n_label,
-          list_sum(list_transform(range(1, least(len(qv), len(nv)) + 1), i -> qv[i] * nv[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * qv[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(nv) + 1), i -> nv[i] * nv[i])))) AS sim
+          ${cosineSql("qv", "nv")} AS sim
         FROM q CROSS JOIN c
         WHERE n_id <> q_id AND n_label IS DISTINCT FROM q_label),
       ranked AS (
@@ -910,16 +784,14 @@ private[graft] object AnnCatalog {
           col("neg_id"), col("neg_sim"),
           (col("pos_sim") - col("neg_sim")).as("margin"))
         .orderBy(col("anchor"))
-    }, Some("""
+    }, Some(s"""
       WITH q AS (SELECT vec_id AS q_id, label AS q_label, embedding::DOUBLE[] AS qv
                  FROM embeddings WHERE vec_id < 8),
       c AS (SELECT vec_id AS n_id, label AS n_label, embedding::DOUBLE[] AS nv
             FROM embeddings),
       scored AS (
         SELECT q_id, q_label, n_id, n_label,
-          list_sum(list_transform(range(1, least(len(qv), len(nv)) + 1), i -> qv[i] * nv[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * qv[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(nv) + 1), i -> nv[i] * nv[i])))) AS sim
+          ${cosineSql("qv", "nv")} AS sim
         FROM q CROSS JOIN c WHERE n_id <> q_id),
       pos AS (
         SELECT q_id, q_label, n_id AS pos_id, sim AS pos_sim FROM (
@@ -1039,12 +911,11 @@ private[graft] object AnnCatalog {
           (col("hits_res") >= col("hits_nores")).as("res_recall_ge"),
           col("err_nano_nores"), col("err_nano_res"),
           col("quant_mse_nores"), col("quant_mse_res"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
       bscored AS (
         SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-          list_sum(list_transform(range(1, least(len(q.vec), len(c.vec)) + 1), i ->
-            (q.vec[i] - c.vec[i]) * (q.vec[i] - c.vec[i]))) AS d2
+          ${l2SqSql("q.vec", "c.vec")} AS d2
         FROM v q CROSS JOIN v c WHERE q.vec_id < 16 AND c.vec_id <> q.vec_id),
       bf AS (
         SELECT q_id, n_id FROM (
@@ -1053,8 +924,7 @@ private[graft] object AnnCatalog {
       cent AS (SELECT vec_id AS lcid, vec AS l_vec FROM v WHERE vec_id % 100 = 0),
       ldist AS (
         SELECT a.vec_id AS n_id, c.lcid,
-          list_sum(list_transform(range(1, least(len(a.vec), len(c.l_vec)) + 1), i ->
-            (a.vec[i] - c.l_vec[i]) * (a.vec[i] - c.l_vec[i]))) AS d
+          ${l2SqSql("a.vec", "c.l_vec")} AS d
         FROM v a CROSS JOIN cent c),
       assign AS (
         SELECT n_id, lcid FROM (
@@ -1104,8 +974,7 @@ private[graft] object AnnCatalog {
           FROM snores) WHERE rank <= 3),
       resid AS (
         SELECT a.n_id, a.lcid,
-          list_transform(range(1, least(len(x.vec), len(c.l_vec)) + 1),
-            i -> x.vec[i] - c.l_vec[i]) AS rv
+          ${residualSql("x.vec", "c.l_vec")} AS rv
         FROM assign a JOIN v x ON x.vec_id = a.n_id JOIN cent c ON c.lcid = a.lcid),
       cbres AS (
         SELECT sub,
@@ -1127,8 +996,7 @@ private[graft] object AnnCatalog {
         FROM (SELECT n_id, sub, min(d2) AS mind2 FROM cdres GROUP BY 1, 2)),
       qres AS (
         SELECT p.q_id, p.lcid,
-          list_transform(range(1, least(len(q.vec), len(c.l_vec)) + 1),
-            i -> q.vec[i] - c.l_vec[i]) AS rv
+          ${residualSql("q.vec", "c.l_vec")} AS rv
         FROM probes p JOIN v q ON q.vec_id = p.q_id JOIN cent c ON c.lcid = p.lcid),
       ldres AS (
         SELECT r.q_id, r.lcid, b.sub, b.cid,
@@ -1352,8 +1220,7 @@ private[graft] object AnnCatalog {
         SELECT q_id, n_id FROM (
           SELECT q.vec_id AS q_id, x.vec_id AS n_id,
             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-              list_sum(list_transform(range(1, least(len(q.vec), len(x.vec)) + 1),
-                i -> (q.vec[i] - x.vec[i]) * (q.vec[i] - x.vec[i]))), x.vec_id) AS rn
+              ${l2SqSql("q.vec", "x.vec")}, x.vec_id) AS rn
           FROM (SELECT * FROM cur WHERE vec_id < 8) q
           CROSS JOIN cur x WHERE x.vec_id <> q.vec_id) WHERE rn <= 10),
       hf AS (
@@ -1506,15 +1373,13 @@ private[graft] object AnnCatalog {
       Similarity.mmrRerank(emb.where(col("vec_id") < 6), emb,
         "vec_id", "vec_id", "embedding", k = 5, m = 10)
         .orderBy(col("q_id"), col("rank"))
-    }, Some("""
+    }, Some(s"""
       WITH RECURSIVE
       q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 6),
       c AS (SELECT vec_id AS n_id, embedding::DOUBLE[] AS nv FROM embeddings),
       scored AS (
         SELECT q_id, n_id,
-          list_sum(list_transform(range(1, least(len(qv), len(nv)) + 1), i -> qv[i] * nv[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * qv[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(nv) + 1), i -> nv[i] * nv[i])))) AS sim
+          ${cosineSql("qv", "nv")} AS sim
         FROM q CROSS JOIN c WHERE n_id <> q_id),
       cands AS (
         SELECT q_id, n_id, sim FROM (
@@ -1523,9 +1388,7 @@ private[graft] object AnnCatalog {
       cv AS (SELECT cd.q_id, cd.n_id, cd.sim, c.nv FROM cands cd JOIN c USING (n_id)),
       p AS (
         SELECT a.q_id, a.n_id AS ia, b.n_id AS ib,
-          list_sum(list_transform(range(1, least(len(a.nv), len(b.nv)) + 1), i -> a.nv[i] * b.nv[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(a.nv) + 1), i -> a.nv[i] * a.nv[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(b.nv) + 1), i -> b.nv[i] * b.nv[i])))) AS s
+          ${cosineSql("a.nv", "b.nv")} AS s
         FROM cv a JOIN cv b ON a.q_id = b.q_id AND a.n_id < b.n_id),
       sel(q_id, step, sel_ids, n_id, score) AS (
         SELECT q_id, 1, [n_id], n_id, sim / 2 FROM (
@@ -1561,23 +1424,15 @@ private[graft] object AnnCatalog {
         emb.where(col("vec_id") < 6), emb, "vec_id", "vec_id", "embedding", 10)
       val lens = T(s, dir, "documents").where(col("text").isNotNull)
         .select(col("doc_id"),
-          size(filter(TextAnalysis.words(col("text")), w => w =!= ""))
-            .cast("long").as("n_tokens"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("rank"))
-      lens.join(broadcast(cands), col("doc_id") === col("n_id"))
-        .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-        .where(col("cum_tokens") <= 256L)
-        .select(col("q_id"), col("rank"), col("doc_id"),
-          col("n_tokens"), col("cum_tokens"))
+          textTokenCount.as("n_tokens"))
+      packContext(lens, cands, 256L)
         .orderBy(col("q_id"), col("rank"))
-    }, Some("""
+    }, Some(s"""
       WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 6),
       c AS (SELECT vec_id AS n_id, embedding::DOUBLE[] AS nv FROM embeddings),
       scored AS (
         SELECT q_id, n_id,
-          list_sum(list_transform(range(1, least(len(qv), len(nv)) + 1), i -> qv[i] * nv[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * qv[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(nv) + 1), i -> nv[i] * nv[i])))) AS sim
+          ${cosineSql("qv", "nv")} AS sim
         FROM q CROSS JOIN c WHERE n_id <> q_id),
       cands AS (
         SELECT q_id, n_id, rn AS rank FROM (
@@ -1608,55 +1463,11 @@ private[graft] object AnnCatalog {
           ext.Quantize.int8Scale(col("embedding"))).as("codes"))
       val cov = ext.LinAlg.covarianceUpperTriangle(codes, "k", "codes", 64)
       ext.LinAlg.powerIterationTop(cov, 64, 6)
-    }, Some("""
+    }, Some(s"""
       WITH RECURSIVE
       v0 AS (SELECT embedding::DOUBLE[] AS vec FROM embeddings),
-      s0 AS (
-        SELECT vec,
-          coalesce(list_max(list_transform(vec, x -> abs(x))), 0) / 127.0 AS scale
-        FROM v0),
-      q0 AS (
-        SELECT CASE WHEN scale = 0
-          THEN list_transform(vec, x -> CAST(0 AS BIGINT))
-          ELSE list_transform(vec, x -> CAST(round(x / scale) AS BIGINT)) END AS codes
-        FROM s0),
-      e0 AS (
-        SELECT i.i AS i, j.j AS j, codes[i.i] * codes[j.j] AS p
-        FROM q0
-        CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
-        CROSS JOIN (SELECT unnest(range(1, 65)) AS j) j
-        WHERE i.i <= j.j),
-      g0 AS (
-        SELECT i, j, CAST(sum(p) AS BIGINT) AS g, count(*) AS n
-        FROM e0 GROUP BY 1, 2),
-      su0 AS (
-        SELECT d.d AS d, CAST(sum(codes[d.d]) AS BIGINT) AS s
-        FROM q0 CROSS JOIN (SELECT unnest(range(1, 65)) AS d) d
-        GROUP BY 1),
-      cn AS (
-        SELECT g0.i, g0.j, g0.n*g0.g - si.s*sj.s AS x
-        FROM g0 JOIN su0 si ON si.d = g0.i JOIN su0 sj ON sj.d = g0.j),
-      m AS (
-        SELECT i, j, x FROM cn
-        UNION ALL
-        SELECT j AS i, i AS j, x FROM cn WHERE i <> j),
-      sc AS (
-        SELECT least(100000, 4611686018427387903 // greatest(1, 64 * max(abs(x)))) AS sv
-        FROM m),
-      pw(step, vl) AS (
-        SELECT 0, list_transform(range(1, 65), i -> CAST(1 AS BIGINT))
-        UNION ALL
-        SELECT step + 1,
-          list(CASE WHEN w < 0 THEN -(abs(w) // dv) ELSE abs(w) // dv END ORDER BY i)
-        FROM (
-          SELECT step, i, w, max(abs(w)) OVER () // sv + 1 AS dv
-          FROM (
-            SELECT p.step, m.i, CAST(sum(m.x * p.vl[m.j]) AS BIGINT) AS w
-            FROM pw p CROSS JOIN m
-            WHERE p.step < 6
-            GROUP BY p.step, m.i) t
-          CROSS JOIN sc)
-        GROUP BY step)
+      ${int8CodeCtes("", "v0", "s0", "q0")},
+      ${powerIterationCtes}
       SELECT d.i AS dim, vl[d.i] AS v
       FROM pw CROSS JOIN (SELECT unnest(range(1, 65)) AS i) d
       WHERE step = 6
@@ -1741,55 +1552,11 @@ private[graft] object AnnCatalog {
             .orderBy(abs(col("centered")).desc, col("vec_id"))))
         .select(col("vec_id"), col("rank"), col("p"), col("centered"))
         .orderBy(col("rank"))
-    }, Some("""
+    }, Some(s"""
       WITH RECURSIVE
       v0 AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-      s0 AS (
-        SELECT vec_id, vec,
-          coalesce(list_max(list_transform(vec, x -> abs(x))), 0) / 127.0 AS scale
-        FROM v0),
-      q0 AS (
-        SELECT vec_id, CASE WHEN scale = 0
-          THEN list_transform(vec, x -> CAST(0 AS BIGINT))
-          ELSE list_transform(vec, x -> CAST(round(x / scale) AS BIGINT)) END AS codes
-        FROM s0),
-      e0 AS (
-        SELECT i.i AS i, j.j AS j, codes[i.i] * codes[j.j] AS p
-        FROM q0
-        CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
-        CROSS JOIN (SELECT unnest(range(1, 65)) AS j) j
-        WHERE i.i <= j.j),
-      g0 AS (
-        SELECT i, j, CAST(sum(p) AS BIGINT) AS g, count(*) AS n
-        FROM e0 GROUP BY 1, 2),
-      su0 AS (
-        SELECT d.d AS d, CAST(sum(codes[d.d]) AS BIGINT) AS s
-        FROM q0 CROSS JOIN (SELECT unnest(range(1, 65)) AS d) d
-        GROUP BY 1),
-      cn AS (
-        SELECT g0.i, g0.j, g0.n*g0.g - si.s*sj.s AS x
-        FROM g0 JOIN su0 si ON si.d = g0.i JOIN su0 sj ON sj.d = g0.j),
-      m AS (
-        SELECT i, j, x FROM cn
-        UNION ALL
-        SELECT j AS i, i AS j, x FROM cn WHERE i <> j),
-      sc AS (
-        SELECT least(100000, 4611686018427387903 // greatest(1, 64 * max(abs(x)))) AS sv
-        FROM m),
-      pw(step, vl) AS (
-        SELECT 0, list_transform(range(1, 65), i -> CAST(1 AS BIGINT))
-        UNION ALL
-        SELECT step + 1,
-          list(CASE WHEN w < 0 THEN -(abs(w) // dv) ELSE abs(w) // dv END ORDER BY i)
-        FROM (
-          SELECT step, i, w, max(abs(w)) OVER () // sv + 1 AS dv
-          FROM (
-            SELECT p.step, m.i, CAST(sum(m.x * p.vl[m.j]) AS BIGINT) AS w
-            FROM pw p CROSS JOIN m
-            WHERE p.step < 6
-            GROUP BY p.step, m.i) t
-          CROSS JOIN sc)
-        GROUP BY step),
+      ${int8CodeCtes("vec_id, ", "v0", "s0", "q0")},
+      ${powerIterationCtes},
       dirv AS (SELECT vl FROM pw WHERE step = 6),
       proj AS (
         SELECT vec_id,
@@ -1832,18 +1599,10 @@ private[graft] object AnnCatalog {
         .select(col("i"), col("j"), col("g"), col("si"), col("sj"),
           col("n"), col("cov_num"), col("cov"))
         .orderBy(col("i"), col("j"))
-    }, Some("""
+    }, Some(s"""
       WITH v AS (
         SELECT embedding::DOUBLE[] AS vec FROM embeddings WHERE vec_id % 2 = 1),
-      s0 AS (
-        SELECT vec,
-          coalesce(list_max(list_transform(vec, x -> abs(x))), 0) / 127.0 AS scale
-        FROM v),
-      q0 AS (
-        SELECT CASE WHEN scale = 0
-          THEN list_transform(vec, x -> CAST(0 AS BIGINT))
-          ELSE list_transform(vec, x -> CAST(round(x / scale) AS BIGINT)) END AS codes
-        FROM s0),
+      ${int8CodeCtes("", scaled = "s0", coded = "q0")},
       e0 AS (
         SELECT i.i AS i, j.j AS j, codes[i.i] * codes[j.j] AS p
         FROM q0
@@ -1989,47 +1748,7 @@ private[graft] object AnnCatalog {
         .orderBy(col("q_id"), col("rank"))
     }, Some(s"""
       WITH RECURSIVE
-      cur AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-      subs AS (SELECT unnest(range(0, 4)) AS sub),
-      ${residualServeCtes("x", "cur", "", stride = 5, nprobe = 4, k = 10,
-        qPred = "n_id < 6")},
-      cands AS (
-        SELECT q_id, n_id, -adist AS rel FROM (
-          SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY adist, n_id) AS rn
-          FROM xscored) WHERE rn <= 10),
-      sdc AS (
-        SELECT a.sub, a.cid AS ca, b.cid AS cb,
-          list_sum(list_transform(range(1, 17), i ->
-            (a.c_vec[i] - b.c_vec[i]) * (a.c_vec[i] - b.c_vec[i]))) AS d
-        FROM xcb a JOIN xcb b ON a.sub = b.sub),
-      cc AS (SELECT cd.q_id, cd.n_id, cd.rel, x.codes
-             FROM cands cd JOIN xcodes x USING (n_id)),
-      pparts AS (
-        SELECT a.q_id, a.n_id AS ia, b.n_id AS ib, s.sub, t.d
-        FROM cc a JOIN cc b ON a.q_id = b.q_id AND a.n_id < b.n_id
-        CROSS JOIN subs s
-        JOIN sdc t ON t.sub = s.sub
-          AND t.ca = a.codes[s.sub + 1] AND t.cb = b.codes[s.sub + 1]),
-      p AS (
-        SELECT q_id, ia, ib, list_sum(list(d ORDER BY sub)) AS dist
-        FROM pparts GROUP BY 1, 2, 3),
-      sel(q_id, step, sel_ids, n_id, score) AS (
-        SELECT q_id, 1, [n_id], n_id, rel / 2 FROM (
-          SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY rel DESC, n_id) AS rn
-          FROM cands) WHERE rn = 1
-        UNION ALL
-        SELECT q_id, step, list_append(sel_ids, n_id), n_id, score FROM (
-          SELECT x.*, row_number() OVER (PARTITION BY x.q_id ORDER BY x.score DESC, x.n_id) AS rn
-          FROM (
-            SELECT s.q_id, s.step + 1 AS step, s.sel_ids, c2.n_id,
-              c2.rel / 2 + min(p.dist) / 2 AS score
-            FROM sel s
-            JOIN cands c2 ON c2.q_id = s.q_id AND NOT list_contains(s.sel_ids, c2.n_id)
-            JOIN p ON p.q_id = s.q_id
-              AND ((p.ia = c2.n_id AND list_contains(s.sel_ids, p.ib))
-                OR (p.ib = c2.n_id AND list_contains(s.sel_ids, p.ia)))
-            WHERE s.step < 5
-            GROUP BY s.q_id, s.step, s.sel_ids, c2.n_id, c2.rel) x) WHERE rn = 1)
+      ${sdcMmrSelCtes}
       SELECT q_id, CAST(step AS INT) AS rank, n_id, score FROM sel
       ORDER BY q_id, rank""")),
 
@@ -2063,58 +1782,12 @@ private[graft] object AnnCatalog {
         k = 5, m = 4, subDim = 16)
       val lens = docs.where(col("text").isNotNull)
         .select(col("doc_id"),
-          size(filter(TextAnalysis.words(col("text")), w => w =!= ""))
-            .cast("long").as("n_tokens"))
-      lens.join(broadcast(sel), col("doc_id") === col("n_id"))
-        .withColumn("cum_tokens", sum(col("n_tokens")).over(
-          Window.partitionBy(col("q_id")).orderBy(col("rank"))))
-        .where(col("cum_tokens") <= 192L)
-        .select(col("q_id"), col("rank"), col("doc_id"),
-          col("n_tokens"), col("cum_tokens"), col("score"))
+          textTokenCount.as("n_tokens"))
+      packContext(lens, sel, 192L, "score")
         .orderBy(col("q_id"), col("rank"))
     }, Some(s"""
       WITH RECURSIVE
-      cur AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-      subs AS (SELECT unnest(range(0, 4)) AS sub),
-      ${residualServeCtes("x", "cur", "", stride = 5, nprobe = 4, k = 10,
-        qPred = "n_id < 6")},
-      cands AS (
-        SELECT q_id, n_id, -adist AS rel FROM (
-          SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY adist, n_id) AS rn
-          FROM xscored) WHERE rn <= 10),
-      sdc AS (
-        SELECT a.sub, a.cid AS ca, b.cid AS cb,
-          list_sum(list_transform(range(1, 17), i ->
-            (a.c_vec[i] - b.c_vec[i]) * (a.c_vec[i] - b.c_vec[i]))) AS d
-        FROM xcb a JOIN xcb b ON a.sub = b.sub),
-      cc AS (SELECT cd.q_id, cd.n_id, cd.rel, x.codes
-             FROM cands cd JOIN xcodes x USING (n_id)),
-      pparts AS (
-        SELECT a.q_id, a.n_id AS ia, b.n_id AS ib, s.sub, t.d
-        FROM cc a JOIN cc b ON a.q_id = b.q_id AND a.n_id < b.n_id
-        CROSS JOIN subs s
-        JOIN sdc t ON t.sub = s.sub
-          AND t.ca = a.codes[s.sub + 1] AND t.cb = b.codes[s.sub + 1]),
-      p AS (
-        SELECT q_id, ia, ib, list_sum(list(d ORDER BY sub)) AS dist
-        FROM pparts GROUP BY 1, 2, 3),
-      sel(q_id, step, sel_ids, n_id, score) AS (
-        SELECT q_id, 1, [n_id], n_id, rel / 2 FROM (
-          SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY rel DESC, n_id) AS rn
-          FROM cands) WHERE rn = 1
-        UNION ALL
-        SELECT q_id, step, list_append(sel_ids, n_id), n_id, score FROM (
-          SELECT x.*, row_number() OVER (PARTITION BY x.q_id ORDER BY x.score DESC, x.n_id) AS rn
-          FROM (
-            SELECT s.q_id, s.step + 1 AS step, s.sel_ids, c2.n_id,
-              c2.rel / 2 + min(p.dist) / 2 AS score
-            FROM sel s
-            JOIN cands c2 ON c2.q_id = s.q_id AND NOT list_contains(s.sel_ids, c2.n_id)
-            JOIN p ON p.q_id = s.q_id
-              AND ((p.ia = c2.n_id AND list_contains(s.sel_ids, p.ib))
-                OR (p.ib = c2.n_id AND list_contains(s.sel_ids, p.ia)))
-            WHERE s.step < 5
-            GROUP BY s.q_id, s.step, s.sel_ids, c2.n_id, c2.rel) x) WHERE rn = 1),
+      ${sdcMmrSelCtes},
       lens AS (
         SELECT doc_id, len(list_filter(string_split(text, ' '), w -> w <> ''))::BIGINT AS n_tokens
         FROM documents WHERE text IS NOT NULL),

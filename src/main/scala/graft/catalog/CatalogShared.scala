@@ -489,7 +489,404 @@ private[graft] object CatalogShared {
       (col("event_id") % 97).as("amount"),
       (lit(1) + col("user_id") % 19).cast("long").as("round"))
 
+  /** The number of non-empty whitespace words of the `text` column, as a
+    * LONG (the oracle's `len(list_filter(string_split(text, ' '), w -> w <> ''))`). */
+  def textTokenCount: Column =
+    size(filter(TextAnalysis.words(col("text")), w => w =!= "")).cast("long")
+
+  /** RAG context packing: each query's selected docs (`sel`: q_id, n_id,
+    * rank, ...) joined to their token counts (`lens`: doc_id, n_tokens),
+    * the running `cum_tokens` over (q_id, rank), and the docs that fit in
+    * `budget` tokens as (q_id, rank, doc_id, n_tokens, cum_tokens, `extra`). */
+  def packContext(lens: DataFrame, sel: DataFrame, budget: Long,
+      extra: String*): DataFrame =
+    lens.join(broadcast(sel), col("doc_id") === col("n_id"))
+      .withColumn("cum_tokens", sum(col("n_tokens")).over(
+        Window.partitionBy(col("q_id")).orderBy(col("rank"))))
+      .where(col("cum_tokens") <= budget)
+      .select((Seq("q_id", "rank", "doc_id", "n_tokens", "cum_tokens") ++ extra).map(col): _*)
+
   type Q = (SparkSession, String) => DataFrame
+
+  // ------------------------------------------------ oracle SQL fragments
+  // Named pieces the oracle texts interpolate; each substitutes only CTE
+  // names, source relations, predicates or constants. OracleTextSpec holds
+  // every assembled text to its committed hash.
+
+  /** The word-trigram shingles of `text` as a DuckDB list ([[Dedup]]'s
+    * shingler): the whole text when it has fewer than three words. */
+  val trigramShinglesSql: String = """CASE WHEN len(string_split(text, ' ')) >= 3
+            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
+                 i -> concat_ws(' ', string_split(text, ' ')[i],
+                                     string_split(text, ' ')[i + 1],
+                                     string_split(text, ' ')[i + 2]))
+            ELSE [text] END"""
+
+  /** The MinHash LSH signature chain over `from`'s (doc_id, text):
+    * trigram shingles (CTE `docs`) → 48-bit md5 hashes → 16 permutation
+    * minima (CTE `mh`) → 4 bands of 4 in `sigs(doc_id, band, sig)`. A
+    * CTE list with no `WITH` and no trailing comma. */
+  def minhashSigCtes(docs: String = "docs", mh: String = "mh",
+      from: String = "documents"): String = s"""
+      $docs AS (
+        SELECT doc_id,
+          $trigramShinglesSql AS sh
+        FROM $from),
+      hashed AS (
+        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
+        FROM $docs),
+      $mh AS (
+        SELECT doc_id, p,
+          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
+        FROM hashed CROSS JOIN range(16) t(p)),
+      sigs AS (
+        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
+        FROM $mh GROUP BY doc_id, p // 4)"""
+
+  /** The LSH candidate pairs `(id_a, id_b)`, id_a < id_b, of docs sharing a
+    * band signature in [[minhashSigCtes]]' `sigs`. */
+  val lshPairsSql: String = """SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id"""
+
+  /** [[minhashSigCtes]] → LSH `pairs` → symmetric `edges` → the recursive
+    * reachability `reach(id, label)` whose per-id min label is the
+    * connected component. Needs `WITH RECURSIVE`. */
+  val minhashReachCtes: String = s"""${minhashSigCtes()},
+      pairs AS (
+        $lshPairsSql),
+      edges AS (
+        SELECT id_a AS src, id_b AS dst FROM pairs
+        UNION SELECT id_b, id_a FROM pairs),
+      reach AS (
+        SELECT src AS id, src AS label FROM edges
+        UNION
+        SELECT e.src, r.label FROM edges e JOIN reach r ON e.dst = r.id)"""
+
+  /** The 48-bit SimHash of `text`'s words ([[Dedup.simhashTable]]): bit b is
+    * set when more words' md5-48 hashes have it set than not. */
+  val simhashSql: String = """CAST(list_sum(list_transform(range(0, 48), b ->
+            CASE WHEN list_sum(list_transform(string_split(text, ' '), w ->
+                   2 * ((('0x' || substr(md5(w), 1, 12))::BIGINT >> b) & 1) - 1)) > 0
+                 THEN (1::BIGINT << b) ELSE 0::BIGINT END)) AS BIGINT)"""
+
+  /** The exact cosine of the DuckDB lists `a` and `b`, each sum folded left
+    * to right as [[Similarity.cosine]] folds it. */
+  def cosineSql(a: String, b: String): String =
+    s"""list_sum(list_transform(range(1, least(len($a), len($b)) + 1), i -> $a[i] * $b[i])) /
+            (sqrt(list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $a[i]))) *
+             sqrt(list_sum(list_transform(range(1, len($b) + 1), i -> $b[i] * $b[i]))))"""
+
+  /** The squared L2 distance of the lists `a` and `b`, folded left to right. */
+  def l2SqSql(a: String, b: String): String =
+    s"""list_sum(list_transform(range(1, least(len($a), len($b)) + 1), i ->
+            ($a[i] - $b[i]) * ($a[i] - $b[i])))"""
+
+  /** The residual `a - b` of the lists `a` and `b`, element by element. */
+  def residualSql(a: String, b: String): String =
+    s"""list_transform(range(1, least(len($a), len($b)) + 1),
+            i -> $a[i] - $b[i])"""
+
+  /** [[ext.Quantize.int8Scale]] of the list `vec`: max |x| / 127. */
+  val int8ScaleSql: String = "coalesce(list_max(list_transform(vec, x -> abs(x))), 0) / 127.0"
+
+  /** [[ext.Quantize.int8Codes]] of `vec` at `scale`: round(x / scale), all
+    * zero when the scale is 0. */
+  val int8CodesSql: String = """CASE WHEN scale = 0
+          THEN list_transform(vec, x -> CAST(0 AS BIGINT))
+          ELSE list_transform(vec, x -> CAST(round(x / scale) AS BIGINT)) END"""
+
+  /** The int8 quantization of `src(<cols> vec)`: per-vector scale (CTE
+    * `scaled`), then codes (CTE `coded`, columns `<cols> codes`). `cols` is
+    * the carried column list with its trailing comma, or empty. */
+  def int8CodeCtes(cols: String, src: String = "v", scaled: String = "s",
+      coded: String = "q"): String = s"""
+      $scaled AS (
+        SELECT ${cols}vec,
+          $int8ScaleSql AS scale
+        FROM $src),
+      $coded AS (
+        SELECT ${cols}$int8CodesSql AS codes
+        FROM $scaled)"""
+
+  /** The flat PQ model over `v(vec_id, vec)` (4 subspaces of 16, stride-50
+    * codebook `cb`, nearest-codeword `codes(n_id, codes)`) and the ADC
+    * lookup table `lut(q_id, lut)` of the queries vec_id < 8. */
+  val pqCodesLutCtes: String = """
+      subs AS (SELECT unnest(range(0, 4)) AS sub),
+      cb AS (
+        SELECT sub,
+          CAST(row_number() OVER (PARTITION BY sub ORDER BY vec_id) - 1 AS BIGINT) AS cid,
+          vec[sub*16 + 1 : sub*16 + 16] AS c_vec
+        FROM v CROSS JOIN subs WHERE vec_id % 50 = 0),
+      cd AS (
+        SELECT c.vec_id AS n_id, b.sub, b.cid,
+          list_sum(list_transform(range(1, 17), i ->
+            (c.vec[b.sub*16 + i] - b.c_vec[i]) * (c.vec[b.sub*16 + i] - b.c_vec[i]))) AS d2
+        FROM v c CROSS JOIN cb b),
+      codes AS (
+        SELECT n_id, list(cid ORDER BY sub) AS codes FROM (
+          SELECT n_id, sub, cid,
+            row_number() OVER (PARTITION BY n_id, sub ORDER BY d2, cid) AS rn
+          FROM cd) WHERE rn = 1 GROUP BY n_id),
+      ld AS (
+        SELECT q.vec_id AS q_id, b.sub, b.cid,
+          list_sum(list_transform(range(1, 17), i ->
+            (q.vec[b.sub*16 + i] - b.c_vec[i]) * (q.vec[b.sub*16 + i] - b.c_vec[i]))) AS pd
+        FROM v q CROSS JOIN cb b WHERE q.vec_id < 8),
+      lut1 AS (SELECT q_id, sub, list(pd ORDER BY cid) AS lrow FROM ld GROUP BY q_id, sub),
+      lut AS (SELECT q_id, list(lrow ORDER BY sub) AS lut FROM lut1 GROUP BY q_id)"""
+
+  /** Six rounds of integer power iteration over the int8 codes in
+    * `q0(codes)`: the exact covariance numerators `m(i, j, x)` of the 64
+    * dims, then `pw(step, vl)` ([[ext.LinAlg.powerIterationTop]]). */
+  val powerIterationCtes: String = """
+      e0 AS (
+        SELECT i.i AS i, j.j AS j, codes[i.i] * codes[j.j] AS p
+        FROM q0
+        CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
+        CROSS JOIN (SELECT unnest(range(1, 65)) AS j) j
+        WHERE i.i <= j.j),
+      g0 AS (
+        SELECT i, j, CAST(sum(p) AS BIGINT) AS g, count(*) AS n
+        FROM e0 GROUP BY 1, 2),
+      su0 AS (
+        SELECT d.d AS d, CAST(sum(codes[d.d]) AS BIGINT) AS s
+        FROM q0 CROSS JOIN (SELECT unnest(range(1, 65)) AS d) d
+        GROUP BY 1),
+      cn AS (
+        SELECT g0.i, g0.j, g0.n*g0.g - si.s*sj.s AS x
+        FROM g0 JOIN su0 si ON si.d = g0.i JOIN su0 sj ON sj.d = g0.j),
+      m AS (
+        SELECT i, j, x FROM cn
+        UNION ALL
+        SELECT j AS i, i AS j, x FROM cn WHERE i <> j),
+      sc AS (
+        SELECT least(100000, 4611686018427387903 // greatest(1, 64 * max(abs(x)))) AS sv
+        FROM m),
+      pw(step, vl) AS (
+        SELECT 0, list_transform(range(1, 65), i -> CAST(1 AS BIGINT))
+        UNION ALL
+        SELECT step + 1,
+          list(CASE WHEN w < 0 THEN -(abs(w) // dv) ELSE abs(w) // dv END ORDER BY i)
+        FROM (
+          SELECT step, i, w, max(abs(w)) OVER () // sv + 1 AS dv
+          FROM (
+            SELECT p.step, m.i, CAST(sum(m.x * p.vl[m.j]) AS BIGINT) AS w
+            FROM pw p CROSS JOIN m
+            WHERE p.step < 6
+            GROUP BY p.step, m.i) t
+          CROSS JOIN sc)
+        GROUP BY step)"""
+
+  /** The residual-IVFADC candidates (k = 10, nprobe = 4, stride-5
+    * codebook) of the queries vec_id < 6 as `cands(q_id, n_id, rel)`,
+    * and their SDC MMR selection `sel(q_id, step, sel_ids, n_id, score)`
+    * of 5 ([[Similarity.mmrSelectSdc]]). Needs `WITH RECURSIVE`. */
+  val sdcMmrSelCtes: String = s"""
+      cur AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+      subs AS (SELECT unnest(range(0, 4)) AS sub),
+      ${residualServeCtes("x", "cur", "", stride = 5, nprobe = 4, k = 10,
+        qPred = "n_id < 6")},
+      cands AS (
+        SELECT q_id, n_id, -adist AS rel FROM (
+          SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY adist, n_id) AS rn
+          FROM xscored) WHERE rn <= 10),
+      sdc AS (
+        SELECT a.sub, a.cid AS ca, b.cid AS cb,
+          list_sum(list_transform(range(1, 17), i ->
+            (a.c_vec[i] - b.c_vec[i]) * (a.c_vec[i] - b.c_vec[i]))) AS d
+        FROM xcb a JOIN xcb b ON a.sub = b.sub),
+      cc AS (SELECT cd.q_id, cd.n_id, cd.rel, x.codes
+             FROM cands cd JOIN xcodes x USING (n_id)),
+      pparts AS (
+        SELECT a.q_id, a.n_id AS ia, b.n_id AS ib, s.sub, t.d
+        FROM cc a JOIN cc b ON a.q_id = b.q_id AND a.n_id < b.n_id
+        CROSS JOIN subs s
+        JOIN sdc t ON t.sub = s.sub
+          AND t.ca = a.codes[s.sub + 1] AND t.cb = b.codes[s.sub + 1]),
+      p AS (
+        SELECT q_id, ia, ib, list_sum(list(d ORDER BY sub)) AS dist
+        FROM pparts GROUP BY 1, 2, 3),
+      sel(q_id, step, sel_ids, n_id, score) AS (
+        SELECT q_id, 1, [n_id], n_id, rel / 2 FROM (
+          SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY rel DESC, n_id) AS rn
+          FROM cands) WHERE rn = 1
+        UNION ALL
+        SELECT q_id, step, list_append(sel_ids, n_id), n_id, score FROM (
+          SELECT x.*, row_number() OVER (PARTITION BY x.q_id ORDER BY x.score DESC, x.n_id) AS rn
+          FROM (
+            SELECT s.q_id, s.step + 1 AS step, s.sel_ids, c2.n_id,
+              c2.rel / 2 + min(p.dist) / 2 AS score
+            FROM sel s
+            JOIN cands c2 ON c2.q_id = s.q_id AND NOT list_contains(s.sel_ids, c2.n_id)
+            JOIN p ON p.q_id = s.q_id
+              AND ((p.ia = c2.n_id AND list_contains(s.sel_ids, p.ib))
+                OR (p.ib = c2.n_id AND list_contains(s.sel_ids, p.ia)))
+            WHERE s.step < 5
+            GROUP BY s.q_id, s.step, s.sel_ids, c2.n_id, c2.rel) x) WHERE rn = 1)"""
+
+  /** The BM25 lexical arm over the tokens `toks(doc_id, t)`: doc lengths
+    * `dl`, corpus `stats`, document frequencies `alldf`, each query doc's
+    * (doc_id < 6) 4 most distinctive terms `qterms`, and its top 10 by BM25
+    * (k1 1.25, b 0.75) as `lrank(q_id, n_id, rank_l)`. */
+  val bm25LexRankCtes: String = """
+      dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks GROUP BY 1),
+      stats AS (SELECT count(*)::BIGINT AS n, CAST(sum(dl) AS BIGINT) AS tot FROM dl),
+      alldf AS (
+        SELECT t, count(*)::BIGINT AS df
+        FROM (SELECT DISTINCT doc_id, t FROM toks) GROUP BY 1),
+      qterms AS (
+        SELECT q_id, t FROM (
+          SELECT q.doc_id AS q_id, q.t,
+            row_number() OVER (PARTITION BY q.doc_id
+              ORDER BY q.qtf * (n // df) DESC, q.t) AS rn
+          FROM (SELECT doc_id, t, count(*)::BIGINT AS qtf FROM toks
+                WHERE doc_id < 6 GROUP BY 1, 2) q
+          JOIN alldf USING (t) CROSS JOIN stats) WHERE rn <= 4),
+      tq AS (SELECT DISTINCT t FROM qterms),
+      tf AS (
+        SELECT doc_id, t, count(*)::BIGINT AS tfv
+        FROM toks JOIN tq USING (t) GROUP BY 1, 2),
+      lexs AS (
+        SELECT q_id, n_id,
+          list_sum(list_transform(
+            list(struct_pack(t := t, s := s) ORDER BY t), x -> x.s)) AS score
+        FROM (
+          SELECT qt.q_id, tf.doc_id AS n_id, tf.t,
+            (n // df)::DOUBLE * (tfv::DOUBLE * 2.25) /
+              (tfv::DOUBLE + 1.25 * (0.25 + 0.75 *
+                (dl::DOUBLE / (tot::DOUBLE / n::DOUBLE)))) AS s
+          FROM tf JOIN qterms qt USING (t) JOIN alldf USING (t)
+          JOIN dl ON dl.doc_id = tf.doc_id CROSS JOIN stats
+          WHERE tf.doc_id <> qt.q_id)
+        GROUP BY 1, 2),
+      lrank AS (
+        SELECT q_id, n_id, rank_l FROM (
+          SELECT q_id, n_id,
+            row_number() OVER (PARTITION BY q_id ORDER BY score DESC, n_id) AS rank_l
+          FROM lexs) WHERE rank_l <= 10)"""
+
+  /** The Gopher quality signals of the non-null documents: `t(doc_id, text,
+    * ws)`, per-doc word count, mean word length, stopword and alphabetic
+    * ratios (`sc`), and the duplicate-3-gram fraction (`rep(doc_id,
+    * dup_frac)`) ([[TextAnalysis.gopherRules]]). */
+  val gopherSignalCtes: String = """
+      t AS (
+        SELECT doc_id, text, string_split(text, ' ') AS ws
+        FROM documents WHERE text IS NOT NULL),
+      sc AS (
+        SELECT doc_id,
+          CAST(len(ws) AS BIGINT) AS n_words,
+          CAST(len(text) - (len(ws) - 1) AS DOUBLE) / len(ws) AS avg_word_len,
+          CAST(len(list_filter(ws, w ->
+            list_contains(['the','a','of','and','to','in'], w))) AS DOUBLE)
+            / len(ws) AS stopword_ratio,
+          CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS DOUBLE)
+            / len(ws) AS alpha_ratio
+        FROM t),
+      sh AS (
+        SELECT doc_id, unnest(CASE WHEN len(ws) >= 3
+          THEN list_transform(generate_series(1, len(ws) - 2),
+               i -> concat_ws(' ', ws[i], ws[i + 1], ws[i + 2]))
+          ELSE [text] END) AS g
+        FROM t),
+      gp AS (SELECT doc_id, g, count(*) AS c FROM sh GROUP BY 1, 2),
+      rep AS (
+        SELECT doc_id,
+          (CAST(sum(c) AS BIGINT) - count(*))::DOUBLE / CAST(sum(c) AS BIGINT) AS dup_frac
+        FROM gp GROUP BY doc_id)"""
+
+  /** The conditional bigram-LM counts of [[TextAnalysis.bigramSurprisal]]
+    * at k = 20: per-doc bigram instances and the rare ones, P(w2|w1) < 1/20,
+    * as `per(doc_id, n_bigrams, n_rare)`; docs with no bigram are absent. */
+  val bigramSurprisalCtes: String = """
+      flat AS (
+        SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM (
+          SELECT doc_id,
+            unnest(list_transform(generate_series(1, len(string_split(text, ' ')) - 1),
+              i -> struct_pack(w1 := string_split(text, ' ')[i],
+                               w2 := string_split(text, ' ')[i + 1]))) AS bg
+          FROM documents
+          WHERE text IS NOT NULL AND len(string_split(text, ' ')) >= 2)),
+      dc AS (SELECT doc_id, w1, w2, count(*) AS ndc FROM flat GROUP BY 1, 2, 3),
+      bc AS (SELECT w1, w2, sum(ndc)::BIGINT AS c12 FROM dc GROUP BY 1, 2),
+      hc AS (SELECT w1, sum(c12)::BIGINT AS c1 FROM bc GROUP BY 1),
+      flag AS (
+        SELECT b.w1, b.w2, (b.c12 * 20 < h.c1) AS rare
+        FROM bc b JOIN hc h USING (w1)),
+      per AS (
+        SELECT d.doc_id,
+               sum(d.ndc)::BIGINT AS n_bigrams,
+               sum(CASE WHEN g.rare THEN d.ndc ELSE 0 END)::BIGINT AS n_rare
+        FROM dc d JOIN flag g ON d.w1 = g.w1 AND d.w2 = g.w2
+        GROUP BY 1)"""
+
+  /** Connected components over the cosine near-dup `pairs(id_a, id_b)` of
+    * `assign(id, cid, sim_c)` as `lab(id, cid, sim_c, comp)`, an id's comp
+    * being the least id it reaches. Needs `WITH RECURSIVE`. */
+  val semdedupKeepCtes: String = """
+      e AS (SELECT id_a AS src, id_b AS dst FROM pairs
+            UNION SELECT id_b, id_a FROM pairs),
+      reach AS (
+        SELECT src AS id, src AS label FROM e
+        UNION
+        SELECT e.src, r.label FROM e JOIN reach r ON e.dst = r.id),
+      cc AS (SELECT id, min(label) AS comp FROM reach GROUP BY id),
+      lab AS (
+        SELECT a.id, a.cid, a.sim_c, COALESCE(cc.comp, a.id) AS comp
+        FROM assign a LEFT JOIN cc ON cc.id = a.id)"""
+
+  /** The fixed 32-token segments of the non-null documents
+    * ([[Dedup.segmentDedup]]): `t(doc_id, toks, n)`, the segments
+    * `inst(doc_id, pos, seg)` and their md5-48 hashes `h(.., wh)`. */
+  val segmentHashCtes: String = """
+      t AS (
+        SELECT doc_id, string_split(text, ' ') AS toks,
+               len(string_split(text, ' ')) AS n
+        FROM documents WHERE text IS NOT NULL),
+      inst AS (
+        SELECT doc_id, CAST(start // 32 AS BIGINT) AS pos,
+          array_to_string(list_slice(toks, start + 1, start + 32), ' ') AS seg
+        FROM (SELECT doc_id, toks, n,
+                unnest(generate_series(0, n - 1, 32)) AS start FROM t)),
+      h AS (
+        SELECT doc_id, pos, seg,
+          ('0x' || substr(md5(seg), 1, 12))::BIGINT AS wh
+        FROM inst)"""
+
+  /** The residual-IVFADC encode and query side over `assign(n_id, lcid)`,
+    * `resid(n_id, lcid, rv)`, the codebook `cb` and `ldist`: residual PQ
+    * `codes(n_id, codes)`, each query's (n_id < 8) 2 probed lists, and the
+    * per-probe LUTs `lut(q_id, lcid, lut)` of its residuals against the
+    * query vectors in `vecs(vec_id, vec)`. */
+  def residualLutCtes(vecs: String): String = s"""
+      cd AS (
+        SELECT r.n_id, b.sub, b.cid,
+          list_sum(list_transform(range(1, 17), i ->
+            (r.rv[b.sub*16 + i] - b.c_vec[i]) * (r.rv[b.sub*16 + i] - b.c_vec[i]))) AS d2
+        FROM resid r CROSS JOIN cb b),
+      codes AS (
+        SELECT n_id, list(cid ORDER BY sub) AS codes FROM (
+          SELECT n_id, sub, cid,
+            row_number() OVER (PARTITION BY n_id, sub ORDER BY d2, cid) AS rn
+          FROM cd) WHERE rn = 1 GROUP BY n_id),
+      probes AS (
+        SELECT n_id AS q_id, lcid FROM (
+          SELECT *, row_number() OVER (PARTITION BY n_id ORDER BY d, lcid) AS rn
+          FROM ldist WHERE n_id < 8) WHERE rn <= 2),
+      qres AS (
+        SELECT p.q_id, p.lcid,
+          ${residualSql("q.vec", "c.l_vec")} AS rv
+        FROM probes p JOIN $vecs q ON q.vec_id = p.q_id JOIN cent c ON c.lcid = p.lcid),
+      ld AS (
+        SELECT r.q_id, r.lcid, b.sub, b.cid,
+          list_sum(list_transform(range(1, 17), i ->
+            (r.rv[b.sub*16 + i] - b.c_vec[i]) * (r.rv[b.sub*16 + i] - b.c_vec[i]))) AS pd
+        FROM qres r CROSS JOIN cb b),
+      lut1 AS (SELECT q_id, lcid, sub, list(pd ORDER BY cid) AS lrow
+               FROM ld GROUP BY q_id, lcid, sub),
+      lut AS (SELECT q_id, lcid, list(lrow ORDER BY sub) AS lut
+              FROM lut1 GROUP BY q_id, lcid)"""
 
   /** Unrolled DuckDB replay of `k` BPE merge iterations over the documents
     * word dict (the [[ext.Bpe]] semantics verbatim): w0 is the delimited
@@ -637,8 +1034,7 @@ private[graft] object CatalogShared {
       ${tag}cent AS (SELECT vec_id AS lcid, vec AS l_vec FROM $centSrc WHERE vec_id % 100 = 0),
       ${tag}ldist AS (
         SELECT a.vec_id AS n_id, c.lcid,
-          list_sum(list_transform(range(1, least(len(a.vec), len(c.l_vec)) + 1), i ->
-            (a.vec[i] - c.l_vec[i]) * (a.vec[i] - c.l_vec[i]))) AS d
+          ${l2SqSql("a.vec", "c.l_vec")} AS d
         FROM cur a CROSS JOIN ${tag}cent c),
       ${tag}assign AS (
         SELECT n_id, lcid FROM (
@@ -646,8 +1042,7 @@ private[graft] object CatalogShared {
           FROM ${tag}ldist) WHERE rn = 1),
       ${tag}resid AS (
         SELECT a.n_id, a.lcid,
-          list_transform(range(1, least(len(x.vec), len(c.l_vec)) + 1),
-            i -> x.vec[i] - c.l_vec[i]) AS rv
+          ${residualSql("x.vec", "c.l_vec")} AS rv
         FROM ${tag}assign a JOIN cur x ON x.vec_id = a.n_id
         JOIN ${tag}cent c ON c.lcid = a.lcid),
       ${tag}cb AS (
@@ -671,8 +1066,7 @@ private[graft] object CatalogShared {
           FROM ${tag}ldist WHERE $qPred) WHERE rn <= $nprobe),
       ${tag}qres AS (
         SELECT p.q_id, p.lcid,
-          list_transform(range(1, least(len(q.vec), len(c.l_vec)) + 1),
-            i -> q.vec[i] - c.l_vec[i]) AS rv
+          ${residualSql("q.vec", "c.l_vec")} AS rv
         FROM ${tag}probes p JOIN cur q ON q.vec_id = p.q_id
         JOIN ${tag}cent c ON c.lcid = p.lcid),
       ${tag}ld AS (
@@ -809,6 +1203,34 @@ private[graft] object CatalogShared {
     * VERBATIM by q261 and q264. */
   val wordpieceOracleCtes: String = wordpieceOracleCtesTagged(50, "")
 
+  /** WordPiece's greedy longest-match over the distinct `words(word)` as
+    * the recursive CTE `name(word, pos, np, nu)`: a word is done at
+    * pos = length + 1 with np pieces, nu of them unknown. Pieces come from
+    * `initv(piece)` (word start) and `contv(piece)` (continuation), the
+    * candidate lengths from `lens(ll)` ([[wordpieceOracleCtesTagged]]). */
+  def wordpieceUnkCte(name: String, words: String, initv: String = "initv",
+      contv: String = "contv"): String = s"""
+      $name(word, pos, np, nu) AS (
+        SELECT word, CAST(1 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)
+        FROM $words
+        UNION ALL
+        SELECT word,
+          CASE WHEN bl IS NULL THEN CAST(length(word) + 1 AS BIGINT)
+               ELSE pos + bl END,
+          np + 1,
+          nu + CASE WHEN bl IS NULL THEN 1 ELSE 0 END
+        FROM (
+          SELECT t.word, t.pos, t.np, t.nu,
+            max(CASE WHEN
+              ((t.pos = 1 AND substr(t.word, CAST(t.pos AS INT), CAST(l.ll AS INT))
+                  IN (SELECT piece FROM $initv))
+               OR (t.pos > 1 AND substr(t.word, CAST(t.pos AS INT), CAST(l.ll AS INT))
+                  IN (SELECT piece FROM $contv)))
+              THEN l.ll END) AS bl
+          FROM $name t CROSS JOIN lens l
+          WHERE t.pos <= length(t.word) AND l.ll <= length(t.word) - t.pos + 1
+          GROUP BY t.word, t.pos, t.np, t.nu))"""
+
   /** Hybrid RRF retrieval replay — per-query BM25 (query terms = each
     * query doc's 4 most distinctive by exact tf·(N div df)), the exact
     * cosine vector arm, and the 1/(60+rank) fusion — shared VERBATIM by
@@ -840,41 +1262,7 @@ private[graft] object CatalogShared {
         SELECT doc_id, unnest(list_filter(string_split($textExpr, ' '), w -> w <> '')) AS t
         FROM documents WHERE text IS NOT NULL
           AND (${corpusPred.replace("__id__", "doc_id")})),
-      dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks GROUP BY 1),
-      stats AS (SELECT count(*)::BIGINT AS n, CAST(sum(dl) AS BIGINT) AS tot FROM dl),
-      alldf AS (
-        SELECT t, count(*)::BIGINT AS df
-        FROM (SELECT DISTINCT doc_id, t FROM toks) GROUP BY 1),
-      qterms AS (
-        SELECT q_id, t FROM (
-          SELECT q.doc_id AS q_id, q.t,
-            row_number() OVER (PARTITION BY q.doc_id
-              ORDER BY q.qtf * (n // df) DESC, q.t) AS rn
-          FROM (SELECT doc_id, t, count(*)::BIGINT AS qtf FROM toks
-                WHERE doc_id < 6 GROUP BY 1, 2) q
-          JOIN alldf USING (t) CROSS JOIN stats) WHERE rn <= 4),
-      tq AS (SELECT DISTINCT t FROM qterms),
-      tf AS (
-        SELECT doc_id, t, count(*)::BIGINT AS tfv
-        FROM toks JOIN tq USING (t) GROUP BY 1, 2),
-      lexs AS (
-        SELECT q_id, n_id,
-          list_sum(list_transform(
-            list(struct_pack(t := t, s := s) ORDER BY t), x -> x.s)) AS score
-        FROM (
-          SELECT qt.q_id, tf.doc_id AS n_id, tf.t,
-            (n // df)::DOUBLE * (tfv::DOUBLE * 2.25) /
-              (tfv::DOUBLE + 1.25 * (0.25 + 0.75 *
-                (dl::DOUBLE / (tot::DOUBLE / n::DOUBLE)))) AS s
-          FROM tf JOIN qterms qt USING (t) JOIN alldf USING (t)
-          JOIN dl ON dl.doc_id = tf.doc_id CROSS JOIN stats
-          WHERE tf.doc_id <> qt.q_id)
-        GROUP BY 1, 2),
-      lrank AS (
-        SELECT q_id, n_id, rank_l FROM (
-          SELECT q_id, n_id,
-            row_number() OVER (PARTITION BY q_id ORDER BY score DESC, n_id) AS rank_l
-          FROM lexs) WHERE rank_l <= 10),
+      ${bm25LexRankCtes},
       ${if (vrankCtes != null) vrankCtes else s"""
       qv AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qvv FROM embeddings WHERE vec_id < 6),
       cv AS (SELECT vec_id AS n_id, embedding::DOUBLE[] AS nv FROM embeddings
@@ -885,9 +1273,7 @@ private[graft] object CatalogShared {
             row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rank_v
           FROM (
             SELECT q_id, n_id,
-              list_sum(list_transform(range(1, least(len(qvv), len(nv)) + 1), i -> qvv[i] * nv[i])) /
-                (sqrt(list_sum(list_transform(range(1, len(qvv) + 1), i -> qvv[i] * qvv[i]))) *
-                 sqrt(list_sum(list_transform(range(1, len(nv) + 1), i -> nv[i] * nv[i])))) AS sim
+              ${cosineSql("qvv", "nv")} AS sim
             FROM qv CROSS JOIN cv WHERE n_id <> q_id)) WHERE rank_v <= 10)"""},
       fused AS (
         SELECT coalesce(v.q_id, l.q_id) AS q_id, coalesce(v.n_id, l.n_id) AS n_id,
@@ -933,15 +1319,10 @@ private[graft] object CatalogShared {
 
   /** The exact 3-gram Jaccard pair replay shared VERBATIM by q25 (all-pairs)
     * and q161 (prefix-filtered candidates: the filter must drop no pair). */
-  val ngramJaccardOracle: String = """
+  val ngramJaccardOracle: String = s"""
       WITH docs AS (
         SELECT doc_id, lang,
-          list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END) AS sh
+          list_distinct($trigramShinglesSql) AS sh
         FROM documents),
       pairs AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -954,62 +1335,16 @@ private[graft] object CatalogShared {
 
   /** The near-duplicate cluster replay shared VERBATIM by q41 (iterative
     * connected components) and q153 (star components). */
-  val dedupClustersOracle: String = """
-      WITH RECURSIVE docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, src AS label FROM edges
-        UNION
-        SELECT e.src, r.label FROM edges e JOIN reach r ON e.dst = r.id)
+  val dedupClustersOracle: String = s"""
+      WITH RECURSIVE ${minhashReachCtes}
       SELECT id AS doc_id, min(label) AS cluster_id,
              (id = min(label)) AS is_keeper
       FROM reach GROUP BY id ORDER BY doc_id"""
 
   /** The increment-vs-corpus near-duplicate replay shared VERBATIM by q47
     * (batch) and q188 (the streamed increment against the stored buckets). */
-  val incrementalDedupOracle: String = """
-      WITH docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4)
+  val incrementalDedupOracle: String = s"""
+      WITH ${minhashSigCtes()}
       SELECT DISTINCT n.doc_id AS new_id, c.doc_id AS corpus_id
       FROM sigs n JOIN sigs c ON n.band = c.band AND n.sig = c.sig
       WHERE n.doc_id > 350 AND c.doc_id <= 350
@@ -1017,24 +1352,14 @@ private[graft] object CatalogShared {
 
   /** The benchmark-decontamination replay shared VERBATIM by q51 (exact
     * n-gram join) and q193 (the Bloom-filter prefilter must drop no hit). */
-  val decontaminateOracle: String = """
+  val decontaminateOracle: String = s"""
       WITH cg AS (
         SELECT DISTINCT doc_id, gram FROM (
-          SELECT doc_id, unnest(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END) AS gram
+          SELECT doc_id, unnest($trigramShinglesSql) AS gram
           FROM documents WHERE doc_id % 17 <> 0)),
       eg AS (
         SELECT DISTINCT gram FROM (
-          SELECT unnest(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END) AS gram
+          SELECT unnest($trigramShinglesSql) AS gram
           FROM documents WHERE doc_id % 17 = 0)),
       hits AS (
         SELECT doc_id, count(*) AS n_shared FROM cg JOIN eg USING (gram) GROUP BY 1)
@@ -1119,31 +1444,8 @@ private[graft] object CatalogShared {
 
   /** The curation attrition-funnel replay (language, Gopher quality, exact
     * dedup verdicts) shared VERBATIM by q227 (batch) and q228 (stream). */
-  val curationFunnelOracle: String = """
-      WITH t AS (
-        SELECT doc_id, text, string_split(text, ' ') AS ws
-        FROM documents WHERE text IS NOT NULL),
-      sc AS (
-        SELECT doc_id,
-          CAST(len(ws) AS BIGINT) AS n_words,
-          CAST(len(text) - (len(ws) - 1) AS DOUBLE) / len(ws) AS avg_word_len,
-          CAST(len(list_filter(ws, w ->
-            list_contains(['the','a','of','and','to','in'], w))) AS DOUBLE)
-            / len(ws) AS stopword_ratio,
-          CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS DOUBLE)
-            / len(ws) AS alpha_ratio
-        FROM t),
-      sh AS (
-        SELECT doc_id, unnest(CASE WHEN len(ws) >= 3
-          THEN list_transform(generate_series(1, len(ws) - 2),
-               i -> concat_ws(' ', ws[i], ws[i + 1], ws[i + 2]))
-          ELSE [text] END) AS g
-        FROM t),
-      gp AS (SELECT doc_id, g, count(*) AS c FROM sh GROUP BY 1, 2),
-      rep AS (
-        SELECT doc_id,
-          (CAST(sum(c) AS BIGINT) - count(*))::DOUBLE / CAST(sum(c) AS BIGINT) AS dup_frac
-        FROM gp GROUP BY doc_id),
+  val curationFunnelOracle: String = s"""
+      WITH ${gopherSignalCtes},
       q AS (
         SELECT sc.doc_id,
           (sc.n_words >= 50 AND sc.n_words <= 100000)
@@ -1198,45 +1500,11 @@ private[graft] object CatalogShared {
     * shared VERBATIM by q269 (batch flagship) and q275 (the per-micro-batch
     * streaming serve of the same pipeline; every stage is per-query
     * independent, so union-over-any-split ≡ one-shot). */
-  val ragPipelineOracle: String = """
+  val ragPipelineOracle: String = s"""
       WITH RECURSIVE toks AS (
         SELECT doc_id, unnest(list_filter(string_split(text, ' '), w -> w <> '')) AS t
         FROM documents WHERE text IS NOT NULL),
-      dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks GROUP BY 1),
-      stats AS (SELECT count(*)::BIGINT AS n, CAST(sum(dl) AS BIGINT) AS tot FROM dl),
-      alldf AS (
-        SELECT t, count(*)::BIGINT AS df
-        FROM (SELECT DISTINCT doc_id, t FROM toks) GROUP BY 1),
-      qterms AS (
-        SELECT q_id, t FROM (
-          SELECT q.doc_id AS q_id, q.t,
-            row_number() OVER (PARTITION BY q.doc_id
-              ORDER BY q.qtf * (n // df) DESC, q.t) AS rn
-          FROM (SELECT doc_id, t, count(*)::BIGINT AS qtf FROM toks
-                WHERE doc_id < 6 GROUP BY 1, 2) q
-          JOIN alldf USING (t) CROSS JOIN stats) WHERE rn <= 4),
-      tq AS (SELECT DISTINCT t FROM qterms),
-      tf AS (
-        SELECT doc_id, t, count(*)::BIGINT AS tfv
-        FROM toks JOIN tq USING (t) GROUP BY 1, 2),
-      lexs AS (
-        SELECT q_id, n_id,
-          list_sum(list_transform(
-            list(struct_pack(t := t, s := s) ORDER BY t), x -> x.s)) AS score
-        FROM (
-          SELECT qt.q_id, tf.doc_id AS n_id, tf.t,
-            (n // df)::DOUBLE * (tfv::DOUBLE * 2.25) /
-              (tfv::DOUBLE + 1.25 * (0.25 + 0.75 *
-                (dl::DOUBLE / (tot::DOUBLE / n::DOUBLE)))) AS s
-          FROM tf JOIN qterms qt USING (t) JOIN alldf USING (t)
-          JOIN dl ON dl.doc_id = tf.doc_id CROSS JOIN stats
-          WHERE tf.doc_id <> qt.q_id)
-        GROUP BY 1, 2),
-      lrank AS (
-        SELECT q_id, n_id, rank_l FROM (
-          SELECT q_id, n_id,
-            row_number() OVER (PARTITION BY q_id ORDER BY score DESC, n_id) AS rank_l
-          FROM lexs) WHERE rank_l <= 10),
+      ${bm25LexRankCtes},
       qv AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qvv FROM embeddings WHERE vec_id < 6),
       cv AS (SELECT vec_id AS n_id, embedding::DOUBLE[] AS nv FROM embeddings),
       vrank AS (
@@ -1245,9 +1513,7 @@ private[graft] object CatalogShared {
             row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rank_v
           FROM (
             SELECT q_id, n_id,
-              list_sum(list_transform(range(1, least(len(qvv), len(nv)) + 1), i -> qvv[i] * nv[i])) /
-                (sqrt(list_sum(list_transform(range(1, len(qvv) + 1), i -> qvv[i] * qvv[i]))) *
-                 sqrt(list_sum(list_transform(range(1, len(nv) + 1), i -> nv[i] * nv[i])))) AS sim
+              ${cosineSql("qvv", "nv")} AS sim
             FROM qv CROSS JOIN cv WHERE n_id <> q_id)) WHERE rank_v <= 10),
       fused AS (
         SELECT coalesce(v.q_id, l.q_id) AS q_id, coalesce(v.n_id, l.n_id) AS n_id,
@@ -1258,9 +1524,7 @@ private[graft] object CatalogShared {
       cvf AS (SELECT f.q_id, f.n_id, f.rel, c.nv FROM fused f JOIN cv c USING (n_id)),
       p AS (
         SELECT a.q_id, a.n_id AS ia, b.n_id AS ib,
-          list_sum(list_transform(range(1, least(len(a.nv), len(b.nv)) + 1), i -> a.nv[i] * b.nv[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(a.nv) + 1), i -> a.nv[i] * a.nv[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(b.nv) + 1), i -> b.nv[i] * b.nv[i])))) AS s
+          ${cosineSql("a.nv", "b.nv")} AS s
         FROM cvf a JOIN cvf b ON a.q_id = b.q_id AND a.n_id < b.n_id),
       sel(q_id, step, sel_ids, n_id, score) AS (
         SELECT q_id, 1, [n_id], n_id, rel / 2 FROM (
@@ -1370,8 +1634,7 @@ private[graft] object CatalogShared {
       cent AS (SELECT vec_id AS lcid, vec AS l_vec FROM v WHERE vec_id % 100 = 0),
       ldist AS (
         SELECT a.vec_id AS n_id, c.lcid,
-          list_sum(list_transform(range(1, least(len(a.vec), len(c.l_vec)) + 1), i ->
-            (a.vec[i] - c.l_vec[i]) * (a.vec[i] - c.l_vec[i]))) AS d
+          ${l2SqSql("a.vec", "c.l_vec")} AS d
         FROM v a CROSS JOIN cent c),
       assign AS (
         SELECT n_id, lcid FROM (
@@ -1379,8 +1642,7 @@ private[graft] object CatalogShared {
           FROM ldist) WHERE rn = 1),
       resid AS (
         SELECT a.n_id, a.lcid,
-          list_transform(range(1, least(len(x.vec), len(c.l_vec)) + 1),
-            i -> x.vec[i] - c.l_vec[i]) AS rv
+          ${residualSql("x.vec", "c.l_vec")} AS rv
         FROM assign a JOIN v x ON x.vec_id = a.n_id JOIN cent c ON c.lcid = a.lcid),
       subs AS (SELECT unnest(range(0, 4)) AS sub),
       cb AS (
@@ -1388,34 +1650,7 @@ private[graft] object CatalogShared {
           CAST(row_number() OVER (PARTITION BY sub ORDER BY n_id) - 1 AS BIGINT) AS cid,
           rv[sub*16 + 1 : sub*16 + 16] AS c_vec
         FROM resid CROSS JOIN subs WHERE n_id % 50 = 0),
-      cd AS (
-        SELECT r.n_id, b.sub, b.cid,
-          list_sum(list_transform(range(1, 17), i ->
-            (r.rv[b.sub*16 + i] - b.c_vec[i]) * (r.rv[b.sub*16 + i] - b.c_vec[i]))) AS d2
-        FROM resid r CROSS JOIN cb b),
-      codes AS (
-        SELECT n_id, list(cid ORDER BY sub) AS codes FROM (
-          SELECT n_id, sub, cid,
-            row_number() OVER (PARTITION BY n_id, sub ORDER BY d2, cid) AS rn
-          FROM cd) WHERE rn = 1 GROUP BY n_id),
-      probes AS (
-        SELECT n_id AS q_id, lcid FROM (
-          SELECT *, row_number() OVER (PARTITION BY n_id ORDER BY d, lcid) AS rn
-          FROM ldist WHERE n_id < 8) WHERE rn <= 2),
-      qres AS (
-        SELECT p.q_id, p.lcid,
-          list_transform(range(1, least(len(q.vec), len(c.l_vec)) + 1),
-            i -> q.vec[i] - c.l_vec[i]) AS rv
-        FROM probes p JOIN v q ON q.vec_id = p.q_id JOIN cent c ON c.lcid = p.lcid),
-      ld AS (
-        SELECT r.q_id, r.lcid, b.sub, b.cid,
-          list_sum(list_transform(range(1, 17), i ->
-            (r.rv[b.sub*16 + i] - b.c_vec[i]) * (r.rv[b.sub*16 + i] - b.c_vec[i]))) AS pd
-        FROM qres r CROSS JOIN cb b),
-      lut1 AS (SELECT q_id, lcid, sub, list(pd ORDER BY cid) AS lrow
-               FROM ld GROUP BY q_id, lcid, sub),
-      lut AS (SELECT q_id, lcid, list(lrow ORDER BY sub) AS lut
-              FROM lut1 GROUP BY q_id, lcid),
+      ${residualLutCtes("v")},
       scored AS (
         SELECT l.q_id, a.n_id,
           list_sum(list_transform(range(0, 4), j -> l.lut[j+1][x.codes[j+1] + 1])) AS adist
@@ -1448,8 +1683,7 @@ private[graft] object CatalogShared {
       subs AS (SELECT unnest(range(0, 4)) AS sub),
       mldist AS (
         SELECT a.vec_id AS n_id, c.lcid,
-          list_sum(list_transform(range(1, least(len(a.vec), len(c.l_vec)) + 1), i ->
-            (a.vec[i] - c.l_vec[i]) * (a.vec[i] - c.l_vec[i]))) AS d
+          ${l2SqSql("a.vec", "c.l_vec")} AS d
         FROM v a CROSS JOIN cent c),
       massign AS (
         SELECT n_id, lcid FROM (
@@ -1457,8 +1691,7 @@ private[graft] object CatalogShared {
           FROM mldist) WHERE rn = 1),
       mresid AS (
         SELECT a.n_id, a.lcid,
-          list_transform(range(1, least(len(x.vec), len(c.l_vec)) + 1),
-            i -> x.vec[i] - c.l_vec[i]) AS rv
+          ${residualSql("x.vec", "c.l_vec")} AS rv
         FROM massign a JOIN v x ON x.vec_id = a.n_id JOIN cent c ON c.lcid = a.lcid),
       cb AS (
         SELECT sub,
@@ -1467,8 +1700,7 @@ private[graft] object CatalogShared {
         FROM mresid CROSS JOIN subs WHERE n_id % 50 = 0),
       ldist AS (
         SELECT a.vec_id AS n_id, c.lcid,
-          list_sum(list_transform(range(1, least(len(a.vec), len(c.l_vec)) + 1), i ->
-            (a.vec[i] - c.l_vec[i]) * (a.vec[i] - c.l_vec[i]))) AS d
+          ${l2SqSql("a.vec", "c.l_vec")} AS d
         FROM cur a CROSS JOIN cent c),
       assign AS (
         SELECT n_id, lcid FROM (
@@ -1476,37 +1708,9 @@ private[graft] object CatalogShared {
           FROM ldist) WHERE rn = 1),
       resid AS (
         SELECT a.n_id, a.lcid,
-          list_transform(range(1, least(len(x.vec), len(c.l_vec)) + 1),
-            i -> x.vec[i] - c.l_vec[i]) AS rv
+          ${residualSql("x.vec", "c.l_vec")} AS rv
         FROM assign a JOIN cur x ON x.vec_id = a.n_id JOIN cent c ON c.lcid = a.lcid),
-      cd AS (
-        SELECT r.n_id, b.sub, b.cid,
-          list_sum(list_transform(range(1, 17), i ->
-            (r.rv[b.sub*16 + i] - b.c_vec[i]) * (r.rv[b.sub*16 + i] - b.c_vec[i]))) AS d2
-        FROM resid r CROSS JOIN cb b),
-      codes AS (
-        SELECT n_id, list(cid ORDER BY sub) AS codes FROM (
-          SELECT n_id, sub, cid,
-            row_number() OVER (PARTITION BY n_id, sub ORDER BY d2, cid) AS rn
-          FROM cd) WHERE rn = 1 GROUP BY n_id),
-      probes AS (
-        SELECT n_id AS q_id, lcid FROM (
-          SELECT *, row_number() OVER (PARTITION BY n_id ORDER BY d, lcid) AS rn
-          FROM ldist WHERE n_id < 8) WHERE rn <= 2),
-      qres AS (
-        SELECT p.q_id, p.lcid,
-          list_transform(range(1, least(len(q.vec), len(c.l_vec)) + 1),
-            i -> q.vec[i] - c.l_vec[i]) AS rv
-        FROM probes p JOIN cur q ON q.vec_id = p.q_id JOIN cent c ON c.lcid = p.lcid),
-      ld AS (
-        SELECT r.q_id, r.lcid, b.sub, b.cid,
-          list_sum(list_transform(range(1, 17), i ->
-            (r.rv[b.sub*16 + i] - b.c_vec[i]) * (r.rv[b.sub*16 + i] - b.c_vec[i]))) AS pd
-        FROM qres r CROSS JOIN cb b),
-      lut1 AS (SELECT q_id, lcid, sub, list(pd ORDER BY cid) AS lrow
-               FROM ld GROUP BY q_id, lcid, sub),
-      lut AS (SELECT q_id, lcid, list(lrow ORDER BY sub) AS lut
-              FROM lut1 GROUP BY q_id, lcid),
+      ${residualLutCtes("cur")},
       scored AS (
         SELECT l.q_id, a.n_id,
           list_sum(list_transform(range(0, 4), j -> l.lut[j+1][x.codes[j+1] + 1])) AS adist

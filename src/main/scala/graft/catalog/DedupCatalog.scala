@@ -56,40 +56,18 @@ private[graft] object DedupCatalog {
     ("q23_minhash_lsh", (s, dir) => {
       Dedup.minhashCandidatePairs(T(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("id_a"), col("id_b"))
-    }, Some("""
-      WITH docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4)
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
+    }, Some(s"""
+      WITH ${minhashSigCtes()}
+      $lshPairsSql
       ORDER BY id_a, id_b""")),
 
 
     ("q24_simhash", (s, dir) => {
       Dedup.simhashTable(T(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
-    }, Some("""
+    }, Some(s"""
       SELECT doc_id,
-        CAST(list_sum(list_transform(range(0, 48), b ->
-          CASE WHEN list_sum(list_transform(string_split(text, ' '), w ->
-                 2 * ((('0x' || substr(md5(w), 1, 12))::BIGINT >> b) & 1) - 1)) > 0
-               THEN (1::BIGINT << b) ELSE 0::BIGINT END)) AS BIGINT) AS simhash
+        $simhashSql AS simhash
       FROM documents ORDER BY doc_id""")),
 
 
@@ -107,7 +85,7 @@ private[graft] object DedupCatalog {
     ("q26_cosine_dup_pairs", (s, dir) => {
       Similarity.cosineDupPairs(T(s, dir, "embeddings"), "vec_id", "embedding", 0.2)
         .orderBy(col("id_a"), col("id_b"))
-    }, Some("""
+    }, Some(s"""
       WITH b AS (
         SELECT vec_id, embedding::DOUBLE[] AS v,
           CAST(list_sum(list_transform(range(0, 8), i ->
@@ -115,9 +93,7 @@ private[graft] object DedupCatalog {
         FROM embeddings),
       pairs AS (
         SELECT a.vec_id AS id_a, c.vec_id AS id_b,
-          list_sum(list_transform(range(1, least(len(a.v), len(c.v)) + 1), i -> a.v[i] * c.v[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * a.v[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(c.v) + 1), i -> c.v[i] * c.v[i])))) AS sim
+          ${cosineSql("a.v", "c.v")} AS sim
         FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id)
       SELECT id_a, id_b, sim FROM pairs WHERE sim >= 0.2
       ORDER BY id_a, id_b""")),
@@ -161,36 +137,8 @@ private[graft] object DedupCatalog {
       Dedup.dedupCorpus(T(s, dir, "documents"), "doc_id", "text", col("n_chars"))
         .select(col("doc_id"), col("cluster_id"), col("n_chars"))
         .orderBy(col("doc_id"))
-    }, Some("""
-      WITH RECURSIVE docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, src AS label FROM edges
-        UNION
-        SELECT e.src, r.label FROM edges e JOIN reach r ON e.dst = r.id),
+    }, Some(s"""
+      WITH RECURSIVE ${minhashReachCtes},
       clusters AS (
         SELECT id AS doc_id, min(label) AS cluster_id FROM reach GROUP BY id),
       joined AS (
@@ -266,13 +214,10 @@ private[graft] object DedupCatalog {
     ("q84_simhash_pairs", (s, dir) => {
       Dedup.simhashCandidatePairs(T(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("id_a"), col("id_b"))
-    }, Some("""
+    }, Some(s"""
       WITH sim AS (
         SELECT doc_id,
-          CAST(list_sum(list_transform(range(0, 48), b ->
-            CASE WHEN list_sum(list_transform(string_split(text, ' '), w ->
-                   2 * ((('0x' || substr(md5(w), 1, 12))::BIGINT >> b) & 1) - 1)) > 0
-                 THEN (1::BIGINT << b) ELSE 0::BIGINT END)) AS BIGINT) AS simhash
+          $simhashSql AS simhash
         FROM documents),
       posted AS (
         SELECT t.band, (simhash >> (t.band * 12)) & 4095 AS sig, doc_id, simhash
@@ -407,35 +352,13 @@ private[graft] object DedupCatalog {
             .as("n_both"),
           sum(when(col("s").isNull, 1L).otherwise(0L)).as("n_minhash_only"),
           sum(when(col("m").isNull, 1L).otherwise(0L)).as("n_simhash_only"))
-    }, Some("""
-      WITH docs3 AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs3),
-      mhx AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mhx GROUP BY doc_id, p // 4),
+    }, Some(s"""
+      WITH ${minhashSigCtes("docs3", "mhx")},
       mpairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
+        $lshPairsSql),
       sim AS (
         SELECT doc_id,
-          CAST(list_sum(list_transform(range(0, 48), b ->
-            CASE WHEN list_sum(list_transform(string_split(text, ' '), w ->
-                   2 * ((('0x' || substr(md5(w), 1, 12))::BIGINT >> b) & 1) - 1)) > 0
-                 THEN (1::BIGINT << b) ELSE 0::BIGINT END)) AS BIGINT) AS simhash
+          $simhashSql AS simhash
         FROM documents),
       posted AS (
         SELECT t.band, (simhash >> (t.band * 12)) & 4095 AS sig, doc_id, simhash
@@ -510,29 +433,10 @@ private[graft] object DedupCatalog {
           (col("n_shared").cast("double") /
             (col("na") + col("nb") - col("n_shared")).cast("double")).as("jaccard"))
         .orderBy(col("id_a"), col("id_b"))
-    }, Some("""
-      WITH docs3 AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs3),
-      mhx AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mhx GROUP BY doc_id, p // 4),
+    }, Some(s"""
+      WITH ${minhashSigCtes("docs3", "mhx")},
       mpairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
+        $lshPairsSql),
       agree AS (
         SELECT j.id_a, j.id_b,
                CAST(sum(CASE WHEN a.m = b.m THEN 1 ELSE 0 END) AS BIGINT) AS n_agree
@@ -600,29 +504,10 @@ private[graft] object DedupCatalog {
           col("n_pairs").cast("double") /
             sum(col("n_pairs")).over(tot).cast("double"))
         .orderBy(col("src_lo"), col("src_hi"))
-    }, Some("""
-      WITH docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4),
+    }, Some(s"""
+      WITH ${minhashSigCtes()},
       mpairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
+        $lshPairsSql),
       lab AS (
         SELECT least(da.source, db.source) AS src_lo,
                greatest(da.source, db.source) AS src_hi, count(*) AS n_pairs
@@ -661,36 +546,8 @@ private[graft] object DedupCatalog {
           sum(col("n_chars")).as("chars_total"),
           sum(when(col("rn") > 1, col("n_chars")).otherwise(lit(0L))).as("chars_dropped"))
         .orderBy(col("cluster_id"))
-    }, Some("""
-      WITH RECURSIVE docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, src AS label FROM edges
-        UNION
-        SELECT e.src, r.label FROM edges e JOIN reach r ON e.dst = r.id),
+    }, Some(s"""
+      WITH RECURSIVE ${minhashReachCtes},
       clus AS (SELECT id AS doc_id, min(label) AS cluster_id FROM reach GROUP BY id),
       memb AS (
         SELECT c.cluster_id, c.doc_id, d.n_chars
@@ -750,26 +607,8 @@ private[graft] object DedupCatalog {
           delayThreshold = "1 second", windowDuration = "10 seconds"),
         "graft_stream_dedup", "append")
         .orderBy(col("doc_id"))
-    }, Some("""
-      WITH docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4),
+    }, Some(s"""
+      WITH ${minhashSigCtes()},
       buck AS (
         SELECT doc_id, doc_id % 2 AS wb, band, sig FROM sigs),
       own AS (
@@ -803,29 +642,10 @@ private[graft] object DedupCatalog {
         .select(col("split_lo"), col("split_hi"), col("n_pairs"),
           (col("split_lo") =!= col("split_hi")).as("is_leak"))
         .orderBy(col("split_lo"), col("split_hi"))
-    }, Some("""
-      WITH docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4),
+    }, Some(s"""
+      WITH ${minhashSigCtes()},
       pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
+        $lshPairsSql),
       sp AS (
         SELECT doc_id,
           CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
@@ -865,36 +685,8 @@ private[graft] object DedupCatalog {
           (coalesce(col("tokens_dropped"), lit(0L)).cast("double") /
             col("tokens_total").cast("double")).as("savings_share"))
         .orderBy(col("lang"))
-    }, Some("""
-      WITH RECURSIVE docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, src AS label FROM edges
-        UNION
-        SELECT e.src, r.label FROM edges e JOIN reach r ON e.dst = r.id),
+    }, Some(s"""
+      WITH RECURSIVE ${minhashReachCtes},
       clus AS (SELECT id AS doc_id, min(label) AS cluster_id FROM reach GROUP BY id),
       tok AS (
         SELECT doc_id, lang, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -966,36 +758,8 @@ private[graft] object DedupCatalog {
             sum(when(col("rn") > 1, col("n_tokens")).otherwise(lit(0L))).as("tokens_dropped"))
         ledger.orderBy(col("cluster_id"))
       }
-    }, Some("""
-      WITH RECURSIVE docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, src AS label FROM edges
-        UNION
-        SELECT e.src, r.label FROM edges e JOIN reach r ON e.dst = r.id),
+    }, Some(s"""
+      WITH RECURSIVE ${minhashReachCtes},
       clus AS (SELECT id AS doc_id, min(label) AS cluster_id FROM reach GROUP BY id),
       memb AS (
         SELECT c.cluster_id, c.doc_id, d.n_chars,
@@ -1068,20 +832,8 @@ private[graft] object DedupCatalog {
     ("q178_segment_dedup", (s, dir) => {
       Dedup.segmentDedup(T(s, dir, "documents"), "doc_id", "text", 32)
         .orderBy(col("doc_id"))
-    }, Some("""
-      WITH t AS (
-        SELECT doc_id, string_split(text, ' ') AS toks,
-               len(string_split(text, ' ')) AS n
-        FROM documents WHERE text IS NOT NULL),
-      inst AS (
-        SELECT doc_id, CAST(start // 32 AS BIGINT) AS pos,
-          array_to_string(list_slice(toks, start + 1, start + 32), ' ') AS seg
-        FROM (SELECT doc_id, toks, n,
-                unnest(generate_series(0, n - 1, 32)) AS start FROM t)),
-      h AS (
-        SELECT doc_id, pos, seg,
-          ('0x' || substr(md5(seg), 1, 12))::BIGINT AS wh
-        FROM inst),
+    }, Some(s"""
+      WITH ${segmentHashCtes},
       own AS (
         SELECT wh, min(doc_id * 1048576 + pos) AS owner_key FROM h GROUP BY wh),
       kept AS (
@@ -1114,20 +866,8 @@ private[graft] object DedupCatalog {
       Dedup.segmentDedupIncrement(
           docs.where(col("doc_id") > 350), store, "doc_id", "text", 32)
         .orderBy(col("doc_id"))
-    }, Some("""
-      WITH t AS (
-        SELECT doc_id, string_split(text, ' ') AS toks,
-               len(string_split(text, ' ')) AS n
-        FROM documents WHERE text IS NOT NULL),
-      inst AS (
-        SELECT doc_id, CAST(start // 32 AS BIGINT) AS pos,
-          array_to_string(list_slice(toks, start + 1, start + 32), ' ') AS seg
-        FROM (SELECT doc_id, toks, n,
-                unnest(generate_series(0, n - 1, 32)) AS start FROM t)),
-      h AS (
-        SELECT doc_id, pos, seg,
-          ('0x' || substr(md5(seg), 1, 12))::BIGINT AS wh
-        FROM inst),
+    }, Some(s"""
+      WITH ${segmentHashCtes},
       base AS (SELECT DISTINCT wh FROM h WHERE doc_id <= 350),
       inc AS (SELECT * FROM h WHERE doc_id > 350),
       novel AS (
@@ -1259,29 +999,19 @@ private[graft] object DedupCatalog {
       ext.Packing.manifest(offs, "doc_id", "n_tokens", 2048L,
           extraKeys = Seq("split"))
         .orderBy(col("split"), col("example_id"))
-    }, Some("""
+    }, Some(s"""
       WITH gated AS (
         SELECT doc_id, text FROM documents
         WHERE text IS NOT NULL AND len(string_split(text, ' ')) >= 20),
       uniq AS (SELECT min(doc_id) AS doc_id, text FROM gated GROUP BY text),
       eg AS (
         SELECT DISTINCT gram FROM (
-          SELECT unnest(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END) AS gram
+          SELECT unnest($trigramShinglesSql) AS gram
           FROM documents WHERE doc_id % 17 = 0)),
       corpus AS (SELECT * FROM uniq WHERE doc_id % 17 <> 0),
       cg AS (
         SELECT DISTINCT doc_id, gram FROM (
-          SELECT doc_id, unnest(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END) AS gram
+          SELECT doc_id, unnest($trigramShinglesSql) AS gram
           FROM corpus)),
       tot AS (SELECT doc_id, count(*) AS n_grams FROM cg GROUP BY 1),
       hits AS (SELECT doc_id, count(*) AS n_shared FROM cg JOIN eg USING (gram) GROUP BY 1),
@@ -1331,26 +1061,8 @@ private[graft] object DedupCatalog {
           coalesce(col("n_near_eval"), lit(0L)).as("n_near_eval"),
           (coalesce(col("n_near_eval"), lit(0L)) > 0).as("contaminated_fuzzy"))
         .orderBy(col("doc_id"))
-    }, Some("""
-      WITH docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents WHERE text IS NOT NULL),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4),
+    }, Some(s"""
+      WITH ${minhashSigCtes(from = "documents WHERE text IS NOT NULL")},
       pairs AS (
         SELECT DISTINCT n.doc_id AS doc_id, c.doc_id AS eval_id
         FROM sigs n JOIN sigs c ON n.band = c.band AND n.sig = c.sig
@@ -1379,16 +1091,13 @@ private[graft] object DedupCatalog {
       Dedup.semDedup(emb, cent, "vec_id", "embedding", "cid", "embedding",
         threshold = 0.25)
         .orderBy(col("vec_id"))
-    }, Some("""
+    }, Some(s"""
       WITH RECURSIVE v AS (
         SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
       cent AS (SELECT vec_id AS cid, vec AS cv FROM v WHERE vec_id % 100 = 0),
       sims AS (
         SELECT a.vec_id AS id, c.cid,
-          list_sum(list_transform(range(1, least(len(a.vec), len(c.cv)) + 1),
-            i -> a.vec[i] * c.cv[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(a.vec) + 1), i -> a.vec[i] * a.vec[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(c.cv) + 1), i -> c.cv[i] * c.cv[i])))) AS s
+          ${cosineSql("a.vec", "c.cv")} AS s
         FROM v a CROSS JOIN cent c),
       assign AS (
         SELECT id, cid, s AS sim_c FROM (
@@ -1398,21 +1107,9 @@ private[graft] object DedupCatalog {
         SELECT a.id AS id_a, b.id AS id_b
         FROM assign a JOIN assign b ON a.cid = b.cid AND a.id < b.id
         JOIN v va ON va.vec_id = a.id JOIN v vb ON vb.vec_id = b.id
-        WHERE list_sum(list_transform(range(1, least(len(va.vec), len(vb.vec)) + 1),
-            i -> va.vec[i] * vb.vec[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(va.vec) + 1), i -> va.vec[i] * va.vec[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(vb.vec) + 1), i -> vb.vec[i] * vb.vec[i]))))
+        WHERE ${cosineSql("va.vec", "vb.vec")}
             >= 0.25),
-      e AS (SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, src AS label FROM e
-        UNION
-        SELECT e.src, r.label FROM e JOIN reach r ON e.dst = r.id),
-      cc AS (SELECT id, min(label) AS comp FROM reach GROUP BY id),
-      lab AS (
-        SELECT a.id, a.cid, a.sim_c, COALESCE(cc.comp, a.id) AS comp
-        FROM assign a LEFT JOIN cc ON cc.id = a.id),
+      ${semdedupKeepCtes},
       keepers AS (
         SELECT comp, id AS keep_id FROM (
           SELECT comp, id, row_number() OVER (PARTITION BY comp ORDER BY sim_c, id) AS rn
@@ -1436,29 +1133,10 @@ private[graft] object DedupCatalog {
       val cands = Dedup.minhashCandidatePairs(docs, "doc_id", "text")
       Dedup.editVerifiedPairs(docs, cands, "doc_id", "text", maxDistancePct = 20)
         .orderBy(col("id_a"), col("id_b"))
-    }, Some("""
-      WITH docs AS (
-        SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 12))::BIGINT) AS hs
-        FROM docs),
-      mh AS (
-        SELECT doc_id, p,
-          list_min(list_transform(hs, h -> ((2 * p + 1) * h + (10007 * p + 1)) % 2147483647)) AS m
-        FROM hashed CROSS JOIN range(16) t(p)),
-      sigs AS (
-        SELECT doc_id, p // 4 AS band, string_agg(CAST(m AS VARCHAR), '-' ORDER BY p) AS sig
-        FROM mh GROUP BY doc_id, p // 4),
+    }, Some(s"""
+      WITH ${minhashSigCtes()},
       cands AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
+        $lshPairsSql),
       t AS (SELECT doc_id, COALESCE(text, '') AS t FROM documents)
       SELECT id_a, id_b,
         CAST(levenshtein(ta.t, tb.t) AS BIGINT) AS lev,
@@ -1487,16 +1165,13 @@ private[graft] object DedupCatalog {
       Dedup.semDedup(emb, cent, "vec_id", "embedding", "cid", "embedding",
         threshold = 0.25, maxClusterSize = 40)
         .orderBy(col("vec_id"))
-    }, Some("""
+    }, Some(s"""
       WITH RECURSIVE v AS (
         SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
       cent AS (SELECT vec_id AS cid, vec AS cv FROM v WHERE vec_id % 100 = 0),
       sims AS (
         SELECT a.vec_id AS id, c.cid,
-          list_sum(list_transform(range(1, least(len(a.vec), len(c.cv)) + 1),
-            i -> a.vec[i] * c.cv[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(a.vec) + 1), i -> a.vec[i] * a.vec[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(c.cv) + 1), i -> c.cv[i] * c.cv[i])))) AS s
+          ${cosineSql("a.vec", "c.cv")} AS s
         FROM v a CROSS JOIN cent c),
       assign AS (
         SELECT id, cid, s AS sim_c FROM (
@@ -1512,21 +1187,9 @@ private[graft] object DedupCatalog {
         SELECT a.id AS id_a, b.id AS id_b
         FROM sub a JOIN sub b ON a.cid = b.cid AND a.sb = b.sb AND a.id < b.id
         JOIN v va ON va.vec_id = a.id JOIN v vb ON vb.vec_id = b.id
-        WHERE list_sum(list_transform(range(1, least(len(va.vec), len(vb.vec)) + 1),
-            i -> va.vec[i] * vb.vec[i])) /
-            (sqrt(list_sum(list_transform(range(1, len(va.vec) + 1), i -> va.vec[i] * va.vec[i]))) *
-             sqrt(list_sum(list_transform(range(1, len(vb.vec) + 1), i -> vb.vec[i] * vb.vec[i]))))
+        WHERE ${cosineSql("va.vec", "vb.vec")}
             >= 0.25),
-      e AS (SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-      reach AS (
-        SELECT src AS id, src AS label FROM e
-        UNION
-        SELECT e.src, r.label FROM e JOIN reach r ON e.dst = r.id),
-      cc AS (SELECT id, min(label) AS comp FROM reach GROUP BY id),
-      lab AS (
-        SELECT a.id, a.cid, a.sim_c, COALESCE(cc.comp, a.id) AS comp
-        FROM assign a LEFT JOIN cc ON cc.id = a.id),
+      ${semdedupKeepCtes},
       keepers AS (
         SELECT comp, id AS keep_id FROM (
           SELECT comp, id, row_number() OVER (PARTITION BY comp ORDER BY sim_c, id) AS rn

@@ -118,14 +118,9 @@ private[graft] object TextCatalog {
     ("q52_repetition", (s, dir) => {
       TextAnalysis.repetitionStats(T(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
-    }, Some("""
+    }, Some(s"""
       WITH g AS (
-        SELECT doc_id, unnest(CASE WHEN len(string_split(text, ' ')) >= 3
-          THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-               i -> concat_ws(' ', string_split(text, ' ')[i],
-                                   string_split(text, ' ')[i + 1],
-                                   string_split(text, ' ')[i + 2]))
-          ELSE [text] END) AS gram
+        SELECT doc_id, unnest($trigramShinglesSql) AS gram
         FROM documents WHERE text IS NOT NULL),
       per AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2)
       SELECT doc_id,
@@ -301,15 +296,10 @@ private[graft] object TextCatalog {
     ("q159_ngram_novelty", (s, dir) => {
       TextAnalysis.noveltyScores(T(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
-    }, Some("""
+    }, Some(s"""
       WITH docs AS (
         SELECT doc_id,
-          list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END) AS sh
+          list_distinct($trigramShinglesSql) AS sh
         FROM documents WHERE text IS NOT NULL),
       posts AS (SELECT doc_id, unnest(sh) AS g FROM docs),
       dfreq AS (SELECT g, count(*) AS df FROM posts GROUP BY g)
@@ -344,15 +334,10 @@ private[graft] object TextCatalog {
         .select(col("doc_id"), col("source"), col("n_grams"), col("n_boiler"),
           (col("n_boiler").cast("double") / col("n_grams").cast("double")).as("boiler_share"))
         .orderBy(col("doc_id"))
-    }, Some("""
+    }, Some(s"""
       WITH sh AS (
         SELECT doc_id, source,
-          unnest(list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END)) AS g
+          unnest(list_distinct($trigramShinglesSql)) AS g
         FROM documents),
       gdf AS (SELECT source, g, CAST(count(*) AS BIGINT) AS df FROM sh GROUP BY 1, 2),
       flag AS (SELECT source, g, (df >= 2) AS boiler FROM gdf),
@@ -621,27 +606,8 @@ private[graft] object TextCatalog {
     ("q194_bigram_lm", (s, dir) => {
       TextAnalysis.bigramSurprisal(T(s, dir, "documents"), "doc_id", "text", k = 20)
         .orderBy(col("doc_id"))
-    }, Some("""
-      WITH flat AS (
-        SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM (
-          SELECT doc_id,
-            unnest(list_transform(generate_series(1, len(string_split(text, ' ')) - 1),
-              i -> struct_pack(w1 := string_split(text, ' ')[i],
-                               w2 := string_split(text, ' ')[i + 1]))) AS bg
-          FROM documents
-          WHERE text IS NOT NULL AND len(string_split(text, ' ')) >= 2)),
-      dc AS (SELECT doc_id, w1, w2, count(*) AS ndc FROM flat GROUP BY 1, 2, 3),
-      bc AS (SELECT w1, w2, sum(ndc)::BIGINT AS c12 FROM dc GROUP BY 1, 2),
-      hc AS (SELECT w1, sum(c12)::BIGINT AS c1 FROM bc GROUP BY 1),
-      flag AS (
-        SELECT b.w1, b.w2, (b.c12 * 20 < h.c1) AS rare
-        FROM bc b JOIN hc h USING (w1)),
-      per AS (
-        SELECT d.doc_id,
-               sum(d.ndc)::BIGINT AS n_bigrams,
-               sum(CASE WHEN g.rare THEN d.ndc ELSE 0 END)::BIGINT AS n_rare
-        FROM dc d JOIN flag g ON d.w1 = g.w1 AND d.w2 = g.w2
-        GROUP BY 1)
+    }, Some(s"""
+      WITH ${bigramSurprisalCtes}
       SELECT d.doc_id,
              coalesce(p.n_bigrams, 0) AS n_bigrams,
              coalesce(p.n_rare, 0) AS n_rare,
@@ -672,27 +638,8 @@ private[graft] object TextCatalog {
         .select(col("doc_id"), col("n_bigrams"), col("n_rare"),
           col("rare_frac"), col("bucket"), (col("bucket") <= 2).as("kept"))
         .orderBy(col("doc_id"))
-    }, Some("""
-      WITH flat AS (
-        SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM (
-          SELECT doc_id,
-            unnest(list_transform(generate_series(1, len(string_split(text, ' ')) - 1),
-              i -> struct_pack(w1 := string_split(text, ' ')[i],
-                               w2 := string_split(text, ' ')[i + 1]))) AS bg
-          FROM documents
-          WHERE text IS NOT NULL AND len(string_split(text, ' ')) >= 2)),
-      dc AS (SELECT doc_id, w1, w2, count(*) AS ndc FROM flat GROUP BY 1, 2, 3),
-      bc AS (SELECT w1, w2, sum(ndc)::BIGINT AS c12 FROM dc GROUP BY 1, 2),
-      hc AS (SELECT w1, sum(c12)::BIGINT AS c1 FROM bc GROUP BY 1),
-      flag AS (
-        SELECT b.w1, b.w2, (b.c12 * 20 < h.c1) AS rare
-        FROM bc b JOIN hc h USING (w1)),
-      per AS (
-        SELECT d.doc_id,
-               sum(d.ndc)::BIGINT AS n_bigrams,
-               sum(CASE WHEN g.rare THEN d.ndc ELSE 0 END)::BIGINT AS n_rare
-        FROM dc d JOIN flag g ON d.w1 = g.w1 AND d.w2 = g.w2
-        GROUP BY 1),
+    }, Some(s"""
+      WITH ${bigramSurprisalCtes},
       ranked AS (
         SELECT doc_id, n_bigrams, n_rare,
                n_rare::DOUBLE / n_bigrams AS rare_frac,
@@ -714,31 +661,8 @@ private[graft] object TextCatalog {
     ("q217_gopher_rules", (s, dir) => {
       TextAnalysis.gopherRules(T(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
-    }, Some("""
-      WITH t AS (
-        SELECT doc_id, text, string_split(text, ' ') AS ws
-        FROM documents WHERE text IS NOT NULL),
-      sc AS (
-        SELECT doc_id,
-          CAST(len(ws) AS BIGINT) AS n_words,
-          CAST(len(text) - (len(ws) - 1) AS DOUBLE) / len(ws) AS avg_word_len,
-          CAST(len(list_filter(ws, w ->
-            list_contains(['the','a','of','and','to','in'], w))) AS DOUBLE)
-            / len(ws) AS stopword_ratio,
-          CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS DOUBLE)
-            / len(ws) AS alpha_ratio
-        FROM t),
-      sh AS (
-        SELECT doc_id, unnest(CASE WHEN len(ws) >= 3
-          THEN list_transform(generate_series(1, len(ws) - 2),
-               i -> concat_ws(' ', ws[i], ws[i + 1], ws[i + 2]))
-          ELSE [text] END) AS g
-        FROM t),
-      gp AS (SELECT doc_id, g, count(*) AS c FROM sh GROUP BY 1, 2),
-      rep AS (
-        SELECT doc_id,
-          (CAST(sum(c) AS BIGINT) - count(*))::DOUBLE / CAST(sum(c) AS BIGINT) AS dup_frac
-        FROM gp GROUP BY doc_id)
+    }, Some(s"""
+      WITH ${gopherSignalCtes}
       SELECT sc.doc_id, sc.n_words, sc.avg_word_len, sc.stopword_ratio,
         sc.alpha_ratio, rep.dup_frac,
         sc.n_words >= 50 AND sc.n_words <= 100000 AS words_ok,
@@ -799,15 +723,10 @@ private[graft] object TextCatalog {
       TextAnalysis.sparseTfIdfTopK(T(s, dir, "documents"), "doc_id", "text",
           k = 5, maxDf = 50L)
         .orderBy(col("doc_id"), col("rank"))
-    }, Some("""
+    }, Some(s"""
       WITH docs AS (
         SELECT doc_id,
-          CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-                 i -> concat_ws(' ', string_split(text, ' ')[i],
-                                     string_split(text, ' ')[i + 1],
-                                     string_split(text, ' ')[i + 2]))
-            ELSE [text] END AS sh
+          $trigramShinglesSql AS sh
         FROM documents WHERE text IS NOT NULL),
       tf AS (
         SELECT doc_id, t, count(*)::BIGINT AS tf
@@ -1007,14 +926,8 @@ private[graft] object TextCatalog {
       val sel = Similarity.mmrSelect(fused, emb, "vec_id", "embedding", 5)
       val lens = docs.where(col("text").isNotNull)
         .select(col("doc_id"),
-          size(filter(TextAnalysis.words(col("text")), w => w =!= ""))
-            .cast("long").as("n_tokens"))
-      lens.join(broadcast(sel), col("doc_id") === col("n_id"))
-        .withColumn("cum_tokens", sum(col("n_tokens")).over(
-          Window.partitionBy(col("q_id")).orderBy(col("rank"))))
-        .where(col("cum_tokens") <= 192L)
-        .select(col("q_id"), col("rank"), col("doc_id"),
-          col("n_tokens"), col("cum_tokens"), col("score"))
+          textTokenCount.as("n_tokens"))
+      packContext(lens, sel, 192L, "score")
         .orderBy(col("q_id"), col("rank"))
     }, Some(ragPipelineOracle)),
 
@@ -1086,8 +999,7 @@ private[graft] object TextCatalog {
           readFixture(s2, s"$dir/documents.parquet"))
         .where(col("text").isNotNull)
         .select(col("doc_id"),
-          size(filter(TextAnalysis.words(col("text")), w => w =!= ""))
-            .cast("long").as("n_tokens")))
+          textTokenCount.as("n_tokens")))
       // per-batch latency SLO on the pinned full-RAG path: recall → MMR →
       // budget fill per batch (three chained plans — measured ~1.5 s
       // steady with AQE off, stage-launch bound; see q270's note).
@@ -1098,12 +1010,7 @@ private[graft] object TextCatalog {
             kArm = 10, kOut = 20, nTerms = 4)
           .select(col("q_id"), col("n_id"), col("rrf").as("rel"))
         val sel = Similarity.mmrSelect(fused, hc.emb, "vec_id", "embedding", 5)
-        lens.join(broadcast(sel), col("doc_id") === col("n_id"))
-          .withColumn("cum_tokens", sum(col("n_tokens")).over(
-            Window.partitionBy(col("q_id")).orderBy(col("rank"))))
-          .where(col("cum_tokens") <= 192L)
-          .select(col("q_id"), col("rank"), col("doc_id"),
-            col("n_tokens"), col("cum_tokens"), col("score"))
+        packContext(lens, sel, 192L, "score")
       }
     }, Some(ragPipelineOracle)),
 
@@ -1167,14 +1074,8 @@ private[graft] object TextCatalog {
       val sel = Similarity.mmrSelect(fused, emb, "vec_id", "embedding", 5)
       val lens = docs.where(col("text").isNotNull)
         .select(col("doc_id"),
-          size(filter(TextAnalysis.words(col("text")), w => w =!= ""))
-            .cast("long").as("n_tokens"))
-      lens.join(broadcast(sel), col("doc_id") === col("n_id"))
-        .withColumn("cum_tokens", sum(col("n_tokens")).over(
-          Window.partitionBy(col("q_id")).orderBy(col("rank"))))
-        .where(col("cum_tokens") <= 192L)
-        .select(col("q_id"), col("rank"), col("doc_id"),
-          col("n_tokens"), col("cum_tokens"), col("score"))
+          textTokenCount.as("n_tokens"))
+      packContext(lens, sel, 192L, "score")
         .orderBy(col("q_id"), col("rank"))
     }, Some(ragPipelineOracle)),
 

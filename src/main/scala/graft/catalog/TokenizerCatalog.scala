@@ -542,8 +542,7 @@ private[graft] object TokenizerCatalog {
     ("q243_padded_batches", (s, dir) => {
       val docs = T(s, dir, "documents").where(col("text").isNotNull)
         .select(col("doc_id"),
-          size(filter(TextAnalysis.words(col("text")), w => w =!= ""))
-            .cast("long").as("n_tokens"))
+          textTokenCount.as("n_tokens"))
       ext.Packing.paddedBatchManifest(docs, "doc_id", "n_tokens", batchDocs = 32)
         .orderBy(col("batch_id"))
     }, Some("""
@@ -901,8 +900,7 @@ private[graft] object TokenizerCatalog {
     ("q253_ffd_packing", (s, dir) => {
       val docs = T(s, dir, "documents").where(col("text").isNotNull)
         .select(col("doc_id"),
-          size(filter(TextAnalysis.words(col("text")), w => w =!= ""))
-            .cast("long").as("n"))
+          textTokenCount.as("n"))
         .where(col("n") > 0)
       ext.Packing.ffdPack(docs, "doc_id", "n", budget = 256L, groupDocs = 256)
         .orderBy(col("doc_id"))
@@ -930,8 +928,7 @@ private[graft] object TokenizerCatalog {
     ("q254_packing_waste_ledger", (s, dir) => {
       val docs = T(s, dir, "documents").where(col("text").isNotNull)
         .select(col("doc_id"),
-          size(filter(TextAnalysis.words(col("text")), w => w =!= ""))
-            .cast("long").as("n"))
+          textTokenCount.as("n"))
       ext.Packing.packingWasteLedger(docs, "doc_id", "n",
           exampleTokens = 256L, batchDocs = 32, groupDocs = 256)
         .orderBy(col("discipline"))
@@ -1149,26 +1146,7 @@ private[graft] object TokenizerCatalog {
         FROM sd),
       swc AS (SELECT bucket, word, count(*)::BIGINT AS cnt FROM sw GROUP BY 1, 2),
       swd AS (SELECT DISTINCT word FROM swc),
-      tok2(word, pos, np, nu) AS (
-        SELECT word, CAST(1 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-        FROM swd
-        UNION ALL
-        SELECT word,
-          CASE WHEN bl IS NULL THEN CAST(length(word) + 1 AS BIGINT)
-               ELSE pos + bl END,
-          np + 1,
-          nu + CASE WHEN bl IS NULL THEN 1 ELSE 0 END
-        FROM (
-          SELECT t.word, t.pos, t.np, t.nu,
-            max(CASE WHEN
-              ((t.pos = 1 AND substr(t.word, CAST(t.pos AS INT), CAST(l.ll AS INT))
-                  IN (SELECT piece FROM initv))
-               OR (t.pos > 1 AND substr(t.word, CAST(t.pos AS INT), CAST(l.ll AS INT))
-                  IN (SELECT piece FROM contv)))
-              THEN l.ll END) AS bl
-          FROM tok2 t CROSS JOIN lens l
-          WHERE t.pos <= length(t.word) AND l.ll <= length(t.word) - t.pos + 1
-          GROUP BY t.word, t.pos, t.np, t.nu)),
+      ${wordpieceUnkCte("tok2", "swd")},
       wstat AS (SELECT word, np, nu FROM tok2 WHERE pos = length(word) + 1),
       agg AS (
         SELECT bucket, CAST(sum(cnt * np) AS BIGINT) AS n_pieces,
@@ -1254,46 +1232,8 @@ private[graft] object TokenizerCatalog {
       WITH RECURSIVE ${wordpieceOracleCtes},
       ${wordpieceOracleCtesTagged(50, "n",
         "text || ' q9z' || CAST(doc_id % 5 AS VARCHAR)")},
-      tokb(word, pos, np, nu) AS (
-        SELECT word, CAST(1 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-        FROM wn
-        UNION ALL
-        SELECT word,
-          CASE WHEN bl IS NULL THEN CAST(length(word) + 1 AS BIGINT)
-               ELSE pos + bl END,
-          np + 1,
-          nu + CASE WHEN bl IS NULL THEN 1 ELSE 0 END
-        FROM (
-          SELECT t.word, t.pos, t.np, t.nu,
-            max(CASE WHEN
-              ((t.pos = 1 AND substr(t.word, CAST(t.pos AS INT), CAST(l.ll AS INT))
-                  IN (SELECT piece FROM initv))
-               OR (t.pos > 1 AND substr(t.word, CAST(t.pos AS INT), CAST(l.ll AS INT))
-                  IN (SELECT piece FROM contv)))
-              THEN l.ll END) AS bl
-          FROM tokb t CROSS JOIN lens l
-          WHERE t.pos <= length(t.word) AND l.ll <= length(t.word) - t.pos + 1
-          GROUP BY t.word, t.pos, t.np, t.nu)),
-      toka(word, pos, np, nu) AS (
-        SELECT word, CAST(1 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-        FROM wn
-        UNION ALL
-        SELECT word,
-          CASE WHEN bl IS NULL THEN CAST(length(word) + 1 AS BIGINT)
-               ELSE pos + bl END,
-          np + 1,
-          nu + CASE WHEN bl IS NULL THEN 1 ELSE 0 END
-        FROM (
-          SELECT t.word, t.pos, t.np, t.nu,
-            max(CASE WHEN
-              ((t.pos = 1 AND substr(t.word, CAST(t.pos AS INT), CAST(l.ll AS INT))
-                  IN (SELECT piece FROM initvn))
-               OR (t.pos > 1 AND substr(t.word, CAST(t.pos AS INT), CAST(l.ll AS INT))
-                  IN (SELECT piece FROM contvn)))
-              THEN l.ll END) AS bl
-          FROM toka t CROSS JOIN lens l
-          WHERE t.pos <= length(t.word) AND l.ll <= length(t.word) - t.pos + 1
-          GROUP BY t.word, t.pos, t.np, t.nu)),
+      ${wordpieceUnkCte("tokb", "wn")},
+      ${wordpieceUnkCte("toka", "wn", "initvn", "contvn")},
       wsb AS (SELECT word, np, nu FROM tokb WHERE pos = length(word) + 1),
       wsa AS (SELECT word, np, nu FROM toka WHERE pos = length(word) + 1),
       bef AS (

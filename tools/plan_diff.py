@@ -8,6 +8,8 @@ the same query list and the same SPARK_GRAFT_CPUS, save each stdout, then
 
 It prints each spec's job/stage/task counts from both sides and names every SQL
 execution whose plan differs after normalization; --show prints those diffs.
+Executions and specs are taken from both sides, so one that only one side ran
+differs. It exits 1 if any execution's plan or any spec's counts differ.
 
 Normalized away, because they change from run to run without the plan changing:
 expression ids (#123), exchange plan_ids, whole-stage-codegen and AQE
@@ -87,16 +89,21 @@ def executions(path):
 def main():
     a, ca = executions(sys.argv[1])
     b, cb = executions(sys.argv[2])
-    for k in ca:
-        print("%-60s %s | %s" % (k, ca[k], cb.get(k, "missing")))
-    differ = [k for k in a if a[k] != b.get(k)]
-    print("%d executions, %d differ%s" % (len(a), len(differ),
+    specs = list(ca) + [k for k in cb if k not in ca]
+    for k in specs:
+        print("%-60s %s | %s" % (k, ca.get(k, "missing"), cb.get(k, "missing")))
+    keys = list(a) + [k for k in b if k not in a]
+    differ = [k for k in keys if a.get(k) != b.get(k)]
+    counts_differ = [k for k in specs if ca.get(k) != cb.get(k)]
+    print("%d executions, %d differ%s" % (len(keys), len(differ),
                                           (": " + " ".join(differ)) if differ else ""))
+    print("%d specs, %d differ in counts%s" % (len(specs), len(counts_differ),
+          (": " + " ".join(counts_differ)) if counts_differ else ""))
     if "--show" in sys.argv:
         for k in differ:
             sys.stdout.writelines(l + "\n" for l in difflib.unified_diff(
-                a[k], b.get(k, []), k + " (parent)", k + " (change)", lineterm=""))
-    sys.exit(1 if differ else 0)
+                a.get(k, []), b.get(k, []), k + " (parent)", k + " (change)", lineterm=""))
+    sys.exit(1 if differ or counts_differ else 0)
 
 
 if __name__ == "__main__":
