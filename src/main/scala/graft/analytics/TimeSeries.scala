@@ -234,7 +234,9 @@ object TimeSeries {
     * contract: a series stays complete as long as its inter-arrival gap is
     * under the TTL, and a quiet series expires wholesale rather than
     * losing older baseline days first. Pick a TTL above the longest live
-    * inter-arrival gap. Requires the RocksDB provider. */
+    * inter-arrival gap. Requires the RocksDB provider. Scale law
+    * (`ScaleLawSpec`): a 200-key batch after 1k or after 10k stored keys
+    * makes the same RocksDB gets (200) and puts (200). */
   def spikeStreamTws(
       points: Dataset[DayPoint],
       window: Int = 7, factor: Long = 2, minDays: Long = 3,

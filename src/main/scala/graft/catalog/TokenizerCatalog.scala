@@ -458,8 +458,9 @@ private[graft] object TokenizerCatalog {
     // sharing a symbol with — or naming the output of — rank 1 waits for
     // the next round), against a full DuckDB replay of the same batched
     // rounds. This is the production merge-count path: driver round trips
-    // drop batch× (Stress: 256 merges in 41 rounds), while batch=1
-    // degenerates to q223's sequential loop exactly (spec law).
+    // track rounds, not merges (ScaleLawSpec: 128 merges in 24 rounds of
+    // at most 4 jobs at batch 8), while batch=1 degenerates to q223's
+    // sequential loop exactly (spec law).
     ("q236_bpe_batched", (s, dir) => {
       ext.Bpe.learnMergesBatched(T(s, dir, "documents"), "text",
           merges = 8, batch = 2)

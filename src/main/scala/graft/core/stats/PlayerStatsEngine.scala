@@ -197,6 +197,10 @@ object PlayerStatsEngine {
     * on the session running the query (the TWS operator rejects the
     * default HDFS-backed store).
     *
+    * Scale law (`ScaleLawSpec`): a batch's state cost tracks the batch, not
+    * the state. A 200-key batch after 1k or after 10k stored keys makes the
+    * same RocksDB gets (600) and puts (200).
+    *
     * @param initial optional (steamId → PlayerState) warm-start snapshot —
     *                the TWS twin of [[statefulPlayerStatsFrom]]. */
   def statefulPlayerStatsTws(

@@ -224,6 +224,8 @@ object Dedup {
     bucketsFromSignatures(sigs, idCol, keep, numPerm, bands)
   }
 
+  /** [[bucketPairs]] over freshly computed [[minhashBuckets]]; the scale
+    * law stated there holds here. */
   def minhashCandidatePairs(
       df: DataFrame, idCol: String, textCol: String,
       numPerm: Int = 16, bands: Int = 4,
@@ -236,7 +238,13 @@ object Dedup {
     * (pairs, clusters, canonical picks, ledgers) derives from the STORED
     * table without re-touching the corpus text (q176 proves the round-trip
     * is exact). [[minhashCandidatePairs]] is this over a freshly-computed
-    * bucket table. */
+    * bucket table.
+    *
+    * Scale law (`ScaleLawSpec`): exact duplicates share every band, so a
+    * corpus whose every document has c copies yields d·C(c, 2) + p·c²
+    * pairs (d bucketed documents, p pairs of the corpus itself): quadratic
+    * in c, ×4.57 from 4 to 8 copies at sf0.001. `maxBucket` or an
+    * `exactDupGroups` pass upstream is the cure. */
   def bucketPairs(
       buckets: DataFrame, idCol: String,
       maxBucket: Option[Int] = None): DataFrame = {
@@ -284,7 +292,9 @@ object Dedup {
   /** Doc → (id, 48-bit SimHash): bit b is set iff Σ_words (±1 by word-hash
     * bit b) > 0. Explode + groupBy-sum: one md5 per (doc, word), then `bits`
     * codegen'd sums of (2·bit−1) — partial sums combine map-side, the shuffle
-    * carries (id, bits longs), and no interpreted lambda runs per element. */
+    * carries (id, bits longs), and no interpreted lambda runs per element.
+    * Scale law (`ScaleLawSpec`): one shuffle record per document, so twice
+    * the documents shuffle exactly twice the records in as many jobs. */
   def simhashTable(df: DataFrame, idCol: String, textCol: String, bits: Int = 48): DataFrame = {
     val exploded = df
       // explode_OUTER: a null-text doc keeps one (id, null-hash) row, so it
@@ -1002,6 +1012,19 @@ object Dedup {
       edges: DataFrame, aCol: String, bCol: String, maxIter: Int = 25): DataFrame =
     connectedComponents(edges, aCol, bCol, maxIter, starContraction = false)
 
+  /** Throws `IllegalArgumentException` unless column `c` of `df` is
+    * integral: `op` keys on longs, and a cast of any other type would
+    * null out or change the key without an error. */
+  private[ext] def requireIntegral(df: DataFrame, c: String, op: String): Unit = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    df.schema(c).dataType match {
+      case LongType | IntegerType | ShortType | ByteType => ()
+      case t => throw new IllegalArgumentException(
+        s"$op requires integral id/key columns, got $c: ${t.simpleString} " +
+          "(map string/UUID ids to a surrogate long first)")
+    }
+  }
+
   /** As [[connectedComponents]], with an algorithm switch:
     * `starContraction = true` runs the alternating large-star/small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -1022,15 +1045,7 @@ object Dedup {
     // both algorithms label with longs; a non-integral id column would
     // null out under cast("long") and be silently DROPPED by the isNotNull
     // filters — refuse loudly instead (same contract as dedupCorpus)
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    Seq(aCol, bCol).foreach { c =>
-      edges.schema(c).dataType match {
-        case LongType | IntegerType | ShortType | ByteType => ()
-        case t => throw new IllegalArgumentException(
-          s"connectedComponents requires integral edge id columns, got $c: ${t.simpleString} " +
-            "(map string/UUID ids to a surrogate long first)")
-      }
-    }
+    Seq(aCol, bCol).foreach(requireIntegral(edges, _, "connectedComponents"))
     if (starContraction) connectedComponentsStar(edges, aCol, bCol, maxIter)
     else connectedComponentsLabel(edges, aCol, bCol, maxIter)
   }
@@ -1190,13 +1205,7 @@ object Dedup {
     // the cluster labels are longs (connectedComponents casts its edge
     // ids); a non-integral id would null out under the cast and every doc
     // would collapse into the NULL cluster — refuse loudly instead
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    docs.schema(idCol).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => ()
-      case t => throw new IllegalArgumentException(
-        s"dedupCorpus requires an integral id column, got $idCol: ${t.simpleString} " +
-          "(map string/UUID ids to a surrogate long first)")
-    }
+    requireIntegral(docs, idCol, "dedupCorpus")
     val clusters = connectedComponents(
       minhashCandidatePairs(docs, idCol, textCol, numPerm, bands), "id_a", "id_b")
     val withCluster = docs
@@ -1239,8 +1248,7 @@ object Dedup {
     * `maxClusterSize` is the giant-cluster guard: the within-cluster pair
     * space is Σ_c |c|², which one skewed coarse cluster (bad centroids, a
     * near-duplicate-saturated corpus) degenerates toward n² in a single
-    * join key — the measured adversarial regime in Stress ran 741 s at
-    * 100k vectors. With a cap, any cluster larger than the cap is
+    * join key. With a cap, any cluster larger than the cap is
     * stride-split into ceil(|c|/cap) sub-buckets by a deterministic
     * member-id hash (the repo's shared 48-bit md5 — oracle-replayable),
     * and pairs are generated per (cluster, sub-bucket): the pair space is
@@ -1252,7 +1260,10 @@ object Dedup {
     * clusters only, dropping cross-cluster pairs by design; this is the
     * same cut one level down). Hash-stride bucket sizes are expected
     * |c|/ceil(|c|/cap) — concentration at large |c| keeps them within a
-    * few percent of the cap. */
+    * few percent of the cap. Scale law (`ScaleLawSpec`): on one cluster
+    * holding every vector, all pairs above the threshold, doubling n from
+    * 300 to 600 multiplies the shuffled records ×3.9 uncapped and ×2.0
+    * at cap 50. */
   def semDedup(corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, cidCol: String, cVecCol: String,
       threshold: Double, maxIter: Int = 25,

@@ -35,7 +35,9 @@ object Diff {
     * partition by the same key — no broadcast assumption, snapshots are
     * fact-sized), comparisons are codegen'd column equality. For a 100 TB
     * table pair, bucket both snapshots on the key at write time and the
-    * exchange disappears entirely (see BucketingSpec). */
+    * exchange disappears entirely (see BucketingSpec). Scale law
+    * (`ScaleLawSpec`): twice the keys shuffle exactly twice the records in
+    * as many jobs. */
   def snapshotDiff(oldDf: DataFrame, newDf: DataFrame, keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "snapshotDiff needs at least one key column")
     require(

@@ -21,7 +21,8 @@ object Prefilter {
 
   /** Inner equi-join with a Bloom-filter prefilter on the fact side.
     *
-    * `factKey`/`dimKey` must be integral (LONG-compatible) columns. The dim
+    * `factKey`/`dimKey` must be integral (LONG-compatible) columns; any
+    * other type throws `IllegalArgumentException` before a job runs. The dim
     * side is scanned once to build the sketch (an eager job, like any
     * broadcast build); size `expectedItems` at or above the dim side's true
     * key cardinality or the false-positive rate degrades toward 1 and the
@@ -30,6 +31,11 @@ object Prefilter {
       fact: DataFrame, dim: DataFrame,
       factKey: String, dimKey: String,
       expectedItems: Long = 1000000L, fpp: Double = 0.01): DataFrame = {
+    // the sketch hashes the dim key by its own type but the probe hashes
+    // the fact key as a long: a string "1" and a long 1 land on different
+    // bits, so a non-integral key would drop matches without an error
+    Dedup.requireIntegral(fact, factKey, "bloomFilteredJoin")
+    Dedup.requireIntegral(dim, dimKey, "bloomFilteredJoin")
     val bf = dim.stat.bloomFilter(dimKey, expectedItems, fpp)
     // The sketch broadcast follows the same lifecycle as a broadcast-join
     // relation: ContextCleaner reclaims the blocks once the returned plan

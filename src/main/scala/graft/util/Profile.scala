@@ -44,21 +44,22 @@ object Profile {
   final case class Counters(
       wallMs: Long, jobs: Long, stages: Long, tasks: Long,
       executorRunMs: Long, executorCpuMs: Long,
-      shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
-      gapMs: Long, phaseMs: Map[String, Long], plans: Seq[String]) {
+      shuffleReadBytes: Long, shuffleWriteBytes: Long, shuffleWriteRecords: Long,
+      spillBytes: Long, gapMs: Long, phaseMs: Map[String, Long], plans: Seq[String]) {
     def json: String = (Seq(
       "wall_ms" -> wallMs, "spark.jobs" -> jobs, "spark.stages" -> stages,
       "spark.tasks" -> tasks, "spark.executor_run_ms" -> executorRunMs,
       "spark.executor_cpu_ms" -> executorCpuMs,
       "spark.shuffle_read_bytes" -> shuffleReadBytes,
       "spark.shuffle_write_bytes" -> shuffleWriteBytes,
+      "spark.shuffle_write_records" -> shuffleWriteRecords,
       "spark.spill_bytes" -> spillBytes, "driver.gap_ms" -> gapMs) ++
       phaseMs.toSeq.sorted.map { case (p, ms) => s"plan.${p}_ms" -> ms })
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
   }
 
   private final class Acc {
-    var jobs, stages, tasks, runMs, cpuNs, shuffleRead, shuffleWrite, spill = 0L
+    var jobs, stages, tasks, runMs, cpuNs, shuffleRead, shuffleWrite, shuffleRecords, spill = 0L
     val windows = mutable.ArrayBuffer[(Long, Long)]()
     val jobSpans = mutable.ArrayBuffer[(Long, Long)]()
     val phaseMs = mutable.Map[String, Long]().withDefaultValue(0L)
@@ -107,6 +108,7 @@ object Profile {
         a.cpuNs += m.executorCpuTime
         a.shuffleRead += m.shuffleReadMetrics.totalBytesRead
         a.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+        a.shuffleRecords += m.shuffleWriteMetrics.recordsWritten
         a.spill += m.memoryBytesSpilled + m.diskBytesSpilled
       }
     }
@@ -133,7 +135,7 @@ object Profile {
           union(a.jobSpans.map { case (s, e) => (math.max(s, from), math.min(e, to)) }) }.sum
         val wall = a.windows.map { case (from, to) => to - from }.sum
         Counters(wall, a.jobs, a.stages, a.tasks, a.runMs, a.cpuNs / 1000000L,
-          a.shuffleRead, a.shuffleWrite, a.spill, wall - covered,
+          a.shuffleRead, a.shuffleWrite, a.shuffleRecords, a.spill, wall - covered,
           a.phaseMs.toMap, a.plans.toSeq)
       }
     }

@@ -2,7 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session builder of the runners (Bench, Verify, Stress, the test
+/** The one session builder of the runners (Bench, Verify, the test
   * session and the `graft.Profile` main). It sets the confs every runner
   * shares, installs [[Profile]] on the SparkContext, and leaves only the
   * runner's own conf pairs to the caller:

@@ -624,15 +624,18 @@ class DedupSpec extends SparkTestBase {
     out shouldBe Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L))
   }
 
-  test("star contraction converges in O(log d) on an adversarial 120-node chain") {
-    // label propagation needs diameter-many rounds (119 here — it would trip
-    // its maxIter); the alternating large/small-star contraction needs
-    // O(log d): 8 alternations must suffice for d = 119
-    val chain = (1L until 120L).map(i => (i, i + 1)).toDF("a", "b")
-    val out = Dedup.connectedComponents(chain, "a", "b", 8, starContraction = true)
-      .collect()
-    out.length shouldBe 120
-    out.map(_.getLong(1)).distinct.toSeq shouldBe Seq(1L)
+  test("star contraction converges in O(log d) on adversarial 120- and 1000-node chains") {
+    // label propagation needs diameter-many rounds (119 and 999 here — it
+    // would trip its maxIter); the alternating large/small-star contraction
+    // needs O(log d): 8 alternations must suffice for d = 119, 12 for
+    // d = 999 (non-convergence throws)
+    Seq(120L -> 8, 1000L -> 12).foreach { case (n, maxIter) =>
+      val chain = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
+      val out = Dedup.connectedComponents(chain, "a", "b", maxIter, starContraction = true)
+        .collect()
+      out.length shouldBe n
+      out.map(_.getLong(1)).distinct.toSeq shouldBe Seq(1L)
+    }
   }
 
   test("star contraction agrees with label propagation on a random multi-component graph") {

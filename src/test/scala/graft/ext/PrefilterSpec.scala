@@ -45,4 +45,18 @@ class PrefilterSpec extends SparkTestBase {
       .select("fk").as[Long].collect().toSeq
     out shouldBe Seq(1L)
   }
+
+  test("non-integral join keys are rejected before any job runs") {
+    // a string sketch probed by long never matches: rejecting beats
+    // returning 0 rows where the plain join returns 2
+    val strFact = Seq("1", "2", "3").toDF("fk")
+    val strDim = Seq("1", "3").toDF("dk")
+    val longDim = Seq(1L, 3L).toDF("dk")
+    an[IllegalArgumentException] should be thrownBy
+      Prefilter.bloomFilteredJoin(strFact, strDim, "fk", "dk", expectedItems = 8L)
+    an[IllegalArgumentException] should be thrownBy
+      Prefilter.bloomFilteredJoin(Seq(1.0, 3.0).toDF("fk"), longDim, "fk", "dk", expectedItems = 8L)
+    an[IllegalArgumentException] should be thrownBy
+      Prefilter.bloomFilteredJoin(Seq(1L, 3L).toDF("fk"), strDim, "fk", "dk", expectedItems = 8L)
+  }
 }

@@ -19,13 +19,25 @@ class SessionsSpec extends SparkTestBase {
     spark.sparkContext.appName shouldBe "graft-tests"
   }
 
-  test("Sessions is the only file under src/ that builds a SparkSession") {
-    val needle = "SparkSession" + ".builder()"
-    val walk = Files.walk(Paths.get("src"))
-    val builders = try walk.iterator().asScala
+  /** The .scala files under `dir` whose text contains `needle`. */
+  private def sourcesWith(dir: String, needle: String): List[String] = {
+    val walk = Files.walk(Paths.get(dir))
+    try walk.iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && Files.readString(p).contains(needle))
-      .map(_.toString).toList
+      .map(_.toString).toList.sorted
     finally walk.close()
-    builders shouldBe List(Paths.get("src/main/scala/graft/util/Sessions.scala").toString)
+  }
+
+  test("Sessions is the only file under src/ that builds a SparkSession") {
+    sourcesWith("src", "SparkSession" + ".builder()") shouldBe
+      List(Paths.get("src/main/scala/graft/util/Sessions.scala").toString)
+  }
+
+  test("Bench and Verify are the only mains under src/main") {
+    // a print-only probe main belongs in the suite or in the test-scope
+    // graft.Profile, where a check runs it
+    sourcesWith("src/main", "def " + "main(") shouldBe
+      List("Bench", "Verify").map(m => Paths.get(s"src/main/scala/graft/$m.scala").toString)
+    sourcesWith("src/main", "extends " + "App") shouldBe Nil
   }
 }

@@ -14,7 +14,10 @@ differs. It exits 1 if any execution's plan or any spec's counts differ.
 Normalized away, because they change from run to run without the plan changing:
 expression ids (#123), exchange plan_ids, whole-stage-codegen and AQE
 query-stage ids, object hash codes and lambda class names, per-run scratch and
-staging dirs, UUIDs, RDD ids and source line numbers of call sites. Formatted
+staging dirs, UUIDs, RDD ids, source line numbers of call sites, the counter in
+lambda variable names (`lambda x_3`) and the run-time Statistics(...) AQE
+prints on a TableCacheQueryStage (a cached relation is measured once it has
+been read, so a later run prints its row count). Formatted
 explain numbers an operator object once, so the same operator shared by two
 subtrees on one side and duplicated on the other only renumbers; operator ids
 are therefore dropped from the tree and the detail blocks are compared as a set.
@@ -38,6 +41,8 @@ SUBS = [
     (r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "UUID"),
     (r"RDD\[\d+\]", "RDD[N]"),
     (r"(\w+\.scala):\d+", r"\1:L"),
+    (r"\b(lambda [A-Za-z]\w*?)_\d+\b", r"\1_N"),
+    (r"(TableCacheQueryStage \(S\)), Statistics\([^)]*\)", r"\1, Statistics(R)"),
 ]
 LOG_LINE = re.compile(r"^(\d\d/\d\d/\d\d \d\d:\d\d:\d\d |\[info\]|\[warn\]|\[success\])")
 
